@@ -2185,9 +2185,12 @@ ORDER BY first_name
     "the change topic and processes each event) re-expressed as Delta-CDF-"
     "style incremental consumption: t30's lakehouse sink commits each "
     "micro-batch as a merge_cow generation, and INSIDE the same trigger a "
-    "downstream consumer applies change_feed(cursor, cur) (s35) to a "
-    "per-event-type aggregate table — insert/update_postimage rows add "
-    "(+1, +lsn), delete/update_preimage rows subtract, groups whose count "
+    "downstream consumer folds the interval (cursor, cur]'s net delta "
+    "into a per-event-type aggregate table — over s35's churn-sized feed "
+    "sides (sources/manifest.py:change_feed_sides), TO-side rows add "
+    "(+1, +lsn) and FROM-side rows subtract, which equals the signed sum "
+    "over change_feed's labelled rows without building the labels; "
+    "groups whose net delta is (0, 0) drop, and groups whose count "
     "returns to zero are tombstoned (streaming/cdc.py:consume_feed_step). "
     "The consumer's cursor is the last upstream generation applied, "
     "recorded transactionally in the DOWNSTREAM manifest's txn watermark, "
@@ -2199,7 +2202,7 @@ ORDER BY first_name
     "at-most/at-least-once across crashes; the engine's is exact). "
     "Maintenance compaction runs mid-stream with retention (no gc while "
     "the consumer lags — the Delta CDF retention contract); pure-"
-    "compaction intervals cancel in the feed by construction. The oracle "
+    "compaction intervals net to zero and commit nothing. The oracle "
     "recomputes the final aggregate declaratively from the same envelope "
     "derivation — hash-green proves every incremental feed application "
     "composed to the exact full recompute. At 100 TB: feed I/O per step "
@@ -2291,7 +2294,9 @@ GROUP BY first_name
 ORDER BY first_name
 """,
     doc="T34: the FULL merge-on-read produce→consume loop — t33's MOR "
-    "sink and the t32 incremental consumer composed through s36b's feed, "
+    "sink and the t32 incremental consumer composed through s36b's feed "
+    "sides (sources/manifest.py:change_feed_mor_sides — the consumer folds "
+    "their net delta, not the labelled change_feed_mor), "
     "with the fold cadence set aggressively LOW so compact_mor fires "
     "repeatedly MID-STREAM between the consumer's reads "
     "(streaming/cdc.py:lakehouse_mor_fanout_batch): every few triggers "
@@ -2301,7 +2306,7 @@ ORDER BY first_name
     "maintenance policy, which is the property that makes MOR feeds "
     "operable (a consumer that must outrun compaction is a pager, not a "
     "pipeline). The consumer maintains the same per-event-type aggregate "
-    "as t32 (signed feed rows; cursor stored transactionally in the "
+    "as t32 (net signed delta; cursor stored transactionally in the "
     "downstream manifest's txn watermark: exactly-once from "
     "at-least-once), and the oracle recomputes the final aggregate "
     "declaratively — hash-green proves every churn-pruned, fold-crossing "
@@ -2397,11 +2402,12 @@ ORDER BY first_name
     "loop runs, the upstream table RESTOREs to a mid-stream generation, "
     "and the redelivery fanout resumes. The consumer's cursor is NOT "
     "rewound (downstream was not restored), so its next step consumes "
-    "the interval pre-restore-head → restore-commit; change_feed is "
-    "STRUCTURAL (file symmetric difference between any two generations), "
-    "so that interval's feed is exactly the rollback's churn, correctly "
-    "signed — the rewound rows emit as deletes, the consumer subtracts "
-    "them, and the aggregate follows the rollback down and the "
+    "the interval pre-restore-head → restore-commit; the COW feed sides "
+    "are STRUCTURAL (file symmetric difference between any two "
+    "generations), so that interval's net delta is exactly the "
+    "rollback's churn, correctly signed — the rewound rows sit on the "
+    "FROM side, the consumer subtracts them, and the aggregate follows "
+    "the rollback down and the "
     "re-applied batches back up with no special casing "
     "(streaming/cdc.py:_run_restore_feed_consumer; contrast "
     "change_feed_mor, which refuses restore-crossing intervals because "
@@ -3441,8 +3447,8 @@ ORDER BY first_name
     "(insert/update_post add, delete/update_pre subtract, zero-count "
     "groups tombstone out) to a downstream manifest table "
     "(stream_feed_agg_batch). The decoupling is the point vs t32/t34: "
-    "their consumers run INSIDE the producer's trigger and call the "
-    "batch change_feed with explicit generation cursors; t48's consumer "
+    "their consumers run INSIDE the producer's trigger and fold the batch "
+    "feed sides with explicit generation cursors; t48's consumer "
     "is an independent job — Spark's checkpoint offsets pick the "
     "intervals, the downstream (tag, batch_id) watermark makes replays "
     "no-ops, and neither side knows the other's cadence, which is what "

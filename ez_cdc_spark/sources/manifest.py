@@ -487,11 +487,20 @@ def _collect_blooms(
     return out
 
 
+# The MOR feed reads its changed keys in-process only while the delete
+# files hold at most this many rows (footer counts, checked before any
+# data page is read). A larger key set takes the executor path, whose
+# broadcast semi-join restricts the resolves: a literal In list that
+# long would bloat the plan.
+_FEED_KEYS_DRIVER_MAX_ROWS = 10_000
+
+
 def _read_key_column_driver(paths: list[str], col: str) -> list | None:
     """Distinct values of one column across a CHURN-SIZED file set, read
     in-process (optimization r20 — the byte-bounded driver fast path of
     _collect_blooms applied to the MOR feed's changed-key read): returns
-    None when the files exceed the driver bounds, the column is missing,
+    None when the files exceed the driver bounds (file count, bytes, or
+    ``_FEED_KEYS_DRIVER_MAX_ROWS`` footer rows), the column is missing,
     a value's type would not round-trip exactly through a Spark literal
     (only non-bool int / str / None qualify), or any read fails — callers
     then fall back to the executor scan. NULL stays in the list (both the
@@ -506,9 +515,11 @@ def _read_key_column_driver(paths: list[str], col: str) -> list | None:
     try:
         import pyarrow.parquet as pq
 
+        pfs = [pq.ParquetFile(p) for p in paths]
+        if sum(pf.metadata.num_rows for pf in pfs) > _FEED_KEYS_DRIVER_MAX_ROWS:
+            return None
         vals: set = set()
-        for p in paths:
-            pf = pq.ParquetFile(p)
+        for pf in pfs:
             if col not in pf.schema_arrow.names:
                 return None
             for batch in pf.iter_batches(columns=[col]):
@@ -3090,7 +3101,37 @@ def change_feed(
     before Spark sees a path (and a per-tenant/date consumer further
     prunes to ITS partitions' churn). FROM must still be retained
     (un-gc'd); reading a collected generation raises FileNotFoundError
-    loudly."""
+    loudly.
+
+    Building the labelled feed runs Spark jobs EAGERLY: the churn-sized
+    count table is pinned with an eager ``localCheckpoint`` (see
+    :func:`_classify_delta`), so the call itself scans both sides. A
+    consumer that needs only signed sums should fold
+    :func:`change_feed_sides` instead."""
+    old, new = change_feed_sides(
+        spark, table_dir, from_generation, to_generation, partitions
+    )
+    # pre-images of updates + deleted rows / post-images + inserts, both
+    # sides in one pass (r20: _classify_delta replaces the exceptAll pair)
+    return _classify_delta(old, new, key_col, list(new.columns))
+
+
+def change_feed_sides(
+    spark: SparkSession,
+    table_dir: str,
+    from_generation: int,
+    to_generation: int,
+    partitions: list | None = None,
+) -> tuple[DataFrame, DataFrame]:
+    """The two churn-sized sides of a copy-on-write feed interval:
+    ``(old, new)`` = the rows of the files the interval REMOVED (in FROM,
+    not TO) and of the files it ADDED (in TO, not FROM), both projected
+    onto the TO generation's columns. Carried-by-reference files are
+    never opened. :func:`change_feed` labels these sides; a consumer that
+    only sums signed values folds them directly (Σ new − Σ old equals the
+    signed sum over the labelled feed: rows present on both sides cancel,
+    and labelling never changes a row's sign). Validation, ``partitions``
+    scoping and the rename/drop era alignment are :func:`change_feed`'s."""
     from pyspark.sql import functions as F  # noqa: N812
 
     if to_generation <= from_generation:
@@ -3162,10 +3203,7 @@ def change_feed(
             if c not in old.columns:
                 old = old.withColumn(c, F.lit(None).cast(new.schema[c].dataType))
         old = old.select(*cols)
-    new = new.select(*cols)
-    # pre-images of updates + deleted rows / post-images + inserts, both
-    # sides in one pass (r20: _classify_delta replaces the exceptAll pair)
-    return _classify_delta(old, new, key_col, cols)
+    return old, new.select(*cols)
 
 
 def _flag_col(base: str, cols) -> str:
@@ -3315,8 +3353,10 @@ def change_feed_mor(
        deletes alike);
     2. pre-images = the FROM state resolved for just those keys,
        post-images = the TO state likewise — both via the MOR resolve
-       restricted with a broadcast semi-join, data-file groups
-       stats-pruned to the changed keys' ranges before Spark sees a path;
+       restricted to the changed keys (a literal ``In`` at micro-batch
+       scale, a broadcast semi-join above it), data-file groups
+       stats-pruned to the changed keys' ranges before Spark sees a path
+       (:func:`change_feed_mor_sides`);
     3. rows identical on both sides cancel (exceptAll), and the shared
        classification emits the four Delta change types keyed by the
        table's mor_key.
@@ -3337,9 +3377,53 @@ def change_feed_mor(
 
     At 100 TB: I/O is the interval's churn (delete files are batch-sized;
     the pre/post resolves open only stats-overlapping files), never the
-    table."""
-    from pyspark.sql import functions as F  # noqa: N812
+    table. Like :func:`change_feed`, building the labelled feed runs
+    Spark jobs eagerly (one pinned count table per epoch segment); a
+    consumer that needs only signed sums folds
+    :func:`change_feed_mor_sides` instead."""
+    sides = change_feed_mor_sides(spark, table_dir, from_generation, to_generation)
+    if not sides:  # pure-fold interval: layout only, no content change
+        return spark.createDataFrame(
+            [],
+            StructType(
+                [StructField("_change_type", StringType())]
+                + list(
+                    StructType.fromJson(
+                        read_manifest(table_dir, to_generation)["schema"]
+                    ).fields
+                )
+            ),
+        )
+    out = None
+    scans: list = []
+    for key_col, pre, post in sides:
+        # both delta sides in one pass over pre/post (r20: _classify_delta
+        # replaces the exceptAll pair — see change_feed)
+        part = _classify_delta(pre, post, key_col, list(post.columns))
+        scans.extend(part._ez_feed_scans)
+        out = part if out is None else out.unionByName(part)
+    out._ez_feed_scans = scans  # see _classify_delta's scan hook
+    return out
 
+
+def change_feed_mor_sides(
+    spark: SparkSession,
+    table_dir: str,
+    from_generation: int,
+    to_generation: int,
+) -> list[tuple[str, DataFrame, DataFrame]]:
+    """The churn-sized sides of a merge-on-read feed interval, one
+    ``(key_col, pre, post)`` triple per un-folded epoch segment of the
+    commit chain (fold commits split it and contribute nothing; segments
+    without churn are left out, so a pure-fold interval returns ``[]``).
+    ``pre``/``post`` are the segment's FROM/TO states resolved for just
+    the segment's changed keys, stats-pruned, both projected onto the
+    interval's TO columns; ``key_col`` is the mor_key the segment's
+    merges were keyed on. :func:`change_feed_mor` labels each triple; a
+    consumer that only sums signed values folds Σ post − Σ pre over all
+    of them (the labelled feed's signed sum, see
+    :func:`change_feed_sides`). Chain tracing, the restore refusal and
+    the retention contract are :func:`change_feed_mor`'s."""
     if to_generation <= from_generation:
         raise ValueError("change_feed_mor needs from_generation < to_generation")
     # trace the commit chain to -> from via lineage parents
@@ -3381,23 +3465,12 @@ def change_feed_mor(
         segments.append((seg_start, chain[-1]))
 
     cols_to = [f["name"] for f in chain[-1]["schema"]["fields"]]
-    out = None
-    scans: list = []
+    sides = []
     for a, b in segments:
-        part = _feed_segment(spark, table_dir, a, b, cols_to)
-        scans.extend(getattr(part, "_ez_feed_scans", []))
-        out = part if out is None else out.unionByName(part)
-    if out is not None:
-        out._ez_feed_scans = scans  # see _classify_delta's scan hook
-    if out is None:  # pure-fold interval: layout only, no content change
-        return spark.createDataFrame(
-            [],
-            StructType(
-                [StructField("_change_type", StringType())]
-                + list(StructType.fromJson(chain[-1]["schema"]).fields)
-            ),
-        )
-    return out
+        pair = _feed_segment(spark, table_dir, a, b, cols_to)
+        if pair is not None:
+            sides.append((b["mor_key"], *pair))
+    return sides
 
 
 def _feed_segment(
@@ -3406,10 +3479,12 @@ def _feed_segment(
     m_from: dict,
     m_to: dict,
     out_cols: list,
-) -> DataFrame:
-    """One un-folded epoch's churn feed (see change_feed_mor). ``out_cols``
-    is the overall TO schema's column list — both sides null-fill columns
-    an evolution added later, so segment feeds union cleanly."""
+) -> tuple[DataFrame, DataFrame] | None:
+    """One un-folded epoch's ``(pre, post)`` sides (see
+    change_feed_mor_sides), or None when the segment holds no churn.
+    ``out_cols`` is the overall TO schema's column list — both sides
+    null-fill columns an evolution added later, so segment sides union
+    cleanly."""
     import bisect
 
     from pyspark.sql import functions as F  # noqa: N812
@@ -3428,14 +3503,8 @@ def _feed_segment(
         for rel in (m_to.get("delete_files") or [])
         if rel not in set(m_from.get("delete_files") or [])
     ]
-    empty_schema = StructType(
-        [StructField("_change_type", StringType())]
-        + list(StructType.fromJson(m_to["schema"]).fields)
-    )
     if not new_dfiles:  # no merges in this epoch segment
-        return spark.createDataFrame([], empty_schema).select(
-            "_change_type", *out_cols
-        )
+        return None
     key_col = m_to["mor_key"]
     key_field = StructType.fromJson(m_to["schema"])[key_col]
 
@@ -3447,9 +3516,10 @@ def _feed_segment(
     # zero Spark jobs instead of a scan+distinct+collect job — and
     # restrict the resolved states with a LITERAL key predicate (reaches
     # the parquet scan as a pushed filter) instead of two broadcast
-    # semi-join builds. Above the bounds, or for key types a literal
-    # cannot round-trip faithfully, the r19 executor read + broadcast
-    # semi-join path runs unchanged.
+    # semi-join builds. Above the bounds (files, bytes, or
+    # _FEED_KEYS_DRIVER_MAX_ROWS delete-file rows), or for key types a
+    # literal cannot round-trip faithfully, the r19 executor read +
+    # broadcast semi-join path runs unchanged.
     raw_keys = _read_key_column_driver(new_dfiles, key_col)
     keys_df = None
     if raw_keys is None:
@@ -3460,9 +3530,7 @@ def _feed_segment(
         )
         raw_keys = [r[0] for r in keys_df.collect()]
     if not raw_keys:  # delete files held no rows: churn-free segment
-        return spark.createDataFrame([], empty_schema).select(
-            "_change_type", *out_cols
-        )
+        return None
 
     # stats pruning: the (churn-sized) key set, collected once, keeps only
     # data files whose recorded key range can contain one — merge_cow's
@@ -3471,13 +3539,6 @@ def _feed_segment(
     normed = [_norm(k) for k in raw_keys]
     unprunable = any(k is None for k in normed)
     sorted_keys = sorted(normed) if not unprunable else []
-    # literal predicate only for types whose Python value round-trips
-    # exactly into a Spark literal, and only at micro-batch scale (a
-    # giant In list bloats the plan — guide §3.3)
-    use_isin = keys_df is None and len(raw_keys) <= 10_000 and all(
-        v is None or (isinstance(v, (int, str)) and not isinstance(v, bool))
-        for v in raw_keys
-    )
 
     def _overlaps(rng) -> bool:
         if unprunable or rng is None:
@@ -3514,16 +3575,12 @@ def _feed_segment(
                 spark, pruned, table_dir,
                 [os.path.join(table_dir, r) for r in kept],
             )
-        if use_isin:
-            # literal In over the churn keys: pushes to the parquet scan
-            # and skips the broadcast build; NULL state keys drop under
-            # both forms (neither In nor a semi-join matches NULL)
-            return state.filter(F.col(key_col).isin(raw_keys))
-        nonlocal keys_df
         if keys_df is None:
-            keys_df = spark.createDataFrame(
-                [(k,) for k in raw_keys], StructType([key_field])
-            )
+            # driver-read keys are few (row-capped) and literal-safe: a
+            # literal In pushes to the parquet scan and skips the
+            # broadcast build; NULL state keys drop under both forms
+            # (neither In nor a semi-join matches NULL)
+            return state.filter(F.col(key_col).isin(raw_keys))
         return state.join(F.broadcast(keys_df), on=key_col, how="left_semi")
 
     pre = _state_for_keys(m_from)
@@ -3534,10 +3591,7 @@ def _feed_segment(
             pre = pre.withColumn(c, F.lit(None).cast(post.schema[c].dataType))
         if c not in post.columns:
             post = post.withColumn(c, F.lit(None).cast(pre.schema[c].dataType))
-    pre, post = pre.select(*out_cols), post.select(*out_cols)
-    # both delta sides in one pass over pre/post (r20: _classify_delta
-    # replaces the exceptAll pair — see change_feed)
-    return _classify_delta(pre, post, key_col, out_cols)
+    return pre.select(*out_cols), post.select(*out_cols)
 
 
 def restore(

@@ -2401,6 +2401,48 @@ def materialize_lakehouse_mor_restore(
     return state
 
 
+def _signed_fold_changes(
+    spark: SparkSession, agg_dir: str, signed: DataFrame, sign, seq: int
+) -> DataFrame:
+    """The signed-fold tail shared by the feed consumers (consume_feed_step,
+    stream_feed_agg_batch): fold ``signed`` rows (``first_name``,
+    ``lsn``; ``sign`` is the ±1 Column each row counts with) into the
+    per-first_name delta ``(_dn, _dsum)``, join it onto the committed
+    aggregate in ``agg_dir``, and emit merge_cow change rows (``n``,
+    ``sum_lsn``, ``op``, ``seq``). A group whose net delta is (0, 0)
+    changes nothing and is dropped, so an interval whose changes all
+    cancel yields no rows; a group whose count returns to zero leaves
+    the aggregate — the tombstone the feed's deletes imply."""
+    from ez_cdc_spark.sources.manifest import read_committed
+
+    delta = (
+        signed.groupBy("first_name")
+        .agg(
+            F.sum(sign).cast("long").alias("_dn"),
+            F.sum(sign * F.col("lsn")).cast("long").alias("_dsum"),
+        )
+        .filter((F.col("_dn") != 0) | (F.col("_dsum") != 0))
+    )
+    old = read_committed(spark, agg_dir)
+    return (
+        delta.join(old, on="first_name", how="left")
+        .select(
+            "first_name",
+            (F.coalesce(F.col("n"), F.lit(0)) + F.col("_dn")).alias("n"),
+            (F.coalesce(F.col("sum_lsn"), F.lit(0)) + F.col("_dsum")).alias(
+                "sum_lsn"
+            ),
+        )
+        .select(
+            "first_name",
+            "n",
+            "sum_lsn",
+            F.when(F.col("n") == 0, F.lit("d")).otherwise(F.lit("u")).alias("op"),
+            F.lit(seq).cast("long").alias("seq"),
+        )
+    )
+
+
 def consume_feed_step(
     spark: SparkSession,
     table_dir: str,
@@ -2422,27 +2464,34 @@ def consume_feed_step(
     the sink (exactly-once without coordination).
 
     The maintained aggregate is per-``first_name``: ``n`` (row count) and
-    ``sum_lsn``. change_feed's signed rows update it incrementally:
-    insert/update_postimage add (+1, +lsn), delete/update_preimage
-    subtract — the T13 incremental-aggregate pattern fed by s35's feed
-    instead of raw envelopes, which is the point: ANY downstream job can
+    ``sum_lsn``. The step folds the interval's NET delta, not the
+    labelled feed: a consumer that only sums signed values needs no
+    insert/update/delete labels (labelling never changes a row's sign,
+    and a row present on both sides adds +x and −x), so the fold is
+    Σ(TO side) − Σ(FROM side) over the same churn-sized sides the feed is
+    built from — change_feed_sides for COW, change_feed_mor_sides per
+    un-folded epoch segment for ``mor=True`` — grouped by first_name.
+    This is exactly the signed sum over change_feed(_mor)'s rows, minus
+    the labelled feed's eager count-table pin and classification joins.
+    Groups whose net delta is (0, 0) drop, so an interval with zero net
+    change (a pure compaction or fold, or churn that cancels) commits
+    nothing and leaves the cursor where it is — ANY downstream job can
     maintain state from the feed without re-reading the table or seeing
-    the envelope stream at all. Pure-compaction intervals cancel in the
-    feed by construction, so maintenance commits are invisible here.
+    the envelope stream at all.
 
-    At 100 TB: the feed's I/O is the interval's churn (rewritten/added
-    files — manifest metadata excludes the untouched table before Spark
-    sees a path); the delta aggregate is one churn-sized groupBy; the
+    At 100 TB: the fold's I/O is the interval's churn (rewritten/added
+    files, or the stats-pruned MOR resolves for the changed keys —
+    manifest metadata excludes the untouched table before Spark sees a
+    path); the delta aggregate is one churn-sized groupBy; the
     read-modify-write touches only the group keys the interval changed
     (dimension-sized); the commit is merge_cow's stats-pruned rewrite of
     the downstream table. Retention contract (the Delta CDF one): the
     upstream cursor generation must not be gc'd before it is consumed —
     the producer loop defers gc while a consumer lags."""
     from ez_cdc_spark.sources.manifest import (
-        change_feed,
-        change_feed_mor,
+        change_feed_mor_sides,
+        change_feed_sides,
         merge_cow,
-        read_committed,
         read_manifest,
         txn_watermark,
     )
@@ -2455,49 +2504,35 @@ def consume_feed_step(
         return None  # nothing new (replayed/skipped upstream batch)
 
     if mor:
-        # t34: the MOR producer's churn-proportional feed — fold commits
-        # inside the interval compose away (change_feed_mor's chain split),
-        # so the consumer never coordinates with the maintenance cadence
-        feed = change_feed_mor(spark, table_dir, consumed, cur)
+        # t34: fold commits inside the interval compose away (the chain
+        # split), so the consumer never coordinates with the maintenance
+        # cadence; a pure-fold interval has no sides at all
+        sides = [
+            (pre, post)
+            for _key, pre, post in change_feed_mor_sides(
+                spark, table_dir, consumed, cur
+            )
+        ]
+        if not sides:
+            return None
     else:
-        feed = change_feed(spark, table_dir, consumed, cur, key_col="id")
-    sign = F.when(
-        F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
-    ).otherwise(F.lit(-1))
-    delta = feed.groupBy("first_name").agg(
-        F.sum(sign).cast("long").alias("_dn"),
-        F.sum(sign * F.col("lsn")).cast("long").alias("_dsum"),
-    )
-    old = read_committed(spark, agg_dir)
-    changes = (
-        delta.join(old, on="first_name", how="left")
-        .select(
-            "first_name",
-            (F.coalesce(F.col("n"), F.lit(0)) + F.col("_dn")).alias("n"),
-            (F.coalesce(F.col("sum_lsn"), F.lit(0)) + F.col("_dsum")).alias(
-                "sum_lsn"
-            ),
-        )
-        .select(
-            "first_name",
-            "n",
-            "sum_lsn",
-            # a group whose count returns to zero leaves the aggregate —
-            # the tombstone the feed's deletes imply
-            F.when(F.col("n") == 0, F.lit("d")).otherwise(F.lit("u")).alias("op"),
-            F.lit(cur).cast("long").alias("seq"),
-        )
-    )
-    # Optimization r19 (guide §5 caching): the feed pipeline above —
-    # change_feed(_mor) joins over parent/upsert/delete files plus the
-    # read-modify-write join — is the expensive side of this step, and it
-    # feeds BOTH the emptiness check and the merge below (whose own
-    # actions re-derive from it). The delta is churn-sized; persist it for
-    # the step's lifetime so the feed derivation executes once.
+        sides = [change_feed_sides(spark, table_dir, consumed, cur)]
+    signed = None
+    for old_side, new_side in sides:
+        for side, s in ((old_side, -1), (new_side, 1)):
+            part = side.select("first_name", "lsn", F.lit(s).alias("_s"))
+            signed = part if signed is None else signed.unionByName(part)
+    changes = _signed_fold_changes(spark, agg_dir, signed, F.col("_s"), cur)
+    # Optimization r19 (guide §5 caching): the fold above — the sides'
+    # scans, the delta groupBy and the read-modify-write join — is the
+    # expensive side of this step, and it feeds BOTH the emptiness check
+    # and the merge below (whose own actions re-derive from it). The
+    # delta is churn-sized; persist it for the step's lifetime so the
+    # fold executes once.
     changes = changes.persist()
     try:
         if changes.isEmpty():
-            return None  # churn-free interval: keep cursor, nothing to commit
+            return None  # zero net change: keep cursor, nothing to commit
         gen = b_man["generation"] + 1
         for _ in range(100):
             try:
@@ -2586,9 +2621,10 @@ def materialize_feed_consumer(
 ) -> DataFrame:
     """T32 end-to-end: lsn-split envelope stream → per-batch merge_cow
     commits into the upstream table (t30's sink, full retention) → after
-    each commit the downstream consumer applies change_feed(cursor, cur)
-    to its per-first_name aggregate table — then, once the stream drains,
-    the retention window closes and gc+vacuum reclaim the consumed
+    each commit the downstream consumer folds the interval (cursor, cur]'s
+    net delta (change_feed_sides) into its per-first_name aggregate
+    table — then, once the stream drains, the retention window closes
+    and gc+vacuum reclaim the consumed
     history (proving the feed was only needed until applied). Returns the
     downstream table's final committed state."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -2948,12 +2984,13 @@ def lakehouse_mor_fanout_batch(
     """T34 foreachBatch: the FULL merge-on-read produce→consume loop —
     t33's MOR sink (merge_mor per batch, in-loop compact_mor past the
     delete-log threshold) followed, inside the same trigger, by the t32
-    consumer applying change_feed_mor(cursor, cur) to its downstream
-    aggregate. The fold threshold here is deliberately LOW so folds fire
-    repeatedly MID-STREAM between the consumer's reads — exercising the
-    r16 fold-composition contract on every such trigger: the consumer's
-    interval (prev merge gen → current merge gen) crosses the fold commit
-    and composes through it with zero coordination. Superseded
+    consumer folding the net delta of change_feed_mor_sides(cursor, cur)
+    into its downstream aggregate. The fold threshold here is
+    deliberately LOW so folds fire repeatedly MID-STREAM between the
+    consumer's reads — exercising the r16 fold-composition contract on
+    every such trigger: the consumer's interval (prev merge gen →
+    current merge gen) crosses the fold commit and composes through it
+    with zero coordination. Superseded
     generations are retained during the replay (the chain the feed walks
     must stay on disk — the CDF retention contract); the caller reclaims
     after the stream drains. Crash-idempotence is t32's exactly: producer
@@ -3025,8 +3062,9 @@ def materialize_mor_feed_consumer(
 ) -> DataFrame:
     """T34 end-to-end: lsn-split envelope stream → per-batch merge_mor
     commits with an aggressive in-loop fold cadence → after each trigger
-    the downstream consumer applies change_feed_mor(cursor, cur) to its
-    per-event-type aggregate, composing through every mid-stream fold →
+    the downstream consumer folds the net delta of
+    change_feed_mor_sides(cursor, cur) into its per-event-type
+    aggregate, composing through every mid-stream fold →
     once the stream drains, gc+vacuum reclaim the consumed history.
     Returns the downstream table's final committed state."""
     from pyspark.sql.types import LongType, StringType, StructField, StructType
@@ -3239,20 +3277,20 @@ def mor_cdf_sink_batch(table_dir: str, tag: str, max_delete_files: int = 2):
 def stream_feed_agg_batch(agg_dir: str, consumer_tag: str = "t48c"):
     """T48 consumer foreachBatch: apply one micro-batch of NATIVE
     change-feed STREAM rows to a downstream aggregate table, exactly
-    once. This is consume_feed_step's signed fold (insert/update_post
-    add, delete/update_pre subtract; a group whose count returns to zero
-    tombstones out) with the interval chosen by the STREAM's checkpoint
-    offsets instead of a batch change_feed call — the consumer no longer
-    names generations at all: its cursor is Spark's offset log, its
-    idempotence is the downstream txn watermark on (tag, batch_id), and
-    a replayed micro-batch after a crash between sink-commit and
-    offset-commit is skipped by the watermark (exactly-once from
-    at-least-once, t30's contract one hop downstream)."""
+    once. This is consume_feed_step's signed fold (_signed_fold_changes:
+    insert/update_post add, delete/update_pre subtract; a group whose
+    count returns to zero tombstones out) with the interval chosen by the
+    STREAM's checkpoint offsets instead of batch feed sides named by
+    generation cursors — the consumer no longer names generations at
+    all: its cursor is Spark's offset log, its idempotence is the
+    downstream txn watermark on (tag, batch_id), and a replayed
+    micro-batch after a crash between sink-commit and offset-commit is
+    skipped by the watermark (exactly-once from at-least-once, t30's
+    contract one hop downstream)."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
             merge_cow,
-            read_committed,
             read_manifest,
             txn_watermark,
         )
@@ -3264,42 +3302,18 @@ def stream_feed_agg_batch(agg_dir: str, consumer_tag: str = "t48c"):
             return
         if batch.isEmpty():
             # churn-free micro-batch: nothing to commit. Checked on the
-            # BATCH, not downstream of the delta/join pipeline — a
-            # nonempty feed batch always yields a nonempty delta (every
-            # row signs ±1 into some group), and an isEmpty() on the
-            # built `changes` executed the whole delta/groupBy/join once
-            # just to test emptiness before merge_cow recomputed it —
-            # two full jobs per micro-batch on the consumer hot path
-            # (ADVICE r18).
+            # BATCH, not downstream of the delta/join pipeline — an
+            # isEmpty() on the built `changes` executed the whole
+            # delta/groupBy/join once just to test emptiness before
+            # merge_cow recomputed it — two full jobs per micro-batch on
+            # the consumer hot path (ADVICE r18). A nonempty batch whose
+            # rows all cancel commits a carry-only generation that
+            # advances the watermark.
             return
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
         ).otherwise(F.lit(-1))
-        delta = batch.groupBy("first_name").agg(
-            F.sum(sign).cast("long").alias("_dn"),
-            F.sum(sign * F.col("lsn")).cast("long").alias("_dsum"),
-        )
-        old = read_committed(spark, agg_dir)
-        changes = (
-            delta.join(old, on="first_name", how="left")
-            .select(
-                "first_name",
-                (F.coalesce(F.col("n"), F.lit(0)) + F.col("_dn")).alias("n"),
-                (
-                    F.coalesce(F.col("sum_lsn"), F.lit(0)) + F.col("_dsum")
-                ).alias("sum_lsn"),
-            )
-            .select(
-                "first_name",
-                "n",
-                "sum_lsn",
-                # a group whose count returns to zero leaves the aggregate
-                F.when(F.col("n") == 0, F.lit("d"))
-                .otherwise(F.lit("u"))
-                .alias("op"),
-                F.lit(batch_id).cast("long").alias("seq"),
-            )
-        )
+        changes = _signed_fold_changes(spark, agg_dir, batch, sign, batch_id)
         gen = b_man["generation"] + 1
         for _ in range(100):
             try:
@@ -3334,7 +3348,7 @@ def materialize_stream_fed_aggregate(
     .option('changeFeed','true')`` → ``foreachBatch`` applying the
     signed fold to a downstream manifest table (stream_feed_agg_batch).
     Unlike t32/t34 — whose consumers run INSIDE the producer's trigger
-    and call the batch change_feed with explicit generation cursors —
+    and fold the batch feed sides with explicit generation cursors —
     the t48 consumer is an independent job with its own checkpoint:
     offsets pick the intervals, the downstream watermark makes replays
     no-ops, and neither side knows the other's cadence (the operability

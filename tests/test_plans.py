@@ -1260,6 +1260,36 @@ def test_s36b_mor_feed_plan_broadcast_keys_and_no_cartesian(spark, sf_smoke):
         assert restricted, f"no churn-key restriction in scan plan:\n{p}"
 
 
+def test_s36b_mor_feed_sides_restrict_to_churn_keys(spark, sf_smoke):
+    """The s36b pin above, on the unlabelled sides the feed consumer
+    folds (change_feed_mor_sides): each pre/post resolve carries the
+    churn-key restriction and no cartesian, and opens no more files than
+    the labelled feed's own scans."""
+    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.sources.manifest import change_feed_mor, change_feed_mor_sides
+
+    load_all()["s36b_mor_change_feed"].fn(spark, sf_smoke).collect()
+    td = _scratch(sf_smoke, "s36bfeed")
+    sides = change_feed_mor_sides(spark, td, 1, 3)
+    assert sides
+    feed_files = {
+        f for scan in change_feed_mor(spark, td, 1, 3)._ez_feed_scans
+        for f in scan.inputFiles()
+    }
+    for _key, pre, post in sides:
+        for side in (pre, post):
+            assert_no_cartesian(side)
+            p = plan_str(side)
+            restricted = (
+                ("BroadcastHashJoin" in p and "LeftSemi" in p)  # executor path
+                or " IN (" in p
+                or "In(k" in p
+                or "isin" in p
+            )
+            assert restricted, f"no churn-key restriction in side plan:\n{p}"
+            assert set(side.inputFiles()) <= feed_files
+
+
 def test_s36c_partitioned_mor_plan_no_cartesian(spark, sf_smoke):
     """s36c: the partitioned MOR lifecycle's final aggregate plan stays
     cartesian-free, and the partition column survives the fold (grouping

@@ -3469,6 +3469,7 @@ def test_s35_change_feed_reads_only_touched_files_and_skips_maintenance(
     from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         change_feed,
+        change_feed_sides,
         compact,
         evolve_schema,
         merge_cow,
@@ -3512,6 +3513,19 @@ def test_s35_change_feed_reads_only_touched_files_and_skips_maintenance(
         os.path.join(td, r) for r in set(man1["files"]) & set(man2["files"])
     }
     assert carried and not (opened & carried)
+    # the sides the feed consumer folds unlabelled open exactly the
+    # removed (FROM side) and added (TO side) files
+    old_side, new_side = change_feed_sides(spark, td, 1, 2)
+
+    def _files(df):
+        return {f.replace("file://", "") for f in df.inputFiles()}
+
+    assert _files(old_side) == {
+        os.path.join(td, r) for r in set(man1["files"]) - set(man2["files"])
+    }
+    assert _files(new_side) == {
+        os.path.join(td, r) for r in set(man2["files"]) - set(man1["files"])
+    }
 
     got = {(r["_change_type"], r["k"]) for r in feed.collect()}
     want = (
