@@ -2782,7 +2782,7 @@ ORDER BY c_mktsegment
     "stage under the Hive layout so partition pruning survives the MOR "
     "log, the partitions map carries per commit, and compact_mor folds "
     "back into a partitioned COW generation (publish_partitioned with "
-    "fold lineage). The equality-delete file stays GLOBAL, which is the "
+    "fold lineage). The equality deletes stay GLOBAL, which is the "
     "load-bearing choice: this lifecycle's updates CHANGE c_mktsegment "
     "(the partition column) on keys spread uniformly across every "
     "partition, so rows MOVE partitions and a partition-scoped delete "

@@ -2242,8 +2242,8 @@ ORDER BY id
     "t30's exact contract (one atomic generation per micro-batch, "
     "(tag, batch_id) txn-watermark idempotence, per-key order across "
     "batches) under the commit shape that survives UNIFORM-key churn: "
-    "each batch lands via merge_mor (s36) as new data files plus one "
-    "equality-delete file, REWRITING NOTHING — per-batch cost is "
+    "each batch lands via merge_mor (s36) as new data files plus "
+    "equality-delete files, REWRITING NOTHING — per-batch cost is "
     "O(batch) however the keys spread, where the envelope stream's ids "
     "(event_id % 200, uniform over the key space) are exactly the shape "
     "that saturates merge_cow's touched-file split at "
@@ -3377,7 +3377,7 @@ ORDER BY id, lsn, _change_type
     "sink had no native streaming consumer exactly where scale demands "
     "one. Producer: a t33-shaped MOR sink loop over the lsn-staged "
     "envelope replay — one merge_mor generation per micro-batch (new "
-    "upsert files + one equality-delete file, ZERO rewrites), with "
+    "upsert files + equality-delete files, ZERO rewrites), with "
     "compact_mor folding the log mid-chain past max_delete_files and NO "
     "gc (feed retention is gc retention — consume before reclaiming). "
     "Consumer: the same readStream.format('ezmanifest')"

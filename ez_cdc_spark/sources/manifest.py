@@ -133,18 +133,22 @@ class ConstraintViolationError(RuntimeError):
 
 
 def _enforce_constraints(df: DataFrame, constraints: dict | None, where: str) -> None:
-    """Evaluate every declared constraint over ``df`` in ONE aggregate
-    pass (a single map-side-combinable Spark job, no per-constraint
-    scans) and refuse with per-constraint violation counts if any row
-    fails. Semantics are standard SQL CHECK: a row violates only when the
+    """Evaluate every declared constraint over ``df`` in ONE pass and
+    refuse with per-constraint violation counts if any row fails. The
+    counts are observed metrics of a no-op write of ``df``: one job over
+    ``df``'s own stages, with no aggregate exchange and no per-constraint
+    scans. Semantics are standard SQL CHECK: a row violates only when the
     expression is FALSE — NULL/unknown passes (declare ``x IS NOT NULL``
     explicitly to reject nulls), which is also Delta's CHECK contract."""
     if not constraints:
         return
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F  # noqa: N812
 
     names = sorted(constraints)
-    row = df.agg(
+    obs = Observation()
+    df.observe(
+        obs,
         *[
             F.sum(
                 F.when(
@@ -153,9 +157,10 @@ def _enforce_constraints(df: DataFrame, constraints: dict | None, where: str) ->
                 ).otherwise(1)
             ).alias(n)
             for n in names
-        ]
-    ).first()
-    bad = {n: int(row[n]) for n in names if row[n]}
+        ],
+    ).write.format("noop").mode("overwrite").save()
+    row = obs.get
+    bad = {n: int(row[n]) for n in names if row.get(n)}
     if bad:
         raise ConstraintViolationError(
             f"{where} violates table constraints (violating rows per "
@@ -265,9 +270,18 @@ def stage_only(df: DataFrame, table_dir: str, generation: int) -> list[str]:
         os.makedirs(stage, exist_ok=True)
         return []
     df.write.mode("overwrite").parquet(stage)
+    return _parquet_files(stage)
+
+
+def _parquet_files(d: str) -> list[str]:
+    """Sorted paths of the data files a Spark write left directly in
+    ``d`` — none when the write created no such directory (a
+    ``partitionBy`` write makes no directory for a value with no rows)."""
+    if not os.path.isdir(d):
+        return []
     return sorted(
-        os.path.join(stage, f)
-        for f in os.listdir(stage)
+        os.path.join(d, f)
+        for f in os.listdir(d)
         if f.endswith(".parquet") and not f.startswith((".", "_"))
     )
 
@@ -770,19 +784,19 @@ def _stable_bucket64(v) -> int:
     return zlib.crc32(r.encode("utf-8")) % _FEED_BASE_BUCKETS
 
 
-def _bucket64_counts(final: DataFrame, key_col: str) -> dict | None:
-    """Distributed per-base-bucket churn-key counts for one merge_mor
-    batch — ``{str(bucket): count}`` over :data:`_FEED_BASE_BUCKETS`
-    buckets — or None when the key type cannot be hashed bit-identically
-    to the reader's Python ``_stable_bucket`` (floats: Python repr vs
-    JVM cast rendering; booleans: 'true' vs 'b1'; temporals). The agg is
-    one map-side-combined job over the already-resolved batch with a
-    ≤64-row collect — no churn key ever reaches the driver (the feed
-    planner's own stated discipline)."""
+def _bucket64_counts(keys: DataFrame, key_col: str) -> dict | None:
+    """Distributed per-base-bucket counts of ``keys[key_col]`` — one
+    staged delete file's churn keys in merge_mor —
+    ``{str(bucket): count}`` over :data:`_FEED_BASE_BUCKETS` buckets, or
+    None when the key type cannot be hashed bit-identically to the
+    reader's Python ``_stable_bucket`` (floats: Python repr vs JVM cast
+    rendering; booleans: 'true' vs 'b1'; temporals). The agg is one
+    map-side-combined job with a ≤64-row collect — no churn key ever
+    reaches the driver (the feed planner's own stated discipline)."""
     from pyspark.sql import functions as F  # noqa: N812
     from pyspark.sql import types as T  # noqa: N812
 
-    dt = final.schema[key_col].dataType
+    dt = keys.schema[key_col].dataType
     if isinstance(dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType)):
         prefix = "i"
     elif isinstance(dt, T.StringType):
@@ -795,14 +809,30 @@ def _bucket64_counts(final: DataFrame, key_col: str) -> dict | None:
     bucket = F.when(F.col(key_col).isNull(), F.lit(0)).otherwise(
         F.pmod(F.crc32(enc), F.lit(_FEED_BASE_BUCKETS))
     )
-    rows = final.groupBy(bucket.alias("_b64")).count().collect()
+    rows = keys.groupBy(bucket.alias("_b64")).count().collect()
     return {str(int(r["_b64"])): int(r["count"]) for r in rows}
 
 
-def _bucket64_counts_driver(final: DataFrame, key_col: str, path: str) -> dict | None:
-    """Driver twin of :func:`_bucket64_counts` over the just-staged
-    equality-delete file (optimization r20, guide §1.2): the delete file
-    IS the resolved batch's key multiset (``final.select(key)``), it is
+def _delete_file_bucket64(
+    spark: SparkSession, key_field: StructField, path: str
+) -> dict | None:
+    """Base-bucket key counts of ONE staged equality-delete file, from
+    that file's own keys (a commit stages one delete file per write task
+    that saw keys): in-process below the driver byte bound, else one
+    executor agg over the file itself. None for key types the portable
+    hash excludes."""
+    b64 = _bucket64_counts_driver(key_field, path)
+    if b64 is None:
+        b64 = _bucket64_counts(
+            spark.read.schema(StructType([key_field])).parquet(path),
+            key_field.name,
+        )
+    return b64
+
+
+def _bucket64_counts_driver(key_field: StructField, path: str) -> dict | None:
+    """Driver twin of :func:`_bucket64_counts` over one just-staged
+    equality-delete file (optimization r20, guide §1.2): the file is
     churn-sized by the MOR contract, and the Python ``_stable_bucket64``
     is already pinned bit-identical to the Spark expression — so below
     the driver byte bound the counts come from one in-process columnar
@@ -811,9 +841,10 @@ def _bucket64_counts_driver(final: DataFrame, key_col: str, path: str) -> dict |
     hash excludes, or on any read error."""
     from pyspark.sql import types as T  # noqa: N812
 
-    dt = final.schema[key_col].dataType
+    key_col = key_field.name
     if not isinstance(
-        dt, (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType)
+        key_field.dataType,
+        (T.ByteType, T.ShortType, T.IntegerType, T.LongType, T.StringType),
     ):
         return None
     try:
@@ -1261,10 +1292,7 @@ def _stage_partitioned(
     df: DataFrame, table_dir: str, generation: int, partition_col: str
 ) -> tuple[list[str], dict[str, str | None]]:
     """Stage a partitionBy layout and return (rel file list, rel ->
-    partition value). The Hive null-partition sentinel directory records
-    as an honest JSON null (ADVICE r12)."""
-    import urllib.parse
-
+    partition value), see :func:`_list_staged`."""
     stage = _stage_dir(table_dir, generation)
     if _provably_empty(df):
         # r20: same no-job genesis fast path as stage_only — an empty
@@ -1274,19 +1302,36 @@ def _stage_partitioned(
         os.makedirs(stage, exist_ok=True)
         return [], {}
     df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
+    return _list_staged(stage, table_dir, partition_col)
+
+
+def _list_staged(
+    root: str, table_dir: str, partition_col: str | None
+) -> tuple[list[str], dict[str, str | None] | None]:
+    """(rel file list, rel -> partition value) of the files a write
+    staged under ``root``: the Hive layout whose ``<partition_col>=<value>/``
+    dirs sit directly under ``root``, or, with no ``partition_col``, the
+    files in ``root`` itself and no partition map. Empty when ``root``
+    does not exist. The Hive null-partition sentinel directory records
+    as an honest JSON null (ADVICE r12)."""
+    import urllib.parse
+
+    if partition_col is None:
+        return [os.path.relpath(f, table_dir) for f in _parquet_files(root)], None
     files: list[str] = []
     partitions: dict[str, str | None] = {}
-    for sub in sorted(os.listdir(stage)):
+    if not os.path.isdir(root):
+        return files, partitions
+    for sub in sorted(os.listdir(root)):
         if not sub.startswith(f"{partition_col}="):
             continue
         value = urllib.parse.unquote(sub.split("=", 1)[1])
         if value == "__HIVE_DEFAULT_PARTITION__":
             value = None
-        for f in sorted(os.listdir(os.path.join(stage, sub))):
-            if f.endswith(".parquet") and not f.startswith((".", "_")):
-                rel = os.path.relpath(os.path.join(stage, sub, f), table_dir)
-                files.append(rel)
-                partitions[rel] = value
+        for f in _parquet_files(os.path.join(root, sub)):
+            rel = os.path.relpath(f, table_dir)
+            files.append(rel)
+            partitions[rel] = value
     return files, partitions
 
 
@@ -1670,22 +1715,22 @@ def _read_files(spark: SparkSession, manifest: dict, table_dir: str, files: list
         # Partitioned generation (S29): the partition column lives in the
         # directory names, not the data files — reading leaf paths without
         # basePath would silently DROP it (and a compact would then commit
-        # a generation missing the column). Anchor discovery at each
-        # file's own generation dir (after a partitioned append/merge the
-        # committed file list spans SEVERAL data/gen-* dirs — a single
-        # basePath would not be an ancestor of carried files), and pass
-        # the STORED schema so the partition column keeps its published
-        # type: without it Spark re-infers the type from the directory
-        # strings, so a string partition value like '01' would silently
-        # read back as bigint 1 (ADVICE r12). Group count is O(live
-        # generations since the last compact) — bounded metadata, and
-        # each group is one ordinary pruned parquet scan.
-        data_root = os.path.join(table_dir, "data")
+        # a generation missing the column). Anchor discovery at the
+        # directory holding each file's ``<pcol>=`` dir (after a
+        # partitioned append/merge the committed file list spans SEVERAL
+        # data/gen-* dirs — a single basePath would not be an ancestor of
+        # carried files; a merge_mor generation nests its upsert files
+        # one level deeper, under its kind dir, which must never be
+        # inferred as a column), and pass the STORED schema so the
+        # partition column keeps its published type: without it Spark
+        # re-infers the type from the directory strings, so a string
+        # partition value like '01' would silently read back as bigint 1
+        # (ADVICE r12). Group count is O(live generations since the last
+        # compact) — bounded metadata, and each group is one ordinary
+        # pruned parquet scan.
         groups: dict[str, list[str]] = {}
         for f in files:
-            rel = os.path.relpath(f, data_root)
-            top = rel.split(os.sep)[0]
-            groups.setdefault(os.path.join(data_root, top), []).append(f)
+            groups.setdefault(_partition_base(f), []).append(f)
         out = None
         for base in sorted(groups):
             reader = spark.read.option("basePath", base)
@@ -1706,6 +1751,13 @@ def _read_files(spark: SparkSession, manifest: dict, table_dir: str, files: list
     return spark.read.parquet(*files)
 
 
+def _partition_base(path: str) -> str:
+    """The basePath of a partitioned data file: the directory holding
+    its ``<pcol>=<value>/`` dir. Every partitioned writer stages files
+    exactly one partition level below it."""
+    return os.path.dirname(os.path.dirname(path))
+
+
 def _read_files_epochs(
     spark: SparkSession, manifest: dict, table_dir: str, files: list[str]
 ):
@@ -1723,7 +1775,7 @@ def _read_files_epochs(
     physical schema, renamed to logical on the way out, so column pruning
     and predicate pushdown behave exactly as the plain stored-schema
     read. Partitioned generations compose (scope lift, later r16): groups
-    key by (epoch, generation dir) and each scan anchors at its dir's
+    key by (epoch, partition base dir) and each scan anchors at that
     basePath with the PHYSICAL schema — the partition column keeps its
     published name and type (renaming/dropping it stays refused: its name
     IS the directory layout), data columns map per era as in the flat
@@ -1734,16 +1786,12 @@ def _read_files_epochs(
     file_epochs = manifest.get("file_epochs", {})
     emaps = manifest["epoch_maps"]
     pcol = manifest.get("partition_col")
-    data_root = os.path.join(table_dir, "data")
     groups: dict[tuple, list[str]] = {}
     for f in files:
         rel = os.path.relpath(f, table_dir)
         e = int(file_epochs.get(rel, 0))
-        if pcol is None:
-            groups.setdefault((e, None), []).append(f)
-        else:
-            top = os.path.relpath(f, data_root).split(os.sep)[0]
-            groups.setdefault((e, os.path.join(data_root, top)), []).append(f)
+        base = None if pcol is None else _partition_base(f)
+        groups.setdefault((e, base), []).append(f)
     out = None
     for key in sorted(groups, key=lambda k: (k[0], k[1] or "")):
         e, base = key
@@ -3707,13 +3755,27 @@ def merge_mor(
     merge_mor never rewrites a data file. One commit stages (a) the
     batch's surviving upserts as NEW data files tagged with this
     generation as their sequence number, and (b) the batch's distinct
-    changed keys as one EQUALITY-DELETE file tagged likewise. The kill
+    changed keys as EQUALITY-DELETE files tagged likewise. The kill
     rule is Iceberg v2's: a data row is dead iff some delete entry for
     its key carries a sequence STRICTLY greater than the row's file
     sequence — so a commit's own upserts survive its own delete entries
     while every older version of the key dies. Per-batch cost is
     O(batch) — data staged once, keys staged once, O(files) manifest
     metadata — regardless of how the keys spread.
+
+    Both outputs come from ONE ``partitionBy(<kind>)`` write over the
+    resolved batch, exploded so that every changed key yields a
+    delete-key row and every surviving upsert also yields its data row:
+    upsert files land under ``data/gen-N/<kind>=data/`` and delete files
+    under ``data/gen-N/<kind>=deletes/``, where ``<kind>`` is ``_kind``
+    unless a table column already has that name. Delete rows carry the
+    key plus typed NULL payload columns (one write has one schema); every
+    delete-file reader reads the key column only. Nothing is cached: an
+    unconstrained commit runs the resolve's shuffle and the write (two
+    jobs), and a constrained table's gate re-reads the batch (two more).
+    Each write task that sees keys stages its own delete file, and each
+    delete file records its key range and base-bucket key counts
+    (``delete_meta``) from its own keys; an empty batch stages no file.
 
     The trade is read-side work (:func:`read_mor` anti-resolves the
     accumulated delete entries) growing with churn-since-compaction, and
@@ -3724,11 +3786,14 @@ def merge_mor(
     dead rows.
 
     Partitioned generations compose (r16): upserts stage under the Hive
-    layout (partition pruning survives), the partitions map carries, and
+    layout below their kind dir, ``<kind>=data/<pcol>=<value>/``
+    (partition pruning survives), the partitions map carries, and
     compact_mor folds back into a partitioned COW generation. The
-    equality-delete file stays GLOBAL — keys may move partitions, and a
+    equality deletes stay GLOBAL — keys may move partitions, and a
     partition-scoped delete would strand a moved key's old row; the kill
-    join resolves by key value wherever the row lives. Same input
+    join resolves by key value wherever the row lives. Delete rows carry
+    a NULL partition value, so they land in the kind dir's null
+    partition and never enter the partitions map. Same input
     contract as merge_cow: per-key order across batches, last-event-wins
     within a batch."""
     from pyspark.sql import functions as F  # noqa: N812
@@ -3770,164 +3835,150 @@ def merge_mor(
         .select(key_col, "_last.*")
     )
     upserts = final.filter(F.col("_op") != delete_op).select(*table_cols)
+    # constraint gate (S39) on the post-image rows, before the reservation
+    _enforce_constraints(
+        upserts, manifest.get("constraints"), "merge_mor upsert batch"
+    )
+    _validate_generation(table_dir, generation)
 
-    # Optimization r19 (guide §5 caching): the constraint aggregate, the
-    # upsert staging write, the equality-delete write and the b64 bucket
-    # counts below would each re-execute the caller's change pipeline;
-    # the resolved batch is micro-batch-sized, so persist once.
-    final = final.persist()
-    try:
-        # constraint gate (S39) on the post-image rows, before the
-        # reservation
-        _enforce_constraints(
-            upserts, manifest.get("constraints"), "merge_mor upsert batch"
-        )
-        _validate_generation(table_dir, generation)
+    # one staging write for both outputs; a NULL op stages a delete only,
+    # like a delete op
+    kind = _flag_col("_kind", table_cols)
+    is_data = F.col(kind) == "data"
+    staged = final.select(
+        F.explode(
+            F.when(
+                F.col("_op") != delete_op, F.array(F.lit("data"), F.lit("deletes"))
+            ).otherwise(F.array(F.lit("deletes")))
+        ).alias(kind),
+        *table_cols,
+    ).select(
+        kind,
+        *[c if c == key_col else F.when(is_data, F.col(c)).alias(c) for c in table_cols],
+    )
+    stage = _stage_dir(table_dir, generation)
+    staged.write.mode("overwrite").partitionBy(
+        kind, *([pcol] if pcol is not None else [])
+    ).parquet(stage)
+    new_rels, new_parts = _list_staged(
+        os.path.join(stage, f"{kind}=data"), table_dir, pcol
+    )
+    delete_rels, _ = _list_staged(
+        os.path.join(stage, f"{kind}=deletes"), table_dir, pcol
+    )
+    new_files = [os.path.join(table_dir, rel) for rel in new_rels]
 
-        # partitioned generations (r16, lifting the v1 restriction): upserts
-        # stage under the Hive layout so partition pruning survives; the
-        # equality-delete file stays GLOBAL (keys may move partitions — a
-        # partition-scoped delete would strand a moved key's old row)
-        if pcol is not None:
-            new_rels_p, new_parts = _stage_partitioned(
-                upserts, table_dir, generation, pcol
-            )
-            new_files = [os.path.join(table_dir, rel) for rel in new_rels_p]
-        else:
-            new_files = stage_only(upserts, table_dir, generation)
-            new_parts = None
-        # the equality-delete file: every changed key (upserted keys must kill
-        # their older versions too), one small parquet under the same gen dir
-        ddir = os.path.join(_stage_dir(table_dir, generation), "deletes")
-        final.select(key_col).coalesce(1).write.mode("overwrite").parquet(ddir)
-        delete_rels = [
-            os.path.relpath(os.path.join(ddir, f), table_dir)
-            for f in sorted(os.listdir(ddir))
-            if f.endswith(".parquet") and not f.startswith((".", "_"))
-        ]
-
-        parent_gen = manifest["generation"]
-        new_rels = [os.path.relpath(f, table_dir) for f in new_files]
-        # sequence numbers: parent files default to the PARENT's generation
-        # (they were current as of it); this commit's files carry its own
-        file_seq = {
-            **{rel: manifest.get("file_seq", {}).get(rel, parent_gen)
-               for rel in manifest["files"]},
-            **{rel: generation for rel in new_rels},
+    parent_gen = manifest["generation"]
+    # sequence numbers: parent files default to the PARENT's generation
+    # (they were current as of it); this commit's files carry its own
+    file_seq = {
+        **{rel: manifest.get("file_seq", {}).get(rel, parent_gen)
+           for rel in manifest["files"]},
+        **{rel: generation for rel in new_rels},
+    }
+    stats = manifest.get("stats", {})
+    stats_cols = sorted({c for s in stats.values() for c in s} | {key_col})
+    # T47 feed-planning metadata (r18 verdict #4 / ADVICE r18): per
+    # delete file, the key column's footer [min, max] (the same
+    # _collect_stats encoding every pruning comparison already speaks)
+    # plus — when the key type hash-portably matches the feed reader's
+    # _stable_bucket encoding — that file's key counts over 64 base hash
+    # buckets. The feed plans one split per key-hash bucket; with
+    # 64 % feedBuckets == 0 a feed bucket's keys live exactly in the
+    # base buckets congruent to it, so planning can SKIP churn-free
+    # bucket splits and delete files with no keys in a split's bucket
+    # without reading a single churn key on the driver, and each split
+    # prunes the parent's delete log against its own key range before
+    # reading — cutting the old N_buckets× re-read of the hottest files.
+    # Pure metadata: a reader that doesn't find it reads everything,
+    # exactly as before this was recorded.
+    delete_meta = dict(manifest.get("delete_meta") or {})
+    d_stats = _collect_stats(
+        spark,
+        table_dir,
+        [os.path.join(table_dir, rel) for rel in delete_rels],
+        [key_col],
+    )
+    key_field = StructType.fromJson(schema)[key_col]
+    for rel in delete_rels:
+        entry: dict = {"range": (d_stats.get(rel) or {}).get(key_col)}
+        b64 = _delete_file_bucket64(spark, key_field, os.path.join(table_dir, rel))
+        if b64 is not None:
+            entry["b64"] = b64
+        delete_meta[rel] = entry
+    new_manifest = {
+        "generation": generation,
+        "files": manifest["files"] + new_rels,
+        "n_files": len(manifest["files"]) + len(new_rels),
+        "schema": schema,
+        "file_seq": file_seq,
+        "delete_files": list(manifest.get("delete_files") or []) + delete_rels,
+        "delete_seq": {
+            **(manifest.get("delete_seq") or {}),
+            **{rel: generation for rel in delete_rels},
+        },
+        "delete_meta": delete_meta,
+        "mor_key": key_col,
+        "stats": {
+            **stats,
+            **_collect_stats(spark, table_dir, new_files, stats_cols),
+        },
+        "mor": {
+            "parent": parent_gen,
+            "appended_files": len(new_rels),
+            "delete_files_total": len(manifest.get("delete_files") or [])
+            + len(delete_rels),
+        },
+    }
+    if pcol is not None:
+        new_manifest["partition_col"] = pcol
+        new_manifest["partitions"] = {
+            **manifest.get("partitions", {}),
+            **(new_parts or {}),
         }
-        stats = manifest.get("stats", {})
-        stats_cols = sorted({c for s in stats.values() for c in s} | {key_col})
-        # T47 feed-planning metadata (r18 verdict #4 / ADVICE r18): per
-        # delete file, the key column's footer [min, max] (the same
-        # _collect_stats encoding every pruning comparison already speaks)
-        # plus — when the key type hash-portably matches the feed reader's
-        # _stable_bucket encoding — the batch's key counts over 64 base hash
-        # buckets. The feed plans one split per key-hash bucket; with
-        # 64 % feedBuckets == 0 a feed bucket's keys live exactly in the
-        # base buckets congruent to it, so planning can SKIP churn-free
-        # bucket splits and delete files with no keys in a split's bucket
-        # without reading a single churn key on the driver, and each split
-        # prunes the parent's delete log against its own key range before
-        # reading — cutting the old N_buckets× re-read of the hottest files.
-        # Pure metadata: a reader that doesn't find it reads everything,
-        # exactly as before this was recorded.
-        delete_meta = dict(manifest.get("delete_meta") or {})
-        d_stats = _collect_stats(
-            spark,
-            table_dir,
-            [os.path.join(table_dir, rel) for rel in delete_rels],
-            [key_col],
-        )
-        b64 = None
-        if len(delete_rels) == 1:
-            # r20: churn-sized delete file -> in-process counts (zero
-            # jobs); falls back to the r18 executor agg above the bound
-            b64 = _bucket64_counts_driver(
-                final, key_col, os.path.join(table_dir, delete_rels[0])
-            )
-            if b64 is None:
-                b64 = _bucket64_counts(final, key_col)
-        for rel in delete_rels:
-            entry: dict = {"range": (d_stats.get(rel) or {}).get(key_col)}
-            if b64 is not None:
-                entry["b64"] = b64
-            delete_meta[rel] = entry
-        new_manifest = {
-            "generation": generation,
-            "files": manifest["files"] + new_rels,
-            "n_files": len(manifest["files"]) + len(new_rels),
-            "schema": schema,
-            "file_seq": file_seq,
-            "delete_files": list(manifest.get("delete_files") or []) + delete_rels,
-            "delete_seq": {
-                **(manifest.get("delete_seq") or {}),
-                **{rel: generation for rel in delete_rels},
-            },
-            "delete_meta": delete_meta,
-            "mor_key": key_col,
-            "stats": {
-                **stats,
-                **_collect_stats(spark, table_dir, new_files, stats_cols),
-            },
-            "mor": {
-                "parent": parent_gen,
-                "appended_files": len(new_rels),
-                "delete_files_total": len(manifest.get("delete_files") or [])
-                + len(delete_rels),
-            },
+    if manifest.get("bloom_meta") is not None:
+        # S47 × S36 (r17): the declared bloom index is table identity and
+        # SURVIVES merge-on-read epochs — carried verbatim, no fresh
+        # bitsets for the epoch's files (point-lookup pruning is
+        # suspended while reads resolve through read_mor anyway, and
+        # compact_mor's fold re-indexes every live file). Dropping it
+        # here made one MOR epoch permanently strip the index.
+        new_manifest["bloom_meta"] = manifest["bloom_meta"]
+    if manifest.get("constraints") is not None:
+        new_manifest["constraints"] = manifest["constraints"]
+    if manifest.get("partition_transform") is not None:
+        # S42: the hidden-partitioning spec is table identity — every
+        # producer that rebuilds the manifest must carry it or the
+        # transform-pruned read path would refuse the next generation
+        new_manifest["partition_transform"] = manifest["partition_transform"]
+    if manifest.get("epoch_maps"):
+        # S40×S36 (r16 scope lift): a MERGE-ON-READ commit on a rename/
+        # drop-evolved table. New upsert files are written under the
+        # CURRENT logical names (the column checks above enforce it), so
+        # they tag with the current era and carried files keep theirs —
+        # the MOR resolve's per-sequence-group scans already go through
+        # _read_files, which maps every era to the logical plane BEFORE
+        # the anti-join, so a key renamed in an older era still kills
+        # that era's rows. Delete files are exempt from mapping by
+        # construction: they are read directly with the current logical
+        # key schema, which is safe because rename/drop REFUSE while a
+        # delete log is pending (_require_cow in the evolution guards) —
+        # a pending delete file's key name can never drift from the
+        # schema's.
+        new_manifest["epoch"] = manifest.get("epoch", 0)
+        new_manifest["epoch_maps"] = manifest["epoch_maps"]
+        new_manifest["file_epochs"] = {
+            **manifest.get("file_epochs", {}),
+            **{rel: manifest.get("epoch", 0) for rel in new_rels},
         }
-        if pcol is not None:
-            new_manifest["partition_col"] = pcol
-            new_manifest["partitions"] = {
-                **manifest.get("partitions", {}),
-                **(new_parts or {}),
-            }
-        if manifest.get("bloom_meta") is not None:
-            # S47 × S36 (r17): the declared bloom index is table identity and
-            # SURVIVES merge-on-read epochs — carried verbatim, no fresh
-            # bitsets for the epoch's files (point-lookup pruning is
-            # suspended while reads resolve through read_mor anyway, and
-            # compact_mor's fold re-indexes every live file). Dropping it
-            # here made one MOR epoch permanently strip the index.
-            new_manifest["bloom_meta"] = manifest["bloom_meta"]
-        if manifest.get("constraints") is not None:
-            new_manifest["constraints"] = manifest["constraints"]
-        if manifest.get("partition_transform") is not None:
-            # S42: the hidden-partitioning spec is table identity — every
-            # producer that rebuilds the manifest must carry it or the
-            # transform-pruned read path would refuse the next generation
-            new_manifest["partition_transform"] = manifest["partition_transform"]
-        if manifest.get("epoch_maps"):
-            # S40×S36 (r16 scope lift): a MERGE-ON-READ commit on a rename/
-            # drop-evolved table. New upsert files are written under the
-            # CURRENT logical names (the column checks above enforce it), so
-            # they tag with the current era and carried files keep theirs —
-            # the MOR resolve's per-sequence-group scans already go through
-            # _read_files, which maps every era to the logical plane BEFORE
-            # the anti-join, so a key renamed in an older era still kills
-            # that era's rows. Delete files are exempt from mapping by
-            # construction: they are read directly with the current logical
-            # key schema, which is safe because rename/drop REFUSE while a
-            # delete log is pending (_require_cow in the evolution guards) —
-            # a pending delete file's key name can never drift from the
-            # schema's.
-            new_manifest["epoch"] = manifest.get("epoch", 0)
-            new_manifest["epoch_maps"] = manifest["epoch_maps"]
-            new_manifest["file_epochs"] = {
-                **manifest.get("file_epochs", {}),
-                **{rel: manifest.get("epoch", 0) for rel in new_rels},
-            }
-        if txn is not None:
-            new_manifest["txn"] = txn
-        folded = _fold_txns(_txns_of(manifest), txn)
-        if folded:
-            new_manifest["txns"] = folded
-        return _commit_manifest(
-            table_dir, generation, new_manifest, expected_parent=parent_gen
-        )
-    finally:
-        final.unpersist()
-
+    if txn is not None:
+        new_manifest["txn"] = txn
+    folded = _fold_txns(_txns_of(manifest), txn)
+    if folded:
+        new_manifest["txns"] = folded
+    return _commit_manifest(
+        table_dir, generation, new_manifest, expected_parent=parent_gen
+    )
 
 def read_mor(
     spark: SparkSession, table_dir: str, as_of_generation: int | None = None

@@ -1517,8 +1517,13 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         driver.
 
         r19 (r18 verdict #4 / ADVICE r18): merge_mor now records, per
-        delete file, the batch's key counts over 64 base hash buckets
-        plus the key column's footer range (``delete_meta``). With
+        delete file, that file's own key counts over 64 base hash
+        buckets plus the key column's footer range (``delete_meta``).
+        Layout: one commit stages a delete file per write task that saw
+        keys, under its generation's ``<kind>=deletes/`` dir beside the
+        upsert files' ``<kind>=data/`` (both come from one partitioned
+        write); a delete file holds the key column plus all-NULL payload
+        columns, and the split reads the key column only. With
         ``64 % n_buckets == 0`` a feed bucket's keys live exactly in the
         base buckets congruent to it mod n_buckets, so planning skips
         creating splits for churn-free buckets and hands each split only

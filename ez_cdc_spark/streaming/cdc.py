@@ -2847,15 +2847,19 @@ def lakehouse_mor_batch(
     (s36) — t30's exact contract (atomic generation per micro-batch, txn
     watermark idempotence, per-key order across batches) with the commit
     shape that survives UNIFORM-key churn: merge_mor stages the batch's
-    upserts as new data files plus one equality-delete file and rewrites
-    NOTHING, so per-batch cost is O(batch) however the keys spread —
-    where merge_cow's touched-file split measurably saturates at
+    upserts as new data files and its changed keys as equality-delete
+    files in ONE write job (no cached batch: the resolve's shuffle and
+    the write are the commit's two Spark jobs) and rewrites NOTHING, so
+    per-batch cost is O(batch) however the keys spread — where
+    merge_cow's touched-file split measurably saturates at
     rewrite-the-whole-table (bench_scaling.py:t30_churn_spread_probe:
     64/64 files at 200 uniform keys). The read-amplification half of the
     bargain is bounded by the same in-loop maintenance pattern as t30's
     compaction policy: when the delete log exceeds ``max_delete_files``
-    the sink folds it with compact_mor (one resolve + publish, txn
-    watermark carried) and reclaims superseded generations."""
+    files (a commit stages one per write task that saw keys, one for a
+    micro-batch that AQE coalesces to a single task) the sink folds it
+    with compact_mor (one resolve + publish, txn watermark carried) and
+    reclaims superseded generations."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
@@ -2930,7 +2934,7 @@ def materialize_lakehouse_mor(
     spark: SparkSession, sf_dir: str, tag: str = "t33"
 ) -> DataFrame:
     """T33 end-to-end: lsn-split envelope stream → per-batch MERGE-ON-READ
-    commits (new files + equality-delete file, zero rewrites) with the
+    commits (new files + equality-delete files, zero rewrites) with the
     in-loop compact_mor maintenance policy → final state resolved through
     read_mor (the tail of the replay may legitimately leave a pending
     delete log; resolving it IS the op under test)."""
@@ -3445,7 +3449,7 @@ def materialize_mor_change_feed_stream(
 
     Producer half: the lsn-staged envelope replay drives a t33-shaped
     MOR sink loop — each micro-batch is one merge_mor generation (new
-    upsert files + one equality-delete file, zero rewrites), and past
+    upsert files + equality-delete files, zero rewrites), and past
     ``max_delete_files`` the loop folds the log with compact_mor
     MID-CHAIN, so the consumer's interval crosses a fold commit. Unlike
     t33's sink the loop does NOT gc/vacuum: feed retention is gc

@@ -45,11 +45,14 @@ def materialize_once(path: str, build, marker_name: str = "_SUCCESS") -> str:
     fixtures are keyed on (sf_dir, tag) and were created in place behind
     a marker check — two processes racing the creation (the r19
     oracle-sweep-vs-pytest incident, and any sharded pytest run) could
-    interleave writes into the same directory. ``build(tmp)`` now
-    produces the fixture in a unique sibling dir and one atomic
-    ``os.rename`` publishes it; the loser of a race discards its build
-    and uses the winner's. A marker-less leftover of a crashed build is
-    replaced the same way."""
+    interleave writes into the same directory. ``build(tmp)`` produces
+    the fixture in a unique sibling dir, and one rename publishes it.
+    The publish step — marker check, removal of a marker-less leftover
+    of a crashed build, rename — holds an exclusive ``fcntl.flock`` on
+    ``<path>.lock``, so no process can remove a fixture another one
+    published after its own check; the loser of a race discards its
+    build and uses the winner's."""
+    import fcntl
     import shutil as _sh
 
     marker = os.path.join(path, marker_name)
@@ -60,20 +63,13 @@ def materialize_once(path: str, build, marker_name: str = "_SUCCESS") -> str:
     build(tmp)
     if not os.path.exists(os.path.join(tmp, marker_name)):
         open(os.path.join(tmp, marker_name), "w").close()
-    try:
-        os.rename(tmp, path)
-    except OSError:
+    with open(f"{path}.lock", "a") as lock:
+        fcntl.flock(lock, fcntl.LOCK_EX)
         if os.path.exists(marker):  # lost the race to a complete winner
             _sh.rmtree(tmp, ignore_errors=True)
-            return path
-        # marker-less leftover (crashed build): replace it
-        _sh.rmtree(path, ignore_errors=True)
-        try:
+        else:
+            _sh.rmtree(path, ignore_errors=True)  # crashed build's leftover
             os.rename(tmp, path)
-        except OSError:
-            _sh.rmtree(tmp, ignore_errors=True)
-            if not os.path.exists(marker):
-                raise
     return path
 
 

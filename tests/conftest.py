@@ -32,6 +32,26 @@ def _shard_workers() -> int:
         return 1
 
 
+def _shard_heap(workers: int) -> str:
+    """Driver heap for each shard's JVM, sized so the whole fleet fits in
+    RAM: 40% of /proc/meminfo's MemAvailable split across the workers
+    (the rest covers each JVM's off-heap memory and its Python workers:
+    at half, four shards left under 1 GB free on a 16 GB host), clamped
+    to 1-8 GB. Falls back to session.py's 8g default when /proc/meminfo
+    cannot be read."""
+    try:
+        with open("/proc/meminfo") as fh:
+            info = {
+                k: int(v.split()[0])
+                for k, v in (line.split(":", 1) for line in fh if ":" in line)
+            }
+        kb = info.get("MemAvailable", info["MemTotal"])
+    except (OSError, KeyError, ValueError):
+        return "8g"
+    mb = kb * 2 // 5 // 1024 // workers
+    return f"{max(1024, min(8192, mb))}m"
+
+
 def pytest_collection_modifyitems(config, items):
     shard = os.environ.get("EZ_CDC_PYTEST_SHARD")
     if not shard:
@@ -63,12 +83,14 @@ def pytest_runtestloop(session):
 
     args = list(session.config.invocation_params.args)
     cpus_each = str(max(4, (os.cpu_count() or 32) // workers))
+    heap_each = _shard_heap(workers)
     procs = []
     for i in range(workers):
         env = dict(os.environ)
         env["EZ_CDC_PYTEST_SHARD"] = f"{i}/{workers}"
+        # a caller's explicit settings win over the sized defaults
         env.setdefault("SPARK_GRAFT_CPUS", cpus_each)
-        env["SPARK_GRAFT_CPUS"] = cpus_each
+        env.setdefault("SPARK_GRAFT_DRIVER_MEM", heap_each)
         out = tempfile.NamedTemporaryFile(
             mode="w+", prefix=f"pytest-shard{i}-", suffix=".log", delete=False
         )
@@ -80,7 +102,11 @@ def pytest_runtestloop(session):
             cwd=str(session.config.rootpath),
         )
         procs.append((i, p, out))
-        print(f"[shard {i}/{workers}] pid={p.pid} log={out.name}", flush=True)
+        print(
+            f"[shard {i}/{workers}] pid={p.pid} cpus={env['SPARK_GRAFT_CPUS']} "
+            f"heap={env['SPARK_GRAFT_DRIVER_MEM']} log={out.name}",
+            flush=True,
+        )
 
     # -x/--exitfirst stores maxfail=1; any maxfail means stop the fleet
     # once a shard reports failure

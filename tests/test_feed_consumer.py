@@ -6,7 +6,10 @@ over the churn-sized sides the change feeds are built from
 labelled feed. These tests pin what that fold must keep: zero-net
 intervals commit nothing, the sides open only churn files, the MOR
 changed-key read switches to the executor path above its row bound, and
-one consumer step costs a bounded number of Spark jobs.
+one consumer step costs a bounded number of Spark jobs. The same
+DAGScheduler job guard pins the producer's merge-on-read commit
+(sources/manifest.py:merge_mor), which stages upserts and delete keys in
+one write job.
 """
 
 import os
@@ -232,6 +235,48 @@ def test_consume_feed_step_job_budget_mor_fold_crossing(spark, tmp_path):
     jobs = _jobid(spark) - j0
     assert jobs <= MOR_STEP_JOBS, jobs
     assert _agg(spark, ad) == _recompute(m.read_mor(spark, td))
+
+
+# Spark jobs one merge_mor call may run: the resolve's shuffle map stage
+# and the single staging write; a constrained table's gate re-reads the
+# batch for its aggregate (two more). Staging upserts and delete keys
+# separately over a persisted batch cost 4 unconstrained.
+MOR_MERGE_JOBS = 2
+MOR_MERGE_JOBS_CONSTRAINED = 4
+
+
+_MOR_BATCH = [(7, 1007, "f9", "u"), (300, 1300, "f0", "d"),
+              (999, 1999, "f2", "c"), (20, 1020, "f0", "u")]
+
+
+@pytest.mark.parametrize(
+    "layout, budget",
+    [("plain", MOR_MERGE_JOBS), ("partitioned", MOR_MERGE_JOBS),
+     ("constrained", MOR_MERGE_JOBS_CONSTRAINED)],
+)
+def test_merge_mor_job_budget(spark, tmp_path, layout, budget):
+    td = str(tmp_path / "up")
+    rows = [(k, k, f"f{k % 5}", f"l{k}", f"e{k}") for k in range(1, 401)]
+    df = spark.createDataFrame(rows, UPSTREAM)
+    if layout == "partitioned":
+        m.publish_partitioned(df, td, 1, "first_name", stats_columns=["id"])
+    else:
+        m.publish(
+            df.repartitionByRange(4, "id"), td, 1, stats_columns=["id"],
+            constraints={"lsn_pos": "lsn > 0"} if layout == "constrained" else None,
+        )
+    batch = _changes(spark, _MOR_BATCH)
+    j0 = _jobid(spark)
+    m.merge_mor(spark, td, batch, "id", 2)
+    jobs = _jobid(spark) - j0
+    assert jobs <= budget, jobs
+    want = {k: tuple(r) for k, *r in rows}
+    del want[300]
+    for k, lsn, fn, _ in _MOR_BATCH:
+        if k != 300:
+            want[k] = (lsn, fn, f"l{k}", f"e{k}")
+    got = {r[0]: tuple(r[1:]) for r in m.read_mor(spark, td).collect()}
+    assert got == want
 
 
 @pytest.mark.parametrize("mor", [False, True])

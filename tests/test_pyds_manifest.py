@@ -1961,6 +1961,19 @@ def _drain_splits(reader, start, end, monkeypatch):
     return splits, rows, reads
 
 
+def _delete_rels_by_seq(man, seq):
+    """The delete files one merge_mor commit (sequence ``seq``) staged."""
+    rels = [r for r in man["delete_files"] if man["delete_seq"][r] == seq]
+    assert rels
+    return rels
+
+
+def _key_span(man, rels):
+    """[min, max] over the recorded key ranges of ``rels``."""
+    ranges = [man["delete_meta"][r]["range"] for r in rels]
+    return [min(r[0] for r in ranges), max(r[1] for r in ranges)]
+
+
 def test_mor_feed_planning_skips_churnfree_buckets_and_files(
     spark, monkeypatch
 ):
@@ -2049,14 +2062,16 @@ def test_mor_feed_parent_delete_log_range_pruned(spark, monkeypatch):
         "k", 3,
     )
     man = read_manifest(d)
-    d2rel, d3rel = man["delete_files"][0], man["delete_files"][1]
-    assert man["delete_meta"][d2rel]["range"] == [0, 9]
-    assert man["delete_meta"][d3rel]["range"] == [500, 509]
+    # a commit stages one delete file per write task; each records the
+    # key range of its own keys
+    d2rels, d3rels = _delete_rels_by_seq(man, 2), _delete_rels_by_seq(man, 3)
+    assert _key_span(man, d2rels) == [0, 9]
+    assert _key_span(man, d3rels) == [500, 509]
 
     reader = _feed_reader(d, n_buckets=8)
     splits, rows, reads = _drain_splits(reader, 2, 3, monkeypatch)
-    d2path = os.path.normpath(os.path.join(d, d2rel))
-    assert d2path not in reads  # parent delete log provably irrelevant
+    for rel in d2rels:  # parent delete log provably irrelevant
+        assert os.path.normpath(os.path.join(d, rel)) not in reads
     assert all(r.endswith(".parquet") for r in reads)
     assert sorted(rows) == sorted(
         [("update_preimage", k, k * 2, 3) for k in range(500, 510)]
@@ -2106,19 +2121,19 @@ def test_mor_feed_pre_r19_manifest_reads_everything(spark, monkeypatch):
             _json.dump(man, fh)
     man = read_manifest(d)
     assert "delete_meta" not in man
-    d2rel, d3rel = man["delete_files"][0], man["delete_files"][1]
+    d2rels, d3rels = _delete_rels_by_seq(man, 2), _delete_rels_by_seq(man, 3)
 
     reader = _feed_reader(d, n_buckets=8)
     splits, rows, reads = _drain_splits(reader, 2, 3, monkeypatch)
-    # without counts every bucket is live and every split gets the file
+    # without counts every bucket is live and every split gets the files
     assert {sp.bucket for sp in splits} == set(range(8))
-    assert all(sp.new_delete_rels == [d3rel] for sp in splits)
-    d3path = os.path.normpath(os.path.join(d, d3rel))
-    assert reads.count(d3path) == 8
+    assert all(sp.new_delete_rels == d3rels for sp in splits)
+    for rel in d3rels:
+        assert reads.count(os.path.normpath(os.path.join(d, rel))) == 8
     # without a recorded range the pre-image bucket cannot prune the
     # parent's (provably irrelevant: keys 0..4 vs churn key 50) delete log
-    d2path = os.path.normpath(os.path.join(d, d2rel))
-    assert d2path in reads
+    for rel in d2rels:
+        assert os.path.normpath(os.path.join(d, rel)) in reads
     assert sorted(rows) == sorted(
         [("update_preimage", 50, 100, 3), ("update_postimage", 50, 999, 3)]
     )
