@@ -10,21 +10,11 @@ the original parquet only, so a lossy sink shows up as a hash mismatch.
 
 from __future__ import annotations
 
-import hashlib
-import os
-import tempfile
-
 from pyspark.sql import functions as F
 
 from ez_cdc_spark.queries import register
 from ez_cdc_spark.queries._util import dec, dsum, t
-
-_SCRATCH = os.path.join(tempfile.gettempdir(), "ez_cdc_spark_scratch")
-
-
-def _scratch(sf_dir: str, tag: str) -> str:
-    key = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:12]
-    return os.path.join(_SCRATCH, f"{tag}-{key}")
+from ez_cdc_spark.streaming.replay import rig_dir
 
 
 @register(
@@ -68,7 +58,7 @@ def s2_csv_roundtrip(spark, sf_dir):
         # CSV is text — write the monetary value as an exact decimal string
         dec("l_extendedprice").alias("l_extendedprice"),
     )
-    path = _scratch(sf_dir, "s2csv")
+    path = rig_dir(sf_dir, "s2csv")
     li.write.mode("overwrite").option("header", "true").csv(path)
     back = spark.read.schema(
         "l_orderkey BIGINT, l_returnflag STRING, l_extendedprice DECIMAL(12,2)"
@@ -98,7 +88,7 @@ def s3_jsonl_roundtrip(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", dec("value").alias("value")
     )
-    path = _scratch(sf_dir, "s3json")
+    path = rig_dir(sf_dir, "s3json")
     ev.write.mode("overwrite").json(path)
     back = spark.read.schema(
         "event_id BIGINT, event_type STRING, value DECIMAL(12,2)"
@@ -129,7 +119,7 @@ def s7_partitioned_parquet_sink(spark, sf_dir):
     o = t(spark, sf_dir, "orders").withColumn(
         "o_year", F.year("o_orderdate").cast("int")
     )
-    path = _scratch(sf_dir, "s7parq")
+    path = rig_dir(sf_dir, "s7parq")
     # At 100 TB this layout gives static partition pruning on year predicates.
     o.write.mode("overwrite").partitionBy("o_year").parquet(path)
     back = spark.read.parquet(path)
@@ -276,8 +266,8 @@ GROUP BY source ORDER BY source
 )
 def s11_schema_evolution(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    v1 = _scratch(sf_dir, "s11v1")
-    v2 = _scratch(sf_dir, "s11v2")
+    v1 = rig_dir(sf_dir, "s11v1")
+    v2 = rig_dir(sf_dir, "s11v2")
     # generation 1: the original narrow schema
     d.filter(F.col("doc_id") % 2 == 0).select("doc_id", "source").write.mode(
         "overwrite"
@@ -326,8 +316,8 @@ GROUP BY source ORDER BY source
 )
 def s11b_type_widening(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    v1 = _scratch(sf_dir, "s11bv1")
-    v2 = _scratch(sf_dir, "s11bv2")
+    v1 = rig_dir(sf_dir, "s11bv1")
+    v2 = rig_dir(sf_dir, "s11bv2")
     # generation 1: narrow int32 encodings of what later becomes int64
     d.filter(F.col("doc_id") % 2 == 0).select(
         F.col("doc_id").cast("int").alias("doc_id"),
@@ -383,7 +373,7 @@ ORDER BY c_nationkey
 def s6_jdbc_snapshot(spark, sf_dir):
     from ez_cdc_spark.sources.jdbc import jdbc_snapshot
 
-    db = _scratch(sf_dir, f"s6derby-{os.getpid()}")
+    db = rig_dir(sf_dir, "s6derby")
     url = f"jdbc:derby:{db}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
     c = t(spark, sf_dir, "customer").select(
@@ -449,8 +439,8 @@ def s12_small_file_compaction(spark, sf_dir, target_file_bytes: int = 4 << 20):
     from ez_cdc_spark.sources.stats import data_bytes
 
     d = t(spark, sf_dir, "documents")
-    frag = _scratch(sf_dir, "s12frag")
-    compacted = _scratch(sf_dir, "s12compact")
+    frag = rig_dir(sf_dir, "s12frag")
+    compacted = rig_dir(sf_dir, "s12compact")
     # the small-file problem, manufactured: 64 fragments of one small table
     d.repartition(64).write.mode("overwrite").parquet(frag)
     n_bytes = data_bytes(spark, frag)
@@ -496,7 +486,7 @@ def s13_orc_roundtrip(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", dec("o_totalprice").alias("p")
     )
-    path = _scratch(sf_dir, "s13orc")
+    path = rig_dir(sf_dir, "s13orc")
     o.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     sig = F.conv(
@@ -536,7 +526,7 @@ def s14_xml_roundtrip(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", dec("value").alias("value")
     )
-    path = _scratch(sf_dir, "s14xml")
+    path = rig_dir(sf_dir, "s14xml")
     ev.write.mode("overwrite").format("xml").option("rootTag", "events").option(
         "rowTag", "event"
     ).save(path)
@@ -621,7 +611,7 @@ def s15_zorder_cluster(spark, sf_dir):
         "l_suppkey",
         z_interleave(u16, v16).alias("z"),
     ).withColumn("zbucket", F.shiftright(F.col("z"), 26))
-    path = _scratch(sf_dir, "s15zorder")
+    path = rig_dir(sf_dir, "s15zorder")
     # sortWithinPartitions on the full z-value clusters ROW GROUPS inside
     # each bucket file too, so statistics-based skipping works below file
     # granularity; the retained z column is the clustering key itself.
@@ -672,7 +662,7 @@ ORDER BY event_type
 )
 def s16_dpp_partition_prune(spark, sf_dir):
     ev = t(spark, sf_dir, "events")
-    path = _scratch(sf_dir, "s16dpp")
+    path = rig_dir(sf_dir, "s16dpp")
     ev.write.mode("overwrite").partitionBy("event_type").parquet(path)
     fact = spark.read.parquet(path)
     dim = (
@@ -728,7 +718,7 @@ def s18_dynamic_partition_overwrite(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         F.col("o_orderstatus").alias("status"), "o_orderkey", "o_totalprice"
     )
-    path = _scratch(sf_dir, "s18dynow")
+    path = rig_dir(sf_dir, "s18dynow")
     o.write.mode("overwrite").partitionBy("status").parquet(path)
     patch = (
         o.filter((F.col("status") == "F") & (F.col("o_orderkey") % 2 == 0))
@@ -782,8 +772,8 @@ GROUP BY source ORDER BY source
 )
 def s19_nested_schema_evolution(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    v1 = _scratch(sf_dir, "s19v1")
-    v2 = _scratch(sf_dir, "s19v2")
+    v1 = rig_dir(sf_dir, "s19v1")
+    v2 = rig_dir(sf_dir, "s19v2")
     # generation 1: narrow nested schema
     d.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", F.struct("source", "lang").alias("meta")
@@ -843,8 +833,8 @@ GROUP BY source ORDER BY source
 )
 def s20_partition_evolution(spark, sf_dir):
     d = t(spark, sf_dir, "documents")
-    v1 = _scratch(sf_dir, "s20v1")
-    v2 = _scratch(sf_dir, "s20v2")
+    v1 = rig_dir(sf_dir, "s20v1")
+    v2 = rig_dir(sf_dir, "s20v2")
     # generation 1: flat layout, source is a plain data column
     d.filter(F.col("doc_id") % 2 == 0).select(
         "doc_id", "source", "n_chars"
@@ -929,7 +919,7 @@ def s21_csv_malformed_modes(spark, sf_dir):
     ).otherwise(
         F.concat_ws(",", F.col("o_orderkey").cast("string"), F.col("p").cast("string"))
     )
-    path = _scratch(sf_dir, "s21csv")
+    path = rig_dir(sf_dir, "s21csv")
     o.select(line.alias("value")).write.mode("overwrite").text(path)
 
     schema = "o_orderkey BIGINT, p DECIMAL(12,2)"
@@ -1006,7 +996,7 @@ def s22_range_clustered_rewrite(spark, sf_dir):
     li = t(spark, sf_dir, "lineitem").select(
         "l_orderkey", "l_shipdate", dec("l_extendedprice").alias("p")
     )
-    path = _scratch(sf_dir, "s22range")
+    path = rig_dir(sf_dir, "s22range")
     (
         li.repartitionByRange(16, "l_shipdate")
         .sortWithinPartitions("l_shipdate")
@@ -1213,7 +1203,7 @@ def s25_manifest_atomic_publish(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s25manifest")
+    table_dir = rig_dir(sf_dir, "s25manifest")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(o.filter(F.col("o_orderkey") % 2 == 0), table_dir, generation=1)
     publish(o.filter(F.col("o_orderkey") % 3 == 0), table_dir, generation=2)
@@ -1270,7 +1260,7 @@ def s26_manifest_compaction(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s26compact")
+    table_dir = rig_dir(sf_dir, "s26compact")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.filter(F.col("o_orderkey") % 2 == 0).repartition(12), table_dir, generation=1
@@ -1333,7 +1323,7 @@ def s27_manifest_time_travel(spark, sf_dir):
     from ez_cdc_spark.sources.manifest import publish, read_committed
 
     o = t(spark, sf_dir, "orders").select("o_orderkey", "o_totalprice")
-    table_dir = _scratch(sf_dir, "s27timetravel")
+    table_dir = rig_dir(sf_dir, "s27timetravel")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(o.filter(F.col("o_orderkey") % 2 == 0), table_dir, generation=1)
     publish(o.filter(F.col("o_orderkey") % 3 == 0), table_dir, generation=2)
@@ -1394,7 +1384,7 @@ def s28_manifest_stats_skipping(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s28skip")
+    table_dir = rig_dir(sf_dir, "s28skip")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.repartitionByRange(8, "o_orderkey").sortWithinPartitions("o_orderkey"),
@@ -1460,7 +1450,7 @@ def s29_manifest_partition_publish(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice", "o_orderpriority"
     )
-    table_dir = _scratch(sf_dir, "s29part")
+    table_dir = rig_dir(sf_dir, "s29part")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish_partitioned(o, table_dir, generation=1, partition_col="o_orderpriority")
     back = read_committed_partitions(spark, table_dir, ["1-URGENT", "5-LOW"])
@@ -1555,7 +1545,7 @@ def s30_manifest_merge_cow(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s30merge")
+    table_dir = rig_dir(sf_dir, "s30merge")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -1645,7 +1635,7 @@ def s31_manifest_append(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s31append")
+    table_dir = rig_dir(sf_dir, "s31append")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.filter("o_orderkey % 3 = 0").repartitionByRange(4, "o_orderkey"),
@@ -1764,7 +1754,7 @@ def s30b_manifest_merge_cow_partitioned(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s30bmerge")
+    table_dir = rig_dir(sf_dir, "s30bmerge")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish_partitioned(
         c.repartitionByRange(8, "c_mktsegment", "c_custkey").sortWithinPartitions(
@@ -1865,7 +1855,7 @@ def s31b_manifest_append_partitioned(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s31bappend")
+    table_dir = rig_dir(sf_dir, "s31bappend")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish_partitioned(
         o.filter("o_orderkey % 3 = 0").repartitionByRange(4, "o_orderkey"),
@@ -1952,7 +1942,7 @@ def s32_manifest_schema_evolution(spark, sf_dir):
     )
 
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_name")
-    table_dir = _scratch(sf_dir, "s32evolve")
+    table_dir = rig_dir(sf_dir, "s32evolve")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.filter("c_custkey % 2 = 0").repartitionByRange(4, "c_custkey"),
@@ -2045,7 +2035,7 @@ def s33_concurrent_writers(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s33writers")
+    table_dir = rig_dir(sf_dir, "s33writers")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.filter("o_orderkey % 4 = 0").repartitionByRange(2, "o_orderkey"),
@@ -2125,7 +2115,7 @@ def s28b_temporal_stats_skipping(spark, sf_dir):
         F.col("o_orderdate").cast("date").alias("o_odate"),
         "o_totalprice",
     )
-    table_dir = _scratch(sf_dir, "s28btemporal")
+    table_dir = rig_dir(sf_dir, "s28btemporal")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.repartitionByRange(8, "o_odate", "o_orderkey").sortWithinPartitions(
@@ -2199,7 +2189,7 @@ def s34_partial_compaction(spark, sf_dir):
     o = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_orderstatus", "o_totalprice"
     )
-    table_dir = _scratch(sf_dir, "s34partial")
+    table_dir = rig_dir(sf_dir, "s34partial")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         o.filter("o_orderkey % 2 = 0").repartitionByRange(2, "o_orderkey"),
@@ -2294,7 +2284,7 @@ def s28c_conjunctive_zorder_pruning(spark, sf_dir):
     v16 = quantize16(F.col("l_suppkey"), F.lit(lo_sk), F.lit(hi_sk))
     coded = li.withColumn("z", z_interleave(u16, v16))
 
-    table_dir = _scratch(sf_dir, "s28czorder")
+    table_dir = rig_dir(sf_dir, "s28czorder")
     shutil.rmtree(table_dir, ignore_errors=True)
     # range-partition the MORTON CODE itself: each file holds one
     # contiguous z slice, so BOTH interleaved columns get narrow footer
@@ -2381,7 +2371,7 @@ def s35_manifest_change_feed(spark, sf_dir):
     from ez_cdc_spark.sources.manifest import change_feed, merge_cow, publish
 
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_name", "c_nationkey")
-    table_dir = _scratch(sf_dir, "s35cdf")
+    table_dir = rig_dir(sf_dir, "s35cdf")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -2491,7 +2481,7 @@ def s36_merge_on_read(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s36mor")
+    table_dir = rig_dir(sf_dir, "s36mor")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -2583,7 +2573,7 @@ def s37_restore(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s37restore")
+    table_dir = rig_dir(sf_dir, "s37restore")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -2697,7 +2687,7 @@ def s36b_mor_change_feed(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s36bfeed")
+    table_dir = rig_dir(sf_dir, "s36bfeed")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -2815,7 +2805,7 @@ def s36c_merge_on_read_partitioned(spark, sf_dir):
         dec("c_acctbal").alias("c_acctbal"),
         "c_mktsegment",
     )
-    table_dir = _scratch(sf_dir, "s36cmorp")
+    table_dir = rig_dir(sf_dir, "s36cmorp")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish_partitioned(
         c, table_dir, 1, partition_col="c_mktsegment", stats_columns=["c_custkey"]
@@ -2923,7 +2913,7 @@ def s38_branch_wap(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s38wap")
+    table_dir = rig_dir(sf_dir, "s38wap")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -3038,7 +3028,7 @@ def s39_constraint_gate(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s39gate")
+    table_dir = rig_dir(sf_dir, "s39gate")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -3179,7 +3169,7 @@ def s40_rename_drop_evolution(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_mktsegment", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s40epochs")
+    table_dir = rig_dir(sf_dir, "s40epochs")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),
@@ -3284,7 +3274,7 @@ def s41_catalog_transaction(spark, sf_dir):
         "c_custkey", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
     orders = t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
-    cat = _scratch(sf_dir, "s41cat")
+    cat = rig_dir(sf_dir, "s41cat")
     shutil.rmtree(cat, ignore_errors=True)
     C.init(cat)
 
@@ -3384,7 +3374,7 @@ def s42_hidden_partitioning(spark, sf_dir):
     ev = t(spark, sf_dir, "events").select(
         "event_id", "event_type", "ts", dec("value").alias("value")
     )
-    table_dir = _scratch(sf_dir, "s42hidden")
+    table_dir = rig_dir(sf_dir, "s42hidden")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish_hidden_partitioned(
         ev, table_dir, generation=1, transform=("days", "ts", None)
@@ -3452,7 +3442,7 @@ def s43_manifest_datasource(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s43pyds")
+    table_dir = rig_dir(sf_dir, "s43pyds")
     shutil.rmtree(table_dir, ignore_errors=True)
     key = F.col("c_custkey")
     publish(c.filter(key % 2 == 0), table_dir, generation=1)
@@ -3511,7 +3501,7 @@ def s44_manifest_datasource_write(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s44pydsw")
+    table_dir = rig_dir(sf_dir, "s44pydsw")
     shutil.rmtree(table_dir, ignore_errors=True)
     register_ezmanifest(spark)
     key = F.col("c_custkey")
@@ -3594,7 +3584,7 @@ def s45_catalog_fk_integrity(spark, sf_dir):
     even = valid.filter(F.col("o_orderkey") % 2 == 0)
     odd = valid.filter(F.col("o_orderkey") % 2 == 1)
 
-    cat = _scratch(sf_dir, "s45fk")
+    cat = rig_dir(sf_dir, "s45fk")
     shutil.rmtree(cat, ignore_errors=True)
     C.init(cat)
     publish(cust, C.table_dir(cat, "cust"), 1)
@@ -3712,7 +3702,7 @@ def s36d_mor_under_epochs(spark, sf_dir):
         dec("c_acctbal").alias("c_acctbal"),
         "c_mktsegment",
     )
-    table_dir = _scratch(sf_dir, "s36dmorep")
+    table_dir = rig_dir(sf_dir, "s36dmorep")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(base, table_dir, generation=1, stats_columns=["c_custkey"])
     rename_column(table_dir, 2, "c_acctbal", "bal")
@@ -3783,7 +3773,7 @@ def s46_catalog_views(spark, sf_dir):
     orders = t(spark, sf_dir, "orders").select(
         "o_orderkey", "o_custkey", dec("o_totalprice").alias("o_totalprice")
     )
-    cat = _scratch(sf_dir, "s46views")
+    cat = rig_dir(sf_dir, "s46views")
     shutil.rmtree(cat, ignore_errors=True)
     C.init(cat)
     publish(cust, C.table_dir(cat, "cust"), 1)
@@ -3857,7 +3847,7 @@ def s47_bloom_point_lookup(spark, sf_dir):
         F.col("c_nationkey").cast("bigint").alias("nationkey"),
         dec("c_acctbal").cast("double").alias("bal"),
     )
-    table_dir = _scratch(sf_dir, "s47bloom")
+    table_dir = rig_dir(sf_dir, "s47bloom")
     shutil.rmtree(table_dir, ignore_errors=True)
     # cluster by NATIONKEY: custkey is scattered, min/max on it is useless
     publish(
@@ -3942,7 +3932,7 @@ def s47b_bloom_fold_lookup(spark, sf_dir):
         F.col("c_nationkey").cast("bigint").alias("nationkey"),
         dec("c_acctbal").cast("double").alias("bal"),
     )
-    table_dir = _scratch(sf_dir, "s47bloomfold")
+    table_dir = rig_dir(sf_dir, "s47bloomfold")
     shutil.rmtree(table_dir, ignore_errors=True)
     # ten disjoint key slices (c_custkey mod 10) -> each append's key
     # min/max spans nearly the whole key range, so stats pruning is
@@ -4035,7 +4025,7 @@ def s44b_manifest_datasource_write_partitioned(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s44bpart")
+    table_dir = rig_dir(sf_dir, "s44bpart")
     shutil.rmtree(table_dir, ignore_errors=True)
     register_ezmanifest(spark)
     key = F.col("c_custkey")
@@ -4114,7 +4104,7 @@ def s44c_manifest_writer_merge_schema(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s44cmerge")
+    table_dir = rig_dir(sf_dir, "s44cmerge")
     shutil.rmtree(table_dir, ignore_errors=True)
     register_ezmanifest(spark)
     key = F.col("c_custkey")
@@ -4213,7 +4203,7 @@ def s36e_clustered_mor_fold(spark, sf_dir):
     c = t(spark, sf_dir, "customer").select(
         "c_custkey", "c_name", "c_nationkey", dec("c_acctbal").alias("c_acctbal")
     )
-    table_dir = _scratch(sf_dir, "s36emorfold")
+    table_dir = rig_dir(sf_dir, "s36emorfold")
     shutil.rmtree(table_dir, ignore_errors=True)
     publish(
         c.repartitionByRange(8, "c_custkey").sortWithinPartitions("c_custkey"),

@@ -2366,9 +2366,9 @@ ORDER BY id
     "churn, never the table.",
 )
 def t35_lakehouse_restore_replay(spark, sf_dir):
-    from ez_cdc_spark.streaming.cdc import materialize_lakehouse_restore
+    from ez_cdc_spark.streaming.cdc import _run_lakehouse_restore
 
-    state = materialize_lakehouse_restore(spark, sf_dir)
+    state = _run_lakehouse_restore(spark, sf_dir)[0]
     return state.select(
         F.col("id").cast("bigint").alias("id"),
         F.col("lsn").cast("bigint").alias("lsn"),
@@ -2418,9 +2418,9 @@ ORDER BY first_name
     "rollback's feed costs the rolled-back churn, never the table.",
 )
 def t37_restore_feed_consumer(spark, sf_dir):
-    from ez_cdc_spark.streaming.cdc import materialize_restore_feed_consumer
+    from ez_cdc_spark.streaming.cdc import _run_restore_feed_consumer
 
-    agg = materialize_restore_feed_consumer(spark, sf_dir)
+    agg = _run_restore_feed_consumer(spark, sf_dir)[0]
     return agg.select(
         "first_name",
         F.col("n").cast("bigint").alias("n"),
@@ -2463,11 +2463,11 @@ ORDER BY id
     "the directory tree.",
 )
 def t35b_partitioned_restore_replay(spark, sf_dir):
-    from ez_cdc_spark.streaming.cdc import materialize_lakehouse_restore
+    from ez_cdc_spark.streaming.cdc import _run_lakehouse_restore
 
-    state = materialize_lakehouse_restore(
+    state = _run_lakehouse_restore(
         spark, sf_dir, tag="t35b", partition_col="first_name"
-    )
+    )[0]
     return state.select(
         F.col("id").cast("bigint").alias("id"),
         F.col("lsn").cast("bigint").alias("lsn"),
@@ -2514,9 +2514,9 @@ ORDER BY id
     "recover — recovery cost is the un-applied churn.",
 )
 def t36_mor_restore_replay(spark, sf_dir):
-    from ez_cdc_spark.streaming.cdc import materialize_lakehouse_mor_restore
+    from ez_cdc_spark.streaming.cdc import _run_lakehouse_mor_restore
 
-    state = materialize_lakehouse_mor_restore(spark, sf_dir)
+    state = _run_lakehouse_mor_restore(spark, sf_dir)[0]
     return state.select(
         F.col("id").cast("bigint").alias("id"),
         F.col("lsn").cast("bigint").alias("lsn"),
@@ -2835,13 +2835,11 @@ GROUP BY c_nationkey ORDER BY c_nationkey
     "re-scan of old data.",
 )
 def t42_manifest_stream_tail(spark, sf_dir):
-    import re
     import shutil
-    import time
 
     from ez_cdc_spark.sources.manifest import publish, publish_append
     from ez_cdc_spark.sources.pyds import register_ezmanifest
-    from ez_cdc_spark.streaming.replay import checkpoint_dir
+    from ez_cdc_spark.streaming.replay import checkpoint_dir, wait_drained
 
     register_ezmanifest(spark)
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -2864,22 +2862,10 @@ def t42_manifest_stream_tail(spark, sf_dir):
         .start()
     )
 
-    def drained(gen, timeout=240):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                eo = p["sources"][0].get("endOffset")
-                m = re.search(r"['\"]gen['\"]\s*:\s*(\d+)", str(eo or ""))
-                if m and int(m.group(1)) >= gen and p["numInputRows"] == 0:
-                    return True
-            time.sleep(0.2)
-        raise TimeoutError(f"stream never drained generation {gen}")
-
     try:
-        drained(1)
+        wait_drained(q, "gen", 1, timeout=240)
         publish_append(c.filter(key % 3 == 1), table_dir, generation=2)
-        drained(2)
+        wait_drained(q, "gen", 2, timeout=240)
         # gen 3 arrives through the S44 writer: Spark IO end to end
         (
             c.filter(key % 3 == 2)
@@ -2888,7 +2874,7 @@ def t42_manifest_stream_tail(spark, sf_dir):
             .mode("append")
             .save()
         )
-        drained(3)
+        wait_drained(q, "gen", 3, timeout=240)
     finally:
         q.stop()
         q.awaitTermination()
@@ -2923,9 +2909,7 @@ GROUP BY c_nationkey ORDER BY c_nationkey
     "map.",
 )
 def t43_manifest_stream_pipeline(spark, sf_dir):
-    import re
     import shutil
-    import time
 
     from ez_cdc_spark.sources.manifest import (
         publish,
@@ -2933,7 +2917,7 @@ def t43_manifest_stream_pipeline(spark, sf_dir):
         read_manifest,
     )
     from ez_cdc_spark.sources.pyds import register_ezmanifest
-    from ez_cdc_spark.streaming.replay import checkpoint_dir
+    from ez_cdc_spark.streaming.replay import checkpoint_dir, wait_drained
 
     register_ezmanifest(spark)
     c = t(spark, sf_dir, "customer").select("c_custkey", "c_nationkey")
@@ -2970,24 +2954,12 @@ def t43_manifest_stream_pipeline(spark, sf_dir):
         .start()
     )
 
-    def drained(gen, timeout=240):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                eo = p["sources"][0].get("endOffset")
-                m = re.search(r"['\"]gen['\"]\s*:\s*(\d+)", str(eo or ""))
-                if m and int(m.group(1)) >= gen and p["numInputRows"] == 0:
-                    return True
-            time.sleep(0.2)
-        raise TimeoutError(f"pipeline never drained generation {gen}")
-
     try:
-        drained(1)
+        wait_drained(q, "gen", 1, timeout=240)
         publish_append(c.filter(key % 3 == 1), up, generation=2)
-        drained(2)
+        wait_drained(q, "gen", 2, timeout=240)
         publish_append(c.filter(key % 3 == 2), up, generation=3)
-        drained(3)
+        wait_drained(q, "gen", 3, timeout=240)
     finally:
         q.stop()
         q.awaitTermination()
@@ -3052,12 +3024,10 @@ FROM gen GROUP BY 1 ORDER BY op
     "stream writers per epoch).",
 )
 def t44_manifest_native_stream_sink(spark, sf_dir):
-    import re
     import shutil
-    import time
 
     from ez_cdc_spark.sources.pyds import register_envelopegen, register_ezmanifest
-    from ez_cdc_spark.streaming.replay import checkpoint_dir
+    from ez_cdc_spark.streaming.replay import checkpoint_dir, wait_drained
 
     register_envelopegen(spark)
     register_ezmanifest(spark)
@@ -3078,18 +3048,8 @@ def t44_manifest_native_stream_sink(spark, sf_dir):
         .trigger(processingTime="0 seconds")
         .start()
     )
-    deadline = time.time() + 240
     try:
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                eo = str(p["sources"][0].get("endOffset") or "")
-                m = re.search(r"['\"]i['\"]\s*:\s*(\d+)", eo)
-                if m and int(m.group(1)) >= 3000 and p["numInputRows"] == 0:
-                    break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("native sink never drained the source")
+        wait_drained(q, "i", 3000, timeout=240)
     finally:
         q.stop()
         q.awaitTermination()
@@ -3136,12 +3096,11 @@ FROM gen GROUP BY 1 ORDER BY op
 )
 def t45_manifest_stream_cascade(spark, sf_dir):
     import os
-    import re
     import shutil
     import time
 
     from ez_cdc_spark.sources.pyds import register_envelopegen, register_ezmanifest
-    from ez_cdc_spark.streaming.replay import checkpoint_dir
+    from ez_cdc_spark.streaming.replay import checkpoint_dir, wait_drained
 
     register_envelopegen(spark)
     register_ezmanifest(spark)
@@ -3182,29 +3141,13 @@ def t45_manifest_stream_cascade(spark, sf_dir):
         .start()
     )
 
-    def _drained(q, pattern, target):
-        p = q.lastProgress
-        if not p or not p["sources"]:
-            return False
-        m = re.search(pattern, str(p["sources"][0].get("endOffset") or ""))
-        return bool(m) and int(m.group(1)) >= target and p["numInputRows"] == 0
-
     try:
-        while time.time() < deadline:
-            if _drained(q1, r"['\"]i['\"]\s*:\s*(\d+)", 3000):
-                break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("hop 1 never drained")
+        # both hops share the one 300 s budget
+        wait_drained(q1, "i", 3000, timeout=deadline - time.time())
         from ez_cdc_spark.sources.manifest import current_generation
 
         a_head = current_generation(a_dir)
-        while time.time() < deadline:
-            if _drained(q2, r"['\"]gen['\"]\s*:\s*(\d+)", a_head):
-                break
-            time.sleep(0.2)
-        else:
-            raise TimeoutError("hop 2 never caught up with the upstream head")
+        wait_drained(q2, "gen", a_head, timeout=deadline - time.time())
     finally:
         q1.stop()
         q2.stop()

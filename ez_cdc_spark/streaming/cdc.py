@@ -21,26 +21,46 @@ at-least-once:
                  email=user_id@event_type}   (null when op='d')
     before    = {id} (null when op='c')      (REPLICA IDENTITY FULL analog)
     duplicates: every event with event_id % 97 == 0 is emitted twice
+
+Every ``materialize_*`` / ``_run_*`` rig below has one shape: a fresh
+per-process rig dir (replay.rig_dir) → genesis (``_genesis``: generation 1
+of an empty ``CUSTOMERS_SCHEMA`` / ``FEED_AGG_SCHEMA`` table) → replay
+(``_replay``: a file stream, usually the lsn-staged envelopes from
+``stream_envelopes``, drained through the rig's foreachBatch sink on a
+fresh checkpoint with ``availableNow``; the restore rigs replay twice, the
+second run being the at-least-once redelivery) → read-back of the
+committed state. The sinks (``*_batch``) hold each rig's semantics.
 """
 
 from __future__ import annotations
 
-import hashlib
 import itertools
 import os
 import shutil
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import LongType, StringType, StructField, StructType
 
 from ez_cdc_spark.schemas import envelope_schema
-from ez_cdc_spark.sources.manifest import empty_frame
+from ez_cdc_spark.sources.manifest import (
+    empty_frame,
+    gc,
+    publish,
+    publish_partitioned,
+    read_committed,
+    read_manifest,
+    read_mor,
+    restore,
+    txn_watermark,
+    vacuum,
+)
 from ez_cdc_spark.sources.tables import load_table
 from ez_cdc_spark.streaming.replay import (
-    _SCRATCH,
     _dir_for,
     checkpoint_dir,
     materialize_once,
+    rig_dir,
 )
 
 # JSON wire schema of the derived envelope (matches schemas.envelope_schema
@@ -55,6 +75,26 @@ ENVELOPE_JSON_SCHEMA = (
 )
 
 OP_MAP = {"signup": "c", "view": "u", "click": "u", "purchase": "u", "error": "d"}
+
+# The current-state row every lakehouse rig's table holds (the decoded
+# ``customers`` after-image plus its lsn), and the per-first_name
+# aggregate the change-feed consumers (t32/t34/t37/t48) maintain from it.
+CUSTOMERS_SCHEMA = StructType(
+    [
+        StructField("id", LongType()),
+        StructField("lsn", LongType()),
+        StructField("first_name", StringType()),
+        StructField("last_name", StringType()),
+        StructField("email", StringType()),
+    ]
+)
+FEED_AGG_SCHEMA = StructType(
+    [
+        StructField("first_name", StringType()),
+        StructField("n", LongType()),
+        StructField("sum_lsn", LongType()),
+    ]
+)
 
 
 def derive_envelopes(
@@ -353,19 +393,32 @@ def corrupt_envelopes_jsonl(spark: SparkSession, sf_dir: str, n_files: int = 8) 
 
 
 def stream_envelopes(
-    spark: SparkSession, sf_dir: str, snapshot: bool = False
+    spark: SparkSession,
+    sf_dir: str | None = None,
+    snapshot: bool = False,
+    path: str | None = None,
+    max_files_per_trigger: int | None = None,
 ) -> DataFrame:
     """S4/S5 stand-in: the envelope topic as a file stream (value already
     JSON-decoded via reader schema — decode parity in decode_envelopes).
-    ``snapshot=True`` replays the R2 snapshot-then-stream bootstrap dir."""
-    from ez_cdc_spark.session import apply_runtime_conf
+    By default it replays ``sf_dir``'s round-robin envelope dir and
+    re-pins the session confs; ``snapshot=True`` replays the R2
+    snapshot-then-stream bootstrap dir instead. ``path`` replays an
+    explicit envelope dir (the lsn-staged, corrupt and drift fixtures)
+    and leaves the session confs to the caller. ``max_files_per_trigger``
+    slices the replay into micro-batches of that many files."""
+    if path is None:
+        from ez_cdc_spark.session import apply_runtime_conf
 
-    apply_runtime_conf(spark)  # external non-UTC sessions re-pinned (see replay._pin_confs)
-    if snapshot:
-        path = envelopes_snapshot_jsonl(spark, sf_dir)
-    else:
-        path = envelopes_jsonl(spark, sf_dir)
-    return spark.readStream.schema(ENVELOPE_JSON_SCHEMA).json(path)
+        apply_runtime_conf(spark)  # external non-UTC sessions re-pinned (see replay._pin_confs)
+        if snapshot:
+            path = envelopes_snapshot_jsonl(spark, sf_dir)
+        else:
+            path = envelopes_jsonl(spark, sf_dir)
+    reader = spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
+    if max_files_per_trigger is not None:
+        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
+    return reader.json(path)
 
 
 def decode_envelopes(raw: DataFrame, value_col: str = "value") -> DataFrame:
@@ -382,6 +435,120 @@ def decode_envelopes(raw: DataFrame, value_col: str = "value") -> DataFrame:
         )
         .select("e.*", "kafka_timestamp")
     )
+
+
+def _fresh(path: str) -> str:
+    """``path`` with whatever a previous run of the rig left there removed."""
+    if os.path.exists(path):
+        shutil.rmtree(path)
+    return path
+
+
+def _genesis(
+    spark: SparkSession,
+    table_dir: str,
+    schema: StructType = CUSTOMERS_SCHEMA,
+    stats_column: str = "id",
+    partition_col: str | None = None,
+    constraints: dict | None = None,
+) -> str:
+    """Generation 1 of a rig table in a fresh ``table_dir``: an empty
+    ``schema`` frame (zero Spark jobs) published with stats on
+    ``stats_column`` and the table's CHECK ``constraints``,
+    Hive-partitioned by ``partition_col`` when given. Returns
+    ``table_dir``."""
+    _fresh(table_dir)
+    empty = empty_frame(spark, schema)
+    meta = {
+        "generation": 1,
+        "stats_columns": [stats_column],
+        "constraints": constraints,
+    }
+    if partition_col is None:
+        publish(empty, table_dir, **meta)
+    else:
+        publish_partitioned(empty, table_dir, partition_col=partition_col, **meta)
+    return table_dir
+
+
+def _replay(stream: DataFrame, sink) -> None:
+    """Drain ``stream`` through the foreachBatch ``sink``: one
+    ``availableNow`` run on a fresh checkpoint, so a second call is an
+    at-least-once redelivery of the whole source (the restore rigs)."""
+    (
+        stream.writeStream.foreachBatch(sink)
+        .option("checkpointLocation", checkpoint_dir())
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+
+
+def _change_feed_stream(spark: SparkSession, table_dir: str) -> DataFrame:
+    """The native row-level change-feed stream over ``table_dir``
+    (``readStream.format('ezmanifest').option('changeFeed', 'true')``)."""
+    from ez_cdc_spark.sources.pyds import register_ezmanifest
+
+    register_ezmanifest(spark)
+    return (
+        spark.readStream.format("ezmanifest")
+        .option("path", table_dir)
+        .option("changeFeed", "true")
+        .load()
+    )
+
+
+def _change_feed_to_parquet(
+    spark: SparkSession, table_dir: str, out_dir: str
+) -> DataFrame:
+    """Drain ``table_dir``'s change-feed stream into a parquet file sink at
+    ``out_dir`` (t46/t47: the drained feed is itself a committed artifact)
+    and read it back."""
+    (
+        _change_feed_stream(spark, table_dir)
+        .writeStream.format("parquet")
+        .option("path", out_dir)
+        .option("checkpointLocation", checkpoint_dir())
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return spark.read.parquet(out_dir)
+
+
+def _generation_of_batch(table_dir: str, tag: str, batch_id: int) -> int:
+    """The newest generation of ``table_dir`` whose ``tag`` txn watermark
+    is ``batch_id`` — the target the restore rigs (t35/t36/t37) rewind to.
+    Generations gc already reclaimed are skipped; if they were the only
+    ones carrying the batch, the refusal is loud: retention must cover the
+    restore horizon."""
+    target = None
+    reclaimed = 0
+    for g in range(2, read_manifest(table_dir)["generation"] + 1):
+        try:
+            wm = txn_watermark(read_manifest(table_dir, g), tag) or {}
+        except FileNotFoundError:
+            reclaimed += 1  # gc-collected generation (maintenance-ON runs)
+            continue
+        if wm.get("batch_id") == batch_id:
+            target = g
+    if target is None:
+        if reclaimed:
+            # the restore horizon exceeded the retention window: every
+            # generation that committed the requested batch was already
+            # gc'd — the same loud refusal restore itself gives for
+            # dangling file references, surfaced at target resolution
+            raise FileNotFoundError(
+                f"cannot restore to batch {batch_id}: all "
+                f"generations carrying that watermark were gc-reclaimed "
+                f"({reclaimed} collected) — retention must cover the "
+                f"restore horizon"
+            )
+        raise RuntimeError(
+            f"no generation committed batch {batch_id} — "
+            f"replay produced fewer micro-batches than expected"
+        )
+    return target
 
 
 def _swap_bucket_dirs(spark, df, cur_path: str, touched, tag: str) -> None:
@@ -534,18 +701,9 @@ def materialize(
     """T9 end-to-end: envelope stream → foreachBatch upsert → final state.
     ``snapshot=True`` bootstraps from the R2 initial snapshot (op='r' rows
     merge like upserts; streamed changes overwrite them by higher lsn)."""
-    state_dir = _dir_for(sf_dir, f"state-{tag}-{os.getpid()}")
-    if os.path.exists(state_dir):
-        shutil.rmtree(state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    env = stream_envelopes(spark, sf_dir, snapshot=snapshot)
-    q = (
-        env.writeStream.foreachBatch(upsert_batch(state_dir))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    state_dir = _fresh(rig_dir(sf_dir, f"state-{tag}"))
+    os.makedirs(state_dir)
+    _replay(stream_envelopes(spark, sf_dir, snapshot=snapshot), upsert_batch(state_dir))
     return spark.read.parquet(os.path.join(state_dir, "current"))
 
 
@@ -608,18 +766,9 @@ def upsert_with_agg_batch(state_dir: str, n_buckets: int = 16):
 def materialize_agg(spark: SparkSession, sf_dir: str, tag: str = "t13") -> DataFrame:
     """T13 end-to-end: envelope stream → merge + incremental per-domain
     aggregate → the maintained aggregate table (bucket, domain, n_live)."""
-    state_dir = _dir_for(sf_dir, f"state-{tag}-{os.getpid()}")
-    if os.path.exists(state_dir):
-        shutil.rmtree(state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    env = stream_envelopes(spark, sf_dir)
-    q = (
-        env.writeStream.foreachBatch(upsert_with_agg_batch(state_dir))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    state_dir = _fresh(rig_dir(sf_dir, f"state-{tag}"))
+    os.makedirs(state_dir)
+    _replay(stream_envelopes(spark, sf_dir), upsert_with_agg_batch(state_dir))
     return spark.read.parquet(os.path.join(state_dir, "agg"))
 
 
@@ -807,26 +956,10 @@ def materialize_scd2(
     ``max_files_per_trigger`` deliberately slices the replay into several
     micro-batches so the attested path exercises the cross-batch merge
     (open versions closed by later batches), not a single-batch rebuild."""
-    state_dir = _dir_for(sf_dir, f"state-{tag}-{os.getpid()}")
-    if os.path.exists(state_dir):
-        shutil.rmtree(state_dir)
-    os.makedirs(state_dir, exist_ok=True)
-    from ez_cdc_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
-    path = envelopes_jsonl(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(scd2_batch(state_dir))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    state_dir = _fresh(rig_dir(sf_dir, f"state-{tag}"))
+    os.makedirs(state_dir)
+    env = stream_envelopes(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
+    _replay(env, scd2_batch(state_dir))
     return read_scd2(spark, state_dir)
 
 
@@ -983,11 +1116,11 @@ def materialize_jdbc(
     invocation's database is shut down and removed once its successor
     starts, so scratch usage stays bounded at one live + one draining."""
     seq = next(_JDBC_INVOCATION)
-    base = _dir_for(sf_dir, f"jdbc-{tag}-{os.getpid()}-{seq}")
+    base = rig_dir(sf_dir, f"jdbc-{tag}-{seq}")
     jvm = spark.sparkContext._jvm
     jvm.java.lang.Class.forName("org.apache.derby.jdbc.EmbeddedDriver")
     if seq > 0:
-        prev = _dir_for(sf_dir, f"jdbc-{tag}-{os.getpid()}-{seq - 1}")
+        prev = rig_dir(sf_dir, f"jdbc-{tag}-{seq - 1}")
         if os.path.exists(prev):
             _derby_shutdown(jvm, f"{prev}/db")
             shutil.rmtree(prev, ignore_errors=True)
@@ -995,24 +1128,10 @@ def materialize_jdbc(
         _derby_shutdown(jvm, f"{base}/db")
         shutil.rmtree(base)
     os.makedirs(base, exist_ok=True)
-    from ez_cdc_spark.session import apply_runtime_conf
-
-    apply_runtime_conf(spark)
     url = f"jdbc:derby:{base}/db;create=true"
     driver = "org.apache.derby.jdbc.EmbeddedDriver"
-    path = envelopes_jsonl(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", max_files_per_trigger)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(jdbc_cdc_sink_batch(url, driver, "changes"))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    env = stream_envelopes(spark, sf_dir, max_files_per_trigger=max_files_per_trigger)
+    _replay(env, jdbc_cdc_sink_batch(url, driver, "changes"))
     return (
         spark.read.format("jdbc")
         .option("url", url)
@@ -1389,50 +1508,13 @@ def materialize_lakehouse_drift(
     evolution read phone as NULL). The maintenance policy runs, so the
     partial compaction restages old NULL-filled rows under the evolved
     schema mid-stream too."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ez_cdc_spark.sources.manifest import publish, read_committed
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
-    )
-    publish(
-        empty_frame(spark, schema),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
-    )
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-{tag}"))
     path, _threshold = envelopes_jsonl_drift(spark, sf_dir)
     raw = spark.readStream.option("maxFilesPerTrigger", 1).text(path)
-    q = (
-        raw.writeStream.foreachBatch(
-            lakehouse_drift_merge_batch(
-                table_dir,
-                tag,
-                max_files=8,
-                compact_target_files=2,
-                gc_older_than_s=0.0,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
+    sink = lakehouse_drift_merge_batch(
+        table_dir, tag, max_files=8, compact_target_files=2, gc_older_than_s=0.0
     )
-    q.awaitTermination()
+    _replay(raw, sink)
     return read_committed(spark, table_dir)
 
 
@@ -1460,67 +1542,16 @@ def materialize_lakehouse(
     default key-range pruning regime's correctness under cross-partition
     key moves in the live streaming path (a moved key's old row is
     deleted wherever it lives; stable_partition_keys stays False)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    table_dir = _genesis(
+        spark, rig_dir(sf_dir, f"lakehouse-{tag}"), partition_col=partition_col
     )
-
-    from ez_cdc_spark.sources.manifest import (
-        publish,
-        publish_partitioned,
-        read_committed,
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
+    sink = lakehouse_merge_batch(
+        table_dir, tag, max_files=8, compact_target_files=2, gc_older_than_s=0.0
     )
-    if partition_col is None:
-        publish(
-            empty_frame(spark, schema),
-            table_dir,
-            generation=1,
-            stats_columns=["id"],
-        )
-    else:
-        publish_partitioned(
-            empty_frame(spark, schema),
-            table_dir,
-            generation=1,
-            partition_col=partition_col,
-            stats_columns=["id"],
-        )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(
-            lakehouse_merge_batch(
-                table_dir,
-                tag,
-                max_files=8,
-                compact_target_files=2,
-                gc_older_than_s=0.0,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(env, sink)
     return read_committed(spark, table_dir)
 
 
@@ -1701,56 +1732,26 @@ def materialize_lakehouse_wap(
     final committed main state. The quarantine dir sits next to the table
     (``<table>-quarantine``) for the pytest reconciliation (quarantined
     events are exactly the corrupt non-delete envelopes)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ez_cdc_spark.sources.manifest import publish, read_committed
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-wap-{tag}-{os.getpid()}")
-    quarantine_dir = table_dir + "-quarantine"
-    for d in (table_dir, quarantine_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
-    )
-    publish(
-        empty_frame(spark, schema),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    table_dir = _genesis(
+        spark,
+        rig_dir(sf_dir, f"lakehouse-wap-{tag}"),
         constraints={"email_clean": "email IS NULL OR email NOT LIKE 'corrupt-%'"},
     )
-    path = envelopes_jsonl_corrupt(spark, sf_dir, corrupt_mod=corrupt_mod)
-    q = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-        .writeStream.foreachBatch(
-            lakehouse_wap_batch(
-                table_dir,
-                quarantine_dir,
-                tag,
-                max_files=8,
-                compact_target_files=2,
-                gc_older_than_s=0.0,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
+    quarantine_dir = _fresh(table_dir + "-quarantine")
+    env = stream_envelopes(
+        spark,
+        path=envelopes_jsonl_corrupt(spark, sf_dir, corrupt_mod=corrupt_mod),
+        max_files_per_trigger=1,
     )
-    q.awaitTermination()
+    sink = lakehouse_wap_batch(
+        table_dir,
+        quarantine_dir,
+        tag,
+        max_files=8,
+        compact_target_files=2,
+        gc_older_than_s=0.0,
+    )
+    _replay(env, sink)
     return read_committed(spark, table_dir)
 
 
@@ -1845,22 +1846,12 @@ def materialize_catalog_fanout(
     AT the final catalog version (the consistent pair)."""
     from ez_cdc_spark.sources import catalog as C
 
-    catalog_dir = _dir_for(sf_dir, f"catalog-fanout-{tag}-{os.getpid()}")
-    if os.path.exists(catalog_dir):
-        shutil.rmtree(catalog_dir)
+    catalog_dir = _fresh(rig_dir(sf_dir, f"catalog-fanout-{tag}"))
     _bootstrap_fanout_catalog(spark, catalog_dir)
-
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    q = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-        .writeStream.foreachBatch(catalog_fanout_batch(catalog_dir, tag))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    q.awaitTermination()
+    _replay(env, catalog_fanout_batch(catalog_dir, tag))
     return (
         C.read_table(spark, catalog_dir, "state"),
         C.read_table(spark, catalog_dir, "events_log"),
@@ -1886,13 +1877,13 @@ def _run_catalog_fanout_rollback(
     up."""
     from ez_cdc_spark.sources import catalog as C
 
-    catalog_dir = _dir_for(sf_dir, f"catalog-rollback-{tag}-{os.getpid()}")
-    if os.path.exists(catalog_dir):
-        shutil.rmtree(catalog_dir)
+    catalog_dir = _fresh(rig_dir(sf_dir, f"catalog-rollback-{tag}"))
     _bootstrap_fanout_catalog(spark, catalog_dir)
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-
-    _run_fanout_replay(spark, path, catalog_dir, tag)
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
+    )
+    sink = catalog_fanout_batch(catalog_dir, tag)
+    _replay(env, sink)
     # the version batch N published: the first whose watermark == N
     target = None
     for v in range(2, C.current_version(catalog_dir) + 1):
@@ -1903,55 +1894,19 @@ def _run_catalog_fanout_rollback(
     if target is None:
         raise RuntimeError(f"no catalog version published batch {rollback_after_batch}")
     C.rollback(catalog_dir, target)
-    # fresh checkpoint: at-least-once redelivery of the whole stream
-    _run_fanout_replay(spark, path, catalog_dir, tag)
+    _replay(env, sink)  # fresh checkpoint: at-least-once redelivery
     return (
         C.read_table(spark, catalog_dir, "state"),
         C.read_table(spark, catalog_dir, "events_log"),
     )
 
 
-def _run_fanout_replay(
-    spark: SparkSession, path: str, catalog_dir: str, tag: str
-) -> None:
-    """One availableNow fan-out replay pass with a fresh checkpoint
-    (module-level so the by-value-registration audit sees a plain
-    driver-side function, not a worker-suspect closure)."""
-    q = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-        .writeStream.foreachBatch(catalog_fanout_batch(catalog_dir, tag))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-
 def _bootstrap_fanout_catalog(spark: SparkSession, catalog_dir: str) -> None:
     """The t39/t40 shared two-table catalog bootstrap (empty state + log
     schemas, one catalog commit)."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
     from ez_cdc_spark.sources import catalog as C
-    from ez_cdc_spark.sources.manifest import publish
 
     C.init(catalog_dir)
-    state_schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
-    )
     log_schema = StructType(
         [
             StructField("lsn", LongType()),
@@ -1960,18 +1915,8 @@ def _bootstrap_fanout_catalog(spark: SparkSession, catalog_dir: str) -> None:
             StructField("email", StringType()),
         ]
     )
-    publish(
-        empty_frame(spark, state_schema),
-        C.table_dir(catalog_dir, "state"),
-        generation=1,
-        stats_columns=["id"],
-    )
-    publish(
-        empty_frame(spark, log_schema),
-        C.table_dir(catalog_dir, "events_log"),
-        generation=1,
-        stats_columns=["lsn"],
-    )
+    _genesis(spark, C.table_dir(catalog_dir, "state"))
+    _genesis(spark, C.table_dir(catalog_dir, "events_log"), log_schema, "lsn")
     C.commit(catalog_dir, {"state": 1, "events_log": 1})
 
 
@@ -2076,9 +2021,7 @@ def materialize_event_lake(
     # or a non-UTC external session would shift day boundaries against
     # the UTC-naive pruning enumeration (caught by the hostile-TZ probe)
     apply_runtime_conf(spark)
-    table_dir = _dir_for(sf_dir, f"event-lake-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
+    table_dir = _fresh(rig_dir(sf_dir, f"event-lake-{tag}"))
     empty = empty_frame(spark, EVENTS_JSON_SCHEMA).select(
         F.col("event_id").cast("bigint").alias("event_id"),
         "event_type",
@@ -2088,25 +2031,15 @@ def materialize_event_lake(
     publish_hidden_partitioned(
         empty, table_dir, generation=1, transform=("days", "ts", None)
     )
-    path = events_parquet(spark, sf_dir)
-    q = (
+    events = (
         spark.readStream.schema(EVENTS_JSON_SCHEMA)
         .option("maxFilesPerTrigger", 1)
-        .parquet(path)
-        .writeStream.foreachBatch(
-            event_lake_append_batch(
-                table_dir,
-                tag,
-                max_files=24,
-                compact_target_files=4,
-                gc_older_than_s=0.0,
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
+        .parquet(events_parquet(spark, sf_dir))
     )
-    q.awaitTermination()
+    sink = event_lake_append_batch(
+        table_dir, tag, max_files=24, compact_target_files=4, gc_older_than_s=0.0
+    )
+    _replay(events, sink)
     return table_dir
 
 
@@ -2120,10 +2053,10 @@ def _run_lakehouse_restore(
     gc_older_than_s: float | None = 0.0,
     partition_col: str | None = None,
 ) -> tuple[DataFrame, str]:
-    """T35 end-to-end (returns (final_state, table_dir) — the tuple form is
-    for tests that inspect the manifest history; registered queries use
-    materialize_lakehouse_restore): the s37 RESTORE watermark-rewind
-    contract exercised through the LIVE streaming sink.
+    """T35 end-to-end (returns (final_state, table_dir) — tests inspect the
+    manifest history; the t35/t35b registrations read the state): the s37
+    RESTORE watermark-rewind contract exercised through the LIVE streaming
+    sink.
 
     Three phases:
       1. Full lsn-staged replay through lakehouse_merge_batch (one
@@ -2158,130 +2091,27 @@ def _run_lakehouse_restore(
     At 100 TB: the restore itself is one O(files) metadata commit with
     zero data I/O, and recovery cost after it tracks exactly the
     un-applied churn (N-k batches of O(batch) merges), never the table."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    from ez_cdc_spark.sources.manifest import (
-        publish,
-        publish_partitioned,
-        read_committed,
-        read_manifest,
-        restore,
-        txn_watermark,
-    )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
-    )
-    if partition_col is None:
-        publish(
-            empty_frame(spark, schema),
-            table_dir,
-            generation=1,
-            stats_columns=["id"],
-        )
-    else:
+    table_dir = _genesis(
+        spark,
+        rig_dir(sf_dir, f"lakehouse-{tag}"),
         # t35b: the t30b partitioned regime — restore then carries the
         # partition map by reference too, and the redelivered batches run
         # partitioned merges (cross-partition key moves included) on top
-        publish_partitioned(
-            empty_frame(spark, schema),
-            table_dir,
-            generation=1,
-            partition_col=partition_col,
-            stats_columns=["id"],
-        )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir, n_stages)
-
-    # local aliases: driver-side plan construction only, but the by-value-
-    # registration audit cannot tell a driver closure from a worker
-    # closure (see tests/test_conventions.py, 8c1ad71 precedent)
-    _merge = lakehouse_merge_batch
-    _ckpt = checkpoint_dir
-
-    def replay() -> None:
-        q = (
-            spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(path)
-            .writeStream.foreachBatch(
-                _merge(
-                    table_dir,
-                    tag,
-                    max_files=max_files,
-                    gc_older_than_s=gc_older_than_s,
-                )
-            )
-            .option("checkpointLocation", _ckpt())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    replay()
-    man = read_manifest(table_dir)
-    target = None
-    reclaimed = 0
-    for g in range(2, man["generation"] + 1):
-        try:
-            wm = txn_watermark(read_manifest(table_dir, g), tag) or {}
-        except FileNotFoundError:
-            reclaimed += 1  # gc-collected generation (maintenance-ON runs)
-            continue
-        if wm.get("batch_id") == restore_after_batch:
-            target = g
-    if target is None:
-        if reclaimed:
-            # the restore horizon exceeded the retention window: every
-            # generation that committed the requested batch was already
-            # gc'd — the same loud refusal restore itself gives for
-            # dangling file references, surfaced at target resolution
-            raise FileNotFoundError(
-                f"cannot restore to batch {restore_after_batch}: all "
-                f"generations carrying that watermark were gc-reclaimed "
-                f"({reclaimed} collected) — retention must cover the "
-                f"restore horizon"
-            )
-        raise RuntimeError(
-            f"no generation committed batch {restore_after_batch} — "
-            f"replay produced fewer micro-batches than expected"
-        )
-    restore(table_dir, man["generation"] + 1, target)
-    replay()
-    return read_committed(spark, table_dir), table_dir
-
-
-def materialize_lakehouse_restore(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str = "t35",
-    restore_after_batch: int = 1,
-    n_stages: int = 4,
-    partition_col: str | None = None,
-) -> DataFrame:
-    """T35/t35b: see _run_lakehouse_restore."""
-    state, _ = _run_lakehouse_restore(
-        spark,
-        sf_dir,
-        tag,
-        restore_after_batch,
-        n_stages,
         partition_col=partition_col,
     )
-    return state
+    env = stream_envelopes(
+        spark,
+        path=envelopes_jsonl_lsn_split(spark, sf_dir, n_stages),
+        max_files_per_trigger=1,
+    )
+    sink = lakehouse_merge_batch(
+        table_dir, tag, max_files=max_files, gc_older_than_s=gc_older_than_s
+    )
+    _replay(env, sink)
+    target = _generation_of_batch(table_dir, tag, restore_after_batch)
+    restore(table_dir, read_manifest(table_dir)["generation"] + 1, target)
+    _replay(env, sink)
+    return read_committed(spark, table_dir), table_dir
 
 
 def _run_lakehouse_mor_restore(
@@ -2291,10 +2121,11 @@ def _run_lakehouse_mor_restore(
     restore_after_batch: int = 1,
     n_stages: int = 4,
 ) -> tuple[DataFrame, str]:
-    """T36 end-to-end (tuple form for manifest-inspecting tests; registered
-    queries use materialize_lakehouse_mor_restore): t35's restore-replay
-    loop with MERGE-ON-READ commits — restore TO a generation that still
-    carries a pending equality-delete log, then redeliver.
+    """T36 end-to-end (returns (final_state, table_dir) for
+    manifest-inspecting tests; the registration reads the state): t35's
+    restore-replay loop with MERGE-ON-READ commits — restore TO a
+    generation that still carries a pending equality-delete log, then
+    redeliver.
 
     What this pins beyond t35: s37 claims a MOR generation's delete log
     and sequence numbers carry by reference ("restoring a state means ALL
@@ -2314,91 +2145,21 @@ def _run_lakehouse_mor_restore(
     the MOR sink is the O(batch) commit path, and its restore is the same
     one O(files) metadata commit — no data rewritten to roll back, no
     data rewritten to recover, recovery cost = the un-applied churn."""
-    from pyspark.sql.types import (
-        LongType,
-        StringType,
-        StructField,
-        StructType,
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-mor-{tag}"))
+    env = stream_envelopes(
+        spark,
+        path=envelopes_jsonl_lsn_split(spark, sf_dir, n_stages),
+        max_files_per_trigger=1,
     )
-
-    from ez_cdc_spark.sources.manifest import (
-        publish,
-        read_manifest,
-        read_mor,
-        restore,
-        txn_watermark,
-    )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-mor-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
-    )
-    publish(
-        empty_frame(spark, schema),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
-    )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir, n_stages)
-
-    # local aliases — by-value-registration audit (see t35)
-    _mor = lakehouse_mor_batch
-    _ckpt = checkpoint_dir
-
-    def replay() -> None:
-        q = (
-            spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(path)
-            # folds disabled: every generation stays a retained MOR commit,
-            # so the restore target genuinely carries a pending delete log
-            # (and retention for the restore horizon holds by construction)
-            .writeStream.foreachBatch(
-                _mor(table_dir, tag=tag, max_delete_files=1_000_000)
-            )
-            .option("checkpointLocation", _ckpt())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    replay()
-    man = read_manifest(table_dir)
-    target = None
-    for g in range(2, man["generation"] + 1):
-        wm = txn_watermark(read_manifest(table_dir, g), tag) or {}
-        if wm.get("batch_id") == restore_after_batch:
-            target = g
-    if target is None:
-        raise RuntimeError(
-            f"no generation committed batch {restore_after_batch} — "
-            f"replay produced fewer micro-batches than expected"
-        )
-    restore(table_dir, man["generation"] + 1, target)
-    replay()
+    # folds disabled: every generation stays a retained MOR commit, so the
+    # restore target genuinely carries a pending delete log (and retention
+    # for the restore horizon holds by construction)
+    sink = lakehouse_mor_batch(table_dir, tag=tag, max_delete_files=1_000_000)
+    _replay(env, sink)
+    target = _generation_of_batch(table_dir, tag, restore_after_batch)
+    restore(table_dir, read_manifest(table_dir)["generation"] + 1, target)
+    _replay(env, sink)
     return read_mor(spark, table_dir), table_dir
-
-
-def materialize_lakehouse_mor_restore(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str = "t36",
-    restore_after_batch: int = 1,
-    n_stages: int = 4,
-) -> DataFrame:
-    """T36: see _run_lakehouse_mor_restore."""
-    state, _ = _run_lakehouse_mor_restore(
-        spark, sf_dir, tag, restore_after_batch, n_stages
-    )
-    return state
 
 
 def _signed_fold_changes(
@@ -2627,67 +2388,14 @@ def materialize_feed_consumer(
     and gc+vacuum reclaim the consumed
     history (proving the feed was only needed until applied). Returns the
     downstream table's final committed state."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import (
-        gc,
-        publish,
-        read_committed,
-        vacuum,
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-feed-{tag}"))
+    agg_dir = _genesis(
+        spark, rig_dir(sf_dir, f"feedagg-{tag}"), FEED_AGG_SCHEMA, "first_name"
     )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-feed-{tag}-{os.getpid()}")
-    agg_dir = _dir_for(sf_dir, f"feedagg-{tag}-{os.getpid()}")
-    for d in (table_dir, agg_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("first_name", StringType()),
-                    StructField("n", LongType()),
-                    StructField("sum_lsn", LongType()),
-                ]
-            ),
-        ),
-        agg_dir,
-        generation=1,
-        stats_columns=["first_name"],
-    )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(
-            lakehouse_feed_fanout_batch(table_dir, agg_dir, tag=tag)
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(env, lakehouse_feed_fanout_batch(table_dir, agg_dir, tag=tag))
     # stream drained, consumer caught up: the retention window closes
     gc(table_dir, older_than_s=0.0)
     vacuum(table_dir, older_than_s=0.0)
@@ -2702,8 +2410,8 @@ def _run_restore_feed_consumer(
     n_stages: int = 4,
     post_restore=None,
 ) -> tuple[DataFrame, str, str]:
-    """T37 end-to-end (tuple form (agg_state, table_dir, agg_dir) for
-    tests; registered queries use materialize_restore_feed_consumer):
+    """T37 end-to-end (returns (agg_state, table_dir, agg_dir) for tests;
+    the registration reads the aggregate):
     an upstream ROLLBACK PROPAGATES DOWNSTREAM through the change feed —
     the missing third corner of the restore story (t35 pins the
     producer's recovery, t32 pins steady-state consumption; this pins
@@ -2731,109 +2439,28 @@ def _run_restore_feed_consumer(
     mis-signed it would go negative. At 100 TB: the rollback's feed costs
     the rolled-back churn, not the table — same contract as every other
     interval."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import (
-        gc,
-        publish,
-        read_committed,
-        read_manifest,
-        restore,
-        txn_watermark,
-        vacuum,
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-rfeed-{tag}"))
+    agg_dir = _genesis(
+        spark, rig_dir(sf_dir, f"rfeedagg-{tag}"), FEED_AGG_SCHEMA, "first_name"
     )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-rfeed-{tag}-{os.getpid()}")
-    agg_dir = _dir_for(sf_dir, f"rfeedagg-{tag}-{os.getpid()}")
-    for d in (table_dir, agg_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    env = stream_envelopes(
+        spark,
+        path=envelopes_jsonl_lsn_split(spark, sf_dir, n_stages),
+        max_files_per_trigger=1,
     )
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("first_name", StringType()),
-                    StructField("n", LongType()),
-                    StructField("sum_lsn", LongType()),
-                ]
-            ),
-        ),
-        agg_dir,
-        generation=1,
-        stats_columns=["first_name"],
+    sink = lakehouse_feed_fanout_batch(
+        table_dir, agg_dir, tag=tag, consumer_tag=f"{tag}c"
     )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir, n_stages)
-
-    # local aliases — by-value-registration audit (see t35)
-    _fanout = lakehouse_feed_fanout_batch
-    _ckpt = checkpoint_dir
-
-    def replay() -> None:
-        q = (
-            spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-            .option("maxFilesPerTrigger", 1)
-            .json(path)
-            .writeStream.foreachBatch(
-                _fanout(table_dir, agg_dir, tag=tag, consumer_tag=f"{tag}c")
-            )
-            .option("checkpointLocation", _ckpt())
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    replay()
-    man = read_manifest(table_dir)
-    target = None
-    for g in range(2, man["generation"] + 1):
-        wm = txn_watermark(read_manifest(table_dir, g), tag) or {}
-        if wm.get("batch_id") == restore_after_batch:
-            target = g
-    if target is None:
-        raise RuntimeError(
-            f"no generation committed batch {restore_after_batch} — "
-            f"replay produced fewer micro-batches than expected"
-        )
-    restore(table_dir, man["generation"] + 1, target)
+    _replay(env, sink)
+    target = _generation_of_batch(table_dir, tag, restore_after_batch)
+    restore(table_dir, read_manifest(table_dir)["generation"] + 1, target)
     if post_restore is not None:  # test probe: between rollback and replay
         post_restore(table_dir, agg_dir)
-    replay()
+    _replay(env, sink)
     # both sides drained and caught up: the retention window closes
     gc(table_dir, older_than_s=0.0)
     vacuum(table_dir, older_than_s=0.0)
     return read_committed(spark, agg_dir), table_dir, agg_dir
-
-
-def materialize_restore_feed_consumer(
-    spark: SparkSession,
-    sf_dir: str,
-    tag: str = "t37",
-    restore_after_batch: int = 1,
-    n_stages: int = 4,
-) -> DataFrame:
-    """T37: see _run_restore_feed_consumer."""
-    state, _, _ = _run_restore_feed_consumer(
-        spark, sf_dir, tag, restore_after_batch, n_stages
-    )
-    return state
 
 
 def lakehouse_mor_batch(
@@ -2938,41 +2565,11 @@ def materialize_lakehouse_mor(
     in-loop compact_mor maintenance policy → final state resolved through
     read_mor (the tail of the replay may legitimately leave a pending
     delete log; resolving it IS the op under test)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import publish, read_mor
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-mor-{tag}-{os.getpid()}")
-    if os.path.exists(table_dir):
-        shutil.rmtree(table_dir)
-    schema = StructType(
-        [
-            StructField("id", LongType()),
-            StructField("lsn", LongType()),
-            StructField("first_name", StringType()),
-            StructField("last_name", StringType()),
-            StructField("email", StringType()),
-        ]
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-mor-{tag}"))
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    publish(
-        empty_frame(spark, schema),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
-    )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(lakehouse_mor_batch(table_dir, tag=tag))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(env, lakehouse_mor_batch(table_dir, tag=tag))
     return read_mor(spark, table_dir)
 
 
@@ -3071,67 +2668,14 @@ def materialize_mor_feed_consumer(
     aggregate, composing through every mid-stream fold →
     once the stream drains, gc+vacuum reclaim the consumed history.
     Returns the downstream table's final committed state."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import (
-        gc,
-        publish,
-        read_committed,
-        vacuum,
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-morfeed-{tag}"))
+    agg_dir = _genesis(
+        spark, rig_dir(sf_dir, f"morfeedagg-{tag}"), FEED_AGG_SCHEMA, "first_name"
     )
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-morfeed-{tag}-{os.getpid()}")
-    agg_dir = _dir_for(sf_dir, f"morfeedagg-{tag}-{os.getpid()}")
-    for d in (table_dir, agg_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("first_name", StringType()),
-                    StructField("n", LongType()),
-                    StructField("sum_lsn", LongType()),
-                ]
-            ),
-        ),
-        agg_dir,
-        generation=1,
-        stats_columns=["first_name"],
-    )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(
-            lakehouse_mor_fanout_batch(table_dir, agg_dir, tag=tag)
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _replay(env, lakehouse_mor_fanout_batch(table_dir, agg_dir, tag=tag))
     gc(table_dir, older_than_s=0.0)
     vacuum(table_dir, older_than_s=0.0)
     return read_committed(spark, agg_dir)
@@ -3165,65 +2709,13 @@ def materialize_change_feed_stream(
     batch and executors scan exactly the interval's churn — the untouched
     table is never opened; feed retention is gc retention (consume before
     reclaiming, the Delta CDF contract)."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import publish
-    from ez_cdc_spark.sources.pyds import register_ezmanifest
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-cdf-{tag}-{os.getpid()}")
-    out_dir = _dir_for(sf_dir, f"cdf-out-{tag}-{os.getpid()}")
-    for d in (table_dir, out_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-cdf-{tag}"))
+    out_dir = _fresh(rig_dir(sf_dir, f"cdf-out-{tag}"))
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(
-            lakehouse_merge_batch(table_dir, tag=tag, record_change_feed=True)
-        )
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    register_ezmanifest(spark)
-    feed = (
-        spark.readStream.format("ezmanifest")
-        .option("path", table_dir)
-        .option("changeFeed", "true")
-        .load()
-    )
-    q2 = (
-        feed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    return spark.read.parquet(out_dir)
+    _replay(env, lakehouse_merge_batch(table_dir, tag=tag, record_change_feed=True))
+    return _change_feed_to_parquet(spark, table_dir, out_dir)
 
 
 def mor_cdf_sink_batch(table_dir: str, tag: str, max_delete_files: int = 2):
@@ -3362,76 +2854,15 @@ def materialize_stream_fed_aggregate(
     each consumer trigger reads O(interval churn) feed rows; the
     downstream read-modify-write touches only the group keys the
     interval changed, committed via the stats-pruned merge."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import publish, read_committed
-    from ez_cdc_spark.sources.pyds import register_ezmanifest
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-sfa-{tag}-{os.getpid()}")
-    agg_dir = _dir_for(sf_dir, f"sfa-agg-{tag}-{os.getpid()}")
-    for d in (table_dir, agg_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-sfa-{tag}"))
+    agg_dir = _genesis(
+        spark, rig_dir(sf_dir, f"sfa-agg-{tag}"), FEED_AGG_SCHEMA, "first_name"
     )
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("first_name", StringType()),
-                    StructField("n", LongType()),
-                    StructField("sum_lsn", LongType()),
-                ]
-            ),
-        ),
-        agg_dir,
-        generation=1,
-        stats_columns=["first_name"],
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(mor_cdf_sink_batch(table_dir, tag))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    register_ezmanifest(spark)
-    feed = (
-        spark.readStream.format("ezmanifest")
-        .option("path", table_dir)
-        .option("changeFeed", "true")
-        .load()
-    )
-    q2 = (
-        feed.writeStream.foreachBatch(stream_feed_agg_batch(agg_dir))
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
+    _replay(env, mor_cdf_sink_batch(table_dir, tag))
+    _replay(_change_feed_stream(spark, table_dir), stream_feed_agg_batch(agg_dir))
     return read_committed(spark, agg_dir)
 
 
@@ -3469,63 +2900,10 @@ def materialize_mor_change_feed_stream(
     At 100 TB: per trigger, O(chain) manifest reads plan the batch;
     executors read O(churn + stat-overlapping parent files) per bucket —
     never the table, and the producer never rewrote it either."""
-    from pyspark.sql.types import LongType, StringType, StructField, StructType
-
-    from ez_cdc_spark.sources.manifest import publish
-    from ez_cdc_spark.sources.pyds import register_ezmanifest
-
-    table_dir = _dir_for(sf_dir, f"lakehouse-morcdf-{tag}-{os.getpid()}")
-    out_dir = _dir_for(sf_dir, f"morcdf-out-{tag}-{os.getpid()}")
-    for d in (table_dir, out_dir):
-        if os.path.exists(d):
-            shutil.rmtree(d)
-    publish(
-        empty_frame(
-            spark,
-            StructType(
-                [
-                    StructField("id", LongType()),
-                    StructField("lsn", LongType()),
-                    StructField("first_name", StringType()),
-                    StructField("last_name", StringType()),
-                    StructField("email", StringType()),
-                ]
-            ),
-        ),
-        table_dir,
-        generation=1,
-        stats_columns=["id"],
+    table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-morcdf-{tag}"))
+    out_dir = _fresh(rig_dir(sf_dir, f"morcdf-out-{tag}"))
+    env = stream_envelopes(
+        spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-
-    apply = mor_cdf_sink_batch(table_dir, tag)
-
-    path = envelopes_jsonl_lsn_split(spark, sf_dir)
-    env = (
-        spark.readStream.schema(ENVELOPE_JSON_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(path)
-    )
-    q = (
-        env.writeStream.foreachBatch(apply)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-
-    register_ezmanifest(spark)
-    feed = (
-        spark.readStream.format("ezmanifest")
-        .option("path", table_dir)
-        .option("changeFeed", "true")
-        .load()
-    )
-    q2 = (
-        feed.writeStream.format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir())
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination()
-    return spark.read.parquet(out_dir)
+    _replay(env, mor_cdf_sink_batch(table_dir, tag))
+    return _change_feed_to_parquet(spark, table_dir, out_dir)

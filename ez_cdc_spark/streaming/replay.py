@@ -31,13 +31,50 @@ EVENTS_JSON_SCHEMA = (
 
 
 def _dir_for(sf_dir: str, tag: str) -> str:
+    """Dir of a shared replay fixture: keyed on (sf_dir, tag) only, so every
+    process reuses one build — publish it through ``materialize_once``."""
     key = hashlib.md5(f"{sf_dir}:{tag}".encode()).hexdigest()[:12]
     return os.path.join(_SCRATCH, f"{tag}-{key}")
+
+
+def rig_dir(sf_dir: str, name: str) -> str:
+    """Scratch dir of rig ``name`` over ``sf_dir`` in THIS process. Rigs
+    remove and rebuild their dir on every run, so the path is keyed on the
+    pid too: two processes running the same rig (suite shards, a sweep next
+    to pytest) never remove each other's state, while a test can find the
+    dir a query it ran in-process wrote. Returns the path only; creating or
+    clearing it is the caller's job."""
+    return _dir_for(sf_dir, f"{name}-{os.getpid()}")
 
 
 def checkpoint_dir() -> str:
     """Fresh checkpoint per run — checkpoints are single-query-owned."""
     return os.path.join(_SCRATCH, "ckpt", uuid.uuid4().hex)
+
+
+def wait_drained(q, offset_key: str, target: int, timeout: float) -> None:
+    """Block until the live (processing-time) query ``q`` has drained its
+    source up to ``target``: its last progress reports source offset
+    ``offset_key`` at or past ``target`` AND an empty trigger, which proves
+    the stream is caught up rather than mid-batch. Raises TimeoutError
+    naming the query and the offset when ``timeout`` seconds pass first."""
+    import re
+    import time
+
+    pattern = re.compile(rf"['\"]{re.escape(offset_key)}['\"]\s*:\s*(\d+)")
+    deadline = time.time() + timeout
+    while True:
+        p = q.lastProgress
+        if p and p["sources"]:
+            m = pattern.search(str(p["sources"][0].get("endOffset") or ""))
+            if m and int(m.group(1)) >= target and p["numInputRows"] == 0:
+                return
+        if time.time() >= deadline:
+            raise TimeoutError(
+                f"query {q.name or q.id} never drained offset "
+                f"{offset_key}={target} within {timeout} s"
+            )
+        time.sleep(0.2)
 
 
 def materialize_once(path: str, build, marker_name: str = "_SUCCESS") -> str:

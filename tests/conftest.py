@@ -18,11 +18,20 @@ SF_ORACLE = os.environ.get("EZ_CDC_TEST_SF_DIR", "/root/testdata/sf0.01")
 # failing shard. Focused runs (fewer than _SHARD_MIN_ITEMS collected, or
 # EZ_CDC_PYTEST_WORKERS=1) run serially exactly as before. Cross-process
 # safety of the shared replay fixtures is provided by
-# streaming/replay.py:materialize_once (atomic build+rename); all other
-# scratch state is test- or pid-keyed.
+# streaming/replay.py:materialize_once (atomic build+rename); rig and query
+# scratch dirs come from streaming/replay.py:rig_dir, keyed on the pid.
+# Scratch paths a test names itself (module-level SCRATCH dirs, fixed
+# tempdir names) are NOT process-keyed: the sharder runs each test in one
+# shard only, but two suite runs at once can still collide on them.
 # ---------------------------------------------------------------------------
 
 _SHARD_MIN_ITEMS = int(os.environ.get("EZ_CDC_PYTEST_MIN_ITEMS", "200"))
+# Wall-clock budget of one shard: inside the 2670 s Tier-1 window, leaving
+# room for collection, the 30 s terminate grace and the fleet summary. A
+# shard still running at the deadline is terminated and counted as failed,
+# so a hung test fails the run with a named shard and every other shard's
+# results instead of the outer timeout killing everything.
+_SHARD_DEADLINE_S = 2580
 
 
 def _shard_workers() -> int:
@@ -111,12 +120,27 @@ def pytest_runtestloop(session):
     # -x/--exitfirst stores maxfail=1; any maxfail means stop the fleet
     # once a shard reports failure
     exitfirst = bool(session.config.getoption("maxfail", 0))
+    deadline = time.time() + _SHARD_DEADLINE_S
     done: dict[int, int] = {}
+    timed_out: set[int] = set()
     while len(done) < len(procs):
         for i, p, _ in procs:
             if i in done:
                 continue
             rc = p.poll()
+            if rc is None and time.time() > deadline:
+                p.terminate()
+                try:
+                    rc = p.wait(timeout=30)
+                except subprocess.TimeoutExpired:
+                    p.kill()
+                    rc = p.wait()
+                timed_out.add(i)
+                print(
+                    f"[shard {i}/{workers}] still running after "
+                    f"{_SHARD_DEADLINE_S} s: terminated",
+                    flush=True,
+                )
             if rc is None:
                 continue
             done[i] = rc
@@ -141,14 +165,23 @@ def pytest_runtestloop(session):
         passed += int(m_p.group(1)) if m_p else 0
         failed += int(m_f.group(1)) if m_f else 0
         failed += int(m_e.group(1)) if m_e else 0
-        if done[i] != 0 and not (m_f or m_e):
-            failed += 1  # crashed/killed shard counts as a failure
+        if i in timed_out or (done[i] != 0 and not (m_f or m_e)):
+            failed += 1  # crashed/killed/timed-out shard counts as a failure
     verdict = f"{passed} passed" + (f", {failed} failed" if failed else "")
     print(
         f"===== sharded total: {verdict} across {workers} workers =====",
         flush=True,
     )
     session.testsfailed = failed
+    # This process ran no test itself, so pytest's closing line would read
+    # "no tests ran"; end on the fleet's total instead.
+    reporter = session.config.pluginmanager.get_plugin("terminalreporter")
+    if reporter is not None:
+        color = "red" if failed else "green"
+        parts = [(f"{passed} passed", {"green": True, "bold": not failed})]
+        if failed:
+            parts.append((f"{failed} failed", {"red": True, "bold": True}))
+        reporter.build_summary_stats_line = lambda: (parts, color)
     return True
 
 

@@ -518,11 +518,9 @@ def test_t14_scd2_maintenance_converges_under_max_disorder(spark):
     # tombstones live only in the RAW state dir, below the read_scd2 view
     import os
 
-    from ez_cdc_spark.streaming.replay import _dir_for
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    raw = spark.read.parquet(
-        os.path.join(_dir_for(sf, f"state-t14test-{os.getpid()}"), "current")
-    )
+    raw = spark.read.parquet(os.path.join(rig_dir(sf, "state-t14test"), "current"))
     got = {
         (r["id"], r["valid_from_lsn"])
         for r in raw.filter(
@@ -1874,14 +1872,12 @@ def test_t30b_partitioned_sink_layout_and_partition_reads(spark, sf_dir):
     the replay's updates move keys between partitions on every batch),
     and read_committed_partitions serves single event-type partitions
     consistent with the full read."""
-    import os
-
     from ez_cdc_spark.queries import load_all
     from ez_cdc_spark.sources.manifest import (
         read_committed_partitions,
         read_manifest,
     )
-    from ez_cdc_spark.streaming.replay import _dir_for
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     got_b = sorted(
         tuple(str(v) for v in r)
@@ -1895,7 +1891,7 @@ def test_t30b_partitioned_sink_layout_and_partition_reads(spark, sf_dir):
     )
     assert got_b == got_a and len(got_b) > 0
 
-    td = _dir_for(sf_dir, f"lakehouse-t30b-{os.getpid()}")
+    td = rig_dir(sf_dir, "lakehouse-t30b")
     man = read_manifest(td)
     assert man["partition_col"] == "first_name"
     assert set(man["partitions"]) == set(man["files"])

@@ -171,3 +171,17 @@ def test_bench_query_lists_resolve_in_registry():
     missing = [n for n in bench.EXTRA_QUERIES if n not in reg]
     assert missing == [], f"bench EXTRA_QUERIES not in registry: {missing}"
     assert len(set(bench.EXTRA_QUERIES)) == len(bench.EXTRA_QUERIES), "duplicates"
+
+
+def test_cdc_rigs_share_one_replay_runner():
+    """streaming/cdc.py's rigs drain their streams through ``_replay`` (the
+    foreachBatch runner) and ``_change_feed_to_parquet`` (t46/t47's parquet
+    file sink): at most two ``writeStream`` sites, so a rig that spells the
+    start/await loop out by hand again fails here."""
+    tree = ast.parse((ROOT / "streaming" / "cdc.py").read_text())
+    sites = [
+        n.lineno
+        for n in ast.walk(tree)
+        if isinstance(n, ast.Attribute) and n.attr == "writeStream"
+    ]
+    assert len(sites) <= 2, f"writeStream sites in cdc.py at lines {sites}"

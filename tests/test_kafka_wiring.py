@@ -134,6 +134,7 @@ def test_envelopegen_stream_resumes_from_checkpoint(spark, tmp_path):
     from pyspark.sql import functions as F
 
     from ez_cdc_spark.sources.pyds import register_envelopegen
+    from ez_cdc_spark.streaming.replay import wait_drained
 
     register_envelopegen(spark)
     ckpt = str(tmp_path / "ckpt")
@@ -158,16 +159,10 @@ def test_envelopegen_stream_resumes_from_checkpoint(spark, tmp_path):
     q.stop(); q.awaitTermination()  # "crash" partway through
 
     q2 = start("resume_b")
-    deadline = time.time() + 120
-    import json
-    while time.time() < deadline:
-        p = q2.lastProgress
-        if p and p["sources"]:
-            end = p["sources"][0].get("endOffset")
-            if end and json.loads(end.replace("'", '"')).get("i", 0) >= n and p["numInputRows"] == 0:
-                break
-        time.sleep(0.2)
-    q2.stop(); q2.awaitTermination()
+    try:
+        wait_drained(q2, "i", n, timeout=120)
+    finally:
+        q2.stop(); q2.awaitTermination()
 
     got = {r["op"]: (r["cnt"], r["s"]) for r in spark.table("resume_b").collect()}
     want = {}

@@ -761,10 +761,10 @@ def test_w18_s20_plan_shapes(spark, sf_smoke):
     assert p18.count("+- Window") == 1
     assert "BatchEvalPython" not in p18 and "ArrowEvalPython" not in p18
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     reg["s20_partition_evolution"].fn(spark, sf_smoke).collect()
-    g2 = spark.read.parquet(_scratch(sf_smoke, "s20v2")).filter(
+    g2 = spark.read.parquet(rig_dir(sf_smoke, "s20v2")).filter(
         F.col("source") == "src3"
     )
     p20 = plan_str(g2)
@@ -1039,13 +1039,13 @@ def test_s28_plan_scans_only_unpruned_files(spark, sf_smoke):
     pre-Spark pruning shows up as the scan naming only kept files."""
     import os
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import pruned_files
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     df = load_all()["s28_manifest_stats_skipping"].fn(spark, sf_smoke)
     p = plan_str(df)
     assert "PushedFilters: [" in p and "GreaterThanOrEqual(o_orderkey,1000)" in p
-    kept, skipped = pruned_files(_scratch(sf_smoke, "s28skip"), "o_orderkey", 1000, 5000)
+    kept, skipped = pruned_files(rig_dir(sf_smoke, "s28skip"), "o_orderkey", 1000, 5000)
     assert skipped, "pruning must bite on the range-clustered layout"
     opened = {os.path.basename(f) for f in df.inputFiles()}
     assert opened == {os.path.basename(f) for f in kept}
@@ -1131,14 +1131,14 @@ def test_s30_plan_broadcast_anti_join_and_pruned_rewrite(spark, sf_smoke):
     # the rewrite plan itself: broadcast LEFT ANTI, table side unshuffled
     import pyspark.sql.functions as F  # noqa: N812
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         _merge_rewrite,
         committed_files,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_smoke, "s30merge")
+    td = rig_dir(sf_smoke, "s30merge")
     man = read_manifest(td)
     batch = spark.range(5).select(
         F.col("id").alias("c_custkey"),
@@ -1242,10 +1242,10 @@ def test_s36b_mor_feed_plan_broadcast_keys_and_no_cartesian(spark, sf_smoke):
     assert_no_cartesian(df)
     # the registered fn wraps the feed (select/orderBy), so probe the raw
     # feed over the rig's table for the scan-plan hook
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import change_feed_mor
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    feed = change_feed_mor(spark, _scratch(sf_smoke, "s36bfeed"), 1, 3)
+    feed = change_feed_mor(spark, rig_dir(sf_smoke, "s36bfeed"), 1, 3)
     scans = feed._ez_feed_scans
     assert scans, "feed must expose its pre-pin scan plans"
     for scan in scans:
@@ -1265,11 +1265,11 @@ def test_s36b_mor_feed_sides_restrict_to_churn_keys(spark, sf_smoke):
     folds (change_feed_mor_sides): each pre/post resolve carries the
     churn-key restriction and no cartesian, and opens no more files than
     the labelled feed's own scans."""
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import change_feed_mor, change_feed_mor_sides
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s36b_mor_change_feed"].fn(spark, sf_smoke).collect()
-    td = _scratch(sf_smoke, "s36bfeed")
+    td = rig_dir(sf_smoke, "s36bfeed")
     sides = change_feed_mor_sides(spark, td, 1, 3)
     assert sides
     feed_files = {

@@ -1333,11 +1333,11 @@ def test_s19_v1_rows_surface_null_nested_member(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s19_nested_schema_evolution"].fn(spark, sf_dir).collect()
     merged = spark.read.option("mergeSchema", "true").parquet(
-        _scratch(sf_dir, "s19v1"), _scratch(sf_dir, "s19v2")
+        rig_dir(sf_dir, "s19v1"), rig_dir(sf_dir, "s19v2")
     )
     bad_v1 = merged.filter(
         (F.col("doc_id") % 2 == 0)
@@ -2599,13 +2599,13 @@ change_batch = st.lists(
 
 @settings(**SETTINGS)
 @given(batch=change_batch)
-def test_s35_change_feed_matches_python_diff(spark, batch):
+def test_s35_change_feed_matches_python_diff(spark, sf_dir, batch):
     import shutil as _sh
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import change_feed, merge_cow, publish
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch("/root/testdata/sf0.01", "s35prop")
+    td = rig_dir(sf_dir, "s35prop")
     _sh.rmtree(td, ignore_errors=True)
     seed = {k: k % 3 for k in range(16)}  # value domain overlaps the batch's
     df = spark.createDataFrame(

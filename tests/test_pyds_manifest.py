@@ -23,6 +23,7 @@ from ez_cdc_spark.sources.manifest import (
     rename_column,
 )
 from ez_cdc_spark.sources.pyds import register_ezmanifest
+from ez_cdc_spark.streaming.replay import wait_drained
 
 SCRATCH = "/tmp/ez_cdc_test_pyds_manifest"
 
@@ -382,8 +383,6 @@ def test_stream_pipeline_restart_continues_from_checkpoint(spark):
     """T43: a relay stream restarted on the SAME checkpoint resumes from
     the persisted generation offset — no re-read, no duplicates — and the
     downstream txns map records the relay watermark."""
-    import re
-    import time
 
     from ez_cdc_spark.sources.manifest import publish_append, read_manifest
 
@@ -410,17 +409,8 @@ def test_stream_pipeline_restart_continues_from_checkpoint(spark):
             .option("checkpointLocation", ck)
             .trigger(processingTime="0 seconds").start()
         )
-        deadline = time.time() + 120
         try:
-            while time.time() < deadline:
-                p = q.lastProgress
-                if p and p["sources"]:
-                    eo = p["sources"][0].get("endOffset")
-                    m = re.search(r"['\"]gen['\"]\s*:\s*(\d+)", str(eo or ""))
-                    if m and int(m.group(1)) >= gen and p["numInputRows"] == 0:
-                        return
-                time.sleep(0.2)
-            raise TimeoutError(f"never drained generation {gen}")
+            wait_drained(q, "gen", gen, timeout=120)
         finally:
             q.stop()
             q.awaitTermination()
@@ -819,9 +809,6 @@ def test_default_read_safe_for_any_plan_shape(spark):
 
 
 def _run_sink(spark, d, ck, n, tag="sinktest", extra=None):
-    import re
-    import time
-
     from ez_cdc_spark.sources.pyds import register_envelopegen
 
     register_envelopegen(spark)
@@ -837,19 +824,8 @@ def _run_sink(spark, d, ck, n, tag="sinktest", extra=None):
     for k, v in (extra or {}).items():
         w = w.option(k, v)
     q = w.start()
-    deadline = time.time() + 120
     try:
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                m = re.search(
-                    r"['\"]i['\"]\s*:\s*(\d+)",
-                    str(p["sources"][0].get("endOffset") or ""),
-                )
-                if m and int(m.group(1)) >= n and p["numInputRows"] == 0:
-                    return
-            time.sleep(0.2)
-        raise TimeoutError("sink never drained")
+        wait_drained(q, "i", n, timeout=120)
     finally:
         q.stop()
         q.awaitTermination()
@@ -1404,7 +1380,6 @@ def test_change_feed_stream_live_tail_races_producer(spark, tmp_path):
     merge discovers each commit from the pointer alone and emits exactly
     its materialized feed — the produce→consume loop with no restarts,
     racing the producer commit-by-commit (the t45 pattern for the feed)."""
-    import re
     import time
 
     from ez_cdc_spark.sources.manifest import merge_cow
@@ -1424,37 +1399,23 @@ def test_change_feed_stream_live_tail_races_producer(spark, tmp_path):
         .start()
     )
 
-    def consumed(gen, timeout=120):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                m = re.search(
-                    r"['\"]gen['\"]\s*:\s*(\d+)",
-                    str(p["sources"][0].get("endOffset") or ""),
-                )
-                if m and int(m.group(1)) >= gen:
-                    return True
-            time.sleep(0.2)
-        return False
-
     try:
         merge_cow(
             spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
             "id", 2, record_change_feed=True,
         )
-        assert consumed(2), "consumer never saw generation 2"
+        wait_drained(q, "gen", 2, timeout=120)
         merge_cow(
             spark, d,
             _feed_batch(spark, [(1, 20, "a2@x", "u", 20), (2, 21, "b@x", "c", 21)]),
             "id", 3, record_change_feed=True,
         )
-        assert consumed(3), "consumer never saw generation 3"
+        wait_drained(q, "gen", 3, timeout=120)
         merge_cow(
             spark, d, _feed_batch(spark, [(2, 30, None, "d", 30)]),
             "id", 4, record_change_feed=True,
         )
-        assert consumed(4), "consumer never saw generation 4"
+        wait_drained(q, "gen", 4, timeout=120)
         # drain: wait until the sink has flushed the last batch
         deadline = time.time() + 60
         want = [
@@ -1802,7 +1763,6 @@ def test_mor_change_feed_stream_live_tail_races_producer(spark, tmp_path):
     commit races a merge_mor producer commit-by-commit — each trigger
     derives that commit's churn feed on read with no restarts, and a
     mid-stream fold stays invisible to the running consumer."""
-    import re
     import time
 
     from ez_cdc_spark.sources.manifest import compact_mor, merge_mor
@@ -1822,36 +1782,22 @@ def test_mor_change_feed_stream_live_tail_races_producer(spark, tmp_path):
         .start()
     )
 
-    def consumed(gen, timeout=120):
-        deadline = time.time() + timeout
-        while time.time() < deadline:
-            p = q.lastProgress
-            if p and p["sources"]:
-                m = re.search(
-                    r"['\"]gen['\"]\s*:\s*(\d+)",
-                    str(p["sources"][0].get("endOffset") or ""),
-                )
-                if m and int(m.group(1)) >= gen:
-                    return True
-            time.sleep(0.2)
-        return False
-
     try:
         merge_mor(
             spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]), "id", 2
         )
-        assert consumed(2), "consumer never saw generation 2"
+        wait_drained(q, "gen", 2, timeout=120)
         merge_mor(
             spark, d,
             _feed_batch(spark, [(1, 20, "a2@x", "u", 20), (2, 21, "b@x", "c", 21)]),
             "id", 3,
         )
-        assert consumed(3), "consumer never saw generation 3"
+        wait_drained(q, "gen", 3, timeout=120)
         compact_mor(spark, d, 4, target_files=1)  # fold while live
         merge_mor(
             spark, d, _feed_batch(spark, [(2, 30, None, "d", 30)]), "id", 5
         )
-        assert consumed(5), "consumer never saw generation 5"
+        wait_drained(q, "gen", 5, timeout=120)
         deadline = time.time() + 60
         want = [
             ("delete", 2, 21, "b@x", 5),

@@ -80,3 +80,29 @@ def test_materialize_once_two_processes_over_a_crashed_leftover(tmp_path):
     with open(os.path.join(path, "f0")) as fh:
         assert fh.read() == winner
     assert not [d for d in os.listdir(sync) if ".build-" in d]
+
+
+RIG_DIR_CHILD = r"""
+import sys
+sys.path.insert(0, sys.argv[1])
+from ez_cdc_spark.streaming.replay import rig_dir
+
+print(rig_dir("/sf", "t30"), rig_dir("/sf", "t30"))
+"""
+
+
+def test_rig_dir_is_per_process():
+    """Rigs remove and rebuild their scratch dir on every run: two
+    processes running the same rig must get different dirs, or one removes
+    the table the other is writing; within a process the dir is stable, so
+    a test finds what a query it ran wrote."""
+    outs = [
+        subprocess.run(
+            [sys.executable, "-c", RIG_DIR_CHILD, REPO],
+            capture_output=True, text=True, timeout=120, check=True,
+        ).stdout.split()
+        for _ in range(2)
+    ]
+    (a1, a2), (b1, b2) = outs
+    assert a1 == a2 and b1 == b2
+    assert a1 != b1

@@ -946,15 +946,15 @@ def test_s25_aborted_and_superseded_generations_invisible(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         committed_files,
         publish,
         read_committed,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s25_manifest_atomic_publish"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s25manifest")
+    td = rig_dir(sf_dir, "s25manifest")
 
     # debris exists on disk...
     for gen in (1, 3):
@@ -1034,11 +1034,11 @@ def test_s26_compaction_lossless_and_superseded_invisible(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import committed_files, compact, read_committed
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s26_manifest_compaction"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s26compact")
+    td = rig_dir(sf_dir, "s26compact")
 
     cf = committed_files(td)
     assert len(cf) == 1 and all("gen-2" in f for f in cf)
@@ -1066,11 +1066,11 @@ def test_s25_gc_removes_only_unreferenced_generations(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import committed_files, gc, read_committed
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s26_manifest_compaction"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s26compact")
+    td = rig_dir(sf_dir, "s26compact")
     before = sorted(tuple(str(v) for v in r) for r in read_committed(spark, td).collect())
 
     deleted = gc(td)
@@ -1094,11 +1094,11 @@ def test_s27_time_travel_gc_honesty_and_retention(spark, sf_dir):
     import pytest
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import gc, publish, read_committed
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s27_manifest_time_travel"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s27timetravel")
+    td = rig_dir(sf_dir, "s27timetravel")
 
     o = spark.read.parquet(f"{sf_dir}/orders.parquet")
     n1 = o.filter("o_orderkey % 2 = 0").count()
@@ -1145,11 +1145,11 @@ def test_s28_pruned_read_never_opens_skipped_files(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import pruned_files, read_committed, read_pruned
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s28_manifest_stats_skipping"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s28skip")
+    td = rig_dir(sf_dir, "s28skip")
 
     kept, skipped = pruned_files(td, "o_orderkey", 1000, 5000)
     assert kept and skipped, "range-clustered layout must make pruning bite"
@@ -1171,10 +1171,10 @@ def test_manifest_empty_publish_stays_readable(spark, sf_dir):
     under the manifest's STORED schema, and pruning over it is a no-op."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import publish, read_committed, read_pruned
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s25empty")
+    td = rig_dir(sf_dir, "s25empty")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
@@ -1215,14 +1215,14 @@ def test_s29_partition_read_opens_only_requested_partitions(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         read_committed_partitions,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s29_manifest_partition_publish"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s29part")
+    td = rig_dir(sf_dir, "s29part")
     man = read_manifest(td)
     assert man["partition_col"] == "o_orderpriority"
     values = set(man["partitions"].values())
@@ -1406,10 +1406,10 @@ def test_manifest_racing_reader_always_sees_one_complete_generation(spark, sf_di
 
     import pyarrow.parquet as pq
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import committed_files, publish
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s25race")
+    td = rig_dir(sf_dir, "s25race")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey").limit(4000)
     o = o.cache()
@@ -1451,10 +1451,10 @@ def test_s28_pruning_composes_with_s27_time_travel(spark, sf_dir):
     pruned file list nor its answer."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import publish, pruned_files, read_pruned
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s28asof")
+    td = rig_dir(sf_dir, "s28asof")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
     publish(
@@ -1496,7 +1496,6 @@ def test_compact_preserves_partitioned_layout_and_column(spark, sf_dir):
     layout, and the compacted content equals the original row-for-row."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact,
         read_committed,
@@ -1504,8 +1503,9 @@ def test_compact_preserves_partitioned_layout_and_column(spark, sf_dir):
         read_manifest,
     )
     from ez_cdc_spark.sources.manifest import publish_partitioned
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s29compact")
+    td = rig_dir(sf_dir, "s29compact")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderpriority"
@@ -1541,15 +1541,15 @@ def test_partitioned_read_keeps_stored_partition_type(spark, sf_dir):
 
     import pyspark.sql.functions as F  # noqa: N812
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact,
         publish_partitioned,
         read_committed,
         read_committed_partitions,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s29ptype")
+    td = rig_dir(sf_dir, "s29ptype")
     shutil.rmtree(td, ignore_errors=True)
     o = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -1585,15 +1585,15 @@ def test_partitioned_null_partition_is_selectable_as_none(spark, sf_dir):
     import pyspark.sql.functions as F  # noqa: N812
     import pytest
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         publish,
         publish_partitioned,
         read_committed_partitions,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s29null")
+    td = rig_dir(sf_dir, "s29null")
     shutil.rmtree(td, ignore_errors=True)
     o = (
         spark.read.parquet(f"{sf_dir}/orders.parquet")
@@ -1617,7 +1617,7 @@ def test_partitioned_null_partition_is_selectable_as_none(spark, sf_dir):
     assert nulls.filter("grp IS NULL").count() == n_null, "grp must read as NULL"
 
     # non-partitioned generation -> loud error, not a silent empty result
-    td2 = _scratch(sf_dir, "s25notpart")
+    td2 = rig_dir(sf_dir, "s25notpart")
     shutil.rmtree(td2, ignore_errors=True)
     publish(o.select("o_orderkey"), td2, generation=1)
     with pytest.raises(ValueError, match="not.*partitioned"):
@@ -1634,7 +1634,6 @@ def test_compact_inherits_file_skipping_stats(spark, sf_dir):
     the old loud refusal."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact,
         publish,
@@ -1642,8 +1641,9 @@ def test_compact_inherits_file_skipping_stats(spark, sf_dir):
         pruned_files,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s28inherit")
+    td = rig_dir(sf_dir, "s28inherit")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_totalprice"
@@ -1665,7 +1665,7 @@ def test_compact_inherits_file_skipping_stats(spark, sf_dir):
 
     # partitioned generation + explicit stats_columns -> stats recorded
     # per partition file and pruning bites across the partition layout
-    td2 = _scratch(sf_dir, "s29nostats")
+    td2 = rig_dir(sf_dir, "s29nostats")
     shutil.rmtree(td2, ignore_errors=True)
     publish_partitioned(
         o.withColumn("flag", (o.o_orderkey % 2).cast("string")).repartitionByRange(
@@ -1698,15 +1698,15 @@ def test_gc_reclaims_stale_torn_commit_with_age_threshold(spark, sf_dir):
     import os
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         gc,
         publish,
         read_committed,
         stage_only,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s25torn")
+    td = rig_dir(sf_dir, "s25torn")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
     publish(o.filter("o_orderkey % 3 = 0"), td, generation=1)
@@ -1756,10 +1756,10 @@ def test_s30_merge_carries_untouched_files_byte_identical(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import read_manifest
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s30merge")
+    td = rig_dir(sf_dir, "s30merge")
 
     # hash every gen-1 file BEFORE the query runs its lifecycle… the query
     # rebuilds the table from scratch, so run it first, then compare the
@@ -1812,7 +1812,6 @@ def test_s30_merge_reader_isolation_and_replay_equivalence(spark, sf_dir):
 
     import pyspark.sql.functions as F  # noqa: N812
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         gc,
         merge_cow,
@@ -1821,8 +1820,9 @@ def test_s30_merge_reader_isolation_and_replay_equivalence(spark, sf_dir):
         read_manifest,
         _read_files,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s30iso")
+    td = rig_dir(sf_dir, "s30iso")
     shutil.rmtree(td, ignore_errors=True)
     c = spark.read.parquet(f"{sf_dir}/customer.parquet").select(
         "c_custkey", "c_name"
@@ -1889,7 +1889,7 @@ def test_s30_merge_reader_isolation_and_replay_equivalence(spark, sf_dir):
 
     # no-stats table: every file is conservatively touched -> full rewrite,
     # same answer
-    td2 = _scratch(sf_dir, "s30nostats")
+    td2 = rig_dir(sf_dir, "s30nostats")
     shutil.rmtree(td2, ignore_errors=True)
     publish(c.repartitionByRange(4, "c_custkey"), td2, generation=1)  # no stats
     merge_cow(spark, td2, changes, key_col="c_custkey", generation=2)
@@ -1912,15 +1912,15 @@ def test_s31_append_carries_files_and_validates_schema(spark, sf_dir):
     import pytest
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         publish_append,
         pruned_files,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s31_manifest_append"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s31append")
+    td = rig_dir(sf_dir, "s31append")
 
     man1 = read_manifest(td, as_of_generation=1)
     man3 = read_manifest(td)
@@ -1973,11 +1973,11 @@ def test_s30b_partitioned_merge_prunes_untargeted_partitions(spark, sf_dir):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import read_manifest
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s30b_manifest_merge_cow_partitioned"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s30bmerge")
+    td = rig_dir(sf_dir, "s30bmerge")
 
     man1 = read_manifest(td, as_of_generation=1)
     man2 = read_manifest(td)
@@ -2020,18 +2020,18 @@ def test_s30b_key_moves_partitions_under_default_mode(spark, sf_dir):
 
     import pyspark.sql.functions as F  # noqa: N812
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         merge_cow,
         publish_partitioned,
         read_committed,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     rows = [(k, f"n{k}", "A" if k <= 50 else "B") for k in range(1, 101)]
     df = spark.createDataFrame(rows, "k bigint, name string, seg string")
 
     # regime 1: default mode, key 7 MOVES A -> B
-    td = _scratch(sf_dir, "s30bmove")
+    td = rig_dir(sf_dir, "s30bmove")
     shutil.rmtree(td, ignore_errors=True)
     publish_partitioned(
         df.repartitionByRange(4, "seg", "k"),
@@ -2052,7 +2052,7 @@ def test_s30b_key_moves_partitions_under_default_mode(spark, sf_dir):
 
     # regime 2: stable mode, delete with NULL partition value (payload-less
     # envelope) — the key's row lives in partition A and must still go
-    td2 = _scratch(sf_dir, "s30bnulldel")
+    td2 = rig_dir(sf_dir, "s30bnulldel")
     shutil.rmtree(td2, ignore_errors=True)
     publish_partitioned(
         df.repartitionByRange(4, "seg", "k"),
@@ -2097,14 +2097,14 @@ def test_s31b_partitioned_append_routes_and_reads_across_generations(spark, sf_d
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         read_committed_partitions,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s31b_manifest_append_partitioned"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s31bappend")
+    td = rig_dir(sf_dir, "s31bappend")
 
     man1 = read_manifest(td, as_of_generation=1)
     man3 = read_manifest(td)
@@ -2140,16 +2140,16 @@ def test_s32_schema_evolution_contracts(spark, sf_dir):
     from pyspark.sql.types import LongType, StringType, StructField
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         evolve_schema,
         publish_append,
         read_committed,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s32_manifest_schema_evolution"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s32evolve")
+    td = rig_dir(sf_dir, "s32evolve")
 
     man1 = read_manifest(td, as_of_generation=1)
     man2 = read_manifest(td, as_of_generation=2)
@@ -2207,12 +2207,12 @@ def test_partitioned_merge_matches_python_replay_multi_batch(spark, sf_dir):
     import random
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         merge_cow,
         publish_partitioned,
         read_committed,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     rng = random.Random(1405)
     segs = ["A", "B", "C"]
@@ -2220,7 +2220,7 @@ def test_partitioned_merge_matches_python_replay_multi_batch(spark, sf_dir):
     rows = [(k, v[0], v[1]) for k, v in state.items()]
     df = spark.createDataFrame(rows, "k bigint, name string, seg string")
 
-    td = _scratch(sf_dir, "s30breplay")
+    td = rig_dir(sf_dir, "s30breplay")
     shutil.rmtree(td, ignore_errors=True)
     publish_partitioned(
         df.repartitionByRange(4, "seg", "k"),
@@ -2274,7 +2274,6 @@ def test_s33_cas_rejects_lost_update_and_reclaims_loser(spark, sf_dir):
 
     import pytest
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         CommitConflictError,
         _commit_manifest,
@@ -2282,8 +2281,9 @@ def test_s33_cas_rejects_lost_update_and_reclaims_loser(spark, sf_dir):
         read_committed,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33cas")
+    td = rig_dir(sf_dir, "s33cas")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
@@ -2332,7 +2332,6 @@ def test_s33_reservation_serializes_staging_and_releases_on_bad_args(
     import pyspark.sql.functions as F  # noqa: N812
     import pytest
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         _reserve_path,
         _validate_generation,
@@ -2341,8 +2340,9 @@ def test_s33_reservation_serializes_staging_and_releases_on_bad_args(
         publish_append,
         read_committed,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33reserve")
+    td = rig_dir(sf_dir, "s33reserve")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
@@ -2384,14 +2384,14 @@ def test_s33_stale_pointer_lock_is_broken(spark, sf_dir):
     import shutil
     import time
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         _COMMIT_LOCK,
         publish,
         read_committed,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33lock")
+    td = rig_dir(sf_dir, "s33lock")
     shutil.rmtree(td, ignore_errors=True)
     os.makedirs(td)
     lock = os.path.join(td, _COMMIT_LOCK)
@@ -2413,15 +2413,15 @@ def test_s33_concurrent_merges_serialize_into_a_parent_chain(spark, sf_dir):
     import shutil
     from concurrent.futures import ThreadPoolExecutor
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         merge_cow,
         publish,
         read_committed,
         retry_commit,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33merge")
+    td = rig_dir(sf_dir, "s33merge")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, f"n{k}") for k in range(1, 201)]
     df = spark.createDataFrame(rows, "k bigint, name string")
@@ -2472,7 +2472,6 @@ def test_s28b_temporal_pruning_skips_and_never_wrong_skips(spark, sf_dir):
     import pyspark.sql.functions as F  # noqa: N812
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         merge_cow,
         publish,
@@ -2481,10 +2480,11 @@ def test_s28b_temporal_pruning_skips_and_never_wrong_skips(spark, sf_dir):
         read_manifest,
         read_pruned,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     # --- DATE flavor, on the registered query's table ---
     load_all()["s28b_temporal_stats_skipping"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s28btemporal")
+    td = rig_dir(sf_dir, "s28btemporal")
     man = read_manifest(td)
     for rel in man["files"]:
         rng = man["stats"][rel].get("o_odate")
@@ -2512,7 +2512,7 @@ def test_s28b_temporal_pruning_skips_and_never_wrong_skips(spark, sf_dir):
     assert got.count() == n_exact > 0
 
     # --- TIMESTAMP flavor on events.ts ---
-    td2 = _scratch(sf_dir, "s28bts")
+    td2 = rig_dir(sf_dir, "s28bts")
     shutil.rmtree(td2, ignore_errors=True)
     ev = spark.read.parquet(f"{sf_dir}/events.parquet").select("event_id", "ts")
     publish(
@@ -2539,7 +2539,7 @@ def test_s28b_temporal_pruning_skips_and_never_wrong_skips(spark, sf_dir):
     assert pruned_t.count() == full_t.count() > 0
 
     # --- date-KEYED copy-on-write merge prunes its touched split ---
-    td3 = _scratch(sf_dir, "s30date")
+    td3 = rig_dir(sf_dir, "s30date")
     shutil.rmtree(td3, ignore_errors=True)
     base = datetime.date(2020, 1, 1)
     rows = [(base + datetime.timedelta(days=i), f"v{i}") for i in range(120)]
@@ -2618,14 +2618,14 @@ def test_s33_cross_process_cas_serializes_writers(spark, sf_dir):
     import multiprocessing as mp
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         current_generation,
         publish,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33procs")
+    td = rig_dir(sf_dir, "s33procs")
     shutil.rmtree(td, ignore_errors=True)
     publish(
         spark.read.parquet(f"{sf_dir}/region.parquet").limit(1), td, generation=1
@@ -2666,7 +2666,6 @@ def test_s32_evolution_composes_with_merge_and_compact(spark, sf_dir):
     import pytest
     from pyspark.sql.types import StringType, StructField
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact,
         evolve_schema,
@@ -2675,8 +2674,9 @@ def test_s32_evolution_composes_with_merge_and_compact(spark, sf_dir):
         read_committed,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s32compose")
+    td = rig_dir(sf_dir, "s32compose")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, f"n{k}") for k in range(1, 101)]
     df = spark.createDataFrame(rows, "k bigint, name string")
@@ -2726,16 +2726,16 @@ def test_s34_partial_compaction_rewrites_only_selected_files(spark, sf_dir):
     import pytest
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact_partial,
         publish_partitioned,
         read_committed,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s34_partial_compaction"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s34partial")
+    td = rig_dir(sf_dir, "s34partial")
 
     man1 = read_manifest(td, as_of_generation=1)
     man3 = read_manifest(td)
@@ -2777,7 +2777,7 @@ def test_s34_partial_compaction_rewrites_only_selected_files(spark, sf_dir):
         compact_partial(spark, td, generation=8, files=["data/gen-99/x.parquet"])
 
     # partitioned variant: rewrite stages back under the Hive layout
-    td2 = _scratch(sf_dir, "s34part")
+    td2 = rig_dir(sf_dir, "s34part")
     shutil.rmtree(td2, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
@@ -2809,16 +2809,16 @@ def test_s28c_conjunctive_pruning_beats_single_column(spark, sf_dir):
     import pyspark.sql.functions as F  # noqa: N812
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         pruned_files,
         pruned_files_multi,
         read_committed,
         read_pruned_multi,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s28c_conjunctive_zorder_pruning"].fn(spark, sf_dir).collect()
-    td = _scratch(sf_dir, "s28czorder")
+    td = rig_dir(sf_dir, "s28czorder")
 
     li = read_committed(spark, td)
     b = li.agg(
@@ -2861,7 +2861,6 @@ def test_vacuum_reclaims_superseded_files_inside_shared_dirs(spark, sf_dir):
 
     import pyspark.sql.functions as F  # noqa: N812
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         gc,
         merge_cow,
@@ -2870,8 +2869,9 @@ def test_vacuum_reclaims_superseded_files_inside_shared_dirs(spark, sf_dir):
         read_manifest,
         vacuum,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s34vacuum")
+    td = rig_dir(sf_dir, "s34vacuum")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, f"n{k}") for k in range(1, 401)]
     df = spark.createDataFrame(rows, "k bigint, name string")
@@ -2944,14 +2944,14 @@ def test_pointer_lock_release_checks_ownership(spark, sf_dir):
     import shutil
     import time
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         _COMMIT_LOCK,
         _acquire_pointer_lock,
         _release_pointer_lock,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33lockown")
+    td = rig_dir(sf_dir, "s33lockown")
     shutil.rmtree(td, ignore_errors=True)
     os.makedirs(td)
     lock = os.path.join(td, _COMMIT_LOCK)
@@ -2985,15 +2985,15 @@ def test_gc_keeps_reservation_of_actively_staging_writer(spark, sf_dir):
     import shutil
     import time
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         _reserve_path,
         _stage_dir,
         gc,
         publish,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s33gclive")
+    td = rig_dir(sf_dir, "s33gclive")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select("o_orderkey")
     publish(o.limit(10), td, generation=1)
@@ -3038,15 +3038,15 @@ def test_evolve_after_compact_drops_parent_lineage(spark, sf_dir):
 
     from pyspark.sql.types import StringType, StructField
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         compact_partial,
         evolve_schema,
         publish,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s32lineage")
+    td = rig_dir(sf_dir, "s32lineage")
     shutil.rmtree(td, ignore_errors=True)
     o = spark.read.parquet(f"{sf_dir}/orders.parquet").select(
         "o_orderkey", "o_orderstatus"
@@ -3087,8 +3087,8 @@ def test_publish_stats_collected_without_driver_footer_reads(
     import os
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     driver_pid = os.getpid()
 
@@ -3099,7 +3099,7 @@ def test_publish_stats_collected_without_driver_footer_reads(
 
     monkeypatch.setattr(m, "_file_stats", tripwire)
 
-    td = _scratch(sf_dir, "s25execstats")
+    td = rig_dir(sf_dir, "s25execstats")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, k % 3, f"n{k}") for k in range(1, 201)]
     df = spark.createDataFrame(rows, "k bigint, p int, name string")
@@ -3142,7 +3142,7 @@ def test_publish_stats_collected_without_driver_footer_reads(
     assert all("k" in s for s in man["stats"].values())
 
     # partitioned publish records stats too
-    td2 = _scratch(sf_dir, "s29execstats")
+    td2 = rig_dir(sf_dir, "s29execstats")
     shutil.rmtree(td2, ignore_errors=True)
     m.publish_partitioned(
         df, td2, generation=1, partition_col="p", stats_columns=["k"]
@@ -3159,10 +3159,10 @@ def test_collect_stats_driver_fast_path_matches_executor_path(spark, sf_dir):
     be byte-identical — pin it by forcing each path over the same files."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "statsfastpath")
+    td = rig_dir(sf_dir, "statsfastpath")
     shutil.rmtree(td, ignore_errors=True)
     df = spark.createDataFrame(
         [(k, f"n{k}") for k in range(1, 101)], "k bigint, name string"
@@ -3189,10 +3189,10 @@ def test_collect_blooms_driver_fast_path_matches_executor_path(spark, sf_dir):
     byte-identical."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "bloomfastpath")
+    td = rig_dir(sf_dir, "bloomfastpath")
     shutil.rmtree(td, ignore_errors=True)
     df = spark.createDataFrame(
         [(k, f"n{k}") for k in range(1, 101)], "k bigint, name string"
@@ -3217,10 +3217,10 @@ def test_feed_flags_tolerate_colliding_table_columns(spark, sf_dir):
     names derive through _flag_col, guaranteed absent from the schema."""
     import shutil
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "flagcollide")
+    td = rig_dir(sf_dir, "flagcollide")
     shutil.rmtree(td, ignore_errors=True)
     base = spark.createDataFrame(
         [(k, f"d{k}", f"m{k}", f"u{k}") for k in range(1, 21)],
@@ -3283,13 +3283,13 @@ def test_merge_persist_is_scoped_to_the_commit(spark, sf_dir):
 
     import pytest as _pytest
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     def cached_rdd_count() -> int:
         return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
 
-    td = _scratch(sf_dir, "mergepersistscope")
+    td = rig_dir(sf_dir, "mergepersistscope")
     shutil.rmtree(td, ignore_errors=True)
     base = spark.createDataFrame(
         [(k, f"n{k}") for k in range(1, 51)], "k bigint, name string"
@@ -3327,10 +3327,10 @@ def test_vacuum_never_reclaims_a_racing_writers_staging(spark, sf_dir):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "vacrace1")
+    td = rig_dir(sf_dir, "vacrace1")
     shutil.rmtree(td, ignore_errors=True)
     base = spark.createDataFrame([(1, "a")], "k bigint, v string")
     m.publish(base, td, generation=1)
@@ -3400,10 +3400,10 @@ def test_vacuum_protects_a_commit_landing_mid_walk(spark, sf_dir):
     import shutil
     import threading
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources import manifest as m
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "vacrace2")
+    td = rig_dir(sf_dir, "vacrace2")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, f"n{k}") for k in range(1, 101)]
     df = spark.createDataFrame(rows, "k bigint, name string")
@@ -3466,7 +3466,6 @@ def test_s35_change_feed_reads_only_touched_files_and_skips_maintenance(
 
     from pyspark.sql.types import StringType, StructField
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import (
         change_feed,
         change_feed_sides,
@@ -3477,8 +3476,9 @@ def test_s35_change_feed_reads_only_touched_files_and_skips_maintenance(
         publish_append,
         read_manifest,
     )
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "s35pins")
+    td = rig_dir(sf_dir, "s35pins")
     shutil.rmtree(td, ignore_errors=True)
     rows = [(k, f"n{k}") for k in range(1, 401)]
     df = spark.createDataFrame(rows, "k bigint, name string")
@@ -3574,6 +3574,14 @@ def _vacrace_proc_writer(args):
         read_manifest,
     )
 
+    # start committing only once the reader and both maintainers run, so
+    # a slow spawn cannot let the writer finish before anyone races it
+    deadline = time.time() + 120
+    while (
+        sum(n.startswith("_STARTED_") for n in os.listdir(table_dir)) < 3
+        and time.time() < deadline
+    ):
+        time.sleep(0.01)
     committed = []
     gen = 1
     while len(committed) < n_commits:
@@ -3612,6 +3620,7 @@ def _vacrace_proc_maintainer(args):
     sys.path.insert(0, "/root/repo")
     from ez_cdc_spark.sources.manifest import gc, vacuum
 
+    open(os.path.join(table_dir, f"_STARTED_{os.getpid()}"), "w").close()
     rounds = 0
     while not os.path.exists(os.path.join(table_dir, "_WRITER_DONE")):
         # vacuum at 0.0 is structurally writer-safe (reservation +
@@ -3637,6 +3646,7 @@ def _vacrace_proc_reader(args):
     sys.path.insert(0, "/root/repo")
     from ez_cdc_spark.sources.manifest import read_manifest
 
+    open(os.path.join(table_dir, f"_STARTED_{os.getpid()}"), "w").close()
     violations = []
     checks = 0
     while not os.path.exists(os.path.join(table_dir, "_WRITER_DONE")):
@@ -3672,10 +3682,10 @@ def test_vacuum_gc_never_touch_the_committed_generation_cross_process(
 
     import pyarrow.parquet as pq
 
-    from ez_cdc_spark.queries.sources_sinks import _scratch
     from ez_cdc_spark.sources.manifest import committed_files, publish, read_manifest
+    from ez_cdc_spark.streaming.replay import rig_dir
 
-    td = _scratch(sf_dir, "vacrace3")
+    td = rig_dir(sf_dir, "vacrace3")
     shutil.rmtree(td, ignore_errors=True)
     publish(
         spark.createDataFrame([(0, 0)], "gen bigint, v bigint"), td, generation=1

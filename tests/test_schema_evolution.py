@@ -72,12 +72,12 @@ def test_s12_compaction_reduces_file_count(spark):
     import os
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     sf = "/root/testdata/sf0.001"
     load_all()["s12_small_file_compaction"].fn(spark, sf).collect()
-    frag = _scratch(sf, "s12frag")
-    compacted = _scratch(sf, "s12compact")
+    frag = rig_dir(sf, "s12frag")
+    compacted = rig_dir(sf, "s12compact")
     n_frag = sum(f.endswith(".parquet") for f in os.listdir(frag))
     n_comp = sum(f.endswith(".parquet") for f in os.listdir(compacted))
     assert n_frag == 64
@@ -113,13 +113,13 @@ def test_s21_failfast_raises_and_counts_reconcile(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     rows = {
         r["mode"]: r
         for r in load_all()["s21_csv_malformed_modes"].fn(spark, sf_dir).collect()
     }
-    path = _scratch(sf_dir, "s21csv")
+    path = rig_dir(sf_dir, "s21csv")
     n_lines = spark.read.text(path).count()
     assert rows["permissive_good"]["n"] + rows["permissive_corrupt"]["n"] == n_lines
     assert rows["dropmalformed"]["n"] == rows["permissive_good"]["n"]
@@ -144,10 +144,10 @@ def test_s22_range_cluster_spans_disjoint_and_narrow(spark, sf_dir):
     from pyspark.sql import functions as F
 
     from ez_cdc_spark.queries import load_all
-    from ez_cdc_spark.queries.sources_sinks import _scratch
+    from ez_cdc_spark.streaming.replay import rig_dir
 
     load_all()["s22_range_clustered_rewrite"].fn(spark, sf_dir).collect()
-    path = _scratch(sf_dir, "s22range")
+    path = rig_dir(sf_dir, "s22range")
     per_file = (
         spark.read.parquet(path)
         .groupBy(F.input_file_name().alias("f"))
