@@ -3479,10 +3479,12 @@ GROUP BY c_nationkey ORDER BY c_nationkey
     "arrow batches into one parquet file each under the RESERVED "
     "generation's staging dir (vectorized, zero per-row Python, footer "
     "min/max stats computed task-side so S28 skipping keeps working), "
-    "and the driver-side commit runs the engine's exact protocol — "
-    "O_EXCL number reservation before any data stages, immutable "
-    "manifest linked via the one-winner os.link CAS, pointer swapped "
-    "under the stale-breakable lock with parent re-validation. The "
+    "and commit runs the engine's own protocol — the functions of "
+    "sources/commit_core.py, which ship to the data source's Python "
+    "workers by value: O_EXCL number reservation before any data "
+    "stages, immutable manifest linked via the one-winner os.link, "
+    "pointer swapped under the stale-breakable lock with parent "
+    "re-validation. The "
     "query creates the table with one write, appends two more batches "
     "(one under a txnTag/txnVersion), then REPLAYS the tagged write "
     "verbatim — the Delta idempotent-writes contract turns the replay "
@@ -3817,7 +3819,7 @@ WHERE c_custkey IN (7, 42, 99, 123, 148)
 ORDER BY c_custkey
 """,
     doc="S47: per-file BLOOM FILTERS for point lookups — the equality "
-    "complement to S28's min/max (manifest.py:_make_bloom_kernels, "
+    "complement to S28's min/max (commit_core._file_blooms, "
     "bloom_pruned_files, read_point_lookup): on a table clustered by "
     "ANOTHER column, a scattered key's per-file [min,max] spans "
     "everything and stats pruning keeps every file, but a small "

@@ -25,9 +25,11 @@ single-table tooling); the catalog is the cross-table consistency
 boundary, which is exactly the Iceberg contract (table metadata files
 exist on disk before the catalog swap makes them the table).
 
-Concurrency: the catalog swap re-validates ``expected_version`` under the
-same short lock discipline as the manifest pointer (CAS; a concurrent
-transaction raises CommitConflictError and the loser re-derives).
+Concurrency: a catalog version is committed exactly like a table
+generation, through ``commit_core``: the immutable version file is linked
+once, then the pointer swap re-validates ``expected_version`` under the
+same short lock (CAS; a concurrent transaction raises CommitConflictError
+and the loser re-derives).
 Catalog versions are immutable and time-travelable — a cross-TABLE
 consistent snapshot of the whole lake at any retained version.
 
@@ -46,18 +48,19 @@ from __future__ import annotations
 import json
 import os
 import re
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 
-from ez_cdc_spark.sources.manifest import (
+from ez_cdc_spark.sources.commit_core import (
     CommitConflictError,
-    ConstraintViolationError,
     _acquire_pointer_lock,
+    _fold_txns,
     _fsync_dir,
+    _link_json,
     _release_pointer_lock,
-    read_committed,
+    _swap_pointer,
 )
+from ez_cdc_spark.sources.manifest import ConstraintViolationError, read_committed
 
 _POINTER = "_CATALOG"
 _VER_RE = re.compile(r"v-(\d+)(?:\.json)?$")
@@ -231,54 +234,34 @@ def commit(
     # commit's tagged txn in — the manifest _fold_txns contract, one
     # level up (a transaction's watermark must advance atomically WITH
     # the tables it published)
-    txns = dict(prev.get("txns") or {})
-    if txn and "tag" in txn:
-        txns[str(txn["tag"])] = {k: v for k, v in txn.items() if k != "tag"}
+    txns = _fold_txns(prev.get("txns"), txn)
     if txns:
         snap["txns"] = txns
+    return _commit_version(catalog_dir, snap, expected_version)
 
-    vdir = os.path.join(catalog_dir, "_versions")
-    os.makedirs(vdir, exist_ok=True)
-    vpath = _version_path(catalog_dir, version)
-    vtmp = os.path.join(vdir, f".v-{version}.json.{uuid.uuid4().hex}.tmp")
-    with open(vtmp, "w") as fh:
-        json.dump(snap, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
+
+def _commit_version(catalog_dir: str, snap: dict, expected: int | None) -> dict:
+    """Link ``snap`` as immutable version file ``v-<version>.json`` (one
+    writer owns each number) and swap the catalog pointer to it if the
+    committed version is still ``expected`` — the manifest protocol one
+    level up (commit_core). Either step lost to a concurrent transaction
+    raises CommitConflictError; the caller re-derives and retries."""
+    vpath = _version_path(catalog_dir, snap["version"])
     try:
-        os.link(vtmp, vpath)  # one writer owns v-N (manifest.py's reservation)
+        _link_json(vpath, snap)
     except FileExistsError:
         raise CommitConflictError(
-            f"catalog version {version} already committed by a concurrent "
-            f"transaction: re-derive from the new snapshot and retry"
+            f"catalog version {snap['version']} already committed by a "
+            f"concurrent transaction: re-derive from the new snapshot and retry"
         ) from None
-    finally:
-        os.unlink(vtmp)
-    _fsync_dir(vdir)
-
-    fd = _acquire_pointer_lock(catalog_dir)
-    try:
-        cur = current_version(catalog_dir)
-        if cur != expected_version:
-            try:
-                os.unlink(vpath)
-            except FileNotFoundError:
-                pass
-            _fsync_dir(vdir)
-            raise CommitConflictError(
-                f"catalog advanced to version {cur} while this transaction "
-                f"was building on {expected_version}: commit rejected, "
-                f"re-derive and retry"
-            )
-        ptmp = os.path.join(catalog_dir, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(ptmp, "w") as fh:
-            json.dump({"current": f"v-{version}.json"}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptmp, os.path.join(catalog_dir, _POINTER))  # THE commit
-        _fsync_dir(catalog_dir)
-    finally:
-        _release_pointer_lock(catalog_dir, fd)
+    _swap_pointer(
+        catalog_dir,
+        os.path.join(catalog_dir, _POINTER),
+        vpath,
+        expected,
+        "catalog",
+        unit="version",
+    )
     return snap
 
 
@@ -356,46 +339,7 @@ def rollback(catalog_dir: str, to_version: int) -> dict:
     if target.get("views"):
         snap["views"] = dict(target["views"])  # same rule for views
     snap["rollback"] = {"parent": prev.get("version"), "target": to_version}
-
-    vdir = os.path.join(catalog_dir, "_versions")
-    vpath = _version_path(catalog_dir, version)
-    vtmp = os.path.join(vdir, f".v-{version}.json.{uuid.uuid4().hex}.tmp")
-    with open(vtmp, "w") as fh:
-        json.dump(snap, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(vtmp, vpath)
-    except FileExistsError:
-        raise CommitConflictError(
-            f"catalog version {version} already committed by a concurrent "
-            f"transaction: re-derive and retry the rollback"
-        ) from None
-    finally:
-        os.unlink(vtmp)
-    _fsync_dir(vdir)
-    fd = _acquire_pointer_lock(catalog_dir)
-    try:
-        if current_version(catalog_dir) != cur:
-            try:
-                os.unlink(vpath)
-            except FileNotFoundError:
-                pass
-            _fsync_dir(vdir)
-            raise CommitConflictError(
-                f"catalog advanced past version {cur} during the rollback: "
-                f"rejected, re-derive and retry"
-            )
-        ptmp = os.path.join(catalog_dir, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(ptmp, "w") as fh:
-            json.dump({"current": f"v-{version}.json"}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptmp, os.path.join(catalog_dir, _POINTER))
-        _fsync_dir(catalog_dir)
-    finally:
-        _release_pointer_lock(catalog_dir, fd)
-    return snap
+    return _commit_version(catalog_dir, snap, cur)
 
 
 def alter_foreign_keys(

@@ -84,43 +84,50 @@ import json
 import os
 import re
 import shutil
-import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StringType, StructField, StructType
 
-_POINTER = "_MANIFEST"
-_GEN_RE = re.compile(r"gen-(\d+)(?:\.json)?$")
-_COMMIT_LOCK = ".commit.lock"
+# The commit protocol lives in commit_core. Its names are bound here too:
+# engine code calls them through this module's attributes (the benchmark
+# tracer wraps ``_commit_manifest`` and ``read_manifest`` here), and
+# callers import them from this module.
+from ez_cdc_spark.sources.commit_core import (  # noqa: F401
+    _BLOOM_FOLD_EVERY,
+    _BLOOMS_DIR,
+    _COMMIT_LOCK,
+    _FEED_BASE_BUCKETS,
+    _POINTER,
+    _REF_DIR,
+    CommitConflictError,
+    _acquire_pointer_lock,
+    _bloom_might_contain,
+    _carry_blooms,
+    _commit_manifest,
+    _encode_stat,
+    _file_blooms,
+    _file_stats,
+    _fold_txns,
+    _fsync_dir,
+    _gen_of,
+    _link_json,
+    _manifest_path,
+    _parent_gen_of,
+    _ref_pointer_path,
+    _release_pointer_lock,
+    _reserve_path,
+    _stable_bucket,
+    _txns_of,
+    _validate_generation,
+    _write_json,
+    current_generation,
+    map_files,
+    read_manifest,
+    table_blooms,
+    txn_watermark,
+)
+
 _AUTO = object()  # "capture expected_parent at call time" sentinel
-_LOCK_STALE_S = 30.0  # a crashed writer's lock is broken after this age
-_REF_DIR = "_refs"
-_REF_RE = re.compile(r"^[A-Za-z0-9][A-Za-z0-9._-]*$")
-
-
-def _ref_pointer_path(table_dir: str, ref: str | None) -> str:
-    """Pointer file for a ref: the table's ``_MANIFEST`` when ``ref`` is
-    None (the main branch), else ``_refs/<name>`` (S38 branches — the
-    Iceberg ref model: every branch is just another pointer into the SAME
-    shared generation-manifest space, so branch commits and main commits
-    share number uniqueness, stats, gc and vacuum machinery)."""
-    if ref is None:
-        return os.path.join(table_dir, _POINTER)
-    if not _REF_RE.match(ref):
-        raise ValueError(
-            f"invalid branch name {ref!r}: must match {_REF_RE.pattern} "
-            f"(no path separators — refs are flat files under {_REF_DIR}/)"
-        )
-    return os.path.join(table_dir, _REF_DIR, ref)
-
-
-class CommitConflictError(RuntimeError):
-    """A concurrent writer committed between this writer's read of the
-    table state and its pointer swap (S33 optimistic concurrency): the
-    losing commit is rejected — its manifest and staged files remain as
-    reclaimable debris (``gc`` with an age threshold collects them) — and
-    the caller retries from the NEW committed state, exactly the
-    Delta/Iceberg conflict-retry loop."""
 
 
 class ConstraintViolationError(RuntimeError):
@@ -170,36 +177,6 @@ def _enforce_constraints(df: DataFrame, constraints: dict | None, where: str) ->
 
 def _stage_dir(table_dir: str, generation: int) -> str:
     return os.path.join(table_dir, "data", f"gen-{generation}")
-
-
-def _manifest_path(table_dir: str, generation: int) -> str:
-    return os.path.join(table_dir, "_manifests", f"gen-{generation}.json")
-
-
-def _fsync_dir(path: str) -> None:
-    """Record a completed rename in the directory itself (POSIX durability)."""
-    fd = os.open(path, os.O_RDONLY)
-    try:
-        os.fsync(fd)
-    finally:
-        os.close(fd)
-
-
-def _gen_of(name: str) -> int | None:
-    m = _GEN_RE.search(name)
-    return int(m.group(1)) if m else None
-
-
-def current_generation(table_dir: str, ref: str | None = None) -> int | None:
-    """Committed generation number (of the main pointer, or of branch
-    ``ref``), or None if nothing was ever committed. A dropped/unknown
-    branch also reads as None — callers that require the branch to exist
-    use :func:`branch_head`."""
-    try:
-        with open(_ref_pointer_path(table_dir, ref)) as fh:
-            return _gen_of(json.load(fh)["current"])
-    except FileNotFoundError:
-        return None
 
 
 def _provably_empty(df: DataFrame) -> bool:
@@ -286,156 +263,6 @@ def _parquet_files(d: str) -> list[str]:
     )
 
 
-def _make_stat_kernels():
-    """Factory for the two per-file stat functions. Defining them as
-    CLOSURES (module-attribute lookup by qualname fails) makes cloudpickle
-    serialize them BY VALUE, so :func:`_collect_stats` can ship the footer
-    kernel to executor Python workers even when the driver got this
-    package via a bare sys.path insert (the correctness driver's shape)
-    and the workers cannot ``import ez_cdc_spark`` by reference."""
-
-    def _encode_stat(v):
-        """JSON-safe, tz-unambiguous encoding of a footer/bound value (r14,
-        extending S28/S30 pruning to temporal columns — the most common real
-        partition/key type): dates become day counts ``{"d": n}`` and
-        timestamps epoch-microsecond counts ``{"us": n}`` (a naive timestamp
-        is UTC by this engine's session contract; an aware one converts
-        exactly) — integer arithmetic, so no tz-dependent string rendering
-        can ever corrupt a comparison. int/float/str pass through; anything
-        else returns None and the caller stays conservative."""
-        import datetime as _dt
-
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, _dt.datetime):
-            if v.tzinfo is None:
-                v = v.replace(tzinfo=_dt.timezone.utc)
-            # exact integer arithmetic (ADVICE r14): timestamp() goes
-            # through a float whose rounding plus int() truncation can land
-            # 1µs below the true value, and a max recorded 1µs low makes
-            # _range_excludes wrongly skip a file whose boundary row exactly
-            # equals the query's lo bound
-            epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            return {"us": (v - epoch) // _dt.timedelta(microseconds=1)}
-        if isinstance(v, _dt.date):
-            return {"d": (v - _dt.date(1970, 1, 1)).days}
-        if isinstance(v, (int, float, str)):
-            return v
-        return None
-
-    def _file_stats(path: str, columns: list[str]) -> dict:
-        """Per-file column min/max from the parquet FOOTER (no data read):
-        merge row-group statistics for each requested column. Missing stats
-        for a column simply omit it — pruning treats absence as 'keep'.
-
-        int/float/str stats record verbatim; date/timestamp stats record in
-        the integer encoding of ``_encode_stat`` (r14 — the old code
-        skipped temporal columns entirely because tz-dependent string
-        rendering compared wrong at boundaries; day/microsecond integers
-        cannot). bytes (decoded with errors='replace', not order-preserving)
-        and other types stay unrecorded — pruning conservatively keeps the
-        file."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        out: dict[str, list] = {}
-        for col in columns:
-            ci = names.get(col)
-            if ci is None:
-                continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if not ok or lo is None:
-                continue
-            lo_e, hi_e = _encode_stat(lo), _encode_stat(hi)
-            if lo_e is not None and hi_e is not None:
-                out[col] = [lo_e, hi_e]
-        return out
-
-    return _encode_stat, _file_stats
-
-
-_encode_stat, _file_stats = _make_stat_kernels()
-
-
-def _make_bloom_kernels():
-    """S47 per-file BLOOM FILTERS — the point-lookup complement to S28's
-    min/max: a range-clustered or arbitrary layout leaves a SCATTERED
-    key's per-file [min, max] spanning everything, so an equality lookup
-    keeps every file; a small per-file bloom over that column drops the
-    files that provably lack the value. Closures (the _make_stat_kernels
-    rule) so cloudpickle ships the build kernel by value to executors.
-
-    Encoding is deterministic and portable: int (non-bool) → str, str →
-    itself; everything else is UNRECORDED (floats excluded on purpose —
-    equality on floats is a bug upstream of any index). k=4 positions
-    from the md5 digest's first four big-endian u32 words, modulo the
-    bit count; the bitset serializes base64 into the manifest. Absence of
-    a value is PROVABLE (all-zero positions impossible for a recorded
-    value); presence is only 'maybe' — exactly the conservative shape
-    file skipping needs."""
-    import base64 as _b64
-    import hashlib as _hl
-    import struct as _struct
-
-    def _bloom_canon(v):
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, int):
-            return str(v).encode()
-        if isinstance(v, str):
-            return v.encode()
-        return None
-
-    def _bloom_positions(v, bits: int):
-        canon = _bloom_canon(v)
-        if canon is None:
-            return None
-        words = _struct.unpack(">4I", _hl.md5(canon).digest()[:16])
-        return [w % bits for w in words]
-
-    def _file_bloom(path: str, col: str, bits: int):
-        """One pass over the staged file's single column (columnar read,
-        executor-side) → base64 bitset, or None when the column is absent
-        or holds an unencodable type (pruning then keeps the file)."""
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(path)
-        if col not in pf.schema_arrow.names:
-            return None
-        buf = bytearray(bits // 8)
-        for batch in pf.iter_batches(columns=[col]):
-            for v in batch.column(0).to_pylist():
-                if v is None:
-                    continue
-                pos = _bloom_positions(v, bits)
-                if pos is None:
-                    return None  # unencodable type: no bloom for this file
-                for p in pos:
-                    buf[p >> 3] |= 1 << (p & 7)
-        return _b64.b64encode(bytes(buf)).decode()
-
-    def _bloom_might_contain(b64: str, bits: int, v) -> bool:
-        pos = _bloom_positions(v, bits)
-        if pos is None:
-            return True  # unencodable probe value: conservative keep
-        raw = _b64.b64decode(b64)
-        return all(raw[p >> 3] & (1 << (p & 7)) for p in pos)
-
-    return _bloom_positions, _file_bloom, _bloom_might_contain
-
-
-_bloom_positions, _file_bloom, _bloom_might_contain = _make_bloom_kernels()
-
-
 # A bloom-carrying commit whose staged files are FEW and SMALL builds its
 # bitsets in-process: unlike footer stats the bloom kernel reads the key
 # COLUMN (data bytes, not metadata), so the driver fast path is bounded by
@@ -451,54 +278,24 @@ def _collect_blooms(
     files: list[str],
     columns: list[str],
     bits: int,
-    _kernel=_file_bloom,
 ) -> dict:
-    """Per-file blooms for ``columns``, built ON EXECUTORS (the
-    _collect_stats rule — a driver loop over a million files is the
-    bottleneck): one parallelize job, each task one columnar read of its
-    own file. Returns ``{rel: {col: b64}}`` (files/columns that could not
-    record a bloom are simply absent — conservative keep).
-
-    Bounded driver fast path (optimization r20, guide §1.2 — the
-    _collect_stats r19 pattern, byte-bounded because this kernel reads
-    the key column's data pages): a CDC micro-batch commit stages a
-    handful of small files, and the fixed ~0.25-0.3 s parallelize
-    round trip dwarfs reading a few hundred KB of one column in-process.
-    Both the file count AND the total staged bytes must sit under the
-    bounds; a stat failure on any file falls through to the executor
-    path (conservative)."""
+    """Per-file blooms for ``columns`` (``{rel: {col: b64}}``; files and
+    columns that could not record a bloom are absent — conservative
+    keep), through :func:`map_files`: in-process below both driver
+    bounds, else one executor job whose tasks each read their own file's
+    key column (optimization r20: byte-bounded because this kernel reads
+    data pages, not just footers)."""
     if not files or not columns:
         return {}
-    cols = list(columns)
-    kernel = _kernel
-    nbits = bits
-    pairs = [(os.path.relpath(f, table_dir), f) for f in files]
-    out = {}
-    if len(pairs) <= _BLOOMS_DRIVER_MAX_FILES:
-        try:
-            total = sum(os.path.getsize(f) for _, f in pairs)
-        except OSError:
-            total = None
-        if total is not None and total <= _BLOOMS_DRIVER_MAX_BYTES:
-            for rel, f in pairs:
-                per = {c: b for c in cols if (b := kernel(f, c, nbits))}
-                if per:
-                    out[rel] = per
-            return out
-    n = max(1, min(len(pairs), int(spark.sparkContext.defaultParallelism)))
-    for rel, per in (
-        spark.sparkContext.parallelize(pairs, n)
-        .map(
-            lambda rf: (
-                rf[0],
-                {c: b for c in cols if (b := kernel(rf[1], c, nbits))},
-            )
-        )
-        .collect()
-    ):
-        if per:
-            out[rel] = per
-    return out
+    cols, kernel = list(columns), _file_blooms
+    got = map_files(
+        spark,
+        files,
+        lambda f: kernel(f, cols, bits),
+        _BLOOMS_DRIVER_MAX_FILES,
+        _BLOOMS_DRIVER_MAX_BYTES,
+    )
+    return {os.path.relpath(f, table_dir): per for f, per in got.items() if per}
 
 
 # The MOR feed reads its changed keys in-process only while the delete
@@ -548,113 +345,41 @@ def _read_key_column_driver(paths: list[str], col: str) -> list | None:
     return list(vals)
 
 
-_BLOOMS_DIR = "_blooms"
-
-
-def _bloom_sidecar_write(table_dir: str, generation: int, blooms: dict) -> str:
-    """Persist a ``{rel: {col: b64}}`` bloom map as a SIDECAR file under
-    ``_blooms/`` and return its name (r16 verdict #3: inline bitsets made
-    the manifest O(files·bits) — at a million files that breaks the
-    O(files) manifest contract; the manifest now carries only sidecar
-    NAMES). The name embeds a uuid: two CAS-racing writers of the same
-    generation number must not overwrite each other's sidecar before the
-    os.link decides the winner — each manifest references exactly the
-    bytes its own writer produced; the loser's sidecar becomes
-    unreferenced debris for :func:`gc`."""
-    bdir = os.path.join(table_dir, _BLOOMS_DIR)
-    os.makedirs(bdir, exist_ok=True)
-    name = f"gen-{generation}-{uuid.uuid4().hex[:12]}.json"
-    tmp = os.path.join(bdir, f".{name}.tmp")
-    with open(tmp, "w") as fh:
-        json.dump(blooms, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    os.replace(tmp, os.path.join(bdir, name))
-    _fsync_dir(bdir)
-    return name
-
-
-def table_blooms(table_dir: str, manifest: dict) -> dict:
-    """Resolve a generation's per-file blooms: the legacy INLINE map (pre-
-    sidecar manifests keep working) overlaid by each sidecar named in
-    ``bloom_meta.sidecars``, in chain order (later writers win a rel).
-    A missing/unreadable sidecar contributes nothing — absent blooms mean
-    conservative keep, so pruning degrades, correctness never does."""
-    out = {k: dict(v) for k, v in (manifest.get("blooms") or {}).items()}
-    for name in (manifest.get("bloom_meta") or {}).get("sidecars", []):
-        try:
-            with open(os.path.join(table_dir, _BLOOMS_DIR, name)) as fh:
-                side = json.load(fh)
-        except (OSError, ValueError):
-            continue
-        for rel, per in side.items():
-            out[rel] = {**out.get(rel, {}), **per}
-    return out
-
-
-# Fold the bloom sidecar chain back to ONE file once it reaches this
-# length (r17 verdict #6): each bloom-carrying append adds a sidecar, so
-# an append-heavy steady state would make every driver-side table_blooms
-# read walk O(appends) files. Folding every K appends bounds reads per
-# lookup at K while keeping the per-commit write cost amortized O(1)
-# sidecars (the fold rewrites the union once per K commits — the classic
-# logarithmic-merge bargain, taken at a flat cap because the union is
-# already O(live files) bytes).
-_BLOOM_FOLD_EVERY = 8
-
-
 def _carry_bloom_meta(
     spark: SparkSession,
     table_dir: str,
     parent: dict,
     generation: int,
     new_files: list[str],
-    reset: bool = False,
     live_rels: list[str] | None = None,
 ) -> dict | None:
-    """Shared S47 carry for every derived writer (append / merge_cow /
-    compact_partial; full compact passes ``reset=True``): build blooms for
-    just the NEW files over the parent's declared columns, persist them as
-    this generation's sidecar, and return the new ``bloom_meta`` with the
-    parent's sidecar chain extended (``reset`` starts a fresh chain — the
-    rewrite re-indexed every live file, so the old sidecars are dead
-    weight). A legacy inline parent migrates here: its inline map folds
-    into the new sidecar once, and the child manifest carries names only.
-    Once the chain reaches ``_BLOOM_FOLD_EVERY`` entries it FOLDS: the
-    chain's union (pruned to ``live_rels`` — entries for files a merge or
-    compaction rewrote are debris) rewrites as one sidecar, so lookups
-    read a bounded number of sidecar files however many appends the table
-    has absorbed; the superseded sidecars become gc debris. Returns None
-    when the parent declares no bloom index (ADVICE r16 — before this,
-    one append/compact permanently stripped the index)."""
+    """S47 carry for every derived engine writer (append / merge_cow /
+    compact_partial): build blooms for just the NEW files over the
+    parent's declared columns, then :func:`commit_core._carry_blooms`
+    (sidecar write, chain extend, fold at ``_BLOOM_FOLD_EVERY``). None
+    when the parent declares no bloom index."""
     meta = parent.get("bloom_meta")
     if not meta:
         return None
     fresh = _collect_blooms(
         spark, table_dir, new_files, meta.get("columns", []), int(meta["bits"])
     )
-    payload = dict(fresh)
-    if not reset and parent.get("blooms"):
-        # one-time legacy migration: inline parent bitsets join the sidecar
-        payload = {**parent["blooms"], **payload}
-    sidecars = [] if reset else list(meta.get("sidecars", []))
-    if payload:
-        if len(sidecars) >= _BLOOM_FOLD_EVERY - 1:
-            # fold: the whole chain + this commit's payload as ONE sidecar
-            merged = table_blooms(table_dir, parent)
-            for rel, per in payload.items():
-                merged[rel] = {**merged.get(rel, {}), **per}
-            if live_rels is not None:
-                live = set(live_rels)
-                merged = {rel: v for rel, v in merged.items() if rel in live}
-            sidecars = [_bloom_sidecar_write(table_dir, generation, merged)]
-        else:
-            sidecars.append(_bloom_sidecar_write(table_dir, generation, payload))
-    return {
-        "bits": int(meta["bits"]),
-        "columns": meta.get("columns", []),
-        "sidecars": sidecars,
-    }
+    return _carry_blooms(table_dir, parent, generation, fresh, live_rels)
+
+
+def _new_bloom_meta(
+    spark: SparkSession,
+    table_dir: str,
+    generation: int,
+    files: list[str],
+    columns: list[str],
+    bits: int,
+) -> dict:
+    """``bloom_meta`` of a publish that declares a bloom index (S47):
+    blooms for every staged file in one sidecar. Recorded even for an
+    empty publish so appends inherit the declared index."""
+    meta = {"bits": bits, "columns": sorted(columns), "sidecars": []}
+    return _carry_bloom_meta(spark, table_dir, {"bloom_meta": meta}, generation, files)
 
 
 def bloom_pruned_files(
@@ -717,80 +442,29 @@ def _collect_stats(
     table_dir: str,
     files: list[str],
     columns: list[str],
-    _kernel=_file_stats,
 ) -> dict:
-    """Per-file footer min/max for ``columns``, collected ON EXECUTORS
-    (r14 verdict #4): the old publish path read every staged file's footer
-    in a driver loop — O(files) driver work that becomes THE bottleneck at
-    a million files. One parallelize job ships the by-value footer kernel
-    to the write cluster's workers instead; the driver receives only the
-    O(files) stats map it must embed in the manifest anyway. (An RDD is
-    the honest tool here: per-file imperative metadata work, no rows.)
-    ``_kernel`` is bound at module load so a test can replace the module's
-    ``_file_stats`` with a driver-side tripwire without starving the
-    executors. Returns ``{rel_path: {col: [min, max]}}``.
-
-    Bounded driver fast path (optimization r19, guide §1/§5): a CDC
-    micro-batch commit stages a HANDFUL of files, and for those the fixed
-    cost of one parallelize job + Python-worker round trip (~0.25 s
-    measured on local[32]) dwarfs the ≤16 footer reads themselves
-    (~5-15 ms each, O(footer bytes), data-size-independent — the
-    test_footer_stats_pass_is_metadata_only pin). Below
-    ``_STATS_DRIVER_MAX`` files the footers are read in-process; above
-    it the executor job keeps driver work O(1) however many files a
-    publish stages — the r14 verdict's million-file property is intact
-    because the driver loop is bounded by a constant, never by the
-    write's size."""
+    """Per-file footer min/max for ``columns``: ``{rel_path: {col: [min,
+    max]}}``, through :func:`map_files`. A commit staging at most
+    ``_STATS_DRIVER_MAX`` files reads its footers in-process (optimization
+    r19: ~5-15 ms each, data-size-independent); a bigger one ships the
+    footer kernel to executors in one metadata-only job (r14 verdict #4),
+    so driver work is bounded by a constant, never by the write's size.
+    The kernel is this module's ``_file_stats``, looked up per call."""
     if not files or not columns:
         return {}
-    cols = list(columns)
-    kernel = _kernel
-    pairs = [(os.path.relpath(f, table_dir), f) for f in files]
-    if len(pairs) <= _STATS_DRIVER_MAX:
-        return {rel: kernel(f, cols) for rel, f in pairs}
-    n = max(1, min(len(pairs), int(spark.sparkContext.defaultParallelism)))
-    return dict(
-        spark.sparkContext.parallelize(pairs, n)
-        .map(lambda rf: (rf[0], kernel(rf[1], cols)))
-        .collect()
-    )
-
-
-_FEED_BASE_BUCKETS = 64
-
-
-def _stable_bucket64(v) -> int:
-    """Python twin of the change-feed reader's ``_stable_bucket(v, 64)``
-    (sources/pyds.py — nested there so the data source stays cloudpickle
-    self-contained): crc32 over a type-tagged utf-8 rendering. The two
-    MUST agree for every value of a b64-eligible key type (integral
-    non-boolean, string): merge_mor records write-side base-bucket key
-    counts that the feed planner uses to SKIP churn-free bucket splits
-    and delete files, so a disagreement would silently drop feed rows.
-    Parity (Python twin ↔ Spark expression ↔ end-to-end feed) is pinned
-    in tests/test_pyds_manifest.py."""
-    import zlib
-
-    if v is None:
-        return 0
-    if isinstance(v, bool):
-        r = f"b{int(v)}"
-    elif isinstance(v, int):
-        r = f"i{v}"
-    elif isinstance(v, str):
-        r = "s" + v
-    else:
-        raise TypeError(f"not a b64-eligible key value: {type(v).__name__}")
-    return zlib.crc32(r.encode("utf-8")) % _FEED_BASE_BUCKETS
+    cols, kernel = list(columns), _file_stats
+    got = map_files(spark, files, lambda f: kernel(f, cols), _STATS_DRIVER_MAX)
+    return {os.path.relpath(f, table_dir): st for f, st in got.items()}
 
 
 def _bucket64_counts(keys: DataFrame, key_col: str) -> dict | None:
     """Distributed per-base-bucket counts of ``keys[key_col]`` — one
     staged delete file's churn keys in merge_mor —
     ``{str(bucket): count}`` over :data:`_FEED_BASE_BUCKETS` buckets, or
-    None when the key type cannot be hashed bit-identically to the
-    reader's Python ``_stable_bucket`` (floats: Python repr vs JVM cast
-    rendering; booleans: 'true' vs 'b1'; temporals). The agg is one
+    None when the key type cannot be hashed bit-identically to
+    :func:`commit_core._stable_bucket`, which the feed reader uses (floats:
+    Python repr vs JVM cast rendering; booleans: 'true' vs 'b1';
+    temporals). The agg is one
     map-side-combined job with a ≤64-row collect — no churn key ever
     reaches the driver (the feed planner's own stated discipline)."""
     from pyspark.sql import functions as F  # noqa: N812
@@ -831,10 +505,10 @@ def _delete_file_bucket64(
 
 
 def _bucket64_counts_driver(key_field: StructField, path: str) -> dict | None:
-    """Driver twin of :func:`_bucket64_counts` over one just-staged
+    """:func:`_bucket64_counts` computed in-process over one just-staged
     equality-delete file (optimization r20, guide §1.2): the file is
-    churn-sized by the MOR contract, and the Python ``_stable_bucket64``
-    is already pinned bit-identical to the Spark expression — so below
+    churn-sized by the MOR contract, and :func:`commit_core._stable_bucket`
+    equals the Spark expression on the eligible key types — so below
     the driver byte bound the counts come from one in-process columnar
     read instead of a groupBy job + collect. Returns None (callers fall
     back to the executor agg) above the bound, for key types the portable
@@ -860,7 +534,7 @@ def _bucket64_counts_driver(key_field: StructField, path: str) -> dict | None:
             return None
         for batch in pf.iter_batches(columns=[key_col]):
             for v in batch.column(0).to_pylist():
-                counts[_stable_bucket64(v)] += 1
+                counts[_stable_bucket(v, _FEED_BASE_BUCKETS)] += 1
         return {str(int(b)): int(n) for b, n in counts.items()}
     except Exception:
         return None
@@ -900,99 +574,6 @@ def _range_excludes(rng: list, lo, hi) -> bool:
         return False
     (_, r0), (_, r1), (_, b0), (_, b1) = vals
     return r0 > b1 or r1 < b0
-
-
-def _reserve_path(table_dir: str, generation: int) -> str:
-    return os.path.join(table_dir, "_manifests", f".reserve-gen-{generation}")
-
-
-def _validate_generation(
-    table_dir: str, generation: int, reserve: bool = True, ref: str | None = None
-) -> None:
-    """Monotonicity + immutability guards, and — S33 — an atomic
-    RESERVATION of the generation number taken BEFORE any data is staged:
-    two writers racing from the same parent would otherwise both stage
-    into ``data/gen-N`` and corrupt each other's files long before either
-    reached the manifest step. The O_EXCL reservation file serializes
-    number assignment (the loser re-picks a higher number having written
-    nothing); it is deleted once the immutable manifest exists and takes
-    over the blocking, and a crashed writer's stale reservation is
-    age-reclaimed by ``gc(older_than_s=...)``."""
-    # monotonicity is REF-relative (a branch's commits advance the branch
-    # head, S38); the uniqueness/reservation guards below stay GLOBAL —
-    # generation numbers are one shared space across every ref, so a
-    # branch commit can never collide with a main commit's number
-    committed = current_generation(table_dir, ref)
-    if committed is not None and generation <= committed:
-        raise ValueError(
-            f"generation {generation} must exceed the committed generation "
-            f"{committed}: re-publishing the current generation would "
-            f"overwrite the directory lazy readers are scanning"
-        )
-    if os.path.exists(_manifest_path(table_dir, generation)):
-        raise FileExistsError(
-            f"manifest gen-{generation}.json already exists and is immutable; "
-            f"pick a fresh generation (a torn commit's manifest is abandoned, "
-            f"never rewritten)"
-        )
-    if not reserve:
-        return  # fail-fast pre-check only (compact validates before its read,
-        # then the publish it delegates to takes the real reservation)
-    os.makedirs(os.path.join(table_dir, "_manifests"), exist_ok=True)
-    try:
-        os.close(
-            os.open(
-                _reserve_path(table_dir, generation),
-                os.O_CREAT | os.O_EXCL | os.O_WRONLY,
-            )
-        )
-    except FileExistsError:
-        raise FileExistsError(
-            f"generation {generation} is reserved by a concurrent writer; "
-            f"pick a fresh generation"
-        ) from None
-
-
-def _fold_txns(parent_txns: dict | None, txn: dict | None) -> dict | None:
-    """Per-writer transaction watermarks — the Delta ``txn`` action's
-    appId → version map: the parent's map carried forward with this
-    commit's tagged ``txn`` folded in under its ``tag``, so N independent
-    writers sharing one table each keep their own replay watermark across
-    each other's commits (the single-slot ``txn`` field is last-writer-
-    wins and would lose writer A's watermark the moment writer B commits).
-    Returns None when there is nothing to record."""
-    txns = dict(parent_txns or {})
-    if txn and "tag" in txn:
-        txns[str(txn["tag"])] = {k: v for k, v in txn.items() if k != "tag"}
-    return txns or None
-
-
-def _txns_of(manifest: dict | None) -> dict | None:
-    """A committed manifest's per-tag watermark map, SEEDED from the legacy
-    single-slot ``txn`` when no map exists yet: a table whose last commit
-    predates the multi-writer map must not lose that writer's watermark
-    the moment a differently-tagged writer commits on top (the upgrade is
-    lossless — the slot's tag becomes the map's first entry)."""
-    if not manifest:
-        return None
-    return manifest.get("txns") or _fold_txns(None, manifest.get("txn"))
-
-
-def txn_watermark(manifest: dict, tag) -> dict | None:
-    """Resolve writer ``tag``'s replay watermark from a committed manifest:
-    the per-tag ``txns`` map when present (multi-writer), else the legacy
-    single-slot ``txn`` when its tag matches (single-writer sinks).
-    Tags normalize through ``str`` on BOTH storage forms so a non-string
-    tag (e.g. an int) resolves identically whether it was folded into the
-    map (which coerces with ``str``) or still sits in the legacy slot
-    (ADVICE r15)."""
-    per_tag = (manifest.get("txns") or {}).get(str(tag))
-    if per_tag is not None:
-        return per_tag
-    single = manifest.get("txn")
-    if single and "tag" in single and str(single["tag"]) == str(tag):
-        return {k: v for k, v in single.items() if k != "tag"}
-    return None
 
 
 def publish(
@@ -1056,22 +637,10 @@ def publish(
         # S47: per-file point-lookup blooms, persisted as a SIDECAR file
         # (r16 verdict #3): the manifest records only {bits, columns,
         # sidecar names}, so manifest size stays O(files) however many
-        # bloom-indexed files accumulate — at 100 TB size bits to ~10/key;
-        # the pruning contract is unchanged either way. bloom_meta is
-        # recorded even for an empty publish so appends inherit the
-        # declared index.
-        blooms = _collect_blooms(
-            df.sparkSession, table_dir, files, bloom_columns, bloom_bits
+        # bloom-indexed files accumulate — at 100 TB size bits to ~10/key
+        manifest["bloom_meta"] = _new_bloom_meta(
+            df.sparkSession, table_dir, generation, files, bloom_columns, bloom_bits
         )
-        manifest["bloom_meta"] = {
-            "bits": bloom_bits,
-            "columns": sorted(bloom_columns),
-            "sidecars": (
-                [_bloom_sidecar_write(table_dir, generation, blooms)]
-                if blooms
-                else []
-            ),
-        }
     if lineage:
         # caller-supplied commit lineage (e.g. compact_mor's fold marker) —
         # recorded so chain walkers (change_feed_mor) can trace parents
@@ -1094,170 +663,6 @@ def publish(
     return _commit_manifest(
         table_dir, generation, manifest, expected_parent=expected_parent, ref=ref
     )
-
-
-def _acquire_pointer_lock(table_dir: str) -> int:
-    """Short-critical-section mutual exclusion around the pointer swap
-    (held for the microseconds of one re-read + one rename, never during
-    data staging). O_CREAT|O_EXCL is the POSIX putIfAbsent; a lock older
-    than ``_LOCK_STALE_S`` belongs to a crashed writer and is broken —
-    the same lease-style recovery object-store commit services use.
-
-    Breaking is serialized by an atomic RENAME to a unique name: with a
-    bare unlink, two waiters could both "break" — the second unlinking
-    the first's freshly re-acquired lock — and both enter; a rename has
-    exactly one winner and the loser just re-loops. The standard lease
-    assumption remains and is honest here: the break threshold (30 s) is
-    seven orders of magnitude above the critical section (µs), so a lock
-    that old belongs to a dead process, not a slow one."""
-    import time
-
-    lock = os.path.join(table_dir, _COMMIT_LOCK)
-    deadline = time.time() + _LOCK_STALE_S * 2
-    while True:
-        try:
-            return os.open(lock, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
-        except FileExistsError:
-            try:
-                if time.time() - os.path.getmtime(lock) > _LOCK_STALE_S:
-                    # atomic one-winner break of the crashed holder's lock
-                    broken = f"{lock}.broken.{uuid.uuid4().hex}"
-                    os.rename(lock, broken)
-                    os.unlink(broken)
-                    continue
-            except OSError:
-                continue  # holder released / another waiter won the break
-            if time.time() > deadline:
-                raise TimeoutError(f"commit lock stuck at {lock}") from None
-            time.sleep(0.005)
-
-
-def _release_pointer_lock(table_dir: str, fd: int) -> None:
-    """Release only a lock we still OWN (ADVICE r14): if this holder
-    stalled past ``_LOCK_STALE_S`` and a waiter broke + re-acquired, an
-    unconditional unlink-by-name would delete the WAITER's lock and admit
-    a third writer into the CAS section alongside it — a lost update. The
-    break path renames the old lock away, so ownership is provable by
-    inode: the fd still refers to our original file; unlink only when the
-    name's inode matches. (The residual stat→unlink window requires the
-    lock to be >30 s old AND a break+re-acquire to land inside it —
-    nanoseconds vs the µs-held critical section; the lease assumption the
-    acquire docstring states covers it.)"""
-    lock = os.path.join(table_dir, _COMMIT_LOCK)
-    try:
-        owned = os.fstat(fd).st_ino == os.stat(lock).st_ino
-    except OSError:
-        owned = False  # renamed away by a breaker / already gone
-    finally:
-        os.close(fd)
-    if owned:
-        try:
-            os.unlink(lock)
-        except FileNotFoundError:
-            pass  # broken as stale by a waiter after the inode check
-
-
-def _commit_manifest(
-    table_dir: str,
-    generation: int,
-    manifest: dict,
-    expected_parent: int | None,
-    ref: str | None = None,
-) -> dict:
-    """The shared two-phase commit tail, now a real compare-and-swap
-    (S33, closing the module's documented single-writer assumption):
-
-    1. The generation manifest is reserved with ``os.link`` — an atomic
-       create-if-absent, so two writers that both picked gen-N cannot
-       both own it (the old os.replace had a validate→write TOCTOU
-       window where the second writer silently overwrote the first's
-       "immutable" manifest). The loser gets FileExistsError and retries
-       at a higher number — the Delta putIfAbsent-on-the-next-log-file
-       move.
-    2. The pointer swap re-validates under a short-lived lock that the
-       committed generation is STILL ``expected_parent`` — the state this
-       writer's manifest was derived from. A concurrent commit in between
-       raises :class:`CommitConflictError` instead of silently clobbering
-       it (lost update): the loser's manifest/files stay as gc-reclaimable
-       debris and the caller retries from the new state. Readers are
-       never blocked — they only ever see complete committed pointers.
-    """
-    mdir = os.path.join(table_dir, "_manifests")
-    os.makedirs(mdir, exist_ok=True)
-    mpath = _manifest_path(table_dir, generation)
-    mtmp = os.path.join(mdir, f".gen-{generation}.json.{uuid.uuid4().hex}.tmp")
-    with open(mtmp, "w") as fh:
-        json.dump(manifest, fh)
-        fh.flush()
-        os.fsync(fh.fileno())
-    try:
-        os.link(mtmp, mpath)  # atomic reservation: exactly one writer owns gen-N
-    except FileExistsError:
-        raise FileExistsError(
-            f"manifest gen-{generation}.json already exists and is immutable; "
-            f"pick a fresh generation (a torn commit's manifest is abandoned, "
-            f"never rewritten)"
-        ) from None
-    finally:
-        os.unlink(mtmp)
-    try:
-        # the immutable manifest now blocks gen-N reuse; the staging-phase
-        # reservation has done its job
-        os.unlink(_reserve_path(table_dir, generation))
-    except FileNotFoundError:
-        pass  # direct _commit_manifest callers (tests) never reserved
-    _fsync_dir(mdir)
-
-    fd = _acquire_pointer_lock(table_dir)
-    try:
-        cur = current_generation(table_dir, ref)
-        if cur != expected_parent:
-            # ADVICE r14 (medium): the loser's gen-N manifest is already on
-            # disk (the os.link reservation above), and leaving it would let
-            # read_manifest(as_of_generation=N) serve a REJECTED writer's
-            # state as committed history. It is exclusively owned here (the
-            # link had exactly one winner and the pointer never named it),
-            # so unlink it under the lock; the staged data files become
-            # ordinary unreferenced debris for gc/vacuum, no longer
-            # "protected" by an orphan manifest while young. A later writer
-            # reusing the freed number is safe: staging always writes
-            # mode("overwrite"), so the loser's data dir is replaced whole.
-            try:
-                os.unlink(mpath)
-            except FileNotFoundError:
-                pass
-            _fsync_dir(mdir)
-            raise CommitConflictError(
-                f"{'branch ' + ref if ref else 'table'} advanced to "
-                f"generation {cur} while this writer was building on "
-                f"{expected_parent}: commit of gen-{generation} rejected, "
-                f"retry from the new committed state"
-            )
-        pointer = _ref_pointer_path(table_dir, ref)
-        content = {"current": f"gen-{generation}.json"}
-        if ref is not None:
-            # carry the ref's non-pointer fields (the branch's recorded
-            # base — fast_forward's divergence check) across the swap
-            try:
-                with open(pointer) as fh:
-                    old = json.load(fh)
-                content = {**old, **content}
-            except FileNotFoundError:
-                raise CommitConflictError(
-                    f"branch {ref} was dropped while this writer was "
-                    f"committing gen-{generation}: commit rejected"
-                ) from None
-        pdir = os.path.dirname(pointer)
-        ptmp = os.path.join(pdir, f".{os.path.basename(pointer)}.{uuid.uuid4().hex}.tmp")
-        with open(ptmp, "w") as fh:
-            json.dump(content, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptmp, pointer)  # THE commit point
-        _fsync_dir(pdir)
-    finally:
-        _release_pointer_lock(table_dir, fd)
-    return manifest
 
 
 def retry_commit(write, table_dir: str, max_attempts: int = 50) -> dict:
@@ -1397,22 +802,14 @@ def publish_partitioned(
         )
     if bloom_columns:
         # S47 on a partitioned layout — same sidecar shape as publish()
-        blooms = _collect_blooms(
+        manifest["bloom_meta"] = _new_bloom_meta(
             df.sparkSession,
             table_dir,
+            generation,
             [os.path.join(table_dir, rel) for rel in files],
             bloom_columns,
             bloom_bits,
         )
-        manifest["bloom_meta"] = {
-            "bits": bloom_bits,
-            "columns": sorted(bloom_columns),
-            "sidecars": (
-                [_bloom_sidecar_write(table_dir, generation, blooms)]
-                if blooms
-                else []
-            ),
-        }
     if lineage:
         manifest.update(lineage)
     if constraints:
@@ -1664,26 +1061,6 @@ def read_committed_partitions(
     if not kept and manifest.get("schema") is None:
         raise ValueError("empty partition selection with no stored schema")
     return _read_files(spark, manifest, table_dir, kept)
-
-
-def read_manifest(
-    table_dir: str,
-    as_of_generation: int | None = None,
-    ref: str | None = None,
-) -> dict:
-    """Resolve a generation manifest: the pointer's by default (main, or
-    branch ``ref``'s head — S38), or — time travel (S27) — any
-    still-retained older generation by number. Committed manifests are
-    immutable JSON, so an as-of read needs no pointer and no locking; it
-    fails loudly (FileNotFoundError) if GC already collected that
-    generation (or, for a ref read, if the branch was dropped)."""
-    if as_of_generation is None:
-        with open(_ref_pointer_path(table_dir, ref)) as fh:
-            name = json.load(fh)["current"]
-    else:
-        name = f"gen-{as_of_generation}.json"
-    with open(os.path.join(table_dir, "_manifests", name)) as fh:
-        return json.load(fh)
 
 
 def committed_files(table_dir: str, as_of_generation: int | None = None) -> list[str]:
@@ -3371,19 +2748,6 @@ def _classify_delta(old, new, key_col: str | None, cols: list) -> DataFrame:
     return _with_scan_hook(typed_gone.unionByName(typed_came))
 
 
-def _parent_gen_of(manifest: dict) -> int | None:
-    """The generation this commit was derived from, traced through its
-    lineage record (merge_mor's ``mor``, compact_mor's ``fold``, merge's
-    ``merge``, partial compaction's ``compact``, append/evolve/restore).
-    A plain publish records no parent and returns None — chains cannot
-    be traced across it."""
-    for k in ("mor", "fold", "merge", "append", "evolve", "compact", "restore"):
-        lin = manifest.get(k)
-        if isinstance(lin, dict) and "parent" in lin:
-            return lin["parent"]
-    return None
-
-
 def change_feed_mor(
     spark: SparkSession,
     table_dir: str,
@@ -4161,8 +3525,9 @@ def create_branch(
 ) -> dict:
     """S38: create a named branch — Iceberg's ref model (a branch is just
     another pointer into the SAME shared generation-manifest space) as a
-    flat file under ``_refs/``, created atomically with O_CREAT|O_EXCL so
-    two writers racing to the same branch name have exactly one winner.
+    flat file under ``_refs/``, created with the one-winner link of
+    :func:`commit_core._link_json`, so two writers racing to the same
+    branch name have exactly one winner.
 
     The branch starts at ``from_generation`` (default: the committed main
     generation) and records it as ``base`` — the divergence witness
@@ -4185,24 +3550,13 @@ def create_branch(
     # exists — a ref pointing at nothing would poison every branch reader
     with open(_manifest_path(table_dir, from_generation)) as fh:
         json.load(fh)
-    pointer = _ref_pointer_path(table_dir, name)
-    os.makedirs(os.path.dirname(pointer), exist_ok=True)
     content = {"current": f"gen-{from_generation}.json", "base": from_generation}
     try:
-        fd = os.open(pointer, os.O_CREAT | os.O_EXCL | os.O_WRONLY)
+        _link_json(_ref_pointer_path(table_dir, name), content)
     except FileExistsError:
         raise FileExistsError(
             f"branch {name!r} already exists; drop it first or pick a new name"
         ) from None
-    try:
-        with os.fdopen(fd, "w") as fh:
-            json.dump(content, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-    except BaseException:
-        os.unlink(pointer)
-        raise
-    _fsync_dir(os.path.dirname(pointer))
     return content
 
 
@@ -4267,13 +3621,7 @@ def fast_forward(table_dir: str, name: str, drop: bool = True) -> dict:
                 f"was cut at {base}: fast-forward rejected — re-cut the "
                 f"branch from the new state (or merge) and re-audit"
             )
-        ptmp = os.path.join(table_dir, f".{_POINTER}.{uuid.uuid4().hex}.tmp")
-        with open(ptmp, "w") as fh:
-            json.dump({"current": head["current"]}, fh)
-            fh.flush()
-            os.fsync(fh.fileno())
-        os.replace(ptmp, os.path.join(table_dir, _POINTER))
-        _fsync_dir(table_dir)
+        _write_json(os.path.join(table_dir, _POINTER), {"current": head["current"]})
         g = _gen_of(head["current"])
         # the ref's retirement/re-base happens INSIDE the same lock that
         # serializes every ref pointer swap: done after release, a branch
@@ -4286,14 +3634,7 @@ def fast_forward(table_dir: str, name: str, drop: bool = True) -> dict:
             # surviving ref re-bases on what main now points at, so a
             # later fast-forward of further branch commits stays a
             # fast-forward
-            pointer = _ref_pointer_path(table_dir, name)
-            ptmp = f"{pointer}.{uuid.uuid4().hex}.tmp"
-            with open(ptmp, "w") as fh:
-                json.dump({**head, "base": g}, fh)
-                fh.flush()
-                os.fsync(fh.fileno())
-            os.replace(ptmp, pointer)
-            _fsync_dir(os.path.dirname(pointer))
+            _write_json(_ref_pointer_path(table_dir, name), {**head, "base": g})
     finally:
         _release_pointer_lock(table_dir, fd)
     return read_manifest(table_dir, as_of_generation=g)

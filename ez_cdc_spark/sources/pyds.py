@@ -1,4 +1,10 @@
-"""Custom Python data source (Spark 4 `pyspark.sql.datasource` API).
+"""Custom Python data sources (Spark 4 `pyspark.sql.datasource` API).
+
+``ezmanifest`` (:func:`make_ezmanifest_source`) reads, writes, tails and
+change-feeds manifest tables through ``spark.read/readStream/write/
+writeStream.format('ezmanifest')``; its writers commit through
+``sources/commit_core.py``, the one implementation of the commit
+protocol.
 
 A deterministic CDC-envelope generator source ("envelopegen") — the
 Spark-native analog of standing up the reference's whole
@@ -18,11 +24,14 @@ This is a replay/test source, not a hot-path operator: per-row Python is
 fine here because the source exists to feed correctness rigs; the
 production path stays the Kafka/parquet scan.
 
-The classes are defined INSIDE the registration function: Spark ships the
+The classes are defined INSIDE the registration functions: Spark ships the
 DataSource to separate Python worker processes via cloudpickle, which
 serializes locally-defined classes by value — so the source works even
-when the driver's cwd/sys.path can't see the ez_cdc_spark package (an
-external driver importing __spark_entry__ by path hits exactly that).
+when the workers cannot import the ez_cdc_spark package (an external
+driver importing __spark_entry__ by path hits exactly that). The only
+package module the ezmanifest classes use, ``commit_core``, registers
+itself with cloudpickle by value for the same reason
+(tests/test_external_driver.py runs that setup).
 """
 
 from __future__ import annotations
@@ -201,19 +210,16 @@ def make_ezmanifest_source(with_pushdown: bool = True):
     * The writer is a ``DataSourceArrowWriter``: each task streams its
       arrow batches into ONE parquet file under the reserved generation's
       staging dir (vectorized, zero per-row Python) and returns the file's
-      footer min/max stats in its commit message; the driver-side
-      ``commit`` then runs the engine's exact commit protocol — O_EXCL
+      footer min/max stats (and, on a bloom-indexed table, its blooms) in
+      its commit message; ``commit`` then runs the engine's commit
+      protocol itself — the functions of ``commit_core``: O_EXCL
       generation reservation before any data stages, immutable manifest
-      linked with the one-winner ``os.link`` CAS, pointer swapped under
-      the short stale-breakable lock with parent re-validation — restated
-      here IN BY-VALUE FORM because the registered DataSource ships via
-      cloudpickle to processes that cannot import ez_cdc_spark
-      (equivalence with manifest.py's `_commit_manifest`/
-      `_validate_generation`/`_acquire_pointer_lock` is pinned by
-      tests/test_pyds_manifest.py: engine readers serve writer commits,
-      a writer racing an engine writer has exactly one winner, and
+      linked with the one-winner ``os.link``, pointer swapped under the
+      short stale-breakable lock with parent re-validation, and the bloom
+      sidecar chain carried and folded like an engine append. So a
+      writer racing an engine writer has exactly one winner, and
       vacuum(0.0) never reclaims a mid-write staging file thanks to the
-      same reservation). Honest scoping mirrors the reader's refusal
+      same reservation. Honest scoping mirrors the reader's refusal
       class: constrained (S39), hidden-partitioned (S42), epoch-mapped
       (S40) and MOR (S36) tables refuse loudly — the engine APIs own
       those invariants. Plain-partitioned tables WRITE (S44b): a new
@@ -224,7 +230,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
       give Delta's idempotent-writes contract: a version at-or-below the
       table's recorded watermark for that tag turns the whole write into
       a committed no-op, and a newer one folds into the multi-writer
-      ``txns`` map (never last-writer-wins).
+      ``txns`` map (never last-writer-wins). The batch writer and the
+      streaming sink build their append manifest with one method.
 
     * The stream reader's offset is the committed GENERATION NUMBER; a
       micro-batch plans one split per file appended between offsets and
@@ -252,6 +259,25 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         WriterCommitMessage,
     )
     from pyspark.sql.types import StructType
+
+    from ez_cdc_spark.sources.commit_core import (
+        _FEED_BASE_BUCKETS,
+        _bloom_might_contain,
+        _carry_blooms,
+        _commit_manifest,
+        _file_blooms,
+        _file_stats,
+        _fold_txns,
+        _parent_gen_of,
+        _reserve_next,
+        _reserve_path,
+        _stable_bucket,
+        _txns_of,
+        current_generation,
+        read_manifest,
+        table_blooms,
+        txn_watermark,
+    )
 
     class _FileSplit(InputPartition):
         def __init__(self, path, pcol, pval, schema_json):
@@ -300,19 +326,9 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         if not table_dir:
             raise ValueError("ezmanifest needs option('path', <table_dir>)")
         gen = options.get("generation")
-        ref = options.get("ref")
-        if gen is not None:
-            name = f"gen-{int(gen)}.json"
-        else:
-            pointer = (
-                _os.path.join(table_dir, "_refs", ref)
-                if ref
-                else _os.path.join(table_dir, "_MANIFEST")
-            )
-            with open(pointer) as fh:
-                name = _json.load(fh)["current"]
-        with open(_os.path.join(table_dir, "_manifests", name)) as fh:
-            man = _json.load(fh)
+        man = read_manifest(
+            table_dir, None if gen is None else int(gen), options.get("ref")
+        )
         if man.get("delete_files"):
             raise ValueError(
                 "ezmanifest reads raw data files, but this generation is "
@@ -399,45 +415,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                         eqs[col] = val
                 yield f  # ALWAYS returned: pruning is advisory
 
-            def _bloom_excludes(b64, bits, v):
-                """Mirror of manifest.py's bloom probe (md5 → 4 u32
-                positions): True only when the recorded bitset PROVABLY
-                lacks the value."""
-                import base64
-                import hashlib
-                import struct
-
-                if isinstance(v, bool) or not isinstance(v, (int, str)):
-                    return False  # unencodable probe: keep
-                canon = str(v).encode() if isinstance(v, int) else v.encode()
-                words = struct.unpack(">4I", hashlib.md5(canon).digest()[:16])
-                raw = base64.b64decode(b64)
-                return not all(
-                    raw[(w % bits) >> 3] & (1 << ((w % bits) & 7))
-                    for w in words
-                )
-
             stats = self.man.get("stats") or {}
-            # blooms resolve through the sidecar chain (r17 — mirror of
-            # manifest.py table_blooms): legacy inline map overlaid by
-            # each _blooms/<name> sidecar; unreadable sidecars contribute
-            # nothing (absent bloom = conservative keep)
-            blooms = {
-                k: dict(v)
-                for k, v in (self.man.get("blooms") or {}).items()
-            }
-            for _sname in (self.man.get("bloom_meta") or {}).get(
-                "sidecars", []
-            ):
-                try:
-                    with open(
-                        _os.path.join(self.table_dir, "_blooms", _sname)
-                    ) as fh:
-                        side = _json.load(fh)
-                except (OSError, ValueError):
-                    continue
-                for rel, per in side.items():
-                    blooms[rel] = {**blooms.get(rel, {}), **per}
+            blooms = table_blooms(self.table_dir, self.man)
             bbits = int((self.man.get("bloom_meta") or {}).get("bits", 0))
             pcol = self.man.get("partition_col")
             pmap = self.man.get("partitions") or {}
@@ -491,7 +470,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                     pb = blooms.get(rel) or {}
                     for col, v in eqs.items():
                         b64 = pb.get(col)
-                        if b64 and _bloom_excludes(b64, bbits, v):
+                        if b64 and not _bloom_might_contain(b64, bbits, v):
                             drop = True
                             break
                 if not drop:
@@ -519,156 +498,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         def read(self, split):
             yield from _read_split(split)
 
-    # ----- S44 write path: the engine's commit protocol in by-value form -----
-    # (mirrors manifest.py `_acquire_pointer_lock` / `_release_pointer_lock` /
-    # `_validate_generation` / `_commit_manifest`; equivalence pinned by
-    # tests/test_pyds_manifest.py — see the module docstring for why this
-    # cannot simply import the engine)
-
-    _LOCK_STALE_S = 30.0
-
-    def _mpath(table_dir, gen):
-        return _os.path.join(table_dir, "_manifests", f"gen-{gen}.json")
-
-    def _rpath(table_dir, gen):
-        return _os.path.join(table_dir, "_manifests", f".reserve-gen-{gen}")
-
-    def _fsync_dir(path):
-        fd = _os.open(path, _os.O_RDONLY)
-        try:
-            _os.fsync(fd)
-        finally:
-            _os.close(fd)
-
-    def _pointer_gen(table_dir, ref=None):
-        """Committed generation of the main pointer, or of branch ``ref``
-        (S38: every ref is just another pointer into the SAME shared
-        generation space, so everything downstream — manifests, offsets,
-        splits — is ref-agnostic once the head resolves)."""
-        import re as _re
-
-        pointer = (
-            _os.path.join(table_dir, "_refs", ref)
-            if ref
-            else _os.path.join(table_dir, "_MANIFEST")
-        )
-        try:
-            with open(pointer) as fh:
-                m = _re.search(r"gen-(\d+)(?:\.json)?$", _json.load(fh)["current"])
-            return int(m.group(1)) if m else None
-        except FileNotFoundError:
-            return None
-
-    def _acquire_lock(table_dir):
-        import time as _time
-
-        lock = _os.path.join(table_dir, ".commit.lock")
-        deadline = _time.time() + _LOCK_STALE_S * 2
-        while True:
-            try:
-                return _os.open(lock, _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY)
-            except FileExistsError:
-                try:
-                    if _time.time() - _os.path.getmtime(lock) > _LOCK_STALE_S:
-                        broken = f"{lock}.broken.{_uuid.uuid4().hex}"
-                        _os.rename(lock, broken)
-                        _os.unlink(broken)
-                        continue
-                except OSError:
-                    continue
-                if _time.time() > deadline:
-                    raise TimeoutError(f"commit lock stuck at {lock}") from None
-                _time.sleep(0.005)
-
-    def _release_lock(table_dir, fd):
-        lock = _os.path.join(table_dir, ".commit.lock")
-        try:
-            owned = _os.fstat(fd).st_ino == _os.stat(lock).st_ino
-        except OSError:
-            owned = False
-        finally:
-            _os.close(fd)
-        if owned:
-            try:
-                _os.unlink(lock)
-            except FileNotFoundError:
-                pass
-
-    def _commit_swap(table_dir, generation, manifest, expected_parent):
-        """Link the immutable gen manifest (one-winner CAS on the number),
-        release the staging reservation, then swap the pointer under the
-        lock with parent re-validation — a losing writer's manifest is
-        unlinked and the conflict raised for the caller's retry loop."""
-        mdir = _os.path.join(table_dir, "_manifests")
-        _os.makedirs(mdir, exist_ok=True)
-        mpath = _mpath(table_dir, generation)
-        mtmp = _os.path.join(
-            mdir, f".gen-{generation}.json.{_uuid.uuid4().hex}.tmp"
-        )
-        with open(mtmp, "w") as fh:
-            _json.dump(manifest, fh)
-            fh.flush()
-            _os.fsync(fh.fileno())
-        try:
-            _os.link(mtmp, mpath)
-        except FileExistsError:
-            raise RuntimeError(
-                f"manifest gen-{generation}.json already exists and is "
-                f"immutable; the writer lost its number reservation"
-            ) from None
-        finally:
-            _os.unlink(mtmp)
-        try:
-            _os.unlink(_rpath(table_dir, generation))
-        except FileNotFoundError:
-            pass
-        _fsync_dir(mdir)
-        fd = _acquire_lock(table_dir)
-        try:
-            cur = _pointer_gen(table_dir)
-            if cur != expected_parent:
-                try:
-                    _os.unlink(mpath)
-                except FileNotFoundError:
-                    pass
-                _fsync_dir(mdir)
-                raise RuntimeError(
-                    f"commit conflict: table advanced to generation {cur} "
-                    f"while this ezmanifest writer was building on "
-                    f"{expected_parent}: commit of gen-{generation} "
-                    f"rejected, retry from the new committed state"
-                )
-            pointer = _os.path.join(table_dir, "_MANIFEST")
-            ptmp = _os.path.join(
-                table_dir, f"._MANIFEST.{_uuid.uuid4().hex}.tmp"
-            )
-            with open(ptmp, "w") as fh:
-                _json.dump({"current": f"gen-{generation}.json"}, fh)
-                fh.flush()
-                _os.fsync(fh.fileno())
-            _os.replace(ptmp, pointer)
-            _fsync_dir(table_dir)
-        finally:
-            _release_lock(table_dir, fd)
-
-    def _encode_stat(v):
-        """Mirror of manifest.py `_encode_stat`: JSON-safe, tz-unambiguous
-        integer encodings for temporal bounds so S28 pruning keeps working
-        on writer-produced stats."""
-        import datetime as _dt
-
-        if isinstance(v, bool):
-            return None
-        if isinstance(v, _dt.datetime):
-            if v.tzinfo is None:
-                v = v.replace(tzinfo=_dt.timezone.utc)
-            epoch = _dt.datetime(1970, 1, 1, tzinfo=_dt.timezone.utc)
-            return {"us": (v - epoch) // _dt.timedelta(microseconds=1)}
-        if isinstance(v, _dt.date):
-            return {"d": (v - _dt.date(1970, 1, 1)).days}
-        if isinstance(v, (int, float, str)):
-            return v
-        return None
+    # ----- S44 write path: commits through commit_core -----
 
     def _hive_part(v):
         """Canonical partition rendering shared with the engine's
@@ -686,90 +516,6 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         s = str(v)
         return s, _up.quote(s, safe="")
 
-    def _file_blooms(path, columns, bits):
-        """Mirror of manifest.py `_file_bloom` (ADVICE r16: the format
-        writer must carry a table's declared bloom index, not strip it):
-        one columnar pass per declared column over the just-written file
-        → {col: b64 bitset}; unencodable column types record nothing
-        (conservative keep, the engine's rule)."""
-        import base64 as _b64
-        import hashlib as _hl
-        import struct as _struct
-
-        import pyarrow.parquet as pq
-
-        pf = pq.ParquetFile(path)
-        out = {}
-        for col in columns:
-            if col not in pf.schema_arrow.names:
-                continue
-            buf = bytearray(bits // 8)
-            ok = True
-            for batch in pf.iter_batches(columns=[col]):
-                for v in batch.column(0).to_pylist():
-                    if v is None:
-                        continue
-                    if isinstance(v, bool) or not isinstance(v, (int, str)):
-                        ok = False
-                        break
-                    canon = (
-                        str(v).encode() if isinstance(v, int) else v.encode()
-                    )
-                    for w in _struct.unpack(
-                        ">4I", _hl.md5(canon).digest()[:16]
-                    ):
-                        p = w % bits
-                        buf[p >> 3] |= 1 << (p & 7)
-                if not ok:
-                    break
-            if ok:
-                out[col] = _b64.b64encode(bytes(buf)).decode()
-        return out
-
-    def _bloom_sidecar_write(table_dir, generation, blooms):
-        """Mirror of manifest.py `_bloom_sidecar_write`: persist the
-        bitsets under _blooms/ and return the (uuid-unique) name — the
-        manifest stays O(files) whatever the bloom payload."""
-        bdir = _os.path.join(table_dir, "_blooms")
-        _os.makedirs(bdir, exist_ok=True)
-        name = f"gen-{generation}-{_uuid.uuid4().hex[:12]}.json"
-        tmp = _os.path.join(bdir, f".{name}.tmp")
-        with open(tmp, "w") as fh:
-            _json.dump(blooms, fh)
-            fh.flush()
-            _os.fsync(fh.fileno())
-        _os.replace(tmp, _os.path.join(bdir, name))
-        _fsync_dir(bdir)
-        return name
-
-    def _footer_stats(path, columns):
-        """Mirror of manifest.py `_file_stats`: per-column min/max merged
-        from the just-written file's row-group footers (no data re-read)."""
-        import pyarrow.parquet as pq
-
-        md = pq.ParquetFile(path).metadata
-        names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-        out = {}
-        for col in columns:
-            ci = names.get(col)
-            if ci is None:
-                continue
-            lo = hi = None
-            ok = True
-            for rg in range(md.num_row_groups):
-                st = md.row_group(rg).column(ci).statistics
-                if st is None or not st.has_min_max:
-                    ok = False
-                    break
-                lo = st.min if lo is None else min(lo, st.min)
-                hi = st.max if hi is None else max(hi, st.max)
-            if not ok or lo is None:
-                continue
-            lo_e, hi_e = _encode_stat(lo), _encode_stat(hi)
-            if lo_e is not None and hi_e is not None:
-                out[col] = [lo_e, hi_e]
-        return out
-
     class _WMsg(WriterCommitMessage):
         """One task's staged output: file rel-paths, per-file footer
         stats ({rel: {col: [lo, hi]}}), partition values ({rel: v}) and
@@ -784,13 +530,11 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             self.blooms = blooms or {}
             self.rel = self.rels[0] if self.rels else None
 
-    _WMsgMulti = _WMsg
-
     class ManifestWriter(DataSourceArrowWriter):
         """S44: executor tasks stage one parquet file each into the
         RESERVED generation dir (so a concurrent vacuum(0.0) structurally
         cannot reclaim mid-write files — the engine's S33 contract);
-        the driver commits with the same CAS the engine uses."""
+        ``commit`` runs the engine's own CAS (``commit_core``)."""
 
         def __init__(self, options, schema, overwrite, _reserve=True):
             self.table_dir = options.get("path")
@@ -805,11 +549,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             self.overwrite = bool(overwrite)
             self.schema_json = schema.json()
 
-            parent = None
-            pgen = _pointer_gen(self.table_dir)
-            if pgen is not None:
-                with open(_mpath(self.table_dir, pgen)) as fh:
-                    parent = _json.load(fh)
+            pgen = current_generation(self.table_dir)
+            parent = None if pgen is None else read_manifest(self.table_dir, pgen)
             self.parent = parent
             self.parent_gen = pgen
 
@@ -899,12 +640,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             )
             self.skip = False
             if self.txn is not None and parent is not None:
-                txns = parent.get("txns") or {}
-                wm = txns.get(str(tag))
-                if wm is None:
-                    single = parent.get("txn")
-                    if single and str(single.get("tag")) == str(tag):
-                        wm = single
+                wm = txn_watermark(parent, tag)
                 if wm is not None and wm.get("version") is not None:
                     self.skip = int(ver) <= int(wm["version"])
 
@@ -923,25 +659,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             if not self.skip and _reserve:
                 # reservation BEFORE any data stages (S33) — losers of the
                 # number race re-pick higher having written nothing
-                _os.makedirs(
-                    _os.path.join(self.table_dir, "_manifests"), exist_ok=True
-                )
-                g = (pgen or 0) + 1
-                while True:
-                    if _os.path.exists(_mpath(self.table_dir, g)):
-                        g += 1
-                        continue
-                    try:
-                        _os.close(
-                            _os.open(
-                                _rpath(self.table_dir, g),
-                                _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY,
-                            )
-                        )
-                        break
-                    except FileExistsError:
-                        g += 1
-                self.gen = g
+                self.gen = _reserve_next(self.table_dir, (pgen or 0) + 1)
 
         def _stage_root(self):
             return _os.path.join(self.table_dir, "data", f"gen-{self.gen}")
@@ -1027,7 +745,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 w.close()
                 rel = _os.path.relpath(path, self.table_dir)
                 if self.stats_cols:
-                    per = _footer_stats(path, self.stats_cols)
+                    per = _file_stats(path, self.stats_cols)
                     if per:
                         stats[rel] = per
                 if bmeta:
@@ -1042,36 +760,44 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 _os.path.relpath(p, self.table_dir)
                 for _w, p in writers.values()
             )
-            return _WMsgMulti(
-                rels, rows, stats or None, pvals or None, blooms or None
-            )
+            return _WMsg(rels, rows, stats or None, pvals or None, blooms or None)
 
         def commit(self, messages):
-            if self.skip:
-                return
+            if not self.skip:
+                self._commit(
+                    messages,
+                    self.parent,
+                    self.parent_gen,
+                    self.gen,
+                    carry=self.parent is not None and not self.overwrite,
+                    txn=self.txn,
+                )
+
+        def _commit(self, messages, parent, pgen, gen, carry, txn):
+            """Commit the tasks' staged files as generation ``gen`` on top
+            of ``parent`` (generation ``pgen``, None for a new table):
+            appended to its files when ``carry``, else replacing them.
+            Stats, partition values and the bloom chain carry the same
+            way, ``txn`` folds into the watermark map, and the manifest
+            commits through ``commit_core._commit_manifest``."""
             rels, stats, pvals, blooms = [], {}, {}, {}
             for m in messages:
                 if m is not None:
                     rels.extend(m.rels)
                     stats.update(m.stats)
                     pvals.update(m.pvals)
-                    blooms.update(getattr(m, "blooms", None) or {})
+                    blooms.update(m.blooms)
             rels.sort()
-            parent, pgen = self.parent, self.parent_gen
-            carry = parent is not None and not self.overwrite
-            if parent is None:
-                schema = _json.loads(self.schema_json)
-            elif self.evolved:
-                schema = {
-                    **parent["schema"],
-                    "fields": parent["schema"]["fields"] + self.evolved,
-                }
-            else:
-                schema = parent["schema"]
+            base = parent if carry else {}
+            schema = (
+                _json.loads(self.schema_json) if parent is None else parent["schema"]
+            )
+            if self.evolved:
+                schema = {**schema, "fields": schema["fields"] + self.evolved}
             manifest = {
-                "generation": self.gen,
-                "files": (parent["files"] if carry else []) + rels,
-                "n_files": (len(parent["files"]) if carry else 0) + len(rels),
+                "generation": gen,
+                "files": base.get("files", []) + rels,
+                "n_files": len(base.get("files", [])) + len(rels),
                 "schema": schema,
             }
             if self.evolved:
@@ -1087,51 +813,30 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 }
             if self.pcol is not None:
                 manifest["partition_col"] = self.pcol
-                manifest["partitions"] = {
-                    **(parent.get("partitions", {}) if carry else {}),
-                    **pvals,
-                }
-            merged_stats = dict((parent.get("stats") or {}) if carry else {})
-            merged_stats.update(stats)
+                manifest["partitions"] = {**base.get("partitions", {}), **pvals}
+            merged_stats = {**(base.get("stats") or {}), **stats}
             if merged_stats:
                 manifest["stats"] = merged_stats
-            if self.bloom_meta:
-                # S47 carry (ADVICE r16): new files' bitsets land in this
-                # generation's sidecar; carried files keep theirs through
-                # the carried sidecar chain (legacy inline parents migrate
-                # into the new sidecar once). An overwrite starts a fresh
-                # chain — every live file was just re-indexed.
-                payload = dict(blooms)
-                if carry and parent.get("blooms"):
-                    payload = {**parent["blooms"], **payload}
-                chain = (
-                    list(self.bloom_meta.get("sidecars", [])) if carry else []
+            if parent is not None and parent.get("bloom_meta"):
+                # S47 carry (ADVICE r16): new files' bitsets extend the
+                # parent's sidecar chain (folded at its cap); an overwrite
+                # re-indexed every live file, so it starts a fresh chain
+                bparent = (
+                    parent
+                    if carry
+                    else {"bloom_meta": {**parent["bloom_meta"], "sidecars": []}}
                 )
-                if payload:
-                    chain.append(
-                        _bloom_sidecar_write(self.table_dir, self.gen, payload)
-                    )
-                manifest["bloom_meta"] = {
-                    "bits": int(self.bloom_meta["bits"]),
-                    "columns": self.bloom_meta.get("columns", []),
-                    "sidecars": chain,
-                }
-            # multi-writer watermark fold (never last-writer-wins)
-            txns = dict((parent.get("txns") or {}) if parent else {})
-            if parent and not txns and parent.get("txn"):
-                single = parent["txn"]
-                if "tag" in single:
-                    txns[str(single["tag"])] = {
-                        k: v for k, v in single.items() if k != "tag"
-                    }
-            if self.txn is not None:
-                manifest["txn"] = self.txn
-                txns[str(self.txn["tag"])] = {"version": self.txn["version"]}
+                manifest["bloom_meta"] = _carry_blooms(
+                    self.table_dir, bparent, gen, blooms, manifest["files"]
+                )
+            if txn is not None:
+                manifest["txn"] = txn
             elif parent and parent.get("txn") is not None:
                 manifest["txn"] = parent["txn"]
-            if txns:
-                manifest["txns"] = txns
-            _commit_swap(self.table_dir, self.gen, manifest, pgen)
+            folded = _fold_txns(_txns_of(parent), txn)
+            if folded:
+                manifest["txns"] = folded
+            _commit_manifest(self.table_dir, gen, manifest, pgen)
 
         def abort(self, messages):
             # staged files become ordinary unreferenced debris for
@@ -1139,7 +844,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             # number reservation so maintenance can reclaim them
             if self.gen is not None:
                 try:
-                    _os.unlink(_rpath(self.table_dir, self.gen))
+                    _os.unlink(_reserve_path(self.table_dir, self.gen))
                 except FileNotFoundError:
                     pass
 
@@ -1214,31 +919,14 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         def _stage_root(self):
             return _os.path.join(self.table_dir, "data", self.stage_name)
 
-        def _parent(self):
-            pgen = _pointer_gen(self.table_dir)
-            if pgen is None:
-                return None, None
-            with open(_mpath(self.table_dir, pgen)) as fh:
-                return _json.load(fh), pgen
-
         def commit(self, messages, batchId):
             self._touch_lease()  # liveness: the sink is still running
-            rels, stats, pvals, blooms = [], {}, {}, {}
-            for m in messages:
-                if m is not None:
-                    rels.extend(m.rels)
-                    stats.update(m.stats)
-                    pvals.update(m.pvals)
-                    blooms.update(getattr(m, "blooms", None) or {})
-            rels.sort()
-            parent, pgen = self._parent()
+            pgen = current_generation(self.table_dir)
+            parent = None if pgen is None else read_manifest(self.table_dir, pgen)
             if parent is not None:
-                wm = (parent.get("txns") or {}).get(self.tag)
+                wm = txn_watermark(parent, self.tag)
                 if wm is not None and int(wm.get("version", -1)) >= batchId:
                     return  # redelivered epoch: committed no-op
-            if not rels and parent is None:
-                return  # nothing staged and no table yet: wait for data
-            if parent is not None:
                 stored = [
                     (f["name"], f["type"]) for f in parent["schema"]["fields"]
                 ]
@@ -1251,76 +939,16 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                         f"mid-stream schema drift: table has {stored}, "
                         f"stream has {incoming}"
                     )
-            # fresh epoch generation
-            g = (pgen or 0) + 1
-            while True:
-                if _os.path.exists(_mpath(self.table_dir, g)):
-                    g += 1
-                    continue
-                try:
-                    _os.close(
-                        _os.open(
-                            _rpath(self.table_dir, g),
-                            _os.O_CREAT | _os.O_EXCL | _os.O_WRONLY,
-                        )
-                    )
-                    break
-                except FileExistsError:
-                    g += 1
-            manifest = {
-                "generation": g,
-                "files": (parent["files"] if parent else []) + rels,
-                "n_files": (len(parent["files"]) if parent else 0) + len(rels),
-                "schema": (
-                    parent["schema"]
-                    if parent is not None
-                    else _json.loads(self.schema_json)
-                ),
-            }
-            if parent is not None:
-                manifest["append"] = {
-                    "parent": pgen,
-                    "appended_files": len(rels),
-                    "carried_files": len(parent["files"]),
-                }
-            if self.pcol is not None:
-                manifest["partition_col"] = self.pcol
-                manifest["partitions"] = {
-                    **(parent.get("partitions", {}) if parent else {}),
-                    **pvals,
-                }
-            merged = dict((parent.get("stats") or {}) if parent else {})
-            merged.update(stats)
-            if merged:
-                manifest["stats"] = merged
-            bmeta = (parent or {}).get("bloom_meta")
-            if bmeta:
-                # S47 carry per epoch (ADVICE r16) — the parent re-resolves
-                # each commit, so the chain always extends the LIVE head's
-                payload = dict(blooms)
-                if parent.get("blooms"):
-                    payload = {**parent["blooms"], **payload}
-                chain = list(bmeta.get("sidecars", []))
-                if payload:
-                    chain.append(
-                        _bloom_sidecar_write(self.table_dir, g, payload)
-                    )
-                manifest["bloom_meta"] = {
-                    "bits": int(bmeta["bits"]),
-                    "columns": bmeta.get("columns", []),
-                    "sidecars": chain,
-                }
-            txns = dict((parent.get("txns") or {}) if parent else {})
-            if parent and not txns and parent.get("txn"):
-                single = parent["txn"]
-                if "tag" in single:
-                    txns[str(single["tag"])] = {
-                        k: v for k, v in single.items() if k != "tag"
-                    }
-            manifest["txn"] = {"tag": self.tag, "version": int(batchId)}
-            txns[self.tag] = {"version": int(batchId)}
-            manifest["txns"] = txns
-            _commit_swap(self.table_dir, g, manifest, pgen)
+            elif not any(m is not None and m.rels for m in messages):
+                return  # nothing staged and no table yet: wait for data
+            self._commit(
+                messages,
+                parent,
+                pgen,
+                _reserve_next(self.table_dir, (pgen or 0) + 1),
+                carry=parent is not None,
+                txn={"tag": self.tag, "version": int(batchId)},
+            )
 
         def abort(self, messages, batchId):
             # staged files are debris under the leased dir; the lease
@@ -1346,13 +974,12 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             return {"gen": self.start_gen}
 
         def latestOffset(self):
-            cur = _pointer_gen(self.table_dir, self.ref)
+            cur = current_generation(self.table_dir, self.ref)
             return {"gen": cur if cur is not None else self.start_gen}
 
         def _man(self, gen):
             try:
-                with open(_mpath(self.table_dir, gen)) as fh:
-                    return _json.load(fh)
+                return read_manifest(self.table_dir, gen)
             except FileNotFoundError:
                 raise ValueError(
                     f"generation {gen} of {self.table_dir} is no longer "
@@ -1425,36 +1052,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             self.ctype = ctype
             self.gen = gen
 
-    def _parent_gen(man):
-        """By-value mirror of manifest.py `_parent_gen_of`: the commit's
-        lineage parent, or None for a plain publish / the genesis."""
-        for k in ("mor", "fold", "merge", "append", "evolve", "compact", "restore"):
-            lin = man.get(k)
-            if isinstance(lin, dict) and "parent" in lin:
-                return lin["parent"]
-        return None
-
     # ----- T47: merge-on-read commits served by the change-feed stream -----
-
-    def _stable_bucket(v, n):
-        """Deterministic cross-process hash bucket for a churn key. The
-        split partitioner cannot use ``hash()``: Python seeds str hashing
-        per interpreter, and every executor worker is its own process."""
-        import zlib as _zlib
-
-        if v is None:
-            return 0
-        if isinstance(v, bool):
-            r = f"b{int(v)}"
-        elif isinstance(v, int):
-            r = f"i{v}"
-        elif isinstance(v, float):
-            r = f"f{v!r}"
-        elif isinstance(v, str):
-            r = "s" + v
-        else:
-            r = "o" + str(v)
-        return _zlib.crc32(r.encode("utf-8")) % n
 
     _STRUCT_TAG = "\x00struct"
 
@@ -1506,8 +1104,6 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             self.new_delete_rels = new_delete_rels
             self.new_data = new_data  # [(rel, partition_value)]
             self.parent_spec = parent_spec
-
-    _FEED_BASE_BUCKETS = 64  # must equal manifest._FEED_BASE_BUCKETS
 
     def _plan_mor_commit(table_dir, man, parent, n_buckets):
         """Driver-side planning of one merge_mor commit's feed: one
@@ -1832,7 +1428,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         names.append("_commit_generation")
         yield pa.RecordBatch.from_arrays(arrays, names=names)
 
-    class ManifestChangeFeedStreamReader(DataSourceStreamReader):
+    class ManifestChangeFeedStreamReader(ManifestStreamReader):
         """T46: ``spark.readStream.format('ezmanifest')
         .option('changeFeed', 'true')`` — row-level ``_change_type``
         events per commit interval, Delta's ``readChangeFeed`` re-expressed
@@ -1869,30 +1465,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         and executor-parallel scans of exactly the interval's churn."""
 
         def __init__(self, options):
-            self.table_dir = options.get("path")
-            if not self.table_dir:
-                raise ValueError("ezmanifest needs option('path', <table_dir>)")
-            self.start_gen = int(options.get("startinggeneration", 0))
-            self.ref = options.get("ref")  # r17: feed off a branch head
+            super().__init__(options)  # r17: a branch head feeds too
             self.n_buckets = max(1, int(options.get("feedbuckets", 8)))
-
-        def initialOffset(self):
-            return {"gen": self.start_gen}
-
-        def latestOffset(self):
-            cur = _pointer_gen(self.table_dir, self.ref)
-            return {"gen": cur if cur is not None else self.start_gen}
-
-        def _man(self, gen):
-            try:
-                with open(_mpath(self.table_dir, gen)) as fh:
-                    return _json.load(fh)
-            except FileNotFoundError:
-                raise ValueError(
-                    f"generation {gen} of {self.table_dir} is no longer "
-                    f"retained (gc reclaimed it): restart the change-feed "
-                    f"stream from a fresh checkpoint"
-                ) from None
 
         def partitions(self, start, end):
             s, e = int(start["gen"]), int(end["gen"])
@@ -1904,7 +1478,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             genesis = False
             while cur["generation"] > s:
                 chain.append(cur)
-                par = _parent_gen(cur)
+                par = _parent_gen_of(cur)
                 if par is None:
                     if s == 0:
                         genesis = True  # snapshot commit: full-insert base
@@ -1949,7 +1523,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                     parent = (
                         prev
                         if prev is not None
-                        else self._man(_parent_gen(man))
+                        else self._man(_parent_gen_of(man))
                     )
                     splits.extend(
                         _plan_mor_commit(
@@ -2047,12 +1621,6 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 names.append("_commit_generation")
                 yield pa.RecordBatch.from_arrays(cols, names=names)
 
-        def commit(self, end):
-            pass
-
-        def stop(self):
-            pass
-
     class ManifestSource(DataSource):
         @classmethod
         def name(cls) -> str:
@@ -2079,18 +1647,9 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                     raise ValueError(
                         "ezmanifest needs option('path', <table_dir>)"
                     )
-                ref = self.options.get("ref")
-                pointer = (
-                    _os.path.join(table_dir, "_refs", ref)
-                    if ref
-                    else _os.path.join(table_dir, "_MANIFEST")
+                base = StructType.fromJson(
+                    read_manifest(table_dir, ref=self.options.get("ref"))["schema"]
                 )
-                with open(pointer) as fh:
-                    head = _json.load(fh)["current"]
-                with open(
-                    _os.path.join(table_dir, "_manifests", head)
-                ) as fh:
-                    base = StructType.fromJson(_json.load(fh)["schema"])
                 return StructType(
                     [StructField("_change_type", StringType(), False)]
                     + list(base.fields)

@@ -6,9 +6,10 @@ module-level function it references is pickled BY REFERENCE — and an
 external driver (the attestation harness) has the repo only on the
 DRIVER's sys.path, so executors cannot import ez_cdc_spark and the job
 dies deserializing. Modules whose helpers are called from worker closures
-must therefore opt into cloudpickle.register_pickle_by_value (multimodal
-and sketches do). This test re-runs the audit that caught the a14 failure
-so the next module can't regress it silently.
+must therefore opt into cloudpickle.register_pickle_by_value (multimodal,
+sketches and sources/commit_core do), and names imported from such a
+module are safe inside a closure. This test re-runs the audit that caught
+the a14 failure so the next module can't regress it silently.
 """
 
 import ast
@@ -56,86 +57,144 @@ def _module_opts_into_by_value(tree: ast.Module) -> bool:
     return False
 
 
+def _by_value_modules() -> set[str]:
+    """Dotted names of the package modules that register themselves with
+    cloudpickle by value: functions imported from them travel inside a
+    worker closure's pickle instead of as a module reference."""
+    out = set()
+    for path in ROOT.rglob("*.py"):
+        if _module_opts_into_by_value(ast.parse(path.read_text())):
+            rel = path.relative_to(ROOT.parent).with_suffix("")
+            out.add(".".join(rel.parts))
+    return out
+
+
+def _worker_closure_offenders(source: str, filename: str, by_value: set[str]) -> list[str]:
+    """Nested functions and lambdas (outside the driver-side callbacks)
+    that reference a module-level function of ``source``, or a name it
+    imports from an ``ez_cdc_spark`` module that is pickled by
+    reference. Empty for a module that registers itself by value."""
+    tree = ast.parse(source)
+    if _module_opts_into_by_value(tree):
+        return []
+    mod_funcs = {
+        n.name
+        for n in tree.body
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    }
+    imported = {}
+    for n in ast.walk(tree):
+        if (
+            isinstance(n, ast.ImportFrom)
+            and n.module
+            and n.module.startswith("ez_cdc_spark")
+            and n.module not in by_value
+        ):
+            for a in n.names:
+                if f"{n.module}.{a.name}" not in by_value:
+                    imported[a.asname or a.name] = n.module
+    offenders = []
+
+    def refs(node, body, label):
+        for sub in ast.walk(body):
+            if (
+                isinstance(sub, ast.Name)
+                and isinstance(sub.ctx, ast.Load)
+                and (sub.id in mod_funcs or sub.id in imported)
+                # local shadowing (comprehension targets, params,
+                # assignments) is not a module reference
+                and not _locally_bound(node, sub.id)
+            ):
+                offenders.append(f"{filename}:{sub.lineno} {label} refs {sub.id}")
+
+    class V(ast.NodeVisitor):
+        def __init__(self):
+            self.stack = []
+
+        def visit_FunctionDef(self, node):
+            self.stack.append(node.name)
+            if len(self.stack) >= 2 and not set(self.stack) & DRIVER_SIDE_CALLBACKS:
+                refs(node, node, "->".join(self.stack))
+            self.generic_visit(node)
+            self.stack.pop()
+
+        visit_AsyncFunctionDef = visit_FunctionDef
+
+        def visit_Lambda(self, node):
+            # A lambda at stack depth >= 1 (inside any module function)
+            # is a nested closure too — e.g. passed inline to
+            # mapInPandas — and escapes the FunctionDef walk above, so
+            # the exact regression class this audit exists to block
+            # could land silently through it.
+            if self.stack and not set(self.stack) & DRIVER_SIDE_CALLBACKS:
+                refs(node, node.body, "->".join(self.stack) + "-><lambda>")
+            self.generic_visit(node)
+
+    V().visit(tree)
+    return offenders
+
+
 def test_worker_closures_never_reference_by_ref_module_functions():
+    by_value = _by_value_modules()
     offenders = []
     for path in sorted(ROOT.rglob("*.py")):
-        tree = ast.parse(path.read_text())
-        if _module_opts_into_by_value(tree):
-            continue
-        mod_funcs = {
-            n.name
-            for n in tree.body
-            if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
-        }
-        imported = {}
-        for n in ast.walk(tree):
-            if (
-                isinstance(n, ast.ImportFrom)
-                and n.module
-                and n.module.startswith("ez_cdc_spark")
-            ):
-                for a in n.names:
-                    imported[a.asname or a.name] = n.module
-
-        class V(ast.NodeVisitor):
-            def __init__(self):
-                self.stack = []
-
-            def visit_FunctionDef(self, node):
-                self.stack.append(node.name)
-                nested = len(self.stack) >= 2
-                driver_side = bool(
-                    set(self.stack) & DRIVER_SIDE_CALLBACKS
-                )
-                if nested and not driver_side:
-                    for sub in ast.walk(node):
-                        if (
-                            isinstance(sub, ast.Name)
-                            and isinstance(sub.ctx, ast.Load)
-                            and (sub.id in mod_funcs or sub.id in imported)
-                        ):
-                            # local shadowing (comprehension targets, params,
-                            # assignments) is not a module reference
-                            if _locally_bound(node, sub.id):
-                                continue
-                            offenders.append(
-                                f"{path.name}:{sub.lineno} "
-                                f"{'->'.join(self.stack)} refs {sub.id}"
-                            )
-                self.generic_visit(node)
-                self.stack.pop()
-
-            visit_AsyncFunctionDef = visit_FunctionDef
-
-            def visit_Lambda(self, node):
-                # A lambda at stack depth >= 1 (inside any module function)
-                # is a nested closure too — e.g. passed inline to
-                # mapInPandas — and escapes the FunctionDef walk above, so
-                # the exact regression class this audit exists to block
-                # could land silently through it.
-                nested = len(self.stack) >= 1
-                driver_side = bool(set(self.stack) & DRIVER_SIDE_CALLBACKS)
-                if nested and not driver_side:
-                    for sub in ast.walk(node.body):
-                        if (
-                            isinstance(sub, ast.Name)
-                            and isinstance(sub.ctx, ast.Load)
-                            and (sub.id in mod_funcs or sub.id in imported)
-                        ):
-                            if _locally_bound(node, sub.id):
-                                continue
-                            offenders.append(
-                                f"{path.name}:{sub.lineno} "
-                                f"{'->'.join(self.stack)}-><lambda> refs {sub.id}"
-                            )
-                self.generic_visit(node)
-
-        V().visit(tree)
+        offenders += _worker_closure_offenders(path.read_text(), path.name, by_value)
     assert not offenders, (
         "worker closures reference module-level ez_cdc_spark functions "
         "without by-value registration (crashes external-driver executors):\n"
         + "\n".join(offenders)
     )
+
+
+def test_worker_closure_audit_tells_by_value_from_by_reference_imports():
+    """A nested function may use a name imported from a module that
+    registers itself by value (commit_core), but not one imported from a
+    module pickled by reference (manifest)."""
+    by_value = _by_value_modules()
+    assert "ez_cdc_spark.sources.commit_core" in by_value
+    assert "ez_cdc_spark.sources.manifest" not in by_value
+    template = (
+        "from ez_cdc_spark.sources.{mod} import read_manifest\n"
+        "def outer(d):\n"
+        "    def task(g):\n"
+        "        return read_manifest(d, g)\n"
+        "    return task\n"
+    )
+    assert _worker_closure_offenders(
+        template.format(mod="commit_core"), "ok.py", by_value
+    ) == []
+    assert _worker_closure_offenders(
+        template.format(mod="manifest"), "bad.py", by_value
+    ) == ["bad.py:4 outer->task refs read_manifest"]
+
+
+def test_commit_protocol_primitives_live_only_in_commit_core():
+    """``os.link`` (one-winner create), ``os.O_EXCL`` (reservations, the
+    pointer lock) and ``fsync`` (durable JSON writes) belong to the commit
+    protocol, which ``sources/commit_core.py`` owns: any other module
+    spelling them out is a second copy of it."""
+    core = ROOT / "sources" / "commit_core.py"
+    sites = []
+    for path in sorted(ROOT.rglob("*.py")):
+        if path == core:
+            continue
+        for n in ast.walk(ast.parse(path.read_text())):
+            if isinstance(n, ast.Attribute) and (
+                n.attr in ("O_EXCL", "fsync")
+                or (
+                    n.attr == "link"
+                    and isinstance(n.value, ast.Name)
+                    and n.value.id.lstrip("_") == "os"
+                )
+            ):
+                sites.append(f"{path.relative_to(ROOT)}:{n.lineno} {n.attr}")
+            elif isinstance(n, ast.ImportFrom) and n.module == "os":
+                sites += [
+                    f"{path.relative_to(ROOT)}:{n.lineno} {a.name}"
+                    for a in n.names
+                    if a.name in ("link", "O_EXCL", "fsync")
+                ]
+    assert not sites, f"commit-protocol primitives outside commit_core: {sites}"
 
 
 def _locally_bound(fn: ast.AST, name: str) -> bool:

@@ -244,7 +244,7 @@ def test_b64_recorded_per_delete_file(spark, tmp_path, monkeypatch):
     man = m.read_manifest(many)
     assert len(man["delete_files"]) > 1
     for rel in man["delete_files"]:
-        want = collections.Counter(str(m._stable_bucket64(k)) for k in _keys(many, rel))
+        want = collections.Counter(str(m._stable_bucket(k, 64)) for k in _keys(many, rel))
         assert man["delete_meta"][rel]["b64"] == dict(want)
 
     key_field = m.StructType.fromJson(man["schema"])["id"]

@@ -1693,7 +1693,8 @@ def test_mor_change_feed_stream_long_partition_column(spark, tmp_path):
     )
 
 
-def test_bloom_sidecar_chain_stays_bounded_under_append_heavy_load(spark):
+@pytest.mark.parametrize("writer", ["publish_append", "format_write", "format_sink"])
+def test_bloom_sidecar_chain_stays_bounded_under_append_heavy_load(spark, writer):
     """r17 verdict #6: each bloom-carrying append adds one sidecar, so an
     append-heavy steady state once made table_blooms walk O(appends)
     files per driver-side lookup. The carry now FOLDS the chain into one
@@ -1702,39 +1703,60 @@ def test_bloom_sidecar_chain_stays_bounded_under_append_heavy_load(spark):
     compactions: (a) the chain — the sidecar reads per lookup — never
     exceeds the fold cap at ANY commit; (b) every live file keeps a bloom
     entry; (c) point-lookup pruning stays correct and keeps proving
-    absence at the end of the run."""
+    absence at the end of the run. Every appending writer shares the
+    carry: the engine's publish_append, ``df.write.format('ezmanifest')``
+    and the format's streaming sink (one epoch commit per append)."""
+    import pyarrow as pa
+
     from ez_cdc_spark.sources.manifest import (
         _BLOOM_FOLD_EVERY,
         bloom_pruned_files,
         compact_partial,
+        current_generation,
         publish,
         publish_append,
         read_manifest,
         table_blooms,
     )
+    from ez_cdc_spark.sources.pyds import make_ezmanifest_source
 
-    d = os.path.join(SCRATCH, "bloomchain")
+    d = os.path.join(SCRATCH, f"bloomchain_{writer}")
     shutil.rmtree(d, ignore_errors=True)
     publish(
         spark.range(10).selectExpr("id AS k", "id*2 AS v"),
         d, 1, stats_columns=["k"], bloom_columns=["k"], bloom_bits=4096,
     )
-    gen, max_chain = 1, 0
+    src = make_ezmanifest_source(with_pushdown=False)
+    schema = spark.range(1).selectExpr("id AS k", "id*2 AS v").schema
+
+    def append(i):
+        lo, hi = 10 + i * 10, 20 + i * 10
+        if writer == "format_sink":
+            w = src(options={"path": d, "txntag": "chain"}).streamWriter(
+                schema, False
+            )
+            ks = list(range(lo, hi))
+            msg = w.write(iter([pa.record_batch({"k": ks, "v": [k * 2 for k in ks]})]))
+            w.commit([msg], i)
+            return
+        df = spark.range(lo, hi).coalesce(1).selectExpr("id AS k", "id*2 AS v")
+        if writer == "format_write":
+            _write(spark, df, d)
+        else:
+            publish_append(df, d, current_generation(d) + 1)
+
+    max_chain = 0
     for i in range(50):
-        gen += 1
-        publish_append(
-            spark.range(10 + i * 10, 20 + i * 10)
-            .coalesce(1)
-            .selectExpr("id AS k", "id*2 AS v"),
-            d, gen,
-        )
+        append(i)
         max_chain = max(
             max_chain,
             len(read_manifest(d)["bloom_meta"]["sidecars"]),
         )
         if i % 10 == 9:  # interleaved maintenance, t30's sink pattern
-            gen += 1
-            compact_partial(spark, d, gen, max_file_bytes=10**9, target_files=2)
+            compact_partial(
+                spark, d, current_generation(d) + 1,
+                max_file_bytes=10**9, target_files=2,
+            )
             max_chain = max(
                 max_chain,
                 len(read_manifest(d)["bloom_meta"]["sidecars"]),
@@ -1831,35 +1853,33 @@ def test_mor_change_feed_stream_live_tail_races_producer(spark, tmp_path):
 
 def test_stable_bucket64_parity_spark_python(spark):
     """r19 delete-read cut, the load-bearing invariant: the write-side
-    Spark bucket expression (_bucket64_counts), its Python twin
-    (_stable_bucket64), and the feed reader's nested _stable_bucket must
-    agree per key value — planning SKIPS splits and delete files from
-    the write-side counts, so a disagreement silently drops feed rows.
-    The reader side is pinned end-to-end by the planning-skip tests
-    below (a wrong skip breaks their exact-feed assertions); here the
-    write-side pair is pinned directly on adversarial values, and the
-    non-portable key types are pinned to OPT OUT (record nothing)."""
+    Spark bucket expression (_bucket64_counts) and commit_core's
+    _stable_bucket — the one Python hash both merge_mor's in-process
+    counts and the feed reader's split planning use — must agree per key
+    value: planning SKIPS splits and delete files from the write-side
+    counts, so a disagreement silently drops feed rows. The reader side
+    is pinned end-to-end by the planning-skip tests below (a wrong skip
+    breaks their exact-feed assertions); here the pair is pinned directly
+    on adversarial values, and the non-portable key types are pinned to
+    OPT OUT (record nothing)."""
     from collections import Counter
 
-    from ez_cdc_spark.sources.manifest import (
-        _bucket64_counts,
-        _stable_bucket64,
-    )
+    from ez_cdc_spark.sources.manifest import _bucket64_counts, _stable_bucket
 
     ints = [0, 1, -1, 5, 63, 64, 2**40, -(2**40), 999999937, 7, 7]
     got = _bucket64_counts(
         spark.createDataFrame([(v,) for v in ints], "k long"), "k"
     )
-    want = Counter(str(_stable_bucket64(v)) for v in ints)
+    want = Counter(str(_stable_bucket(v, 64)) for v in ints)
     assert got == dict(want)
 
     strs = ["", "a", "alex", "ünïcode-ключ", "foley", None]
     got_s = _bucket64_counts(
         spark.createDataFrame([(v,) for v in strs], "k string"), "k"
     )
-    want_s = Counter(str(_stable_bucket64(v)) for v in strs)
+    want_s = Counter(str(_stable_bucket(v, 64)) for v in strs)
     assert got_s == dict(want_s)
-    assert _stable_bucket64(None) == 0
+    assert _stable_bucket(None, 64) == 0
 
     # non-portable key types: no counts recorded (conservative read path)
     assert _bucket64_counts(
@@ -1930,7 +1950,7 @@ def test_mor_feed_planning_skips_churnfree_buckets_and_files(
     exactly once per live bucket — pinned here at the split level, with
     the feed content still exact."""
     from ez_cdc_spark.sources.manifest import (
-        _stable_bucket64,
+        _stable_bucket,
         merge_mor,
         publish,
         read_manifest,
@@ -1951,7 +1971,7 @@ def test_mor_feed_planning_skips_churnfree_buckets_and_files(
     man = read_manifest(d)
     drel = [r for r in man["delete_files"]][0]
     meta = man["delete_meta"][drel]
-    want_buckets = {_stable_bucket64(k) % 8 for k, *_ in churn}
+    want_buckets = {_stable_bucket(k, 64) % 8 for k, *_ in churn}
     assert {int(b) % 8 for b, n in meta["b64"].items() if n} == want_buckets
     assert meta["range"] == [5, 777]
 

@@ -3069,19 +3069,22 @@ def test_publish_stats_collected_without_driver_footer_reads(
 ):
     """r14 verdict #4: publish-time footer stats must be produced WITHOUT
     a driver-side O(files) footer loop — the last driver-side O(table)
-    pass in the lakehouse layer. Replace the module's ``_file_stats`` with
-    a tripwire that raises IN THE DRIVER PROCESS: every stats-recording
-    write path (publish, partitioned publish, append, merge, partial
-    compaction) must still produce correct, pruning-usable stats, proving
-    the footer reads ran on executor workers (the kernel is bound into
-    ``_collect_stats`` at module load and ships by value).
+    pass in the lakehouse layer. Replace the module's ``_file_stats``
+    (``_collect_stats`` looks it up per call, on both of its paths) with
+    a tripwire that raises IN THE DRIVER PROCESS and runs the real kernel
+    anywhere else: every stats-recording write path (publish, partitioned
+    publish, append, merge, partial compaction) must still produce
+    correct, pruning-usable stats, proving the footer reads ran on
+    executor workers (the tripwire ships to them by value).
 
     Optimization r19 refinement: commits staging at most
     ``_STATS_DRIVER_MAX`` files read their footers in a BOUNDED in-process
     loop (the job's fixed cost dwarfs a handful of footer reads); the
     scale property this test pins is therefore about writes ABOVE the
     threshold — driver work stays O(1) however many files a publish
-    stages — so the publishes here stage more than the threshold. The
+    stages — so the publish and append stage more files than the real
+    threshold, and the merge and compaction (which stage fewer) run with
+    the threshold set to 0, taking the path a large write takes. The
     fast path's equivalence is pinned separately in
     test_collect_stats_driver_fast_path_matches_executor_path."""
     import os
@@ -3091,11 +3094,14 @@ def test_publish_stats_collected_without_driver_footer_reads(
     from ez_cdc_spark.streaming.replay import rig_dir
 
     driver_pid = os.getpid()
+    real_kernel = m._file_stats
 
     def tripwire(path, columns):
-        raise AssertionError(
-            f"driver-side footer read of {path} (pid {driver_pid})"
-        )
+        if os.getpid() == driver_pid:
+            raise AssertionError(
+                f"driver-side footer read of {path} (pid {driver_pid})"
+            )
+        return real_kernel(path, columns)
 
     monkeypatch.setattr(m, "_file_stats", tripwire)
 
@@ -3114,6 +3120,7 @@ def test_publish_stats_collected_without_driver_footer_reads(
         stats_columns=["k"],
     )
     man = m.read_manifest(td)
+    assert len(man["files"]) > m._STATS_DRIVER_MAX, len(man["files"])
     assert man["stats"] and all(
         "k" in s for s in man["stats"].values()
     ), man["stats"]
@@ -3127,6 +3134,10 @@ def test_publish_stats_collected_without_driver_footer_reads(
     )
     man = m.read_manifest(td)
     assert all("k" in s for s in man["stats"].values())
+
+    # merge and compaction stage fewer files than the real threshold;
+    # drop it so they take the executor path a large rewrite takes
+    monkeypatch.setattr(m, "_STATS_DRIVER_MAX", 0)
 
     # merge: rewritten files get fresh executor-side stats
     changes = spark.createDataFrame(
