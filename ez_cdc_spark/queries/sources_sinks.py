@@ -2453,8 +2453,10 @@ ORDER BY c_nationkey
     "row is dead iff a delete entry for its key carries a sequence "
     "STRICTLY above the row's file sequence, so a commit's own upserts "
     "survive its own deletes while every older version dies. read_mor "
-    "resolves: data files grouped by sequence, delete files reduced to "
-    "one per-key MAX kill sequence, one left join. The lifecycle here "
+    "resolves with one left-anti join of the data rows against the raw "
+    "delete log on key AND delete sequence > row sequence, each side's "
+    "sequence looked up per row from its file's name; no per-key "
+    "aggregate over the log, and no join hint. The lifecycle here "
     "drives the saturating shape deliberately: customer range-clusters "
     "into 8 files; batch 1 updates keys %50==3 — uniform across EVERY "
     "file's range; batch 2 re-updates %100==3 (cross-commit kill: batch "
@@ -3674,7 +3676,7 @@ FROM cur GROUP BY c_nationkey ORDER BY c_nationkey
     "table publishes, RENAMES a column and DROPS another (two metadata "
     "eras, zero data I/O), then merge_mor lands updates and deletes "
     "keyed on the CURRENT logical names. Safe because the MOR resolve's "
-    "per-sequence-group scans go through the epoch-mapped read, which "
+    "data scans go through the epoch-mapped read, which "
     "lifts every era to the logical plane BEFORE the anti-join (a key "
     "renamed in an older era still kills that era's rows), new upsert "
     "files tag with the current era, and delete files never need "

@@ -1077,7 +1077,18 @@ def committed_files(table_dir: str, as_of_generation: int | None = None) -> list
     return [os.path.join(table_dir, rel) for rel in rels]
 
 
-def _read_files(spark: SparkSession, manifest: dict, table_dir: str, files: list[str]):
+def _read_files(
+    spark: SparkSession,
+    manifest: dict,
+    table_dir: str,
+    files: list[str],
+    seq: tuple[str, dict[str, int]] | None = None,
+):
+    """Read ``files`` of ``manifest``'s generation on the logical plane.
+    ``seq = (col, seq_of)`` (the merge-on-read resolve) adds ``col``:
+    each row's sequence, looked up by its data file's name in ``seq_of``
+    (:func:`_file_seq_map`) at every scan, below any union — Spark's
+    ``_metadata`` column does not resolve above one."""
     if not files:
         schema = manifest.get("schema")
         if schema is None:
@@ -1087,7 +1098,7 @@ def _read_files(spark: SparkSession, manifest: dict, table_dir: str, files: list
         return spark.createDataFrame([], StructType.fromJson(schema))
     schema = manifest.get("schema")
     if manifest.get("epoch_maps"):
-        return _read_files_epochs(spark, manifest, table_dir, files)
+        return _read_files_epochs(spark, manifest, table_dir, files, seq)
     if manifest.get("partition_col") is not None:
         # Partitioned generation (S29): the partition column lives in the
         # directory names, not the data files — reading leaf paths without
@@ -1113,19 +1124,70 @@ def _read_files(spark: SparkSession, manifest: dict, table_dir: str, files: list
             reader = spark.read.option("basePath", base)
             if schema is not None:
                 reader = reader.schema(StructType.fromJson(schema))
-            part = reader.parquet(*groups[base])
+            part = _with_file_seq(reader.parquet(*groups[base]), groups[base], seq)
             out = part if out is None else out.unionByName(part)
         return out
-    if manifest.get("epoch_maps"):
-        return _read_files_epochs(spark, manifest, table_dir, files)
     if schema is not None:
         # Stored-schema read: files written before an additive schema
         # evolution (S32) lack the appended columns — the explicit schema
         # reads them back NULL-filled, which IS the evolution contract
         # (same shape as S11's mergeSchema widening, decided by manifest
         # metadata instead of a footer scan).
-        return spark.read.schema(StructType.fromJson(schema)).parquet(*files)
-    return spark.read.parquet(*files)
+        df = spark.read.schema(StructType.fromJson(schema)).parquet(*files)
+    else:
+        df = spark.read.parquet(*files)
+    return _with_file_seq(df, files, seq)
+
+
+def _file_seq_map(table_dir: str, rels, seq_of: dict, what: str) -> dict[str, int]:
+    """File name → sequence for the merge-on-read resolve: ``rels`` are
+    manifest-relative paths, ``seq_of`` the manifest's ``file_seq`` or
+    ``delete_seq`` (a file without an entry has sequence 0). A scan
+    tells its rows' files apart only by ``_metadata.file_name``, so two
+    files sharing a name with different sequences raise: either sequence
+    would misjudge the other file's rows."""
+    out: dict[str, int] = {}
+    for rel in rels:
+        name, s = os.path.basename(rel), int(seq_of.get(rel, 0))
+        if out.setdefault(name, s) != s:
+            raise ValueError(
+                f"{what} file name {name!r} maps to sequences {out[name]} and "
+                f"{s} in {table_dir}: the merge-on-read resolve keys "
+                f"sequences by file name and cannot tell these files apart"
+            )
+    return out
+
+
+def _with_file_seq(df: DataFrame, files: list[str], seq) -> DataFrame:
+    """``df`` (one parquet scan of ``files``) plus the per-row sequence
+    column ``seq = (col, seq_of)`` asks for, or ``df`` as is."""
+    if seq is None:
+        return df
+    return df.withColumn(seq[0], _file_seq_value(df, files, seq[1]))
+
+
+def _file_seq_value(df: DataFrame, files: list[str], seq_of: dict[str, int]):
+    """Each row's sequence in ``df``, one parquet scan of ``files``: a
+    CASE over the scan's distinct sequences, each branch an ``In`` on
+    ``_metadata.file_name`` (a hash set past a few names). It is never a
+    literal: with a literal sequence the optimizer pushes the kill join
+    into each union branch and folds the sequence test into a
+    per-branch broadcast. A row whose file has no entry raises instead
+    of reading NULL, which would keep every row the log killed."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    by_seq: dict[int, list[str]] = {}
+    for f in files:
+        name = os.path.basename(f)
+        by_seq.setdefault(seq_of[name], []).append(name)
+    fname = df.metadataColumn("_metadata").getField("file_name")
+    value = None
+    for s in sorted(by_seq):
+        hit, seq = fname.isin(by_seq[s]), F.lit(s).cast("long")
+        value = F.when(hit, seq) if value is None else value.when(hit, seq)
+    return value.otherwise(
+        F.raise_error(F.concat(F.lit("no sequence recorded for "), fname))
+    )
 
 
 def _partition_base(path: str) -> str:
@@ -1136,7 +1198,11 @@ def _partition_base(path: str) -> str:
 
 
 def _read_files_epochs(
-    spark: SparkSession, manifest: dict, table_dir: str, files: list[str]
+    spark: SparkSession,
+    manifest: dict,
+    table_dir: str,
+    files: list[str],
+    seq: tuple[str, dict[str, int]] | None = None,
 ):
     """S40 epoch-mapped read — the name-mapping half of Iceberg's field-ID
     schema evolution: after a RENAME or DROP, a logical column's physical
@@ -1190,6 +1256,8 @@ def _read_files_epochs(
             else F.lit(None).cast(fld.dataType).alias(fld.name)
             for fld in schema.fields
         ]
+        if seq is not None:  # in the renaming select: no physical name clash
+            cols.append(_file_seq_value(df, groups[key], seq[1]).alias(seq[0]))
         part = df.select(*cols)
         out = part if out is None else out.unionByName(part)
     return out
@@ -2972,6 +3040,13 @@ def _feed_segment(
     read_mor_manifest = _read_mor_manifest
     read_files = _read_files
 
+    # driver-read keys are few (row-capped) and literal-safe: a literal In
+    # pushes to the parquet scan and skips the broadcast build; NULL state
+    # keys drop under both forms (neither In nor a semi-join matches
+    # NULL). Built once for both sides: PySpark makes one py4j call per
+    # literal, seconds at the row cap.
+    in_keys = F.col(key_col).isin(raw_keys) if keys_df is None else None
+
     def _state_for_keys(man):
         stats = man.get("stats", {})
         kept = [
@@ -2987,12 +3062,8 @@ def _feed_segment(
                 spark, pruned, table_dir,
                 [os.path.join(table_dir, r) for r in kept],
             )
-        if keys_df is None:
-            # driver-read keys are few (row-capped) and literal-safe: a
-            # literal In pushes to the parquet scan and skips the
-            # broadcast build; NULL state keys drop under both forms
-            # (neither In nor a semi-join matches NULL)
-            return state.filter(F.col(key_col).isin(raw_keys))
+        if in_keys is not None:
+            return state.filter(in_keys)
         return state.join(F.broadcast(keys_df), on=key_col, how="left_semi")
 
     pre = _state_for_keys(m_from)
@@ -3320,8 +3391,8 @@ def merge_mor(
         # drop-evolved table. New upsert files are written under the
         # CURRENT logical names (the column checks above enforce it), so
         # they tag with the current era and carried files keep theirs —
-        # the MOR resolve's per-sequence-group scans already go through
-        # _read_files, which maps every era to the logical plane BEFORE
+        # the MOR resolve's data scans already go through _read_files,
+        # which maps every era to the logical plane BEFORE
         # the anti-join, so a key renamed in an older era still kills
         # that era's rows. Delete files are exempt from mapping by
         # construction: they are read directly with the current logical
@@ -3348,18 +3419,17 @@ def read_mor(
     spark: SparkSession, table_dir: str, as_of_generation: int | None = None
 ) -> DataFrame:
     """S36 read path: resolve a merge-on-read generation to its live rows
-    by anti-applying the equality-delete log. Data files group by their
-    recorded sequence number (groups are O(commits since compaction) —
-    bounded by the maintenance policy, each group one ordinary parquet
-    scan); delete files reduce to one per-key MAX delete sequence
-    (equality deletes on a last-write-wins keyed table: only the newest
-    kill matters); the resolve is a single left join keeping rows with no
-    kill or a kill at-or-below their own sequence. The delete side is
-    churn-since-compaction-sized — AQE picks a broadcast build when it
-    fits, and compact_mor bounds it structurally. On a plain
-    copy-on-write generation this is exactly read_committed."""
-    from pyspark.sql import functions as F  # noqa: N812
-
+    by anti-applying the equality-delete log (Iceberg v2's rule: a row
+    dies iff a delete entry for its key carries a sequence strictly
+    greater than the row's file sequence). The resolve is one left-anti
+    join of the data files against the raw delete log on ``key`` and
+    ``delete sequence > row sequence`` — no per-key aggregate over the
+    log first. The join is unhinted: the delete side is
+    churn-since-compaction-sized, so the planner broadcasts it from its
+    file sizes while it fits and falls back to a sort-merge anti-join
+    above ``spark.sql.autoBroadcastJoinThreshold``; compact_mor bounds it
+    structurally. On a plain copy-on-write generation this is exactly
+    read_committed."""
     manifest = read_manifest(table_dir, as_of_generation)
     if not manifest.get("delete_files"):
         return read_committed(spark, table_dir, as_of_generation)
@@ -3372,48 +3442,39 @@ def _read_mor_manifest(
     """The MOR resolve over an explicit (possibly file-pruned) manifest —
     factored so change_feed_mor can stats-prune the data-file list before
     resolving. The delete side always reads in full: kills from commits
-    outside a pruned file set still apply to the rows that remain."""
-    from pyspark.sql import functions as F  # noqa: N812
+    outside a pruned file set still apply to the rows that remain.
 
+    Each side carries a per-row sequence looked up from its file's name
+    at the scan (:func:`_file_seq_value`): ``file_seq`` for data rows,
+    ``delete_seq`` for delete keys. NULL keys never match, so a NULL-key
+    row is never killed."""
     key_col = manifest["mor_key"]
     cols = [f["name"] for f in manifest["schema"]["fields"]]
-    fseq = manifest.get("file_seq", {})
-    groups: dict[int, list[str]] = {}
-    for rel in manifest["files"]:
-        groups.setdefault(int(fseq.get(rel, 0)), []).append(
-            os.path.join(table_dir, rel)
-        )
-    data = None
-    for seq in sorted(groups):
-        part = _read_files(spark, manifest, table_dir, groups[seq]).withColumn(
-            "_seq", F.lit(seq).cast("long")
-        )
-        data = part if data is None else data.unionByName(part)
-    if data is None:  # every data file pruned away
+    if not manifest["files"]:  # every data file pruned away
         return spark.createDataFrame([], StructType.fromJson(manifest["schema"]))
-
-    key_field = StructType.fromJson(manifest["schema"])[key_col]
-    dseq = manifest.get("delete_seq", {})
-    dgroups: dict[int, list[str]] = {}
-    for rel in manifest["delete_files"]:
-        dgroups.setdefault(int(dseq.get(rel, 0)), []).append(
-            os.path.join(table_dir, rel)
-        )
-    dels = None
-    for seq in sorted(dgroups):
-        part = (
-            spark.read.schema(StructType([key_field]))
-            .parquet(*dgroups[seq])
-            .withColumn("_dseq", F.lit(seq).cast("long"))
-        )
-        dels = part if dels is None else dels.unionByName(part)
-    dead = dels.groupBy(key_col).agg(F.max("_dseq").alias("_dseq"))
-    live = (
-        data.join(dead, on=key_col, how="left")
-        .where(F.col("_dseq").isNull() | (F.col("_dseq") <= F.col("_seq")))
-        .select(*cols)
+    seq, dseq, dkey = (_flag_col(c, cols) for c in ("_seq", "_dseq", "_dkey"))
+    data = _read_files(
+        spark, manifest, table_dir,
+        [os.path.join(table_dir, rel) for rel in manifest["files"]],
+        seq=(seq, _file_seq_map(
+            table_dir, manifest["files"], manifest.get("file_seq", {}), "data"
+        )),
     )
-    return live
+    key_field = StructType.fromJson(manifest["schema"])[key_col]
+    dfiles = [os.path.join(table_dir, rel) for rel in manifest["delete_files"]]
+    dels = spark.read.schema(StructType([key_field])).parquet(*dfiles)
+    dels = dels.select(
+        dels[key_col].alias(dkey),
+        _file_seq_value(dels, dfiles, _file_seq_map(
+            table_dir, manifest["delete_files"],
+            manifest.get("delete_seq", {}), "delete",
+        )).alias(dseq),
+    )
+    return data.join(
+        dels,
+        (data[key_col] == dels[dkey]) & (dels[dseq] > data[seq]),
+        "left_anti",
+    ).select(*cols)
 
 
 def compact_mor(
@@ -3432,7 +3493,9 @@ def compact_mor(
     bounded log. The txn watermarks carry (maintenance never rewinds
     applied-batch state). This is Iceberg's rewrite_data_files with
     delete-file expiry — the half of the MOR bargain that keeps read
-    amplification bounded.
+    amplification bounded. The resolve is read_mor's one left-anti join
+    against the raw delete log, so a fold whose log fits the broadcast
+    threshold runs two Spark jobs: the log's broadcast and the write.
 
     ``cluster_by`` (r18) makes the fold a CLUSTERED rewrite — Iceberg's
     rewrite_data_files with a sort order: a MOR epoch destroys whatever

@@ -2463,6 +2463,37 @@ def _run_restore_feed_consumer(
     return read_committed(spark, agg_dir), table_dir, agg_dir
 
 
+def fold_mor_log(
+    spark: SparkSession,
+    table_dir: str,
+    merged: dict,
+    max_delete_files: int,
+    target_files: int,
+) -> bool:
+    """The MOR sinks' in-loop maintenance step: once the committed
+    generation ``merged`` holds a delete log from more than
+    ``max_delete_files`` merge_mor COMMITS (distinct ``delete_seq``
+    values), fold it with compact_mor into ``target_files`` files.
+    Commits, not files: a commit stages one delete file per write task
+    that saw keys, so a file count would let the batch's task count set
+    the cadence. A fold generation taken by an orphan of a crashed
+    attempt is skipped over. Returns whether it folded."""
+    from ez_cdc_spark.sources import manifest
+
+    dseq = merged.get("delete_seq") or {}
+    commits = {dseq.get(rel, 0) for rel in merged.get("delete_files") or []}
+    if len(commits) <= max_delete_files:
+        return False
+    gen = merged["generation"] + 1
+    for _ in range(100):
+        try:
+            manifest.compact_mor(spark, table_dir, gen, target_files=target_files)
+            return True
+        except FileExistsError:
+            gen += 1
+    raise RuntimeError(f"no free generation number near {gen}")
+
+
 def lakehouse_mor_batch(
     table_dir: str,
     tag: str = "t33",
@@ -2482,15 +2513,14 @@ def lakehouse_mor_batch(
     rewrite-the-whole-table (bench_scaling.py:t30_churn_spread_probe:
     64/64 files at 200 uniform keys). The read-amplification half of the
     bargain is bounded by the same in-loop maintenance pattern as t30's
-    compaction policy: when the delete log exceeds ``max_delete_files``
-    files (a commit stages one per write task that saw keys, one for a
-    micro-batch that AQE coalesces to a single task) the sink folds it
-    with compact_mor (one resolve + publish, txn watermark carried) and
-    reclaims superseded generations."""
+    compaction policy: when the delete log spans more than
+    ``max_delete_files`` merge commits (:func:`fold_mor_log` counts
+    commits, not the files each commit's write tasks staged) the sink
+    folds it with compact_mor (one resolve + publish, txn watermark
+    carried) and reclaims superseded generations."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
-            compact_mor,
             gc,
             merge_mor,
             read_manifest,
@@ -2531,21 +2561,9 @@ def lakehouse_mor_batch(
         else:
             raise RuntimeError(f"no free generation number near {gen}")
 
-        if len(merged.get("delete_files") or []) > max_delete_files:
-            cgen = merged["generation"] + 1
-            for _ in range(100):
-                try:
-                    compact_mor(
-                        spark,
-                        table_dir,
-                        cgen,
-                        target_files=compact_target_files,
-                    )
-                    break
-                except FileExistsError:
-                    cgen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {cgen}")
+        if fold_mor_log(
+            spark, table_dir, merged, max_delete_files, compact_target_files
+        ):
             gc(table_dir, older_than_s=gc_older_than_s)
             vacuum(
                 table_dir,
@@ -2583,10 +2601,10 @@ def lakehouse_mor_fanout_batch(
     post_batch=None,
 ):
     """T34 foreachBatch: the FULL merge-on-read produce→consume loop —
-    t33's MOR sink (merge_mor per batch, in-loop compact_mor past the
-    delete-log threshold) followed, inside the same trigger, by the t32
-    consumer folding the net delta of change_feed_mor_sides(cursor, cur)
-    into its downstream aggregate. The fold threshold here is
+    t33's MOR sink (merge_mor per batch, in-loop compact_mor once the
+    delete log spans more than ``max_delete_files`` commits) followed,
+    inside the same trigger, by the t32 consumer folding the net delta
+    of change_feed_mor_sides(cursor, cur) into its downstream aggregate. The fold threshold here is
     deliberately LOW so folds fire repeatedly MID-STREAM between the
     consumer's reads — exercising the r16 fold-composition contract on
     every such trigger: the consumer's interval (prev merge gen →
@@ -2599,7 +2617,6 @@ def lakehouse_mor_fanout_batch(
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
-            compact_mor,
             merge_mor,
             read_manifest,
             txn_watermark,
@@ -2638,19 +2655,9 @@ def lakehouse_mor_fanout_batch(
         # consume BEFORE this trigger's fold is also fine — but running the
         # consumer first would hide the composition the test exists to
         # exercise, so the fold lands first when the threshold trips
-        if len(merged.get("delete_files") or []) > max_delete_files:
-            cgen = merged["generation"] + 1
-            for _ in range(100):
-                try:
-                    compact_mor(
-                        spark, table_dir, cgen,
-                        target_files=compact_target_files,
-                    )
-                    break
-                except FileExistsError:
-                    cgen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {cgen}")
+        fold_mor_log(
+            spark, table_dir, merged, max_delete_files, compact_target_files
+        )
         consume_feed_step(spark, table_dir, agg_dir, consumer_tag, mor=True)
         if post_batch is not None:
             post_batch(spark, batch_id)
@@ -2721,16 +2728,15 @@ def materialize_change_feed_stream(
 def mor_cdf_sink_batch(table_dir: str, tag: str, max_delete_files: int = 2):
     """T47/T48 producer foreachBatch: the MOR sink for tables a NATIVE
     change-feed STREAM will tail — t33's exact contract (merge_mor per
-    batch, (tag, batch_id) idempotence, in-loop compact_mor past the
-    delete-log threshold so consumer intervals cross folds) but WITHOUT
-    gc/vacuum: feed retention is gc retention, and the un-consumed
-    chain's generations must stay on disk (the Delta CDF contract —
-    consume before reclaiming; the caller reclaims after its consumers
-    drain)."""
+    batch, (tag, batch_id) idempotence, in-loop compact_mor once the
+    delete log spans more than ``max_delete_files`` commits, so consumer
+    intervals cross folds) but WITHOUT gc/vacuum: feed retention is gc
+    retention, and the un-consumed chain's generations must stay on disk
+    (the Delta CDF contract — consume before reclaiming; the caller
+    reclaims after its consumers drain)."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
-            compact_mor,
             merge_mor,
             read_manifest,
             txn_watermark,
@@ -2759,13 +2765,7 @@ def mor_cdf_sink_batch(table_dir: str, tag: str, max_delete_files: int = 2):
             generation=man["generation"] + 1,
             txn={"tag": tag, "batch_id": batch_id},
         )
-        if len(merged.get("delete_files") or []) > max_delete_files:
-            compact_mor(
-                batch.sparkSession,
-                table_dir,
-                merged["generation"] + 1,
-                target_files=2,
-            )
+        fold_mor_log(batch.sparkSession, table_dir, merged, max_delete_files, 2)
 
     return apply
 
@@ -2881,8 +2881,8 @@ def materialize_mor_change_feed_stream(
     Producer half: the lsn-staged envelope replay drives a t33-shaped
     MOR sink loop — each micro-batch is one merge_mor generation (new
     upsert files + equality-delete files, zero rewrites), and past
-    ``max_delete_files`` the loop folds the log with compact_mor
-    MID-CHAIN, so the consumer's interval crosses a fold commit. Unlike
+    ``max_delete_files`` merge commits the loop folds the log with
+    compact_mor MID-CHAIN, so the consumer's interval crosses a fold commit. Unlike
     t33's sink the loop does NOT gc/vacuum: feed retention is gc
     retention (consume before reclaiming — the Delta CDF contract t46
     declares), and the reader's refusal on a reclaimed generation is

@@ -9,7 +9,8 @@ changed-key read switches to the executor path above its row bound, and
 one consumer step costs a bounded number of Spark jobs. The same
 DAGScheduler job guard pins the producer's merge-on-read commit
 (sources/manifest.py:merge_mor), which stages upserts and delete keys in
-one write job.
+one write job, and the merge-on-read resolve (read_mor, compact_mor),
+one left-anti join against the raw delete log.
 """
 
 import os
@@ -277,6 +278,90 @@ def test_merge_mor_job_budget(spark, tmp_path, layout, budget):
             want[k] = (lsn, fn, f"l{k}", f"e{k}")
     got = {r[0]: tuple(r[1:]) for r in m.read_mor(spark, td).collect()}
     assert got == want
+
+
+# Spark jobs over a 3-commit delete log (local[4]): read_mor's one
+# left-anti join against the raw log costs the log's broadcast plus the
+# query's own jobs. An aggregate read runs 3 (broadcast, the group-by's
+# shuffle map stage, the result), a point lookup 2 and a compact_mor fold
+# 2 (broadcast, write). Reducing the log to max(_dseq) per key first cost
+# one more shuffle stage on each: 4, 3 and 3 on both layouts.
+MOR_READ_AGG_JOBS = 3
+MOR_READ_POINT_JOBS = 2
+MOR_FOLD_JOBS = 2
+
+
+@pytest.mark.parametrize("layout", ["plain", "partitioned"])
+def test_read_mor_job_budget(spark, tmp_path, layout):
+    td = str(tmp_path / "up")
+    rows = [(k, k, f"f{k % 5}", f"l{k}", f"e{k}") for k in range(1, 401)]
+    df = spark.createDataFrame(rows, UPSTREAM)
+    if layout == "partitioned":
+        m.publish_partitioned(df, td, 1, "first_name", stats_columns=["id"])
+    else:
+        m.publish(df.repartitionByRange(4, "id"), td, 1, stats_columns=["id"])
+    want = {k: tuple(r) for k, *r in rows}
+    for gen, batch in enumerate(
+        ([(7, 1007, "f9", "u"), (300, 1300, "f0", "d")],
+         [(7, 2007, "f3", "u"), (999, 1999, "f2", "c")],
+         [(20, 3020, "f1", "u"), (999, 3999, "f2", "d")]),
+        start=2,
+    ):
+        m.merge_mor(spark, td, _changes(spark, batch), "id", gen)
+        for k, lsn, fn, op in batch:
+            if op == "d":
+                want.pop(k, None)
+            else:
+                want[k] = (lsn, fn, f"l{k}", f"e{k}")
+    assert len({*m.read_manifest(td)["delete_seq"].values()}) == 3
+
+    j0 = _jobid(spark)
+    got = _recompute(m.read_mor(spark, td))
+    assert _jobid(spark) - j0 <= MOR_READ_AGG_JOBS, _jobid(spark) - j0
+    groups: dict = {}
+    for lsn, fn, *_ in want.values():
+        n, total = groups.get(fn, (0, 0))
+        groups[fn] = (n + 1, total + lsn)
+    assert got == sorted((fn, n, total) for fn, (n, total) in groups.items())
+
+    j0 = _jobid(spark)
+    hit = m.read_mor(spark, td).filter(F.col("id") == 7).select(*df.columns).collect()
+    assert _jobid(spark) - j0 <= MOR_READ_POINT_JOBS, _jobid(spark) - j0
+    assert [tuple(r[1:]) for r in hit] == [want[7]]
+
+    j0 = _jobid(spark)
+    m.compact_mor(spark, td, 5, target_files=2)
+    assert _jobid(spark) - j0 <= MOR_FOLD_JOBS, _jobid(spark) - j0
+    folded = m.read_committed(spark, td).select(*df.columns)
+    assert {r[0]: tuple(r[1:]) for r in folded.collect()} == want
+
+
+def test_mor_feed_key_predicate_built_once_per_segment(spark, tmp_path, monkeypatch):
+    """The driver-read changed keys become one literal In predicate per
+    fold segment, shared by the pre and post resolves: PySpark makes one
+    py4j call per literal, so building it per side doubled seconds of
+    driver time at the row cap."""
+    td, _ = _setup(spark, str(tmp_path))
+    m.merge_mor(
+        spark, td,
+        _changes(spark, [(k, 1000 + k, "f9", "u") for k in (3, 5, 8)]),
+        "id", 2,
+    )
+    m.merge_mor(spark, td, _changes(spark, [(9, 1009, "f1", "u")]), "id", 3)
+    m.compact_mor(spark, td, 4, target_files=2)
+    m.merge_mor(spark, td, _changes(spark, [(3, 2003, "f2", "d")]), "id", 5)
+    column = type(F.col("id"))  # the session's Column implementation
+    calls = []
+    real = column.isin
+
+    def spy(self, *cols):
+        calls.append(str(self))
+        return real(self, *cols)
+
+    monkeypatch.setattr(column, "isin", spy)
+    sides = m.change_feed_mor_sides(spark, td, 1, 5)
+    assert len(sides) == 2  # two segments around the fold
+    assert calls.count(str(F.col("id"))) == 2, calls
 
 
 @pytest.mark.parametrize("mor", [False, True])

@@ -1,5 +1,7 @@
 """Plan-shape assertions: scale rules hold structurally (SURVEY §4.2/§5.2)."""
 
+import re
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -1217,15 +1219,20 @@ def test_s35_change_feed_plan_no_cartesian_and_churn_only_scan(spark, sf_smoke):
 
 def test_s36_mor_resolve_plan_no_cartesian_and_seq_kill_join(spark, sf_smoke):
     """s36's resolve plan (read_mor): the kill rule compiles to ONE keyed
-    left join against the per-key max-kill-sequence aggregate plus a
-    filter — no cartesian, no nested loop; the registered query's whole
-    lifecycle plan stays cartesian-free. The delete side is
-    churn-since-compaction-sized, so at 100 TB AQE builds it broadcast;
-    what we pin structurally here is the join SHAPE, not the strategy."""
+    left-anti join straight against the raw delete log, its condition the
+    sequence test ``_dseq > _seq``, with no per-key max(_dseq) aggregate
+    over the log before it — no cartesian, no nested loop; the registered
+    query's whole lifecycle plan stays cartesian-free. The join is
+    unhinted: the delete side is churn-since-compaction-sized, so the
+    planner broadcasts it while it fits and sort-merges above the
+    threshold; what we pin structurally here is the join SHAPE, not the
+    strategy."""
     df = load_all()["s36_merge_on_read"].fn(spark, sf_smoke)
     assert_no_cartesian(df)
     p = plan_str(df)
-    assert "_dseq" in p and "Join" in p  # the kill join is in the plan
+    assert "LeftAnti" in p, p
+    assert re.search(r"Join condition: \(_dseq#\d+L? > _seq#\d+L?\)", p), p
+    assert "max(_dseq" not in p, p
 
 
 def test_s36b_mor_feed_plan_broadcast_keys_and_no_cartesian(spark, sf_smoke):
