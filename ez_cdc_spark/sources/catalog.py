@@ -314,16 +314,9 @@ def rollback(catalog_dir: str, to_version: int) -> dict:
         if current_generation(td) == gen:
             restored[name] = gen  # chain already at the target state
             continue
-        g_new = (current_generation(td) or 0) + 1
-        for _ in range(100):
-            try:
-                table_restore(td, g_new, as_of_generation=gen)
-                break
-            except FileExistsError:
-                g_new += 1
-        else:
-            raise RuntimeError(f"no free generation number near {g_new}")
-        restored[name] = g_new
+        restored[name] = table_restore(td, None, as_of_generation=gen)[
+            "generation"
+        ]
     # one ordinary CAS commit naming the RESTORE generations, with the
     # TARGET's txn watermarks (the REWIND; commit() would carry the
     # current version's watermarks forward, which is exactly wrong here)

@@ -216,6 +216,28 @@ def _reserve_next(table_dir: str, generation: int) -> int:
         generation += 1
 
 
+def take_generation(
+    table_dir: str,
+    generation: int | None,
+    ref: str | None = None,
+    reserve: bool = True,
+) -> int | None:
+    """The generation number a writer commits as, reserved before any
+    data stages. An explicit ``generation`` goes through
+    :func:`_validate_generation` unchanged. ``None`` takes the next free
+    number above the committed head of ``ref`` (main when None): numbers
+    held by a manifest or by another writer's reservation are skipped,
+    so an orphan of a crashed attempt never blocks a commit. With
+    ``reserve=False`` (a fail-fast pre-check) ``None`` has nothing to
+    check and comes back as None."""
+    if generation is not None:
+        _validate_generation(table_dir, generation, reserve, ref)
+        return generation
+    if not reserve:
+        return None
+    return _reserve_next(table_dir, (current_generation(table_dir, ref) or 0) + 1)
+
+
 def _validate_generation(
     table_dir: str, generation: int, reserve: bool = True, ref: str | None = None
 ) -> None:
@@ -460,6 +482,100 @@ def txn_watermark(manifest: dict, tag) -> dict | None:
     if single and "tag" in single and str(single["tag"]) == str(tag):
         return {k: v for k, v in single.items() if k != "tag"}
     return None
+
+
+# ----- deriving a child manifest from its parent -----
+
+# Each names the operation that wrote a manifest and records its parent;
+# a child describes its own commit, so it never inherits these.
+_LINEAGE_KEYS = (
+    "merge", "append", "evolve", "compact", "mor", "fold", "restore",
+    "rename", "drop",
+)
+# What a commit that changes the file list inherits from its parent: the
+# table's identity and its transaction watermarks. Per-file state (file
+# list, partition values, stats, eras, delete log, change-feed files) is
+# rebuilt from the file delta, or set by the writer that maintains it.
+_IDENTITY_KEYS = (
+    "schema", "partition_col", "constraints", "partition_transform",
+    "bloom_meta", "epoch_maps", "txn", "txns",
+)
+_KEEP = object()  # derive_manifest: carry the parent's txn and txns as-is
+
+
+def derive_manifest(
+    parent: dict,
+    generation: int,
+    added: list[str] | None = None,
+    removed=(),
+    added_stats: dict | None = None,
+    added_partitions: dict | None = None,
+    txn=_KEEP,
+    **fields,
+) -> dict:
+    """The manifest of a commit built on ``parent``.
+
+    With ``added`` None the commit is metadata only: every parent key
+    but the lineage keys carries by reference. With a file delta the
+    table identity (``_IDENTITY_KEYS``) carries, and the file list is
+    the parent's files minus ``removed``, in order, plus ``added``. Per
+    file, carried files keep their partition values, stats and eras;
+    added files take ``added_partitions``, ``added_stats`` and the
+    current era. ``stats`` is recorded only when ``added_stats`` is
+    given, ``partitions`` only on a partitioned table.
+
+    ``fields`` are the keys this commit sets, its lineage entry among
+    them; a field given as None is left out. ``txn`` is this commit's
+    transaction: it takes the single ``txn`` slot (None leaves it empty)
+    and folds into the per-writer ``txns`` map. Left at its default, the
+    parent's slot and map carry unchanged."""
+    if added is None:
+        m = {k: v for k, v in parent.items() if k not in _LINEAGE_KEYS}
+    else:
+        m = {k: parent[k] for k in _IDENTITY_KEYS if parent.get(k) is not None}
+    m["generation"] = generation
+    for k, v in fields.items():
+        if v is None:
+            m.pop(k, None)
+        else:
+            m[k] = v
+    if added is not None:
+        gone = set(removed)
+        carried = [rel for rel in parent.get("files", []) if rel not in gone]
+        m["files"] = carried + list(added)
+        m["n_files"] = len(m["files"])
+        if m.get("partition_col") is not None:
+            parts = parent.get("partitions", {})
+            m["partitions"] = {
+                **{rel: parts.get(rel) for rel in carried},
+                **(added_partitions or {}),
+            }
+        if added_stats is not None:
+            stats = parent.get("stats", {})
+            m["stats"] = {
+                **{rel: stats[rel] for rel in carried if rel in stats},
+                **added_stats,
+            }
+        if m.get("epoch_maps"):
+            # S40: files written now carry the current logical names, so
+            # they join the current era; carried files keep theirs
+            epoch = parent.get("epoch", 0)
+            eras = parent.get("file_epochs", {})
+            m["epoch"] = epoch
+            m["file_epochs"] = {
+                **{rel: eras.get(rel, 0) for rel in carried},
+                **{rel: epoch for rel in added},
+            }
+    if txn is not _KEEP:
+        m.pop("txn", None)
+        if txn is not None:
+            m["txn"] = txn
+        folded = _fold_txns(_txns_of(parent), txn)
+        if folded:
+            m["txns"] = folded
+        else:
+            m.pop("txns", None)
+    return m
 
 
 def _parent_gen_of(manifest: dict) -> int | None:

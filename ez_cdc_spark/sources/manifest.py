@@ -29,7 +29,13 @@ formats are built on:
   generation <= the committed one and refuse to overwrite an existing
   ``gen-<g>.json`` — the manifest the protocol documents as immutable stays
   immutable, and a re-publish can never overwrite the very directory a lazy
-  reader is scanning.
+  reader is scanning. Every writer also takes ``generation=None``: the
+  commit protocol then reserves the next free number itself
+  (``commit_core.take_generation``), the way a Delta or Iceberg log, not
+  its writer, picks the next version.
+* Every writer derives its manifest from the parent with
+  ``commit_core.derive_manifest``: table identity and watermarks carry,
+  lineage keys drop, and the file delta rebuilds the per-file state.
 * ``read_committed(..., as_of_generation=g)`` is time travel (S27): any
   un-GC'd generation manifest is immutable and fully self-describing, so an
   older committed snapshot resolves by name without touching the pointer.
@@ -121,9 +127,11 @@ from ez_cdc_spark.sources.commit_core import (  # noqa: F401
     _validate_generation,
     _write_json,
     current_generation,
+    derive_manifest,
     map_files,
     read_manifest,
     table_blooms,
+    take_generation,
     txn_watermark,
 )
 
@@ -579,7 +587,7 @@ def _range_excludes(rng: list, lo, hi) -> bool:
 def publish(
     df: DataFrame,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     stats_columns: list[str] | None = None,
     txn: dict | None = None,
     expected_parent=_AUTO,
@@ -609,7 +617,25 @@ def publish(
     ``None`` inherits the replaced generation's constraints, ``{}``
     explicitly clears them. ``enforce_constraints=False`` skips the
     validation scan for commits whose content is by construction already
-    committed data (compact's rewrite) — never for new data."""
+    committed data (compact's rewrite) — never for new data.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
+    return _publish(
+        df, table_dir, generation, None, ref, stats_columns, txn,
+        expected_parent, txns, lineage, constraints, enforce_constraints,
+        bloom_columns, bloom_bits,
+    )
+
+
+def _publish(
+    df, table_dir, generation, partition_col, ref, stats_columns, txn,
+    expected_parent, txns, lineage, constraints, enforce_constraints,
+    bloom_columns, bloom_bits,
+) -> dict:
+    """The body of :func:`publish` and :func:`publish_partitioned`: a
+    full replacement that inherits only the parent's constraints (unless
+    given) and watermarks, staged flat or under ``partition_col``."""
     if expected_parent is _AUTO:
         expected_parent = current_generation(table_dir, ref)
     if constraints is None and expected_parent is not None:
@@ -621,34 +647,8 @@ def publish(
             constraints = None
     if enforce_constraints:
         _enforce_constraints(df, constraints, "publish batch")
-    _validate_generation(table_dir, generation, ref=ref)
-    files = stage_only(df, table_dir, generation)
-    manifest = {
-        "generation": generation,
-        "files": [os.path.relpath(f, table_dir) for f in files],
-        "n_files": len(files),
-        "schema": json.loads(df.schema.json()),
-    }
-    if stats_columns:
-        manifest["stats"] = _collect_stats(
-            df.sparkSession, table_dir, files, stats_columns
-        )
-    if bloom_columns:
-        # S47: per-file point-lookup blooms, persisted as a SIDECAR file
-        # (r16 verdict #3): the manifest records only {bits, columns,
-        # sidecar names}, so manifest size stays O(files) however many
-        # bloom-indexed files accumulate — at 100 TB size bits to ~10/key
-        manifest["bloom_meta"] = _new_bloom_meta(
-            df.sparkSession, table_dir, generation, files, bloom_columns, bloom_bits
-        )
-    if lineage:
-        # caller-supplied commit lineage (e.g. compact_mor's fold marker) —
-        # recorded so chain walkers (change_feed_mor) can trace parents
-        manifest.update(lineage)
-    if constraints:
-        manifest["constraints"] = constraints
-    if txn is not None:
-        manifest["txn"] = txn
+    generation = take_generation(table_dir, generation, ref=ref)
+    files, rels, parts = _stage(df, table_dir, generation, partition_col)
     # txns defaulting (ADVICE r15): when replacing an EXISTING generation,
     # other writers' watermarks live in the parent manifest — defaulting
     # the fold input to the parent's map means a tagged publish over a
@@ -657,9 +657,35 @@ def publish(
     # history), or an explicit map to override.
     if txns is None and expected_parent is not None:
         txns = _txns_of(read_manifest(table_dir, as_of_generation=expected_parent))
-    folded = _fold_txns(txns, txn)
-    if folded:
-        manifest["txns"] = folded
+    manifest = derive_manifest(
+        {"constraints": constraints or None, "txns": txns},
+        generation,
+        added=rels,
+        added_stats=(
+            _collect_stats(df.sparkSession, table_dir, files, stats_columns)
+            if stats_columns
+            else None
+        ),
+        added_partitions=parts,
+        txn=txn,
+        schema=json.loads(df.schema.json()),
+        partition_col=partition_col,
+        # S47: per-file point-lookup blooms, persisted as a SIDECAR file
+        # (r16 verdict #3): the manifest records only {bits, columns,
+        # sidecar names}, so manifest size stays O(files) however many
+        # bloom-indexed files accumulate — at 100 TB size bits to ~10/key
+        bloom_meta=(
+            _new_bloom_meta(
+                df.sparkSession, table_dir, generation, files, bloom_columns,
+                bloom_bits,
+            )
+            if bloom_columns
+            else None
+        ),
+        # caller-supplied commit lineage (e.g. compact_mor's fold marker) —
+        # recorded so chain walkers (change_feed_mor) can trace parents
+        **(lineage or {}),
+    )
     return _commit_manifest(
         table_dir, generation, manifest, expected_parent=expected_parent, ref=ref
     )
@@ -667,26 +693,23 @@ def publish(
 
 def retry_commit(write, table_dir: str, max_attempts: int = 50) -> dict:
     """S33 conflict-retry loop — the optimistic-concurrency driver every
-    real table format wraps around its log-tip CAS: derive the next free
-    generation number from the CURRENT committed state, run
-    ``write(generation)`` (which must itself re-read that state —
-    ``publish_append`` / ``merge_cow`` / ``compact`` / ``evolve_schema``
-    all re-resolve the manifest per call, so a retried call is re-derived,
-    never a stale replay), and on any of the conflict shapes — number
-    reserved by a concurrent writer, manifest already existing, pointer
-    moved past this writer's parent — re-derive and try again, bumping
-    past orphan-blocked numbers. Returns the committed manifest.
+    real table format wraps around its log-tip CAS: run ``write(None)``,
+    so the writer reserves the next free generation number itself, and
+    when the pointer moved past this writer's parent
+    (:class:`CommitConflictError`) run it again. ``write`` must re-read
+    the committed state on every call — ``publish_append`` /
+    ``merge_cow`` / ``compact`` / ``evolve_schema`` all re-resolve the
+    manifest per call, so a retried call is re-derived, never a stale
+    replay. Returns the committed manifest.
 
     At 100 TB this is the commit protocol for N independent ingest jobs
     sharing one table: conflicts cost a re-derive of METADATA (and for
     merge/append a re-stage of the batch), never a table rewrite."""
     last: Exception | None = None
-    gen = 0
     for _ in range(max_attempts):
-        gen = max((current_generation(table_dir) or 0) + 1, gen + 1)
         try:
-            return write(gen)
-        except (CommitConflictError, FileExistsError) as e:
+            return write(None)
+        except CommitConflictError as e:
             last = e
     raise RuntimeError(
         f"commit did not land within {max_attempts} attempts"
@@ -708,6 +731,19 @@ def _stage_partitioned(
         return [], {}
     df.write.mode("overwrite").partitionBy(partition_col).parquet(stage)
     return _list_staged(stage, table_dir, partition_col)
+
+
+def _stage(
+    df: DataFrame, table_dir: str, generation: int, partition_col: str | None
+) -> tuple[list[str], list[str], dict[str, str | None] | None]:
+    """Stage ``df`` as this generation's data files, flat through
+    :func:`stage_only` or under ``partition_col``'s Hive layout. Returns
+    (absolute paths, rel paths, rel -> partition value or None)."""
+    if partition_col is None:
+        files = stage_only(df, table_dir, generation)
+        return files, [os.path.relpath(f, table_dir) for f in files], None
+    rels, parts = _stage_partitioned(df, table_dir, generation, partition_col)
+    return [os.path.join(table_dir, rel) for rel in rels], rels, parts
 
 
 def _list_staged(
@@ -743,7 +779,7 @@ def _list_staged(
 def publish_partitioned(
     df: DataFrame,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     partition_col: str,
     stats_columns: list[str] | None = None,
     txn: dict | None = None,
@@ -771,60 +807,14 @@ def publish_partitioned(
     column itself never appears in footers (it lives in the directory
     names), so requesting it simply records nothing for it — pruning on
     the partition column is served by the ``partitions`` map instead.
-    ``constraints``/``enforce_constraints`` follow :func:`publish` (S39)."""
-    if expected_parent is _AUTO:
-        expected_parent = current_generation(table_dir)
-    if constraints is None and expected_parent is not None:
-        try:
-            constraints = read_manifest(
-                table_dir, as_of_generation=expected_parent
-            ).get("constraints")
-        except FileNotFoundError:
-            constraints = None
-    if enforce_constraints:
-        _enforce_constraints(df, constraints, "publish batch")
-    _validate_generation(table_dir, generation)
-    files, partitions = _stage_partitioned(df, table_dir, generation, partition_col)
-    manifest = {
-        "generation": generation,
-        "files": files,
-        "n_files": len(files),
-        "schema": json.loads(df.schema.json()),
-        "partition_col": partition_col,
-        "partitions": partitions,
-    }
-    if stats_columns:
-        manifest["stats"] = _collect_stats(
-            df.sparkSession,
-            table_dir,
-            [os.path.join(table_dir, rel) for rel in files],
-            stats_columns,
-        )
-    if bloom_columns:
-        # S47 on a partitioned layout — same sidecar shape as publish()
-        manifest["bloom_meta"] = _new_bloom_meta(
-            df.sparkSession,
-            table_dir,
-            generation,
-            [os.path.join(table_dir, rel) for rel in files],
-            bloom_columns,
-            bloom_bits,
-        )
-    if lineage:
-        manifest.update(lineage)
-    if constraints:
-        manifest["constraints"] = constraints
-    if txn is not None:
-        manifest["txn"] = txn
-    # same parent-map defaulting as publish (ADVICE r15): replacing an
-    # existing generation must not drop other writers' watermarks
-    if txns is None and expected_parent is not None:
-        txns = _txns_of(read_manifest(table_dir, as_of_generation=expected_parent))
-    folded = _fold_txns(txns, txn)
-    if folded:
-        manifest["txns"] = folded
-    return _commit_manifest(
-        table_dir, generation, manifest, expected_parent=expected_parent
+    ``constraints``/``enforce_constraints`` follow :func:`publish` (S39).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
+    return _publish(
+        df, table_dir, generation, partition_col, None, stats_columns, txn,
+        expected_parent, txns, lineage, constraints, enforce_constraints,
+        bloom_columns, bloom_bits,
     )
 
 
@@ -850,7 +840,7 @@ def _transform_col(kind: str, source: str, param: int | None):
 def publish_hidden_partitioned(
     df: DataFrame,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     transform: tuple,
     stats_columns: list[str] | None = None,
     txn: dict | None = None,
@@ -868,7 +858,10 @@ def publish_hidden_partitioned(
     instead of the derived ``ts_day`` column, and the derived column
     leaking into every SELECT *. ``transform`` is (kind, source_col,
     param): ``("days", "ts", None)``, ``("bucket", "k", 16)``,
-    ``("truncate", "k", 100)``."""
+    ``("truncate", "k", 100)``.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     kind, source, param = transform
     if kind not in _TRANSFORMS:
         raise ValueError(f"unknown transform {kind!r} (have {_TRANSFORMS})")
@@ -998,7 +991,7 @@ def read_hidden(
 
 
 def append_hidden_partitioned(
-    df: DataFrame, table_dir: str, generation: int, txn: dict | None = None
+    df: DataFrame, table_dir: str, generation: int | None, txn: dict | None = None
 ) -> DataFrame:
     """S42/T41 write path for batches: the caller appends LOGICAL rows —
     the derived partition value is recomputed here from the manifest's
@@ -1006,7 +999,10 @@ def append_hidden_partitioned(
     partitioning, the exact failure hidden partitioning exists to
     prevent) — then the ordinary partitioned publish_append commits it
     (carried files keep their partition values, stats/txns carry, same
-    atomic swap)."""
+    atomic swap).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     tr = manifest.get("partition_transform")
     if tr is None:
@@ -1383,7 +1379,7 @@ def read_pruned_multi(
 def compact(
     spark: SparkSession,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     target_files: int = 1,
     stats_columns: list[str] | None = None,
 ) -> dict:
@@ -1406,16 +1402,17 @@ def compact(
     stats (r14). Transaction metadata (``txn``) carries forward verbatim:
     compaction changes the file layout, never the applied-batch watermark
     — dropping it would make a restarted CDC sink re-apply batches the
-    table already absorbed."""
-    _validate_generation(table_dir, generation, reserve=False)
+    table already absorbed.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
+    take_generation(table_dir, generation, reserve=False)
     manifest = read_manifest(table_dir)
     _require_cow(manifest, "compact")
-    pcol = manifest.get("partition_col")
     if stats_columns is None:
         old_stats = manifest.get("stats") or {}
         inherited = sorted({c for per_file in old_stats.values() for c in per_file})
         stats_columns = inherited or None
-    txn = manifest.get("txn")
     df = read_committed(spark, table_dir).coalesce(target_files)
     # the hidden-partitioning spec (S42) is table identity — survive the
     # full rewrite too (the explicit-dict producers carry it directly)
@@ -1424,49 +1421,46 @@ def compact(
         if manifest.get("partition_transform") is not None
         else None
     )
-    # S47 inheritance (ADVICE r16 — compact used to strip the bloom index):
-    # a full rewrite re-indexes every live file into a FRESH sidecar chain
-    bmeta = manifest.get("bloom_meta")
-    bloom_cols = bmeta.get("columns") if bmeta else None
-    bloom_bits = int(bmeta["bits"]) if bmeta else 65536
-    if pcol is not None:
-        # a partitioned generation compacts INTO a partitioned generation —
-        # the layout (and the column that lives in it) must survive
-        return publish_partitioned(
-            df,
-            table_dir,
-            generation,
-            partition_col=pcol,
-            stats_columns=stats_columns,
-            txn=txn,
-            expected_parent=manifest["generation"],
-            txns=_txns_of(manifest),
-            lineage=tr_lineage,
-            # content IS the committed generation — already validated at
-            # its own commit time; re-scanning it here would make
-            # maintenance cost track constraint count (S39)
-            enforce_constraints=False,
-            bloom_columns=bloom_cols,
-            bloom_bits=bloom_bits,
-        )
-    return publish(
-        df,
-        table_dir,
-        generation,
+    return _republish(df, table_dir, generation, manifest, stats_columns, tr_lineage)
+
+
+def _republish(
+    df: DataFrame,
+    table_dir: str,
+    generation: int | None,
+    parent: dict,
+    stats_columns: list[str] | None,
+    lineage: dict | None,
+) -> dict:
+    """Commit ``df``, the parent's own live rows rewritten by compact or
+    compact_mor, as a full replacement of ``parent``: same layout (a
+    partitioned generation rewrites INTO a partitioned one), the
+    parent's txn and watermarks (maintenance never rewinds the applied
+    state), and its bloom columns re-indexed into a fresh sidecar chain
+    (S47; ADVICE r16 — compaction used to strip the index). No
+    constraint scan: the rows were validated at their own commit, and a
+    re-scan would make maintenance cost track constraint count (S39)."""
+    bmeta = parent.get("bloom_meta")
+    kw = dict(
         stats_columns=stats_columns,
-        txn=txn,
-        expected_parent=manifest["generation"],
-        txns=_txns_of(manifest),
-        enforce_constraints=False,  # fold of already-validated data (S39)
-        bloom_columns=bloom_cols,
-        bloom_bits=bloom_bits,
+        txn=parent.get("txn"),
+        expected_parent=parent["generation"],
+        txns=_txns_of(parent),
+        lineage=lineage,
+        enforce_constraints=False,
+        bloom_columns=bmeta.get("columns") if bmeta else None,
+        bloom_bits=int(bmeta["bits"]) if bmeta else 65536,
     )
+    pcol = parent.get("partition_col")
+    if pcol is not None:
+        return publish_partitioned(df, table_dir, generation, pcol, **kw)
+    return publish(df, table_dir, generation, **kw)
 
 
 def compact_partial(
     spark: SparkSession,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     max_file_bytes: int | None = None,
     files: list[str] | None = None,
     target_files: int = 1,
@@ -1492,7 +1486,10 @@ def compact_partial(
     forward (maintenance never rewinds the applied-batch state). On a
     partitioned table the rewrite stages back under the partitionBy
     layout and the new files' partition values come from their Hive
-    dirs."""
+    dirs.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     _require_cow(manifest, "compact_partial")
     all_rel = manifest["files"]
@@ -1512,47 +1509,35 @@ def compact_partial(
     if len(selected) < 2:
         return manifest  # nothing to bin-pack — explicit no-op, no commit
 
-    _validate_generation(table_dir, generation)
-    stats = manifest.get("stats", {})
-    stats_cols = sorted({c for s in stats.values() for c in s}) or None
+    generation = take_generation(table_dir, generation)
+    stats_cols = sorted(
+        {c for s in manifest.get("stats", {}).values() for c in s}
+    ) or None
     pcol = manifest.get("partition_col")
-    partitions = manifest.get("partitions", {})
 
     sel_abs = [os.path.join(table_dir, r) for r in selected]
     rewrite = _read_files(spark, manifest, table_dir, sel_abs).coalesce(
         target_files
     )
-    if pcol is not None:
-        new_rel, new_parts = _stage_partitioned(rewrite, table_dir, generation, pcol)
-        new_files = [os.path.join(table_dir, r) for r in new_rel]
-    else:
-        new_files = stage_only(rewrite, table_dir, generation)
-        new_rel = [os.path.relpath(f, table_dir) for f in new_files]
-        new_parts = None
+    new_files, new_rel, new_parts = _stage(rewrite, table_dir, generation, pcol)
 
-    carried = [r for r in all_rel if r not in set(selected)]
-    new_manifest = {
-        "generation": generation,
-        "files": carried + new_rel,
-        "n_files": len(carried) + len(new_rel),
-        "schema": manifest.get("schema"),
-        "compact": {
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        added=new_rel,
+        removed=selected,
+        added_stats=(
+            _collect_stats(spark, table_dir, new_files, stats_cols)
+            if stats_cols
+            else None
+        ),
+        added_partitions=new_parts,
+        compact={
             "parent": manifest["generation"],
             "rewritten_files": len(selected),
-            "carried_files": len(carried),
+            "carried_files": len(all_rel) - len(selected),
         },
-    }
-    if pcol is not None:
-        new_manifest["partition_col"] = pcol
-        new_manifest["partitions"] = {
-            **{r: partitions.get(r) for r in carried},
-            **new_parts,
-        }
-    if stats_cols:
-        new_manifest["stats"] = {
-            **{r: stats[r] for r in carried if r in stats},
-            **_collect_stats(spark, table_dir, new_files, stats_cols),
-        }
+    )
     if manifest.get("bloom_meta"):
         # S47 carry (ADVICE r16): the rewritten tail gets fresh bitsets,
         # carried files keep theirs via the carried sidecar chain
@@ -1560,29 +1545,6 @@ def compact_partial(
             spark, table_dir, manifest, generation, new_files,
             live_rels=new_manifest["files"],
         )
-    if manifest.get("constraints") is not None:
-        new_manifest["constraints"] = manifest["constraints"]
-    if manifest.get("partition_transform") is not None:
-        # S42: the hidden-partitioning spec is table identity — every
-        # producer that rebuilds the manifest must carry it or the
-        # transform-pruned read path would refuse the next generation
-        new_manifest["partition_transform"] = manifest["partition_transform"]
-    if manifest.get("epoch_maps"):
-        # S40: the selected files were read epoch-mapped and rewritten
-        # under the current logical names — they join the current era
-        new_manifest["epoch"] = manifest.get("epoch", 0)
-        new_manifest["epoch_maps"] = manifest["epoch_maps"]
-        new_manifest["file_epochs"] = {
-            **{
-                rel: manifest.get("file_epochs", {}).get(rel, 0)
-                for rel in carried
-            },
-            **{rel: manifest.get("epoch", 0) for rel in new_rel},
-        }
-    if manifest.get("txn") is not None:
-        new_manifest["txn"] = manifest["txn"]
-    if manifest.get("txns") is not None:
-        new_manifest["txns"] = manifest["txns"]
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
@@ -1591,7 +1553,7 @@ def compact_partial(
 def publish_append(
     df: DataFrame,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     stats_columns: list[str] | None = None,
     ref: str | None = None,
     txn: dict | None = None,
@@ -1624,7 +1586,10 @@ def publish_append(
     partition pruning, S28 stats pruning, and S30's touched-file split
     all keep working across appends. Transaction metadata carries forward
     (appending never rewinds the applied-batch watermark). ``ref`` appends
-    to a branch head instead of main (S38 write-audit-publish)."""
+    to a branch head instead of main (S38 write-audit-publish).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir, ref=ref)
     _require_cow(manifest, "publish_append")
     schema = manifest.get("schema")
@@ -1647,40 +1612,35 @@ def publish_append(
     # reservation LAST, after every cheap validation: a reservation that
     # outlives its writer then only ever means a mid-write crash — the
     # gc-reclaimable torn-commit debris class, never a rejected argument
-    _validate_generation(table_dir, generation, ref=ref)
+    generation = take_generation(table_dir, generation, ref=ref)
 
     pcol = manifest.get("partition_col")
-    if pcol is not None:
-        new_rel, new_parts = _stage_partitioned(df, table_dir, generation, pcol)
-        new_files = [os.path.join(table_dir, rel) for rel in new_rel]
-    else:
-        new_files = stage_only(df, table_dir, generation)
-        new_rel = [os.path.relpath(f, table_dir) for f in new_files]
-        new_parts = None
-    stats = manifest.get("stats", {})
+    new_files, new_rel, new_parts = _stage(df, table_dir, generation, pcol)
     if stats_columns is None:
-        stats_columns = sorted({c for s in stats.values() for c in s}) or None
-    bloom_meta = manifest.get("bloom_meta")
-    new_manifest = {
-        "generation": generation,
-        "files": manifest["files"] + new_rel,
-        "n_files": len(manifest["files"]) + len(new_rel),
-        "schema": schema,
-        "append": {
+        stats_columns = sorted(
+            {c for s in manifest.get("stats", {}).values() for c in s}
+        ) or None
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        added=new_rel,
+        added_stats=(
+            _collect_stats(df.sparkSession, table_dir, new_files, stats_columns)
+            if stats_columns
+            else None
+        ),
+        added_partitions=new_parts,
+        # an appending streaming sink's watermark (T41) — the same Delta
+        # txn pattern as merge_cow's; without a new txn the parent's slot
+        # carries verbatim (appending never rewinds the applied state)
+        txn=txn if txn is not None else manifest.get("txn"),
+        append={
             "parent": manifest["generation"],
             "appended_files": len(new_rel),
             "carried_files": len(manifest["files"]),
         },
-    }
-    if pcol is not None:
-        new_manifest["partition_col"] = pcol
-        new_manifest["partitions"] = {**manifest.get("partitions", {}), **new_parts}
-    if stats_columns:
-        new_manifest["stats"] = {
-            **stats,
-            **_collect_stats(df.sparkSession, table_dir, new_files, stats_columns),
-        }
-    if bloom_meta:
+    )
+    if manifest.get("bloom_meta"):
         # S47 inheritance (the stats rule): appended files get fresh
         # blooms over the table's declared bloom columns in a NEW sidecar;
         # carried files keep their bitsets via the carried sidecar chain
@@ -1688,33 +1648,6 @@ def publish_append(
             df.sparkSession, table_dir, manifest, generation, new_files,
             live_rels=new_manifest["files"],
         )
-    if manifest.get("constraints") is not None:
-        new_manifest["constraints"] = manifest["constraints"]
-    if manifest.get("partition_transform") is not None:
-        # S42: the hidden-partitioning spec is table identity — every
-        # producer that rebuilds the manifest must carry it or the
-        # transform-pruned read path would refuse the next generation
-        new_manifest["partition_transform"] = manifest["partition_transform"]
-    if manifest.get("epoch_maps"):
-        # S40: appended files are written under the CURRENT logical names
-        # (the schema-match guard above enforces it) — tag them with the
-        # current era; carried files keep theirs
-        new_manifest["epoch"] = manifest.get("epoch", 0)
-        new_manifest["epoch_maps"] = manifest["epoch_maps"]
-        new_manifest["file_epochs"] = {
-            **manifest.get("file_epochs", {}),
-            **{rel: manifest.get("epoch", 0) for rel in new_rel},
-        }
-    if txn is not None:
-        # an appending streaming sink's watermark (T41) — the same Delta
-        # txn pattern as merge_cow's; without a new txn the parent's slot
-        # carries verbatim (appending never rewinds the applied state)
-        new_manifest["txn"] = txn
-    elif manifest.get("txn") is not None:
-        new_manifest["txn"] = manifest["txn"]
-    folded = _fold_txns(_txns_of(manifest), txn)
-    if folded:
-        new_manifest["txns"] = folded
     return _commit_manifest(
         table_dir,
         generation,
@@ -1724,7 +1657,7 @@ def publish_append(
     )
 
 
-def evolve_schema(table_dir: str, generation: int, added_fields) -> dict:
+def evolve_schema(table_dir: str, generation: int | None, added_fields) -> dict:
     """S32: additive schema evolution — the manifest analog of Delta/
     Iceberg ``ALTER TABLE ADD COLUMN``, and the one table-format capability
     the family still lacked (r13 verdict #4): commit a NEW generation
@@ -1749,7 +1682,10 @@ def evolve_schema(table_dir: str, generation: int, added_fields) -> dict:
 
     ``added_fields`` is a ``StructType`` or list of ``StructField``.
 
-    At 100 TB: cost is one O(files) manifest write; no file is opened."""
+    At 100 TB: cost is one O(files) manifest write; no file is opened.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     fields = (
         list(added_fields.fields)
         if isinstance(added_fields, StructType)
@@ -1771,49 +1707,34 @@ def evolve_schema(table_dir: str, generation: int, added_fields) -> dict:
         if f.name.lower() in existing:
             raise ValueError(f"column {f.name!r} already exists")
         existing.add(f.name.lower())
-    _validate_generation(table_dir, generation)  # reservation last (see append)
+    generation = take_generation(table_dir, generation)  # last (see append)
     new_schema = {
         **schema,
         "fields": schema["fields"] + json.loads(StructType(fields).json())["fields"],
     }
-    carried = {
-        k: v
-        for k, v in manifest.items()
-        # lineage keys (merge/append/evolve/compact) describe the PARENT's
-        # commit, not this one — everything else (files, partitions, stats,
-        # txn) carries by reference ("compact" was missing from this list
-        # until ADVICE r14: evolving right after a compaction misdescribed
-        # the evolution commit as a compaction)
-        if k not in ("generation", "schema", "merge", "append", "evolve",
-                     "compact", "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {
-        **carried,
-        "generation": generation,
-        "schema": new_schema,
-        "evolve": {
-            "parent": manifest["generation"],
-            "added": [f.name for f in fields],
-        },
-    }
-    if new_manifest.get("epoch_maps"):
+    emaps = manifest.get("epoch_maps")
+    if emaps:
         # S40 interplay: the CURRENT era's files gain the column by plain
         # name-based NULL-fill, so the era map lists it as identity; every
         # EARLIER era deliberately has no entry — files there may carry a
         # previously-DROPPED column's bytes under this name, and the
         # missing entry is what forces NULL instead of resurrecting them
-        cur = str(new_manifest.get("epoch", 0))
-        new_manifest["epoch_maps"] = {
-            k: dict(v) for k, v in new_manifest["epoch_maps"].items()
-        }
-        new_manifest["epoch_maps"][cur].update({f.name: f.name for f in fields})
+        emaps = {k: dict(v) for k, v in emaps.items()}
+        emaps[str(manifest.get("epoch", 0))].update({f.name: f.name for f in fields})
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        schema=new_schema,
+        epoch_maps=emaps,
+        evolve={"parent": manifest["generation"], "added": [f.name for f in fields]},
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
 
 
 def evolve_schema_nested(
-    table_dir: str, generation: int, path: str, added_fields
+    table_dir: str, generation: int | None, path: str, added_fields
 ) -> dict:
     """Additive schema evolution INSIDE a struct column (r15 verdict #6's
     enabling op): append nullable members to the StructType at dotted
@@ -1828,7 +1749,10 @@ def evolve_schema_nested(
     existing STRUCT field (case-insensitively resolved, like Spark), the
     added members must be nullable and must not collide with the target
     struct's existing member names. ``added_fields`` is a ``StructType``
-    or list of ``StructField``."""
+    or list of ``StructField``.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     fields = (
         list(added_fields.fields)
         if isinstance(added_fields, StructType)
@@ -1870,25 +1794,19 @@ def evolve_schema_nested(
         if f.name.lower() in existing:
             raise ValueError(f"member {f.name!r} already exists under {path!r}")
         existing.add(f.name.lower())
-    _validate_generation(table_dir, generation)
+    generation = take_generation(table_dir, generation)
     node["fields"] = (
         node["fields"] + json.loads(StructType(fields).json())["fields"]
     )
-    carried = {
-        k: v
-        for k, v in manifest.items()
-        if k not in ("generation", "schema", "merge", "append", "evolve",
-                     "compact", "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {
-        **carried,
-        "generation": generation,
-        "schema": new_schema,
-        "evolve": {
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        schema=new_schema,
+        evolve={
             "parent": manifest["generation"],
             "added": [f"{path}.{f.name}" for f in fields],
         },
-    }
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
@@ -1897,7 +1815,7 @@ def evolve_schema_nested(
 def alter_constraints(
     spark: SparkSession,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     add: dict | None = None,
     drop: list | None = None,
 ) -> dict:
@@ -1908,7 +1826,10 @@ def alter_constraints(
     every future reader would trust a lie). Data files, stats, partition
     map, and txn watermarks carry by reference; the commit is the same
     atomic pointer swap. MOR generations validate through read_mor (the
-    resolved state is what the constraint must hold over)."""
+    resolved state is what the constraint must hold over).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     constraints = dict(manifest.get("constraints") or {})
     for name in drop or []:
@@ -1927,20 +1848,10 @@ def alter_constraints(
         )
         _enforce_constraints(current, add, "existing table data (ADD CONSTRAINT)")
     constraints.update(add)
-    _validate_generation(table_dir, generation)
-    carried = {
-        k: v
-        for k, v in manifest.items()
-        # same lineage-key exclusion rule as evolve_schema: those keys
-        # describe the PARENT's commit, not this one
-        if k not in ("generation", "constraints", "merge", "append", "evolve",
-                     "compact", "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {**carried, "generation": generation}
-    if constraints:
-        new_manifest["constraints"] = constraints
-    else:
-        new_manifest.pop("constraints", None)
+    generation = take_generation(table_dir, generation)
+    new_manifest = derive_manifest(
+        manifest, generation, constraints=constraints or None
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
@@ -1981,7 +1892,9 @@ def _destructive_evolution_guards(manifest: dict, op: str, column: str) -> None:
         )
 
 
-def rename_column(table_dir: str, generation: int, old: str, new: str) -> dict:
+def rename_column(
+    table_dir: str, generation: int | None, old: str, new: str
+) -> dict:
     """S40: ALTER TABLE RENAME COLUMN as ONE metadata commit — the
     name-mapped analog of Iceberg's field-ID rename (Delta's column
     mapping): no data file is opened or rewritten. Existing files keep the
@@ -1993,7 +1906,10 @@ def rename_column(table_dir: str, generation: int, old: str, new: str) -> dict:
     stats rekey with it (same physical bytes, so S28 pruning keeps
     working); txn watermarks and constraints carry by reference.
     Constraints that reference the old name refuse the rename (they would
-    silently stop binding)."""
+    silently stop binding).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     _destructive_evolution_guards(manifest, "rename_column", old)
     schema = manifest["schema"]
@@ -2026,31 +1942,23 @@ def rename_column(table_dir: str, generation: int, old: str, new: str) -> dict:
         rel: {(new if c == old else c): rng for c, rng in per.items()}
         for rel, per in (manifest.get("stats") or {}).items()
     }
-    _validate_generation(table_dir, generation)
-    carried = {
-        k: v
-        for k, v in manifest.items()
-        if k not in ("generation", "schema", "stats", "epoch", "epoch_maps",
-                     "file_epochs", "merge", "append", "evolve", "compact",
-                     "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {
-        **carried,
-        "generation": generation,
-        "schema": new_schema,
-        "epoch": new_epoch,
-        "epoch_maps": emaps,
-        "file_epochs": file_epochs,
-        "rename": {"parent": manifest["generation"], "from": old, "to": new},
-    }
-    if stats:
-        new_manifest["stats"] = stats
+    generation = take_generation(table_dir, generation)
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        schema=new_schema,
+        stats=stats or None,
+        epoch=new_epoch,
+        epoch_maps=emaps,
+        file_epochs=file_epochs,
+        rename={"parent": manifest["generation"], "from": old, "to": new},
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
 
 
-def drop_column(table_dir: str, generation: int, name: str) -> dict:
+def drop_column(table_dir: str, generation: int | None, name: str) -> dict:
     """S40: ALTER TABLE DROP COLUMN as ONE metadata commit: the column
     leaves the logical schema and every era's map, and a NEW identity era
     opens — load-bearing for re-adds: a later ``evolve_schema`` of the
@@ -2059,7 +1967,10 @@ def drop_column(table_dir: str, generation: int, name: str) -> dict:
     is the classic name-based-evolution bug, and the era boundary is what
     prevents it; Iceberg solves this with field IDs, this manifest with
     eras). Stats entries for the column are removed; constraints
-    referencing it refuse the drop; dropping the last column refuses."""
+    referencing it refuse the drop; dropping the last column refuses.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     _destructive_evolution_guards(manifest, "drop_column", name)
     schema = manifest["schema"]
@@ -2089,25 +2000,17 @@ def drop_column(table_dir: str, generation: int, name: str) -> dict:
         for rel, per in (manifest.get("stats") or {}).items()
     }
     stats = {rel: per for rel, per in stats.items() if per}
-    _validate_generation(table_dir, generation)
-    carried = {
-        k: v
-        for k, v in manifest.items()
-        if k not in ("generation", "schema", "stats", "epoch", "epoch_maps",
-                     "file_epochs", "merge", "append", "evolve", "compact",
-                     "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {
-        **carried,
-        "generation": generation,
-        "schema": new_schema,
-        "epoch": new_epoch,
-        "epoch_maps": emaps,
-        "file_epochs": file_epochs,
-        "drop": {"parent": manifest["generation"], "column": name},
-    }
-    if stats:
-        new_manifest["stats"] = stats
+    generation = take_generation(table_dir, generation)
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        schema=new_schema,
+        stats=stats or None,
+        epoch=new_epoch,
+        epoch_maps=emaps,
+        file_epochs=file_epochs,
+        drop={"parent": manifest["generation"], "column": name},
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=manifest["generation"]
     )
@@ -2163,7 +2066,7 @@ def merge_cow(
     table_dir: str,
     changes: DataFrame,
     key_col: str,
-    generation: int,
+    generation: int | None,
     op_col: str = "op",
     seq_col: str = "seq",
     delete_op: str = "d",
@@ -2228,7 +2131,10 @@ def merge_cow(
       the old row). Honored only for string/int partition columns, whose
       batch values render identically to the Hive directory names the
       manifest records; other types fall back to key-range pruning
-      (conservative, never a wrong skip)."""
+      (conservative, never a wrong skip).
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     import bisect
 
     from pyspark.sql import functions as F  # noqa: N812
@@ -2285,7 +2191,7 @@ def merge_cow(
         _enforce_constraints(
             upserts, manifest.get("constraints"), "merge_cow upsert batch"
         )
-        _validate_generation(table_dir, generation, ref=ref)  # reservation last
+        generation = take_generation(table_dir, generation, ref=ref)  # last
 
         # Bounded-metadata collect: the batch's distinct keys (plus, in stable
         # partitioned mode, each key's partition value and delete flag), sorted
@@ -2370,12 +2276,9 @@ def merge_cow(
         rewrite = _merge_rewrite(
             spark, manifest, table_dir, touched_abs, final, upserts, key_col
         )
-        if pcol is not None:
-            new_rel, new_parts = _stage_partitioned(rewrite, table_dir, generation, pcol)
-            new_files = [os.path.join(table_dir, rel) for rel in new_rel]
-        else:
-            new_files = stage_only(rewrite, table_dir, generation)
-            new_parts = None
+        new_files, new_rel, new_parts = _stage(
+            rewrite, table_dir, generation, pcol
+        )
 
         change_files: list[str] | None = None
         if record_change_feed:
@@ -2457,34 +2360,33 @@ def merge_cow(
                 pre.unpersist()
 
         stats_cols = sorted({c for s in stats.values() for c in s} | {key_col})
-        new_manifest = {
-            "generation": generation,
-            "files": untouched_rel + [os.path.relpath(f, table_dir) for f in new_files],
-            "n_files": len(untouched_rel) + len(new_files),
-            "schema": schema,
-            "stats": {
-                **{rel: stats[rel] for rel in untouched_rel if rel in stats},
-                **_collect_stats(spark, table_dir, new_files, stats_cols),
-            },
-            "merge": {
+        new_manifest = derive_manifest(
+            manifest,
+            generation,
+            added=new_rel,
+            removed=touched_rel,
+            added_stats=_collect_stats(spark, table_dir, new_files, stats_cols),
+            added_partitions=new_parts,
+            # caller-supplied transaction metadata (e.g. a streaming sink's
+            # batch_id) recorded IN the committed manifest — the Delta
+            # txn-version pattern: a restarted writer reads the committed
+            # watermark and skips already-applied batches, so replays are
+            # idempotent without exactly-once delivery. Every writer's
+            # watermark carries in the folded per-tag map (ADVICE r15)
+            txn=txn,
+            merge={
                 "parent": manifest["generation"],
                 "rewritten_files": len(touched_rel),
                 "carried_files": len(untouched_rel),
                 "changed_keys": n_keys,
             },
-        }
-        if change_files is not None:
-            # T46: the commit's materialized row-level feed — gc/vacuum protect
-            # these exactly like data files (committed_files lists them), and
-            # the changeFeed stream plans them as this interval's splits
-            new_manifest["change_files"] = change_files
-            new_manifest["change_feed_key"] = key_col
-        if pcol is not None:
-            new_manifest["partition_col"] = pcol
-            new_manifest["partitions"] = {
-                **{rel: partitions.get(rel) for rel in untouched_rel},
-                **new_parts,
-            }
+            # T46: the commit's materialized row-level feed — gc/vacuum
+            # protect these exactly like data files (committed_files lists
+            # them), and the changeFeed stream plans them as this
+            # interval's splits
+            change_files=change_files,
+            change_feed_key=key_col if change_files is not None else None,
+        )
         if manifest.get("bloom_meta"):
             # S47 carry (ADVICE r16): rewritten files get fresh bitsets in a
             # new sidecar, untouched files keep theirs via the carried chain
@@ -2492,44 +2394,6 @@ def merge_cow(
                 spark, table_dir, manifest, generation, new_files,
                 live_rels=new_manifest["files"],
             )
-        if manifest.get("constraints") is not None:
-            new_manifest["constraints"] = manifest["constraints"]
-        if manifest.get("partition_transform") is not None:
-            # S42: the hidden-partitioning spec is table identity — every
-            # producer that rebuilds the manifest must carry it or the
-            # transform-pruned read path would refuse the next generation
-            new_manifest["partition_transform"] = manifest["partition_transform"]
-        if manifest.get("epoch_maps"):
-            # S40: the rewrite reads touched files epoch-mapped and stages
-            # under the CURRENT logical names — rewritten files join the
-            # current era, untouched files keep theirs
-            new_manifest["epoch"] = manifest.get("epoch", 0)
-            new_manifest["epoch_maps"] = manifest["epoch_maps"]
-            new_manifest["file_epochs"] = {
-                **{
-                    rel: manifest.get("file_epochs", {}).get(rel, 0)
-                    for rel in untouched_rel
-                },
-                **{
-                    os.path.relpath(f, table_dir): manifest.get("epoch", 0)
-                    for f in new_files
-                },
-            }
-        if txn is not None:
-            # caller-supplied transaction metadata (e.g. a streaming sink's
-            # batch_id) recorded IN the committed manifest — the Delta
-            # txn-version pattern: a restarted writer reads the committed
-            # watermark and skips already-applied batches, so replays are
-            # idempotent without exactly-once delivery
-            new_manifest["txn"] = txn
-        # carry EVERY writer's watermark: parent's per-tag map folded with this
-        # commit's tagged txn (ADVICE r15 — merge is the primary CDC sink
-        # commit path; dropping the map here would erase other writers'
-        # replay watermarks on the first merge, the exact last-writer-wins
-        # loss the txns map exists to prevent)
-        folded = _fold_txns(_txns_of(manifest), txn)
-        if folded:
-            new_manifest["txns"] = folded
         return _commit_manifest(
             table_dir,
             generation,
@@ -3078,7 +2942,10 @@ def _feed_segment(
 
 
 def restore(
-    table_dir: str, generation: int, as_of_generation: int, ref: str | None = None
+    table_dir: str,
+    generation: int | None,
+    as_of_generation: int,
+    ref: str | None = None,
 ) -> dict:
     """S37: RESTORE — Delta RESTORE / Iceberg rollback_to_snapshot: commit
     a NEW generation whose content is a retained older generation's,
@@ -3109,7 +2976,10 @@ def restore(
     instead of abandoning the whole branch. Branches share the
     generation-manifest space, so the restore commit is the same
     by-reference shape; only the pointer it swaps differs, and main's
-    readers never see any of it."""
+    readers never see any of it.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir, ref=ref)
     target = read_manifest(table_dir, as_of_generation)
     if as_of_generation == manifest["generation"]:
@@ -3128,22 +2998,15 @@ def restore(
             f"(first: {missing[0]!r}) — restore requires the target "
             f"generation to be retained (un-gc'd)"
         )
-    _validate_generation(table_dir, generation, ref=ref)
-    carried = {
-        k: v
-        for k, v in target.items()
-        # lineage keys describe the TARGET's own commit, not this one
-        if k not in ("generation", "merge", "append", "evolve", "compact",
-                     "mor", "fold", "restore", "rename", "drop")
-    }
-    new_manifest = {
-        **carried,
-        "generation": generation,
-        "restore": {
+    generation = take_generation(table_dir, generation, ref=ref)
+    new_manifest = derive_manifest(
+        target,
+        generation,
+        restore={
             "parent": manifest["generation"],
             "restored_from": target["generation"],
         },
-    }
+    )
     return _commit_manifest(
         table_dir, generation, new_manifest,
         expected_parent=manifest["generation"],
@@ -3171,7 +3034,7 @@ def merge_mor(
     table_dir: str,
     changes: DataFrame,
     key_col: str,
-    generation: int,
+    generation: int | None,
     op_col: str = "op",
     seq_col: str = "seq",
     delete_op: str = "d",
@@ -3230,7 +3093,10 @@ def merge_mor(
     a NULL partition value, so they land in the kind dir's null
     partition and never enter the partitions map. Same input
     contract as merge_cow: per-key order across batches, last-event-wins
-    within a batch."""
+    within a batch.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     from pyspark.sql import functions as F  # noqa: N812
 
     manifest = read_manifest(table_dir)
@@ -3274,7 +3140,7 @@ def merge_mor(
     _enforce_constraints(
         upserts, manifest.get("constraints"), "merge_mor upsert batch"
     )
-    _validate_generation(table_dir, generation)
+    generation = take_generation(table_dir, generation)
 
     # one staging write for both outputs; a NULL op stages a delete only,
     # like a delete op
@@ -3341,79 +3207,39 @@ def merge_mor(
         if b64 is not None:
             entry["b64"] = b64
         delete_meta[rel] = entry
-    new_manifest = {
-        "generation": generation,
-        "files": manifest["files"] + new_rels,
-        "n_files": len(manifest["files"]) + len(new_rels),
-        "schema": schema,
-        "file_seq": file_seq,
-        "delete_files": list(manifest.get("delete_files") or []) + delete_rels,
-        "delete_seq": {
+    n_deletes = len(manifest.get("delete_files") or []) + len(delete_rels)
+    new_manifest = derive_manifest(
+        manifest,
+        generation,
+        added=new_rels,
+        added_stats=_collect_stats(spark, table_dir, new_files, stats_cols),
+        added_partitions=new_parts,
+        txn=txn,
+        file_seq=file_seq,
+        delete_files=list(manifest.get("delete_files") or []) + delete_rels,
+        delete_seq={
             **(manifest.get("delete_seq") or {}),
             **{rel: generation for rel in delete_rels},
         },
-        "delete_meta": delete_meta,
-        "mor_key": key_col,
-        "stats": {
-            **stats,
-            **_collect_stats(spark, table_dir, new_files, stats_cols),
-        },
-        "mor": {
+        delete_meta=delete_meta,
+        mor_key=key_col,
+        mor={
             "parent": parent_gen,
             "appended_files": len(new_rels),
-            "delete_files_total": len(manifest.get("delete_files") or [])
-            + len(delete_rels),
+            "delete_files_total": n_deletes,
         },
-    }
-    if pcol is not None:
-        new_manifest["partition_col"] = pcol
-        new_manifest["partitions"] = {
-            **manifest.get("partitions", {}),
-            **(new_parts or {}),
-        }
-    if manifest.get("bloom_meta") is not None:
-        # S47 × S36 (r17): the declared bloom index is table identity and
-        # SURVIVES merge-on-read epochs — carried verbatim, no fresh
-        # bitsets for the epoch's files (point-lookup pruning is
-        # suspended while reads resolve through read_mor anyway, and
-        # compact_mor's fold re-indexes every live file). Dropping it
-        # here made one MOR epoch permanently strip the index.
-        new_manifest["bloom_meta"] = manifest["bloom_meta"]
-    if manifest.get("constraints") is not None:
-        new_manifest["constraints"] = manifest["constraints"]
-    if manifest.get("partition_transform") is not None:
-        # S42: the hidden-partitioning spec is table identity — every
-        # producer that rebuilds the manifest must carry it or the
-        # transform-pruned read path would refuse the next generation
-        new_manifest["partition_transform"] = manifest["partition_transform"]
-    if manifest.get("epoch_maps"):
-        # S40×S36 (r16 scope lift): a MERGE-ON-READ commit on a rename/
-        # drop-evolved table. New upsert files are written under the
-        # CURRENT logical names (the column checks above enforce it), so
-        # they tag with the current era and carried files keep theirs —
-        # the MOR resolve's data scans already go through _read_files,
-        # which maps every era to the logical plane BEFORE
-        # the anti-join, so a key renamed in an older era still kills
-        # that era's rows. Delete files are exempt from mapping by
-        # construction: they are read directly with the current logical
-        # key schema, which is safe because rename/drop REFUSE while a
-        # delete log is pending (_require_cow in the evolution guards) —
-        # a pending delete file's key name can never drift from the
-        # schema's.
-        new_manifest["epoch"] = manifest.get("epoch", 0)
-        new_manifest["epoch_maps"] = manifest["epoch_maps"]
-        new_manifest["file_epochs"] = {
-            **manifest.get("file_epochs", {}),
-            **{rel: manifest.get("epoch", 0) for rel in new_rels},
-        }
-    if txn is not None:
-        new_manifest["txn"] = txn
-    folded = _fold_txns(_txns_of(manifest), txn)
-    if folded:
-        new_manifest["txns"] = folded
+    )
+    # The carried bloom_meta (S47 × S36, r17) gets no fresh bitsets for
+    # this epoch's files: point-lookup pruning is suspended while reads
+    # resolve through read_mor, and compact_mor's fold re-indexes every
+    # live file. Carried era maps (S40 × S36, r16) apply to the data
+    # scans only: delete files are read with the current logical key
+    # schema, which is safe because rename/drop refuse while a delete
+    # log is pending, so a pending delete file's key name never drifts.
     return _commit_manifest(
         table_dir, generation, new_manifest, expected_parent=parent_gen
     )
+
 
 def read_mor(
     spark: SparkSession, table_dir: str, as_of_generation: int | None = None
@@ -3480,7 +3306,7 @@ def _read_mor_manifest(
 def compact_mor(
     spark: SparkSession,
     table_dir: str,
-    generation: int,
+    generation: int | None,
     target_files: int = 4,
     stats_columns: list[str] | None = None,
     cluster_by: list[str] | None = None,
@@ -3509,7 +3335,10 @@ def compact_mor(
     O(window) range scans for the next epoch. Refused on a partitioned
     table: the Hive layout is that table's declared clustering, and the
     per-partition staging would multiply the range split into
-    ranges × partitions fragments."""
+    ranges × partitions fragments.
+
+    ``generation=None`` takes the next free generation number; an
+    explicit number must exceed the committed one and be unused."""
     manifest = read_manifest(table_dir)
     if stats_columns is None:
         old_stats = manifest.get("stats") or {}
@@ -3518,9 +3347,8 @@ def compact_mor(
         if mk:
             inherited = sorted(set(inherited) | {mk})
         stats_columns = inherited or None
-    pcol_early = manifest.get("partition_col")
     if cluster_by:
-        if pcol_early is not None:
+        if manifest.get("partition_col") is not None:
             raise ValueError(
                 "cluster_by on a partitioned table: the partition layout "
                 "is the declared clustering — fold without cluster_by, or "
@@ -3543,43 +3371,13 @@ def compact_mor(
         )
     else:
         resolved = read_mor(spark, table_dir).coalesce(target_files)
-    pcol = manifest.get("partition_col")
     # S47 × S36 (r17): the fold re-indexes every live file — the carried
     # bloom_meta (merge_mor preserves it through the epoch) declares the
     # columns/bits, and the fresh COW generation starts a fresh sidecar
     # chain, exactly like compact()
-    bmeta = manifest.get("bloom_meta")
-    bloom_cols = bmeta.get("columns") if bmeta else None
-    bloom_bits = int(bmeta["bits"]) if bmeta else 65536
-    if pcol is not None:
-        # a partitioned MOR log folds INTO a partitioned COW generation —
-        # the layout (and the column that lives in it) must survive
-        return publish_partitioned(
-            resolved,
-            table_dir,
-            generation,
-            partition_col=pcol,
-            stats_columns=stats_columns,
-            txn=manifest.get("txn"),
-            expected_parent=manifest["generation"],
-            txns=_txns_of(manifest),
-            lineage={"fold": {"parent": manifest["generation"]}},
-            enforce_constraints=False,  # fold of already-validated rows (S39)
-            bloom_columns=bloom_cols,
-            bloom_bits=bloom_bits,
-        )
-    return publish(
-        resolved,
-        table_dir,
-        generation,
-        stats_columns=stats_columns,
-        txn=manifest.get("txn"),
-        expected_parent=manifest["generation"],
-        txns=_txns_of(manifest),
-        lineage={"fold": {"parent": manifest["generation"]}},
-        enforce_constraints=False,  # fold of already-validated rows (S39)
-        bloom_columns=bloom_cols,
-        bloom_bits=bloom_bits,
+    return _republish(
+        resolved, table_dir, generation, manifest, stats_columns,
+        {"fold": {"parent": manifest["generation"]}},
     )
 
 
@@ -3875,7 +3673,7 @@ def gc(
     data dir — and possibly an orphan manifest — numbered ABOVE the
     committed generation, which layer 2's floor would otherwise protect
     forever (and the orphan manifest would permanently block reuse of
-    that generation number via ``_validate_generation``). An explicit
+    that generation number by a writer that names it explicitly). An explicit
     ``older_than_s`` overrides the floor for above-committed debris: age
     past the threshold is the caller's assertion that no swap is still
     imminent, so provably-stale torn commits are reclaimed. With

@@ -267,15 +267,14 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         _commit_manifest,
         _file_blooms,
         _file_stats,
-        _fold_txns,
         _parent_gen_of,
-        _reserve_next,
         _reserve_path,
         _stable_bucket,
-        _txns_of,
         current_generation,
+        derive_manifest,
         read_manifest,
         table_blooms,
+        take_generation,
         txn_watermark,
     )
 
@@ -659,7 +658,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             if not self.skip and _reserve:
                 # reservation BEFORE any data stages (S33) — losers of the
                 # number race re-pick higher having written nothing
-                self.gen = _reserve_next(self.table_dir, (pgen or 0) + 1)
+                self.gen = take_generation(self.table_dir, None)
 
         def _stage_root(self):
             return _os.path.join(self.table_dir, "data", f"gen-{self.gen}")
@@ -777,9 +776,11 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             """Commit the tasks' staged files as generation ``gen`` on top
             of ``parent`` (generation ``pgen``, None for a new table):
             appended to its files when ``carry``, else replacing them.
-            Stats, partition values and the bloom chain carry the same
-            way, ``txn`` folds into the watermark map, and the manifest
-            commits through ``commit_core._commit_manifest``."""
+            The manifest derives from the parent through
+            ``commit_core.derive_manifest`` (stats, partition values and
+            the watermark map carry the same way; the bloom chain extends
+            or restarts) and commits through
+            ``commit_core._commit_manifest``."""
             rels, stats, pvals, blooms = [], {}, {}, {}
             for m in messages:
                 if m is not None:
@@ -788,36 +789,33 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                     pvals.update(m.pvals)
                     blooms.update(m.blooms)
             rels.sort()
-            base = parent if carry else {}
-            schema = (
-                _json.loads(self.schema_json) if parent is None else parent["schema"]
-            )
+            parent = parent or {}
+            schema = parent.get("schema") or _json.loads(self.schema_json)
             if self.evolved:
                 schema = {**schema, "fields": schema["fields"] + self.evolved}
-            manifest = {
-                "generation": gen,
-                "files": base.get("files", []) + rels,
-                "n_files": len(base.get("files", [])) + len(rels),
-                "schema": schema,
-            }
-            if self.evolved:
-                manifest["evolve"] = {
+            # stats are recorded only when some live file has them
+            carried_stats = carry and parent.get("stats")
+            manifest = derive_manifest(
+                parent,
+                gen,
+                added=rels,
+                removed=() if carry else parent.get("files", []),
+                added_stats=stats if stats or carried_stats else None,
+                added_partitions=pvals,
+                txn=txn if txn is not None else parent.get("txn"),
+                schema=schema,
+                partition_col=self.pcol,
+                evolve={
                     "parent": pgen,
                     "added": [f["name"] for f in self.evolved],
-                }
-            if carry:
-                manifest["append"] = {
+                } if self.evolved else None,
+                append={
                     "parent": pgen,
                     "appended_files": len(rels),
                     "carried_files": len(parent["files"]),
-                }
-            if self.pcol is not None:
-                manifest["partition_col"] = self.pcol
-                manifest["partitions"] = {**base.get("partitions", {}), **pvals}
-            merged_stats = {**(base.get("stats") or {}), **stats}
-            if merged_stats:
-                manifest["stats"] = merged_stats
-            if parent is not None and parent.get("bloom_meta"):
+                } if carry else None,
+            )
+            if parent.get("bloom_meta"):
                 # S47 carry (ADVICE r16): new files' bitsets extend the
                 # parent's sidecar chain (folded at its cap); an overwrite
                 # re-indexed every live file, so it starts a fresh chain
@@ -829,13 +827,6 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 manifest["bloom_meta"] = _carry_blooms(
                     self.table_dir, bparent, gen, blooms, manifest["files"]
                 )
-            if txn is not None:
-                manifest["txn"] = txn
-            elif parent and parent.get("txn") is not None:
-                manifest["txn"] = parent["txn"]
-            folded = _fold_txns(_txns_of(parent), txn)
-            if folded:
-                manifest["txns"] = folded
             _commit_manifest(self.table_dir, gen, manifest, pgen)
 
         def abort(self, messages):
@@ -945,7 +936,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 messages,
                 parent,
                 pgen,
-                _reserve_next(self.table_dir, (pgen or 0) + 1),
+                take_generation(self.table_dir, None),
                 carry=parent is not None,
                 txn={"tag": self.tag, "version": int(batchId)},
             )

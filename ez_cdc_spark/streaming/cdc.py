@@ -1160,10 +1160,11 @@ def lakehouse_merge_batch(
 
     Idempotence is the Delta txn-version pattern: the committed manifest
     records (tag, batch_id); a replayed batch at or below the committed
-    watermark is skipped without reading its data. A crashed attempt can
-    leave an orphan manifest at the next generation number — recovery
-    bumps to the next free number (the orphan is provably uncommitted:
-    the pointer never swapped; gc(older_than_s) reclaims it later).
+    watermark is skipped without reading its data. Every commit takes the
+    next free generation number (``generation=None``), so a crashed
+    attempt's orphan manifest never blocks the retry (the orphan is
+    provably uncommitted: the pointer never swapped; gc(older_than_s)
+    reclaims it later).
 
     Same input contract as T9: per-key order ACROSS batches (the lsn-split
     replay / a keyed Kafka partition) — the merge forgets a tombstone's
@@ -1215,7 +1216,6 @@ def lakehouse_merge_batch(
             spark,
             table_dir,
             changes,
-            man,
             tag,
             batch_id,
             max_files,
@@ -1232,7 +1232,6 @@ def _merge_and_maintain(
     spark,
     table_dir: str,
     changes: DataFrame,
-    man: dict,
     tag: str,
     batch_id: int,
     max_files: int | None,
@@ -1243,7 +1242,7 @@ def _merge_and_maintain(
     record_change_feed: bool = False,
 ) -> dict:
     """The lakehouse sinks' shared per-batch tail (t30/t30b/t31): one
-    merge_cow commit with orphan-number skipping, then the steady-state
+    merge_cow commit at the next free generation number, then the steady-state
     maintenance policy — threshold-triggered PARTIAL compaction (s34: a
     maintenance cycle costs the CHURN, not the table; the full-compact
     policy would re-write petabytes per trigger at 100 TB), dir-granular
@@ -1260,40 +1259,24 @@ def _merge_and_maintain(
         vacuum,
     )
 
-    gen = man["generation"] + 1
-    for _ in range(100):
-        try:
-            merged = merge_cow(
-                spark,
-                table_dir,
-                changes,
-                key_col="id",
-                generation=gen,
-                txn={"tag": tag, "batch_id": batch_id},
-                record_change_feed=record_change_feed,
-            )
-            break
-        except FileExistsError:
-            gen += 1  # orphan manifest from a crashed attempt — skip over
-    else:
-        raise RuntimeError(f"no free generation number near {gen}")
+    merged = merge_cow(
+        spark,
+        table_dir,
+        changes,
+        key_col="id",
+        generation=None,
+        txn={"tag": tag, "batch_id": batch_id},
+        record_change_feed=record_change_feed,
+    )
 
     if max_files is not None and merged["n_files"] > max_files:
-        cgen = merged["generation"] + 1
-        for _ in range(100):
-            try:
-                after = compact_partial(
-                    spark,
-                    table_dir,
-                    cgen,
-                    max_file_bytes=compact_small_file_bytes,
-                    target_files=compact_target_files,
-                )
-                break
-            except FileExistsError:
-                cgen += 1
-        else:
-            raise RuntimeError(f"no free generation number near {cgen}")
+        after = compact_partial(
+            spark,
+            table_dir,
+            None,
+            max_file_bytes=compact_small_file_bytes,
+            target_files=compact_target_files,
+        )
         if after["generation"] != merged["generation"] and not retain_superseded:
             gc(table_dir, older_than_s=gc_older_than_s)
             # file-level reclaim (r14): gc is dir-granular, but the
@@ -1391,7 +1374,7 @@ def lakehouse_drift_merge_batch(
             StructType,
         )
 
-        from ez_cdc_spark.sources.manifest import evolve_schema, read_manifest
+        from ez_cdc_spark.sources.manifest import evolve_schema
 
         # 1. detect: distinct after.* key PATHS in THIS batch — recursing
         # into every struct member the STORED schema declares (r15 verdict
@@ -1427,35 +1410,17 @@ def lakehouse_drift_merge_batch(
 
         # 2. evolve: additive metadata commits, then re-resolve the manifest
         if new_cols:
-            gen = man["generation"] + 1
-            for _ in range(100):
-                try:
-                    evolve_schema(
-                        table_dir,
-                        gen,
-                        [StructField(c, StringType(), True) for c in new_cols],
-                    )
-                    break
-                except FileExistsError:
-                    gen += 1  # orphan from a crashed attempt — skip over
-            else:
-                raise RuntimeError(f"no free generation number near {gen}")
-            man = read_manifest(table_dir)
+            man = evolve_schema(
+                table_dir,
+                None,
+                [StructField(c, StringType(), True) for c in new_cols],
+            )
         for p, k in new_nested:
             from ez_cdc_spark.sources.manifest import evolve_schema_nested
 
-            gen = man["generation"] + 1
-            for _ in range(100):
-                try:
-                    evolve_schema_nested(
-                        table_dir, gen, p, [StructField(k, StringType(), True)]
-                    )
-                    break
-                except FileExistsError:
-                    gen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {gen}")
-            man = read_manifest(table_dir)
+            man = evolve_schema_nested(
+                table_dir, None, p, [StructField(k, StringType(), True)]
+            )
 
         # 3. decode with the stored schema, merge as usual
         stored = StructType.fromJson(man["schema"])
@@ -1485,7 +1450,6 @@ def lakehouse_drift_merge_batch(
             spark,
             table_dir,
             changes,
-            man,
             tag,
             batch_id,
             max_files,
@@ -1629,24 +1593,17 @@ def lakehouse_wap_batch(
         try:
             drop_branch(table_dir, branch)  # crashed attempt's leftover
             create_branch(table_dir, branch)
-            gen = man["generation"] + 1
 
             def _merge(df):
-                nonlocal gen
-                for _ in range(100):
-                    try:
-                        return merge_cow(
-                            spark,
-                            table_dir,
-                            df,
-                            key_col="id",
-                            generation=gen,
-                            txn={"tag": tag, "batch_id": batch_id},
-                            ref=branch,
-                        )
-                    except FileExistsError:
-                        gen += 1  # orphan number from a crashed attempt
-                raise RuntimeError(f"no free generation number near {gen}")
+                return merge_cow(
+                    spark,
+                    table_dir,
+                    df,
+                    key_col="id",
+                    generation=None,
+                    txn={"tag": tag, "batch_id": batch_id},
+                    ref=branch,
+                )
 
             try:
                 merged = _merge(changes)
@@ -1697,21 +1654,13 @@ def lakehouse_wap_batch(
                 vacuum,
             )
 
-            cgen = merged["generation"] + 1
-            for _ in range(100):
-                try:
-                    after = compact_partial(
-                        spark,
-                        table_dir,
-                        cgen,
-                        max_file_bytes=compact_small_file_bytes,
-                        target_files=compact_target_files,
-                    )
-                    break
-                except FileExistsError:
-                    cgen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {cgen}")
+            after = compact_partial(
+                spark,
+                table_dir,
+                None,
+                max_file_bytes=compact_small_file_bytes,
+                target_files=compact_target_files,
+            )
             if after["generation"] != merged["generation"]:
                 gc(table_dir, older_than_s=gc_older_than_s)
                 vacuum(
@@ -1787,7 +1736,7 @@ def catalog_fanout_batch(
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources import catalog as C
-        from ez_cdc_spark.sources.manifest import current_generation, merge_cow
+        from ez_cdc_spark.sources.manifest import merge_cow
 
         spark = batch.sparkSession
         snap = C.snapshot(catalog_dir)
@@ -1818,14 +1767,9 @@ def catalog_fanout_batch(
 
         def _merge(table, changes, key):
             td = C.table_dir(catalog_dir, table)
-            gen = (current_generation(td) or 0) + 1
-            for _ in range(100):
-                try:
-                    merge_cow(spark, td, changes, key_col=key, generation=gen)
-                    return gen
-                except FileExistsError:
-                    gen += 1  # crashed attempt's orphan — skip over
-            raise RuntimeError(f"no free generation number near {gen}")
+            return merge_cow(
+                spark, td, changes, key_col=key, generation=None
+            )["generation"]
 
         gen_state = _merge(state_table, state_changes, "id")
         gen_log = _merge(log_table, log_changes, "lsn")
@@ -1960,17 +1904,9 @@ def event_lake_append_batch(
             F.col("ts").alias("ts"),
             F.col("value").cast("decimal(12,2)").alias("value"),
         )
-        gen = man["generation"] + 1
-        for _ in range(100):
-            try:
-                committed = append_hidden_partitioned(
-                    rows, table_dir, gen, txn={"tag": tag, "batch_id": batch_id}
-                )
-                break
-            except FileExistsError:
-                gen += 1
-        else:
-            raise RuntimeError(f"no free generation number near {gen}")
+        committed = append_hidden_partitioned(
+            rows, table_dir, None, txn={"tag": tag, "batch_id": batch_id}
+        )
 
         if max_files is not None and committed["n_files"] > max_files:
             from ez_cdc_spark.sources.manifest import (
@@ -1979,21 +1915,13 @@ def event_lake_append_batch(
                 vacuum,
             )
 
-            cgen = committed["generation"] + 1
-            for _ in range(100):
-                try:
-                    after = compact_partial(
-                        spark,
-                        table_dir,
-                        cgen,
-                        max_file_bytes=compact_small_file_bytes,
-                        target_files=compact_target_files,
-                    )
-                    break
-                except FileExistsError:
-                    cgen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {cgen}")
+            after = compact_partial(
+                spark,
+                table_dir,
+                None,
+                max_file_bytes=compact_small_file_bytes,
+                target_files=compact_target_files,
+            )
             if after["generation"] != committed["generation"]:
                 gc(table_dir, older_than_s=gc_older_than_s)
                 vacuum(
@@ -2294,20 +2222,14 @@ def consume_feed_step(
     try:
         if changes.isEmpty():
             return None  # zero net change: keep cursor, nothing to commit
-        gen = b_man["generation"] + 1
-        for _ in range(100):
-            try:
-                return merge_cow(
-                    spark,
-                    agg_dir,
-                    changes,
-                    key_col="first_name",
-                    generation=gen,
-                    txn={"tag": consumer_tag, "consumed_gen": cur},
-                )
-            except FileExistsError:
-                gen += 1  # orphan manifest from a crashed attempt — skip over
-        raise RuntimeError(f"no free generation number near {gen}")
+        return merge_cow(
+            spark,
+            agg_dir,
+            changes,
+            key_col="first_name",
+            generation=None,
+            txn={"tag": consumer_tag, "consumed_gen": cur},
+        )
     finally:
         changes.unpersist()
 
@@ -2361,7 +2283,6 @@ def lakehouse_feed_fanout_batch(
                 spark,
                 table_dir,
                 changes,
-                man,
                 tag,
                 batch_id,
                 max_files,
@@ -2476,22 +2397,16 @@ def fold_mor_log(
     values), fold it with compact_mor into ``target_files`` files.
     Commits, not files: a commit stages one delete file per write task
     that saw keys, so a file count would let the batch's task count set
-    the cadence. A fold generation taken by an orphan of a crashed
-    attempt is skipped over. Returns whether it folded."""
+    the cadence. The fold takes the next free generation number.
+    Returns whether it folded."""
     from ez_cdc_spark.sources import manifest
 
     dseq = merged.get("delete_seq") or {}
     commits = {dseq.get(rel, 0) for rel in merged.get("delete_files") or []}
     if len(commits) <= max_delete_files:
         return False
-    gen = merged["generation"] + 1
-    for _ in range(100):
-        try:
-            manifest.compact_mor(spark, table_dir, gen, target_files=target_files)
-            return True
-        except FileExistsError:
-            gen += 1
-    raise RuntimeError(f"no free generation number near {gen}")
+    manifest.compact_mor(spark, table_dir, None, target_files=target_files)
+    return True
 
 
 def lakehouse_mor_batch(
@@ -2544,22 +2459,14 @@ def lakehouse_mor_batch(
             F.col("op").alias("op"),
             F.col("source.lsn").cast("bigint").alias("seq"),
         )
-        gen = man["generation"] + 1
-        for _ in range(100):
-            try:
-                merged = merge_mor(
-                    spark,
-                    table_dir,
-                    changes,
-                    key_col="id",
-                    generation=gen,
-                    txn={"tag": tag, "batch_id": batch_id},
-                )
-                break
-            except FileExistsError:
-                gen += 1  # orphan from a crashed attempt — skip over
-        else:
-            raise RuntimeError(f"no free generation number near {gen}")
+        merged = merge_mor(
+            spark,
+            table_dir,
+            changes,
+            key_col="id",
+            generation=None,
+            txn={"tag": tag, "batch_id": batch_id},
+        )
 
         if fold_mor_log(
             spark, table_dir, merged, max_delete_files, compact_target_files
@@ -2637,18 +2544,10 @@ def lakehouse_mor_fanout_batch(
                 F.col("op").alias("op"),
                 F.col("source.lsn").cast("bigint").alias("seq"),
             )
-            gen = man["generation"] + 1
-            for _ in range(100):
-                try:
-                    merged = merge_mor(
-                        spark, table_dir, changes, key_col="id",
-                        generation=gen, txn={"tag": tag, "batch_id": batch_id},
-                    )
-                    break
-                except FileExistsError:
-                    gen += 1
-            else:
-                raise RuntimeError(f"no free generation number near {gen}")
+            merged = merge_mor(
+                spark, table_dir, changes, key_col="id",
+                generation=None, txn={"tag": tag, "batch_id": batch_id},
+            )
         else:
             merged = man  # replayed batch: upstream skipped
 
@@ -2810,21 +2709,14 @@ def stream_feed_agg_batch(agg_dir: str, consumer_tag: str = "t48c"):
             F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)
         ).otherwise(F.lit(-1))
         changes = _signed_fold_changes(spark, agg_dir, batch, sign, batch_id)
-        gen = b_man["generation"] + 1
-        for _ in range(100):
-            try:
-                merge_cow(
-                    spark,
-                    agg_dir,
-                    changes,
-                    key_col="first_name",
-                    generation=gen,
-                    txn={"tag": consumer_tag, "batch_id": batch_id},
-                )
-                return
-            except FileExistsError:
-                gen += 1  # orphan from a crashed attempt — skip over
-        raise RuntimeError(f"no free generation number near {gen}")
+        merge_cow(
+            spark,
+            agg_dir,
+            changes,
+            key_col="first_name",
+            generation=None,
+            txn={"tag": consumer_tag, "batch_id": batch_id},
+        )
 
     return apply
 

@@ -197,6 +197,64 @@ def test_commit_protocol_primitives_live_only_in_commit_core():
     assert not sites, f"commit-protocol primitives outside commit_core: {sites}"
 
 
+def _catches_file_exists(handler: ast.ExceptHandler) -> bool:
+    types = handler.type.elts if isinstance(handler.type, ast.Tuple) else [handler.type]
+    return any(isinstance(t, ast.Name) and t.id == "FileExistsError" for t in types)
+
+
+def test_generation_numbers_are_picked_only_in_commit_core():
+    """Writers never choose generation numbers: ``generation=None`` has
+    ``commit_core.take_generation`` reserve the next free one, and an
+    explicit number goes through the same helper. An ``except
+    FileExistsError`` handler that bumps a counter is a second number
+    picker, and so is any other use of ``_reserve_next`` or
+    ``_validate_generation``. The one other mention allowed is
+    ``manifest.py``'s re-export of ``_validate_generation``, for callers
+    that import the protocol from there."""
+    core = ROOT / "sources" / "commit_core.py"
+    pickers = {"_reserve_next", "_validate_generation"}
+    sites = []
+    for path in sorted(ROOT.rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        rel = path.relative_to(ROOT)
+        if path == core:
+            inside = {
+                id(sub)
+                for n in tree.body
+                if isinstance(n, ast.FunctionDef) and n.name == "take_generation"
+                for sub in ast.walk(n)
+            }
+            sites += [
+                f"{rel}:{n.lineno} {n.id}"
+                for n in ast.walk(tree)
+                if isinstance(n, ast.Name) and n.id in pickers
+                and id(n) not in inside
+            ]
+            continue
+        for n in ast.walk(tree):
+            if isinstance(n, ast.ExceptHandler) and _catches_file_exists(n):
+                sites += [
+                    f"{rel}:{s.lineno} {s.target.id} += in except FileExistsError"
+                    for s in ast.walk(n)
+                    if isinstance(s, ast.AugAssign) and isinstance(s.target, ast.Name)
+                ]
+            elif isinstance(n, ast.Name) and n.id in pickers:
+                sites.append(f"{rel}:{n.lineno} {n.id}")
+            elif isinstance(n, ast.Attribute) and n.attr in pickers:
+                sites.append(f"{rel}:{n.lineno} {n.attr}")
+            elif isinstance(n, ast.ImportFrom):
+                sites += [
+                    f"{rel}:{n.lineno} import {a.name}"
+                    for a in n.names
+                    if a.name in pickers
+                    and not (
+                        rel.as_posix() == "sources/manifest.py"
+                        and a.name == "_validate_generation"
+                    )
+                ]
+    assert not sites, f"generation numbers picked outside commit_core: {sites}"
+
+
 def _locally_bound(fn: ast.AST, name: str) -> bool:
     for sub in ast.walk(fn):
         if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Store) and sub.id == name:
