@@ -638,25 +638,29 @@ def _publish(
     given) and watermarks, staged flat or under ``partition_col``."""
     if expected_parent is _AUTO:
         expected_parent = current_generation(table_dir, ref)
-    if constraints is None and expected_parent is not None:
-        try:
-            constraints = read_manifest(
-                table_dir, as_of_generation=expected_parent
-            ).get("constraints")
-        except FileNotFoundError:
-            constraints = None
-    if enforce_constraints:
-        _enforce_constraints(df, constraints, "publish batch")
-    generation = take_generation(table_dir, generation, ref=ref)
-    files, rels, parts = _stage(df, table_dir, generation, partition_col)
     # txns defaulting (ADVICE r15): when replacing an EXISTING generation,
     # other writers' watermarks live in the parent manifest — defaulting
     # the fold input to the parent's map means a tagged publish over a
     # shared table cannot silently drop them. Pass txns={} to deliberately
     # reset the map (a truncate-style rewrite that invalidates replay
-    # history), or an explicit map to override.
+    # history), or an explicit map to override. One read of the parent
+    # serves both defaults; a missing parent leaves constraints unset but
+    # fails a txns default.
+    parent: dict = {}
+    if expected_parent is not None and (constraints is None or txns is None):
+        try:
+            parent = read_manifest(table_dir, as_of_generation=expected_parent)
+        except FileNotFoundError:
+            if txns is None:
+                raise
+    if constraints is None:
+        constraints = parent.get("constraints")
     if txns is None and expected_parent is not None:
-        txns = _txns_of(read_manifest(table_dir, as_of_generation=expected_parent))
+        txns = _txns_of(parent)
+    if enforce_constraints:
+        _enforce_constraints(df, constraints, "publish batch")
+    generation = take_generation(table_dir, generation, ref=ref)
+    files, rels, parts = _stage(df, table_dir, generation, partition_col)
     manifest = derive_manifest(
         {"constraints": constraints or None, "txns": txns},
         generation,
@@ -1414,14 +1418,7 @@ def compact(
         inherited = sorted({c for per_file in old_stats.values() for c in per_file})
         stats_columns = inherited or None
     df = read_committed(spark, table_dir).coalesce(target_files)
-    # the hidden-partitioning spec (S42) is table identity — survive the
-    # full rewrite too (the explicit-dict producers carry it directly)
-    tr_lineage = (
-        {"partition_transform": manifest["partition_transform"]}
-        if manifest.get("partition_transform") is not None
-        else None
-    )
-    return _republish(df, table_dir, generation, manifest, stats_columns, tr_lineage)
+    return _republish(df, table_dir, generation, manifest, stats_columns, None)
 
 
 def _republish(
@@ -1434,19 +1431,27 @@ def _republish(
 ) -> dict:
     """Commit ``df``, the parent's own live rows rewritten by compact or
     compact_mor, as a full replacement of ``parent``: same layout (a
-    partitioned generation rewrites INTO a partitioned one), the
-    parent's txn and watermarks (maintenance never rewinds the applied
-    state), and its bloom columns re-indexed into a fresh sidecar chain
-    (S47; ADVICE r16 — compaction used to strip the index). No
-    constraint scan: the rows were validated at their own commit, and a
-    re-scan would make maintenance cost track constraint count (S39)."""
+    partitioned generation rewrites INTO a partitioned one, and a
+    hidden-partitioned one keeps its transform spec, S42), the parent's
+    constraints, txn and watermarks (maintenance never rewinds the
+    applied state), and its bloom columns re-indexed into a fresh
+    sidecar chain (S47; ADVICE r16 — compaction used to strip the
+    index). No constraint scan: the rows were validated at their own
+    commit, and a re-scan would make maintenance cost track constraint
+    count (S39)."""
     bmeta = parent.get("bloom_meta")
+    tr = parent.get("partition_transform")
     kw = dict(
         stats_columns=stats_columns,
         txn=parent.get("txn"),
         expected_parent=parent["generation"],
         txns=_txns_of(parent),
-        lineage=lineage,
+        # the parent in hand, so publish reads no manifest ({} = none)
+        constraints=parent.get("constraints") or {},
+        lineage={
+            **(lineage or {}),
+            **({"partition_transform": tr} if tr is not None else {}),
+        },
         enforce_constraints=False,
         bloom_columns=bmeta.get("columns") if bmeta else None,
         bloom_bits=int(bmeta["bits"]) if bmeta else 65536,
@@ -2040,6 +2045,46 @@ def _require_matching_types(schema: dict, changes: DataFrame, where: str) -> Non
         )
 
 
+def _resolve_last_event(
+    changes: DataFrame,
+    key_col: str,
+    table_cols: list[str],
+    op_col: str,
+    seq_col: str,
+) -> tuple[DataFrame, str]:
+    """Last-event-wins per key, the resolve both merge writers run: one
+    ``max`` over ``struct(seq, op, *payload)``, so the total order is
+    (seq, op, payload) and equal (seq, op) pairs tie-break on the payload
+    itself — the winner never depends on partition layout. The payload
+    rides in the ordering struct once, so the partial aggregate shuffles
+    each payload once. NULL keys group together like any other key.
+
+    Returns the resolved batch (the key, the op flag column, the payload
+    columns) and the op flag's name. The struct's field names derive
+    through :func:`_flag_col`, so table columns named ``_op`` or ``_seq``
+    stay distinct from them."""
+    from pyspark.sql import functions as F  # noqa: N812
+
+    op, seq, last = (_flag_col(c, table_cols) for c in ("_op", "_seq", "_last"))
+    payload = [c for c in table_cols if c != key_col]
+    resolved = changes.groupBy(key_col).agg(
+        F.max(
+            F.struct(
+                F.col(seq_col).alias(seq),
+                F.col(op_col).alias(op),
+                *[F.col(c) for c in payload],
+            )
+        ).alias(last)
+    )
+    return (
+        resolved.select(
+            key_col,
+            *[F.col(last).getField(c).alias(c) for c in (op, *payload)],
+        ),
+        op,
+    )
+
+
 def _merge_rewrite(
     spark: SparkSession,
     manifest: dict,
@@ -2158,22 +2203,10 @@ def merge_cow(
             "split needs key ranges INSIDE files, and a partition value is "
             "constant per file — repartition the table or key on a data column"
         )
-    # Resolve last-event-wins per key: one struct-ordered max_by keeps the
-    # whole resolution in a single HashAggregate (deterministic: the order
-    # key is (seq, op), and equal (seq, op) pairs tie-break on the payload
-    # struct itself, so the winner never depends on partition layout).
-    payload = [c for c in table_cols if c != key_col]
-    final = (
-        changes.groupBy(key_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col(op_col).alias("_op"), *[F.col(c) for c in payload]),
-                F.struct(F.col(seq_col), F.col(op_col), *[F.col(c) for c in payload]),
-            ).alias("_last")
-        )
-        .select(key_col, "_last.*")
-    )
-    upserts = final.filter(F.col("_op") != delete_op).select(*table_cols)
+    # Resolve last-event-wins per key: one max over a (seq, op, payload)
+    # struct (_resolve_last_event), deterministic under any partition layout
+    final, op = _resolve_last_event(changes, key_col, table_cols, op_col, seq_col)
+    upserts = final.filter(F.col(op) != delete_op).select(*table_cols)
 
     # Optimization r19 (guide §5 caching): every action below — the
     # constraint aggregate, the bounded keys collect, the staging write,
@@ -2213,7 +2246,7 @@ def merge_cow(
         unprunable = False
         if part_prune:
             rows = final.select(
-                key_col, F.col(pcol), (F.col("_op") == delete_op).alias("_d")
+                key_col, F.col(pcol), (F.col(op) == delete_op).alias("_d")
             ).collect()
             for k, pv, is_del in rows:
                 kn = _norm(k)
@@ -2319,7 +2352,7 @@ def merge_cow(
                 dflag = _flag_col("__del", table_cols)
                 mflag = _flag_col("__match", table_cols)
                 del_keys = (
-                    final.filter(F.col("_op") == delete_op)
+                    final.filter(F.col(op) == delete_op)
                     .select(key_col)
                     .withColumn(dflag, F.lit(True))
                 )
@@ -3123,19 +3156,9 @@ def merge_mor(
     if missing:
         raise ValueError(f"changes is missing columns: {missing}")
     _require_matching_types(schema, changes, "merge_mor changes")
-    # last-event-wins resolution — merge_cow's exact shape
-    payload = [c for c in table_cols if c != key_col]
-    final = (
-        changes.groupBy(key_col)
-        .agg(
-            F.max_by(
-                F.struct(F.col(op_col).alias("_op"), *[F.col(c) for c in payload]),
-                F.struct(F.col(seq_col), F.col(op_col), *[F.col(c) for c in payload]),
-            ).alias("_last")
-        )
-        .select(key_col, "_last.*")
-    )
-    upserts = final.filter(F.col("_op") != delete_op).select(*table_cols)
+    # last-event-wins resolution — the same helper as merge_cow
+    final, op = _resolve_last_event(changes, key_col, table_cols, op_col, seq_col)
+    upserts = final.filter(F.col(op) != delete_op).select(*table_cols)
     # constraint gate (S39) on the post-image rows, before the reservation
     _enforce_constraints(
         upserts, manifest.get("constraints"), "merge_mor upsert batch"
@@ -3149,7 +3172,7 @@ def merge_mor(
     staged = final.select(
         F.explode(
             F.when(
-                F.col("_op") != delete_op, F.array(F.lit("data"), F.lit("deletes"))
+                F.col(op) != delete_op, F.array(F.lit("data"), F.lit("deletes"))
             ).otherwise(F.array(F.lit("deletes")))
         ).alias(kind),
         *table_cols,

@@ -255,6 +255,46 @@ def test_generation_numbers_are_picked_only_in_commit_core():
     assert not sites, f"generation numbers picked outside commit_core: {sites}"
 
 
+def test_last_event_wins_resolve_has_one_implementation():
+    """``manifest._resolve_last_event`` is the one last-event-wins
+    resolve of the table writers under ``sources/``: a ``max_by`` call
+    (or a SQL string spelling one) anywhere else there is a second copy
+    of it, and both merge writers call the helper."""
+    helper = "_resolve_last_event"
+    sites, callers = [], set()
+    for path in sorted((ROOT / "sources").rglob("*.py")):
+        tree = ast.parse(path.read_text())
+        inside = {
+            id(sub)
+            for n in tree.body
+            if isinstance(n, ast.FunctionDef) and n.name == helper
+            for sub in ast.walk(n)
+        }
+        for fn in tree.body:
+            if isinstance(fn, ast.FunctionDef) and any(
+                isinstance(c, ast.Call)
+                and isinstance(c.func, ast.Name)
+                and c.func.id == helper
+                for c in ast.walk(fn)
+            ):
+                callers.add(fn.name)
+        for n in ast.walk(tree):
+            if id(n) in inside or not isinstance(n, ast.Call):
+                continue
+            f = n.func
+            name = f.attr if isinstance(f, ast.Attribute) else getattr(f, "id", "")
+            spelled = [
+                a for a in n.args
+                if isinstance(a, ast.Constant)
+                and isinstance(a.value, str)
+                and "max_by(" in a.value
+            ]
+            if name == "max_by" or spelled:
+                sites.append(f"{path.relative_to(ROOT)}:{n.lineno}")
+    assert not sites, f"max_by outside {helper}: {sites}"
+    assert {"merge_cow", "merge_mor"} <= callers, callers
+
+
 def _locally_bound(fn: ast.AST, name: str) -> bool:
     for sub in ast.walk(fn):
         if isinstance(sub, ast.Name) and isinstance(sub.ctx, ast.Store) and sub.id == name:

@@ -132,3 +132,33 @@ def test_transform_source_column_refuses_evolution(spark):
     rename_column(d, 2, "v", "val")
     r = read_transform_pruned(spark, d, dt.datetime(2024, 1, 3), dt.datetime(2024, 1, 4))
     assert r.columns == ["k", "ts", "val"] and r.filter("val <> k * 2").count() == 0
+
+
+def test_compact_mor_keeps_the_transform_spec(spark, tmp_path):
+    """A merge-on-read epoch folded by compact_mor stays hidden-partitioned:
+    the fold carries the transform spec, so pruned reads still answer and
+    a full read still hides the derived column."""
+    from ez_cdc_spark.sources.manifest import compact_mor, merge_mor
+
+    d = str(tmp_path / "t")
+    publish_hidden_partitioned(
+        spark.range(100).selectExpr("id AS k", "id * 2 AS v"),
+        d,
+        1,
+        transform=("truncate", "k", 10),
+    )
+    pname = read_manifest(d)["partition_transform"]["column"]
+    changes = spark.createDataFrame(
+        [(5, 500, "u", 1), (42, 0, "d", 1), (150, 3, "c", 1)],
+        "k bigint, v bigint, op string, seq bigint",
+    ).withColumn(pname, (F.col("k") - F.pmod("k", F.lit(10))).cast("string"))
+    merge_mor(spark, d, changes, "k", None)
+    compact_mor(spark, d, None)
+    man = read_manifest(d)
+    assert "fold" in man and man["partition_transform"]["column"] == pname
+    assert read_hidden(spark, d).columns == ["k", "v"]
+    r = read_transform_pruned(spark, d, 0, 49)
+    assert _scanned_values(r, pname) == ["0", "10", "20", "30", "40"]
+    got = {x["k"]: x["v"] for x in r.collect()}
+    assert len(got) == 49 and got[5] == 500 and 42 not in got
+    assert read_hidden(spark, d).filter("k = 150").first()["v"] == 3

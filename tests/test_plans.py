@@ -1163,6 +1163,23 @@ def test_s30_plan_broadcast_anti_join_and_pruned_rewrite(spark, sf_smoke):
     assert "CartesianProduct" not in rp
 
 
+def test_merge_resolve_partial_aggregate_holds_one_struct(spark):
+    """The last-event-wins resolve both merge writers share aggregates one
+    ``struct(seq, op, *payload)`` buffer with ``max``: the partial
+    aggregate ships each payload once, not once as the value and again
+    inside a ``max_by`` ordering."""
+    from ez_cdc_spark.sources.manifest import _resolve_last_event
+
+    changes = spark.createDataFrame(
+        [(1, "a", "u", 1), (1, "b", "d", 2)],
+        "id bigint, v string, op string, seq bigint",
+    )
+    final, _ = _resolve_last_event(changes, "id", ["id", "v"], "op", "seq")
+    p = plan_str(final)
+    assert "partial_max(struct(" in p, p
+    assert "max_by" not in p and "extremumOrdering" not in p, p
+
+
 def test_a25_plan_shape(spark, sf_smoke):
     """a25: the token stream is consumed ONCE by the mapInPandas partials
     (localCheckpoint-pinned, like a14); everything downstream — token

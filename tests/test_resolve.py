@@ -1,0 +1,148 @@
+"""Last-event-wins resolve pins (sources/manifest.py:_resolve_last_event).
+
+Both merge writers resolve a change batch to one row per key with one
+``max`` over ``struct(seq, op, *payload)``. These tests hold the helper,
+``merge_cow`` and ``merge_mor`` equal to the formulation it replaced,
+``max_by(struct(op, *payload), struct(seq, op, *payload))``, on the
+batches where the order matters: exact (key, seq, op) duplicates with
+different payloads, a delete and an upsert at one sequence, NULL payload
+fields, a NULL op, string keys and a NULL key. They also pin that table
+columns named like the resolve's own fields merge through both writers.
+"""
+
+import pytest
+from pyspark.sql import functions as F  # noqa: N812
+
+import ez_cdc_spark.sources.manifest as m
+
+SCHEMA = "k string, v bigint, s string"
+CH = ", op string, seq bigint"
+
+# Every row of one key competes; comments name what each key exercises.
+BATCH = [
+    # duplicate (key, seq, op) with different payloads: the payload decides
+    ("a", 1, "x", "u", 5),
+    ("a", 2, "w", "u", 5),
+    ("a", 2, "y", "u", 5),
+    ("a", 9, "z", "u", 4),
+    # a delete and an upsert at the same seq: op "u" > "d" wins
+    ("b", 7, "del", "d", 3),
+    ("b", 8, "up", "u", 3),
+    # ... and the delete wins when it is later
+    ("c", 1, "up", "u", 2),
+    ("c", None, None, "d", 6),
+    # NULL payload fields order below values
+    ("e", None, None, "u", 4),
+    ("e", None, "t", "u", 4),
+    ("f", None, None, "c", 1),
+    # a NULL op at the winning seq: staged as neither upsert nor kept row
+    ("g", 3, "n", None, 9),
+    ("g", 2, "m", "u", 8),
+    # a NULL op that loses to a later upsert
+    ("h", 1, "p", None, 1),
+    ("h", 4, "q", "c", 2),
+    # a NULL key groups like any other key
+    (None, 1, "nk1", "u", 1),
+    (None, 2, "nk2", "u", 2),
+    # a key only inserted
+    ("new", 42, "n", "c", 1),
+]
+
+
+def _max_by_reference(changes, key_col, table_cols, op_col="op", seq_col="seq"):
+    """The formulation the helper replaced: the payload rides twice, as
+    the value and inside the ordering."""
+    payload = [F.col(c) for c in table_cols if c != key_col]
+    return (
+        changes.groupBy(key_col)
+        .agg(
+            F.max_by(
+                F.struct(F.col(op_col).alias("_op"), *payload),
+                F.struct(F.col(seq_col), F.col(op_col), *payload),
+            ).alias("_last")
+        )
+        .select(key_col, "_last.*")
+    )
+
+
+def _rows(df):
+    return sorted((tuple(r) for r in df.collect()), key=repr)
+
+
+def _changes(spark):
+    # several input partitions, so partial aggregates really merge
+    return spark.createDataFrame(BATCH, SCHEMA + CH).repartition(3)
+
+
+def test_helper_equals_max_by_reference(spark):
+    changes = _changes(spark)
+    got, op = m._resolve_last_event(changes, "k", ["k", "v", "s"], "op", "seq")
+    assert got.columns == ["k", op, "v", "s"] and op == "_op"
+    ref = _rows(_max_by_reference(changes, "k", ["k", "v", "s"]))
+    assert _rows(got) == ref
+    winners = {r[0]: r[1:] for r in ref}
+    assert winners["a"] == ("u", 2, "y") and winners["b"] == ("u", 8, "up")
+    assert winners["c"] == ("d", None, None) and winners["e"] == ("u", None, "t")
+    assert winners["g"] == (None, 3, "n") and winners["h"] == ("c", 4, "q")
+    assert winners[None] == ("u", 2, "nk2")
+
+
+def _base(spark):
+    return spark.createDataFrame(
+        [(k, i, f"b{k}") for i, k in enumerate("abcdefgh")], SCHEMA
+    )
+
+
+def _expected_after_merge(spark):
+    """Base rows whose key the batch does not name, plus the reference's
+    upserts (a delete or NULL op stages no row). A NULL key matches no
+    base row."""
+    ref = _max_by_reference(_changes(spark), "k", ["k", "v", "s"]).collect()
+    changed = {r["k"] for r in ref}
+    kept = [tuple(r) for r in _base(spark).collect() if r["k"] not in changed]
+    ups = [(r["k"], r["v"], r["s"]) for r in ref if r["_op"] not in (None, "d")]
+    return sorted(kept + ups, key=repr)
+
+
+@pytest.mark.parametrize("writer", ["merge_cow", "merge_mor"])
+def test_merge_writers_equal_max_by_reference(spark, tmp_path, writer):
+    td = str(tmp_path / "t")
+    m.publish(_base(spark).coalesce(2), td, 1, stats_columns=["k"])
+    getattr(m, writer)(spark, td, _changes(spark), "k", None)
+    got = _rows(m.read_mor(spark, td))
+    assert got == _expected_after_merge(spark)
+    assert ("a", 2, "y") in got and not any(r[0] in ("c", "g") for r in got)
+
+
+@pytest.mark.parametrize("writer", ["merge_cow", "merge_mor"])
+def test_columns_named_like_the_resolve_fields(spark, tmp_path, writer):
+    """``_op``, ``_seq`` and ``_last`` are ordinary table columns: the
+    resolve's struct fields step around them, and the batch's own op and
+    seq columns still decide the winner."""
+    td = str(tmp_path / "t")
+    schema = "id bigint, _op string, _seq bigint, _last string"
+    base = spark.createDataFrame(
+        [(k, "d", 100 + k, f"l{k}") for k in range(6)], schema
+    )
+    m.publish(base.coalesce(1), td, 1, stats_columns=["id"])
+    batch = spark.createDataFrame(
+        [
+            (1, "d", 0, "x", "u", 2),
+            (1, "u", 9, "y", "u", 1),
+            (2, "x", 1, "z", "d", 2),
+            (3, "c", 5, "w", "u", 1),
+            (3, "c", 6, "v", "d", 1),
+            (9, "d", 7, "n", "c", 1),
+        ],
+        schema + CH,
+    )
+    getattr(m, writer)(spark, td, batch, "id", None)
+    got = {r[0]: tuple(r[1:]) for r in m.read_mor(spark, td).collect()}
+    assert got == {
+        0: ("d", 100, "l0"),
+        1: ("d", 0, "x"),
+        3: ("c", 5, "w"),
+        4: ("d", 104, "l4"),
+        5: ("d", 105, "l5"),
+        9: ("d", 7, "n"),
+    }
