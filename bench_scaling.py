@@ -490,69 +490,6 @@ def s42_window_prune_probe(spark, n_days: int, rows_per_day: int = 20_000) -> di
     }
 
 
-def t46_feed_overhead_probe(
-    spark, settled_rows: int, batch_keys: int = 500
-) -> dict:
-    """T46 scale witness: the cost of MATERIALIZING the change feed at
-    merge time must track the CHURN, never the table — the Delta CDF
-    design premise. One range-clustered settled table per size; the SAME
-    range-local batch merges twice (record_change_feed off, then on, each
-    on a fresh copy of the table state via a fresh table dir); the
-    reported delta is the feed's marginal cost. As settled_rows grows the
-    delta must stay ~flat (the feed reads only the touched files and the
-    broadcast batch), while the number of committed change-feed rows stays
-    exactly batch-sized."""
-    import time as _time
-
-    from pyspark.sql import functions as F  # noqa: N812
-
-    from ez_cdc_spark.sources.manifest import merge_cow, publish, read_manifest
-
-    rows = {}
-    for arm in ("off", "on"):
-        d = f"/tmp/ez_scale_t46_{settled_rows}_{arm}"
-        shutil.rmtree(d, ignore_errors=True)
-        base = (
-            spark.range(settled_rows)
-            .select(
-                F.col("id").alias("k"),
-                (F.col("id") * 7 % 1000).alias("v"),
-            )
-            .repartitionByRange(16, "k")
-        )
-        publish(base, d, 1, stats_columns=["k"])
-        # range-local churn: batch_keys keys inside one narrow band
-        batch = spark.range(batch_keys).select(
-            (F.col("id") + settled_rows // 2).alias("k"),
-            F.lit(-1).cast("long").alias("v"),
-            F.lit("u").alias("op"),
-            (F.col("id") + 10_000_000).alias("seq"),
-        )
-        t0 = _time.perf_counter()
-        merge_cow(
-            spark, d, batch, key_col="k", generation=2,
-            record_change_feed=(arm == "on"),
-        )
-        rows[arm] = round(_time.perf_counter() - t0, 3)
-        if arm == "on":
-            man = read_manifest(d)
-            n_feed = (
-                spark.read.parquet(
-                    *[os.path.join(d, r) for r in man["change_files"]]
-                ).count()
-            )
-        shutil.rmtree(d, ignore_errors=True)
-    return {
-        "probe": "t46_feed_overhead",
-        "settled_rows": settled_rows,
-        "batch_keys": batch_keys,
-        "merge_sec_no_feed": rows["off"],
-        "merge_sec_with_feed": rows["on"],
-        "feed_marginal_sec": round(rows["on"] - rows["off"], 3),
-        "committed_feed_rows": n_feed,
-    }
-
-
 def t47_mor_feed_derivation_probe(
     spark, settled_rows: int, batch_keys: int = 500
 ) -> dict:
@@ -662,27 +599,6 @@ def main() -> None:
         out += [s42_window_prune_probe(spark, n) for n in (16, 64, 256)]
         for row in out:
             print(json.dumps(row))
-        return
-
-    if os.environ.get("SCALE_T46_FEED"):
-        out = [
-            t46_feed_overhead_probe(spark, n)
-            for n in (100_000, 400_000, 1_600_000)
-        ]
-        for row in out:
-            print(json.dumps(row))
-        print(
-            json.dumps(
-                {
-                    "t46_feed_summary": {
-                        "marginal_sec_by_size": {
-                            str(r["settled_rows"]): r["feed_marginal_sec"]
-                            for r in out
-                        }
-                    }
-                }
-            )
-        )
         return
 
     if os.environ.get("SCALE_T30_SPREAD"):

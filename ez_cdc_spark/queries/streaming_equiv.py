@@ -3221,22 +3221,22 @@ ORDER BY id, lsn, _change_type
     doc="T46: the NATIVE row-level change-feed STREAM (r16 verdict #2; "
     "Delta readChangeFeed analog) — readStream.format('ezmanifest')"
     ".option('changeFeed','true') emits _change_type rows per commit "
-    "interval. Producer: t30's sink loop with record_change_feed=True — "
-    "each micro-batch merge MATERIALIZES its churn-sized feed as "
-    "committed change files (the Delta CDF _change_data design; "
-    "sources/manifest.py:merge_cow computes pre/post images from the "
-    "touched files it already reads, so recording costs the churn, never "
-    "the table). Consumer: the stream's offsets are generation numbers; "
-    "each trigger traces the commit chain through lineage parents and "
-    "plans the interval's change files (appends/genesis as constant "
-    "'insert' splits; compact/fold/evolve contribute NOTHING — the CDF "
-    "maintenance-invisibility contract; merges without recorded feeds, "
-    "restores, and MOR commits REFUSE loudly with the owning surface "
-    "named — sources/pyds.py:ManifestChangeFeedStreamReader). The oracle "
+    "interval. Producer: t30's sink loop — each micro-batch is one "
+    "merge_cow commit that writes nothing for the feed; its file delta is "
+    "the feed's source (Delta's dataChange file actions). Consumer: the "
+    "stream's offsets are generation numbers; each trigger traces the "
+    "commit chain through lineage parents and plans one split per merge "
+    "commit that reads the files it removed (pre-images) against the "
+    "files it added (post-images), cancels the rows the rewrite carried "
+    "unchanged and labels the rest by the merge key (appends/genesis as "
+    "constant 'insert' splits; compact/fold/evolve contribute NOTHING — "
+    "the CDF maintenance-invisibility contract; restores REFUSE loudly "
+    "with the owning surface named — "
+    "sources/pyds.py:ManifestChangeFeedStreamReader). The oracle "
     "replays the same lsn-staged batches declaratively: per stage, the "
     "last-event-wins batch resolution against the fold of all earlier "
     "stages classifies each key into insert / update pre+post pair / "
-    "delete — hash-green proves the materialized per-commit feeds "
+    "delete — hash-green proves the derived per-commit feeds "
     "concatenate to the exact declarative replay, pre-images included. "
     "Restart-mid-feed continuation, maintenance invisibility, and the "
     "refusal classes are pinned in tests/test_pyds_manifest.py. This "
@@ -3326,7 +3326,7 @@ ORDER BY id, lsn, _change_type
     "Consumer: the same readStream.format('ezmanifest')"
     ".option('changeFeed','true') stream as t46; a merge_mor commit now "
     "plans as key-hash-bucket splits that derive its churn feed ON READ "
-    "(sources/pyds.py:_read_mor_feed_split): the commit's equality-"
+    "(sources/pyds.py:_read_commit_feed_split): the commit's equality-"
     "delete file IS the churn key set; pre-images resolve via read_mor's "
     "sequence-number kill rule over the stats-pruned parent files; "
     "post-images are the commit's own upsert files (its delete entry "

@@ -494,8 +494,8 @@ _LINEAGE_KEYS = (
 )
 # What a commit that changes the file list inherits from its parent: the
 # table's identity and its transaction watermarks. Per-file state (file
-# list, partition values, stats, eras, delete log, change-feed files) is
-# rebuilt from the file delta, or set by the writer that maintains it.
+# list, partition values, stats, eras, delete log) is rebuilt from the
+# file delta, or set by the writer that maintains it.
 _IDENTITY_KEYS = (
     "schema", "partition_col", "constraints", "partition_transform",
     "bloom_meta", "epoch_maps", "txn", "txns",
@@ -589,6 +589,45 @@ def _parent_gen_of(manifest: dict) -> int | None:
         if isinstance(lin, dict) and "parent" in lin:
             return lin["parent"]
     return None
+
+
+def commit_chain(read, from_generation: int, to_generation: int):
+    """``(base, commits)`` for a change-feed interval: ``commits`` are the
+    manifests after ``from_generation`` up to ``to_generation``, oldest
+    first, traced back from ``to_generation`` through each lineage
+    parent; ``base`` is generation ``from_generation``'s manifest.
+    ``read(g)`` returns generation ``g``'s manifest.
+
+    ``from_generation == 0`` names the empty table before any commit: the
+    trace may end at a parentless genesis publish, and ``base`` is then
+    None. Otherwise the trace must reach ``from_generation`` itself. A
+    commit without a parent (a plain publish) or an ancestor below
+    ``from_generation`` makes the interval untraceable; a restore inside
+    it is refused, since a feed across a rollback is undefined."""
+    commits = []
+    cur = read(to_generation)
+    while cur["generation"] > from_generation:
+        if "restore" in cur:
+            raise ValueError(
+                f"the interval {from_generation}..{to_generation} crosses a "
+                f"restore: a change feed across a rollback is undefined — "
+                f"consume the feed before restoring, or restart a "
+                f"change-feed stream from a fresh checkpoint"
+            )
+        commits.append(cur)
+        par = _parent_gen_of(cur)
+        if par is None and from_generation == 0:
+            return None, commits[::-1]
+        if par is None or par < from_generation:
+            raise ValueError(
+                f"cannot trace the commit lineage from generation "
+                f"{to_generation} back to {from_generation}: the interval "
+                f"crosses a plain publish/replace, or {from_generation} is "
+                f"not an ancestor of {to_generation} — restart a "
+                f"change-feed stream from a fresh checkpoint"
+            )
+        cur = read(par)
+    return cur, commits[::-1]
 
 
 # ----- per-file kernels: footer stats and blooms -----

@@ -126,6 +126,7 @@ from ez_cdc_spark.sources.commit_core import (  # noqa: F401
     _txns_of,
     _validate_generation,
     _write_json,
+    commit_chain,
     current_generation,
     derive_manifest,
     map_files,
@@ -1069,11 +1070,7 @@ def committed_files(table_dir: str, as_of_generation: int | None = None) -> list
     manifest references must stay gc-protected, and callers that read data
     go through read_committed/read_mor, not this listing."""
     manifest = read_manifest(table_dir, as_of_generation)
-    rels = (
-        list(manifest["files"])
-        + list(manifest.get("delete_files") or [])
-        + list(manifest.get("change_files") or [])
-    )
+    rels = list(manifest["files"]) + list(manifest.get("delete_files") or [])
     return [os.path.join(table_dir, rel) for rel in rels]
 
 
@@ -2118,7 +2115,6 @@ def merge_cow(
     txn: dict | None = None,
     stable_partition_keys: bool = False,
     ref: str | None = None,
-    record_change_feed: bool = False,
 ) -> dict:
     """S30: copy-on-write MERGE of a keyed change batch into a
     manifest-committed table — the row-level half of what real table
@@ -2209,13 +2205,12 @@ def merge_cow(
     upserts = final.filter(F.col(op) != delete_op).select(*table_cols)
 
     # Optimization r19 (guide §5 caching): every action below — the
-    # constraint aggregate, the bounded keys collect, the staging write,
-    # and (with record_change_feed) the feed materialization — would
-    # otherwise re-execute the caller's WHOLE change pipeline (for the
-    # feed consumers that pipeline embeds change_feed joins over parent
-    # files). The resolved batch is micro-batch-sized by the CDC
-    # contract, so persist it once and let every downstream action read
-    # the cache; unpersisted on every exit path.
+    # constraint aggregate, the bounded keys collect and the staging
+    # write — would otherwise re-execute the caller's WHOLE change
+    # pipeline (for the feed consumers that pipeline embeds change_feed
+    # joins over parent files). The resolved batch is micro-batch-sized
+    # by the CDC contract, so persist it once and let every downstream
+    # action read the cache; unpersisted on every exit path.
     final = final.persist()
     try:
         # constraint gate (S39) on the POST-IMAGE rows this merge would
@@ -2313,85 +2308,6 @@ def merge_cow(
             rewrite, table_dir, generation, pcol
         )
 
-        change_files: list[str] | None = None
-        if record_change_feed:
-            # T46: MATERIALIZE the row-level change feed at merge time — the
-            # Delta CDF design (MERGE writes _change_data files): the merge
-            # already holds everything the feed needs, so recording it here is
-            # churn-sized (one extra read of the TOUCHED files, never the
-            # table), and the native changeFeed STREAM
-            # (readStream.format('ezmanifest').option('changeFeed', 'true'))
-            # can later serve the interval as a fully distributed scan of
-            # these files with zero cross-file work at read time. Staged under
-            # this generation's own data dir, so the S33 reservation protects
-            # the write and gc/vacuum lifecycle follows the generation.
-            from pyspark.sql import functions as F  # noqa: N812
-
-            # churn-sized, consumed by four branches below — persist so
-            # the touched-file scan + semi-join runs once, not four times
-            # (ADVICE r19: released in the finally below, so an exception
-            # during the feed write or the change-file listing cannot
-            # leave the touched-files scan cached for the session)
-            pre = (
-                _read_files(spark, manifest, table_dir, touched_abs)
-                .join(
-                    F.broadcast(final.select(key_col)), on=key_col, how="left_semi"
-                )
-                .persist()
-            )
-            try:
-                # Optimization r19 (guide §3): each anti/semi PAIR over the
-                # same broadcast key set is one LEFT join with a match flag —
-                # the classification was four joins (four broadcast builds,
-                # four probe passes); it is now two, producing the identical
-                # row multiset with the identical _change_type per row
-                # (del_keys and pre_keys are per-key unique, so the left
-                # join never multiplies rows). Flag names derive through
-                # _flag_col so a table column named __del/__match can never
-                # make the flag reference ambiguous.
-                dflag = _flag_col("__del", table_cols)
-                mflag = _flag_col("__match", table_cols)
-                del_keys = (
-                    final.filter(F.col(op) == delete_op)
-                    .select(key_col)
-                    .withColumn(dflag, F.lit(True))
-                )
-                pre_keys = (
-                    pre.select(key_col).distinct().withColumn(mflag, F.lit(True))
-                )
-                feed = (
-                    pre.join(F.broadcast(del_keys), on=key_col, how="left")
-                    .select(
-                        F.when(F.col(dflag).isNotNull(), F.lit("delete"))
-                        .otherwise(F.lit("update_preimage"))
-                        .alias("_change_type"),
-                        *table_cols,
-                    )
-                    .unionByName(
-                        upserts.join(F.broadcast(pre_keys), on=key_col, how="left")
-                        .select(
-                            F.when(
-                                F.col(mflag).isNotNull(),
-                                F.lit("update_postimage"),
-                            )
-                            .otherwise(F.lit("insert"))
-                            .alias("_change_type"),
-                            *table_cols,
-                        )
-                    )
-                )
-                cf_dir = os.path.join(
-                    _stage_dir(table_dir, generation), "_changefeed"
-                )
-                feed.write.mode("overwrite").parquet(cf_dir)
-                change_files = sorted(
-                    os.path.relpath(os.path.join(cf_dir, f), table_dir)
-                    for f in os.listdir(cf_dir)
-                    if f.endswith(".parquet") and not f.startswith((".", "_"))
-                )
-            finally:
-                pre.unpersist()
-
         stats_cols = sorted({c for s in stats.values() for c in s} | {key_col})
         new_manifest = derive_manifest(
             manifest,
@@ -2407,18 +2323,15 @@ def merge_cow(
             # idempotent without exactly-once delivery. Every writer's
             # watermark carries in the folded per-tag map (ADVICE r15)
             txn=txn,
+            # the merge key labels this commit's change feed: a key on both
+            # sides of the file delta is an update (the changeFeed stream)
             merge={
                 "parent": manifest["generation"],
+                "key": key_col,
                 "rewritten_files": len(touched_rel),
                 "carried_files": len(untouched_rel),
                 "changed_keys": n_keys,
             },
-            # T46: the commit's materialized row-level feed — gc/vacuum
-            # protect these exactly like data files (committed_files lists
-            # them), and the changeFeed stream plans them as this
-            # interval's splits
-            change_files=change_files,
-            change_feed_key=key_col if change_files is not None else None,
         )
         if manifest.get("bloom_meta"):
             # S47 carry (ADVICE r16): rewritten files get fresh bitsets in a
@@ -2598,8 +2511,8 @@ def change_feed_sides(
 
 def _flag_col(base: str, cols) -> str:
     """A join-flag column name guaranteed absent from ``cols`` (ADVICE
-    r19: a table legitimately declaring a column named ``__del``/``__upd``
-    /``__match`` would make the flag reference ambiguous and fail the
+    r19: a table legitimately declaring a column named like a flag, say
+    ``__upd``, would make the flag reference ambiguous and fail the
     merge/feed with an AnalysisException — the pre-r19 semi/anti joins
     added no columns and were immune)."""
     name = base
@@ -2803,27 +2716,12 @@ def change_feed_mor_sides(
     the retention contract are :func:`change_feed_mor`'s."""
     if to_generation <= from_generation:
         raise ValueError("change_feed_mor needs from_generation < to_generation")
-    # trace the commit chain to -> from via lineage parents
-    chain = []
-    cur = read_manifest(table_dir, to_generation)
-    while cur["generation"] > from_generation:
-        chain.append(cur)
-        par = _parent_gen_of(cur)
-        if par is None or par < from_generation:
-            raise ValueError(
-                "cannot trace the commit lineage from to_generation back to "
-                "from_generation: the interval crosses an untraceable commit "
-                "(a plain publish/replace) or from_generation is not an "
-                "ancestor of to_generation"
-            )
-        cur = read_manifest(table_dir, par)
-    chain.append(cur)
-    chain.reverse()  # from -> to
-    if any("restore" in m for m in chain[1:]):
-        raise ValueError(
-            "interval crosses a restore: a change feed across a rollback is "
-            "undefined — consume the feed before restoring"
-        )
+    if from_generation < 1:
+        raise ValueError("change_feed_mor needs a committed from_generation")
+    base, commits = commit_chain(
+        lambda g: read_manifest(table_dir, g), from_generation, to_generation
+    )
+    chain = [base, *commits]  # from -> to
     if not any(m.get("mor_key") for m in chain):
         raise ValueError(
             "interval holds no merge-on-read commits: use change_feed for "
@@ -3586,7 +3484,6 @@ def vacuum(table_dir: str, older_than_s: float) -> list[str]:
                     man = json.load(fh)
                     refs.update(man["files"])
                     refs.update(man.get("delete_files") or [])
-                    refs.update(man.get("change_files") or [])
             except (OSError, ValueError):
                 continue  # unreadable/vanishing manifest protects nothing
         return refs
@@ -3844,7 +3741,10 @@ def gc(
             continue
         if _young(full):
             continue
-        shutil.rmtree(full)
+        try:
+            shutil.rmtree(full)
+        except FileNotFoundError:
+            continue  # a concurrent gc is removing the same dir
         deleted.append(full)
     for m in mcandidates:
         if m.startswith(".reserve-gen-"):

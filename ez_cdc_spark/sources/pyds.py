@@ -267,9 +267,9 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         _commit_manifest,
         _file_blooms,
         _file_stats,
-        _parent_gen_of,
         _reserve_path,
         _stable_bucket,
+        commit_chain,
         current_generation,
         derive_manifest,
         read_manifest,
@@ -1030,20 +1030,18 @@ def make_ezmanifest_source(with_pushdown: bool = True):
     # ----- T46 streaming CHANGE FEED: the Delta readChangeFeed analog -----
 
     class _FeedSplit(InputPartition):
-        """One feed split: either a merge commit's materialized change
-        file (``ctype is None`` — the file already carries _change_type
-        per row) or a data file served as constant-type rows (appends →
-        'insert'). ``gen`` stamps _commit_generation."""
+        """One data file an append or the genesis publish added, served
+        as 'insert' rows straight off its Arrow batches. ``gen`` stamps
+        _commit_generation."""
 
-        def __init__(self, path, pcol, pval, schema_json, ctype, gen):
+        def __init__(self, path, pcol, pval, schema_json, gen):
             self.path = path
             self.pcol = pcol
             self.pval = pval
             self.schema_json = schema_json
-            self.ctype = ctype
             self.gen = gen
 
-    # ----- T47: merge-on-read commits served by the change-feed stream -----
+    # ----- merge commits (T46 copy-on-write, T47 merge-on-read) -----
 
     _STRUCT_TAG = "\x00struct"
 
@@ -1066,25 +1064,32 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             return [_thaw(x) for x in v]
         return v
 
-    class _MorFeedSplit(InputPartition):
-        """One key-hash bucket of one merge_mor commit's churn feed
-        (T47). Carries everything one executor needs to emit the
-        bucket's classified change rows WITHOUT a shuffle: the commit's
-        new equality-delete files (the churn key set, pre-filtered at
-        planning to the files whose recorded base-bucket counts admit
-        THIS bucket), the commit's own
-        new data files (the post-image side — the commit's delete entry
-        carries the commit's sequence and therefore kills every OLDER
-        version of a changed key, so a changed key's live post-image
-        can only be one of the commit's own upserts), and the parent
-        state spec (files with sequence numbers, key-column stat ranges
-        and partition values, plus the parent's delete log) for the
-        kill-rule pre-image resolve restricted to the bucket's keys."""
+    class _CommitFeedSplit(InputPartition):
+        """The change feed of one merge commit, or of one key-hash bucket
+        of it, derived on read. Carries everything one executor needs to
+        emit the classified change rows WITHOUT a shuffle: the commit's
+        new data files (the post-image side), the parent-side spec
+        (files with sequence numbers, partition values and key-column
+        stat ranges, plus the parent's delete log) for the pre-image
+        side, and the merge key that pairs the two into updates.
+
+        * merge_mor (T47): one split per key-hash bucket. The commit's
+          new equality-delete files are the churn key set, pre-filtered
+          at planning to the files whose recorded base-bucket counts
+          admit THIS bucket; pre-images resolve through the kill rule
+          over every parent file, restricted to the bucket's keys. The
+          commit's delete entry carries its sequence and so kills every
+          OLDER version of a changed key: a changed key's live
+          post-image can only be one of the commit's own upserts.
+        * merge_cow (T46): one split, no churn key files, no delete log.
+          Pre-images are the parent files the commit removed, whole;
+          the rows it rewrote unchanged cancel against its added
+          files."""
 
         def __init__(self, table_dir, gen, bucket, n_buckets, key_col,
                      pcol, schema_json, new_delete_rels, new_data,
                      parent_spec):
-            self.kind = "mor"
+            self.kind = "commit"
             self.table_dir = table_dir
             self.gen = gen
             self.bucket = bucket
@@ -1095,6 +1100,42 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             self.new_delete_rels = new_delete_rels
             self.new_data = new_data  # [(rel, partition_value)]
             self.parent_spec = parent_spec
+
+    def _added_files(man, parent):
+        """``[(rel, partition value)]`` of the files ``man`` added over
+        ``parent`` (every file when ``parent`` is None)."""
+        old = set(parent["files"]) if parent is not None else set()
+        pcol = man.get("partition_col")
+        parts = man.get("partitions", {})
+        return [
+            (rel, parts.get(rel) if pcol else None)
+            for rel in man["files"]
+            if rel not in old
+        ]
+
+    def _plan_cow_commit(table_dir, man, parent):
+        """One split for a merge_cow commit: the files it removed from
+        ``parent`` against the files it added. Bucketing would re-read
+        every touched file once per bucket, since no churn key file
+        names the changed keys."""
+        kept = set(man["files"])
+        p_pcol = parent.get("partition_col")
+        p_parts = parent.get("partitions", {})
+        removed = [
+            (rel, 0, p_parts.get(rel) if p_pcol else None, None)
+            for rel in parent["files"]
+            if rel not in kept
+        ]
+        added = _added_files(man, parent)
+        if not removed and not added:
+            return []
+        return [
+            _CommitFeedSplit(
+                table_dir, man["generation"], 0, 1, man["merge"].get("key"),
+                man.get("partition_col"), _json.dumps(man["schema"]), [],
+                added, {"files": removed, "delete_files": [], "pcol": p_pcol},
+            )
+        ]
 
     def _plan_mor_commit(table_dir, man, parent, n_buckets):
         """Driver-side planning of one merge_mor commit's feed: one
@@ -1144,14 +1185,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         if not live:
             return []  # provably churn-free commit (empty delete files)
 
-        old_files = set(parent["files"])
-        pcol = man.get("partition_col")
-        parts = man.get("partitions", {})
-        new_data = [
-            (rel, parts.get(rel) if pcol else None)
-            for rel in man["files"]
-            if rel not in old_files
-        ]
+        new_data = _added_files(man, parent)
         p_pcol = parent.get("partition_col")
         p_parts = parent.get("partitions", {})
         p_fseq = parent.get("file_seq", {})
@@ -1183,8 +1217,9 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         }
         schema_json = _json.dumps(man["schema"])
         return [
-            _MorFeedSplit(
-                table_dir, g, b, n_buckets, key_col, pcol, schema_json,
+            _CommitFeedSplit(
+                table_dir, g, b, n_buckets, key_col,
+                man.get("partition_col"), schema_json,
                 [
                     rel
                     for rel in new_drels
@@ -1195,16 +1230,18 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             for b in sorted(live)
         ]
 
-    def _read_mor_feed_split(split):
-        """Executor-side churn-feed resolve for one (commit, key-bucket)
-        split — pure Arrow, shuffle-free: read the commit's churn keys
-        and keep this bucket's; resolve pre-images via read_mor's
-        sequence-number kill rule over the stats-pruned parent files;
-        take post-images from the commit's own upsert files; cancel
-        rows identical on both sides (multiset, the batch feed's
-        exceptAll); classify the rest into the four Delta change types.
-        Per split the work is O(churn + overlapping parent files), never
-        the table."""
+    def _read_commit_feed_split(split):
+        """Executor-side feed resolve for one commit split — pure Arrow,
+        shuffle-free. A merge_mor split reads the commit's churn keys,
+        keeps this bucket's, and resolves their pre-images via read_mor's
+        sequence-number kill rule over the stats-pruned parent files; a
+        merge_cow split has no churn key files and reads its removed
+        parent files whole. Post-images are the commit's own new files.
+        Rows identical on both sides cancel (multiset, the batch feed's
+        exceptAll), and the rest classify into the four Delta change
+        types; a NULL key never pairs into an update, as in the batch
+        feed. Per split the work is O(churn + overlapping parent files),
+        never the table."""
         import bisect as _bisect
         from collections import Counter as _Counter
 
@@ -1216,22 +1253,24 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         logical = to_arrow_schema(_ST.fromJson(_json.loads(split.schema_json)))
         cols = [f.name for f in logical]
         key_col = split.key_col
-        key_idx = cols.index(key_col)
+        key_idx = cols.index(key_col) if key_col is not None else None
 
-        keys = set()
-        for rel in split.new_delete_rels:
-            col = pq.read_table(
-                _os.path.join(split.table_dir, rel), columns=[key_col]
-            ).column(key_col)
-            for v in col.to_pylist():
-                if _stable_bucket(v, split.n_buckets) == split.bucket:
-                    keys.add(_freeze(v))
-        if not keys:
-            return
+        keys = None  # no churn key files: every row of every file counts
+        if split.new_delete_rels:
+            keys = set()
+            for rel in split.new_delete_rels:
+                col = pq.read_table(
+                    _os.path.join(split.table_dir, rel), columns=[key_col]
+                ).column(key_col)
+                for v in col.to_pylist():
+                    if _stable_bucket(v, split.n_buckets) == split.bucket:
+                        keys.add(_freeze(v))
+            if not keys:
+                return
 
         try:
-            skeys = sorted(keys)
-            unprunable = any(k is None for k in skeys)
+            skeys = sorted(keys) if keys is not None else []
+            unprunable = keys is None or any(k is None for k in skeys)
         except TypeError:
             skeys, unprunable = [], True
 
@@ -1358,7 +1397,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                         vals.append([None] * batch.num_rows)
                 for row in zip(*vals):
                     frow = tuple(_freeze(v) for v in row)
-                    if frow[key_idx] in keys:
+                    if keys is None or frow[key_idx] in keys:
                         yield frow
 
         # pre-image: the parent state's live rows for the bucket's keys
@@ -1386,7 +1425,9 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         pre = _Counter(
             row
             for row, seq in pre_rows
-            if dmax.get(row[key_idx]) is None or dmax[row[key_idx]] <= seq
+            if not dmax
+            or dmax.get(row[key_idx]) is None
+            or dmax[row[key_idx]] <= seq
         )
 
         # post-image: the commit's own upserts for these keys
@@ -1397,14 +1438,17 @@ def make_ezmanifest_source(with_pushdown: bool = True):
 
         gone = pre - post
         came = post - pre
-        upd = {t[key_idx] for t in gone} & {t[key_idx] for t in came}
+        upd = set()  # a merge recorded without its key pairs nothing
+        if key_idx is not None:
+            upd = {t[key_idx] for t in gone} & {t[key_idx] for t in came}
+            upd.discard(None)  # NULL keys stay delete/insert
         out = []
         for ctr, upd_type, plain_type in (
             (gone, "update_preimage", "delete"),
             (came, "update_postimage", "insert"),
         ):
             for t, n in ctr.items():
-                ctype = upd_type if t[key_idx] in upd else plain_type
+                ctype = upd_type if upd and t[key_idx] in upd else plain_type
                 out.extend((ctype, t) for _ in range(n))
         if not out:
             return
@@ -1428,32 +1472,35 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         events from the topic; here the TABLE is the topic).
 
         Offsets are committed generation numbers. A micro-batch traces the
-        commit chain (end → start via each manifest's lineage parent) and
-        plans, per commit:
+        commit chain (end → start via each manifest's lineage parent,
+        ``commit_chain``) and plans, per commit, from the commit's own
+        file delta against its parent:
 
-        * merge with ``change_files`` (merge_cow(record_change_feed=True)
-          materialized the churn-sized feed at merge time — the Delta CDF
-          _change_data design): one split per change file, read verbatim.
-          Fully distributed; zero cross-file work at read time.
-        * append / genesis publish: the commit's NEW files as constant
-          'insert' splits (partition values reconstructed from the map).
-        * merge_mor (T47): the commit's churn feed derived ON READ —
-          one split per key-hash bucket (``option('feedBuckets', N)``,
-          default 8); each split resolves its keys' pre-images via the
-          sequence-number kill rule over the stats-pruned parent files
-          and takes post-images from the commit's own upsert files, so
-          the scale-correct uniform-churn commit shape (merge_mor
-          rewrites nothing) now has a native streaming consumer — the
-          batch change_feed_mor's semantics, planned as offsets.
+        * merge_cow: one split reading the files the merge removed
+          (pre-images) against the files it added (post-images). Rows it
+          rewrote unchanged cancel, so a redelivered upsert that leaves a
+          row as it was emits nothing; the merge record's key pairs the
+          rest into updates (a merge recorded without a key labels
+          delete/insert).
+        * merge_mor (T47): one split per key-hash bucket
+          (``option('feedBuckets', N)``, default 8); each split resolves
+          its keys' pre-images via the sequence-number kill rule over the
+          stats-pruned parent files and takes post-images from the
+          commit's own upsert files, so the uniform-churn commit shape
+          (merge_mor rewrites nothing) streams too.
+        * append / genesis publish: the commit's NEW files as 'insert'
+          splits (partition values reconstructed from the map).
         * compact / fold / evolve: content-preserving by construction —
           contribute nothing (the CDF maintenance-invisibility contract).
-        * merge WITHOUT recorded change files, restore, a mid-chain
-          plain publish: REFUSE loudly with the owning surface named
-          (batch change_feed / fresh checkpoint) — the T42
-          honest-refusal class, never a silent wrong feed.
+        * restore, a mid-chain plain publish, rename/drop history: REFUSE
+          loudly with the owning surface named (batch change_feed /
+          fresh checkpoint) — the T42 honest-refusal class, never a
+          silent wrong feed.
 
-        At 100 TB each trigger costs O(chain manifests) driver JSON reads
-        and executor-parallel scans of exactly the interval's churn."""
+        Both merge shapes give the batch ``change_feed`` /
+        ``change_feed_mor`` net per-commit semantics. At 100 TB each
+        trigger costs O(chain manifests) driver JSON reads and
+        executor-parallel scans of the interval's touched files."""
 
         def __init__(self, options):
             super().__init__(options)  # r17: a branch head feeds too
@@ -1463,40 +1510,11 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             s, e = int(start["gen"]), int(end["gen"])
             if e <= s:
                 return []
-            # trace e -> s through lineage parents
-            chain = []
-            cur = self._man(e)
-            genesis = False
-            while cur["generation"] > s:
-                chain.append(cur)
-                par = _parent_gen_of(cur)
-                if par is None:
-                    if s == 0:
-                        genesis = True  # snapshot commit: full-insert base
-                        break
-                    raise ValueError(
-                        f"cannot trace the commit lineage from generation "
-                        f"{e} back to {s}: the interval crosses a plain "
-                        f"publish/replace — restart the change-feed stream "
-                        f"from a fresh checkpoint"
-                    )
-                if par < s:
-                    raise ValueError(
-                        f"generation {s} is not an ancestor of {e} on the "
-                        f"commit chain: restart from a fresh checkpoint"
-                    )
-                cur = self._man(par)
-            chain.reverse()  # oldest -> newest
-            prev = self._man(s) if (s > 0 and not genesis) else None
+            # prev is each commit's lineage parent; None before a genesis
+            prev, chain = commit_chain(self._man, s, e)
             splits = []
             for man in chain:
                 g = man["generation"]
-                if "restore" in man:
-                    raise ValueError(
-                        "interval crosses a restore: a change feed across "
-                        "a rollback is undefined for a streaming consumer "
-                        "— restart from a fresh checkpoint"
-                    )
                 if man.get("epoch_maps"):
                     raise ValueError(
                         "this table has rename/drop history (epoch maps): "
@@ -1504,41 +1522,14 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                         "names — consume the batch change_feed through "
                         "read_committed"
                     )
-                pcol = man.get("partition_col")
-                parts = man.get("partitions", {})
-                schema_json = _json.dumps(man["schema"])
                 if "mor" in man:
-                    # T47: a merge-on-read commit — serve its churn feed
-                    # directly (prev is the lineage parent by chain
-                    # construction; a mor commit always has one)
-                    parent = (
-                        prev
-                        if prev is not None
-                        else self._man(_parent_gen_of(man))
-                    )
                     splits.extend(
                         _plan_mor_commit(
-                            self.table_dir, man, parent, self.n_buckets
+                            self.table_dir, man, prev, self.n_buckets
                         )
-                    )
-                elif man.get("change_files"):
-                    splits.extend(
-                        _FeedSplit(
-                            _os.path.join(self.table_dir, rel),
-                            None,
-                            None,
-                            schema_json,
-                            None,  # the file carries _change_type rows
-                            g,
-                        )
-                        for rel in man["change_files"]
                     )
                 elif "merge" in man:
-                    raise ValueError(
-                        f"generation {g} merged without a recorded change "
-                        f"feed: run merge_cow(record_change_feed=True) on "
-                        f"the producer, or consume the batch change_feed"
-                    )
+                    splits.extend(_plan_cow_commit(self.table_dir, man, prev))
                 elif any(k in man for k in ("compact", "fold", "evolve")):
                     pass  # content-preserving maintenance: empty feed
                 else:
@@ -1555,25 +1546,21 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                         )
                     # append lineage or the genesis snapshot: new files
                     # serve as 'insert' rows
-                    old = set(prev["files"]) if prev is not None else set()
+                    pcol = man.get("partition_col")
+                    schema_json = _json.dumps(man["schema"])
                     splits.extend(
                         _FeedSplit(
                             _os.path.join(self.table_dir, rel),
-                            pcol,
-                            parts.get(rel) if pcol else None,
-                            schema_json,
-                            "insert",
-                            g,
+                            pcol, pval, schema_json, g,
                         )
-                        for rel in man["files"]
-                        if rel not in old
+                        for rel, pval in _added_files(man, prev)
                     )
                 prev = man
             return splits
 
         def read(self, split):
-            if getattr(split, "kind", None) == "mor":
-                yield from _read_mor_feed_split(split)
+            if getattr(split, "kind", None) == "commit":
+                yield from _read_commit_feed_split(split)
                 return
             import pyarrow as pa
             import pyarrow.parquet as pq
@@ -1585,15 +1572,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             pf = pq.ParquetFile(split.path)
             for batch in pf.iter_batches():
                 n = batch.num_rows
-                cols = []
-                names = []
-                if split.ctype is None:
-                    cols.append(
-                        batch.column("_change_type").cast(pa.string())
-                    )
-                else:
-                    cols.append(pa.array([split.ctype] * n, type=pa.string()))
-                names.append("_change_type")
+                cols = [pa.array(["insert"] * n, type=pa.string())]
+                names = ["_change_type"]
                 for field in logical:
                     if (
                         split.pcol is not None
@@ -1625,8 +1605,8 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                 # the feed schema: _change_type + the table's columns +
                 # the commit stamp. Resolve the head manifest LENIENTLY —
                 # only its column list is needed here; per-commit refusals
-                # (MOR → change_feed_mor, restore, unrecorded merges) are
-                # raised at PLANNING with the owning surface named.
+                # (restore, rename/drop history) are raised at PLANNING
+                # with the owning surface named.
                 from pyspark.sql.types import (
                     LongType,
                     StringType,

@@ -1148,7 +1148,6 @@ def lakehouse_merge_batch(
     compact_target_files: int = 4,
     gc_older_than_s: float | None = 0.0,
     compact_small_file_bytes: int = 128 << 20,
-    record_change_feed: bool = False,
 ):
     """T30 foreachBatch: the T9 upsert landed as an ATOMIC LAKEHOUSE COMMIT
     — each micro-batch of CDC envelopes becomes one manifest generation via
@@ -1222,7 +1221,6 @@ def lakehouse_merge_batch(
             compact_target_files,
             gc_older_than_s,
             compact_small_file_bytes,
-            record_change_feed=record_change_feed,
         )
 
     return apply
@@ -1239,7 +1237,6 @@ def _merge_and_maintain(
     gc_older_than_s: float | None,
     compact_small_file_bytes: int,
     retain_superseded: bool = False,
-    record_change_feed: bool = False,
 ) -> dict:
     """The lakehouse sinks' shared per-batch tail (t30/t30b/t31): one
     merge_cow commit at the next free generation number, then the steady-state
@@ -1266,7 +1263,6 @@ def _merge_and_maintain(
         key_col="id",
         generation=None,
         txn={"tag": tag, "batch_id": batch_id},
-        record_change_feed=record_change_feed,
     )
 
     if max_files is not None and merged["n_files"] > max_files:
@@ -2597,30 +2593,31 @@ def materialize_change_feed_stream(
     the topic.
 
     Producer half: the lsn-staged envelope replay drives t30's exact sink
-    loop with ``record_change_feed=True`` — each micro-batch is one
-    merge_cow generation that ALSO materializes its churn-sized feed
-    (pre/post images, classified) as committed change files, the Delta
-    CDF _change_data design (sources/manifest.py:merge_cow).
+    loop — each micro-batch is one merge_cow generation, and the commit
+    writes nothing for the feed: its file delta (the touched files it
+    removed, the files it added) is the feed's source, as Delta's
+    ``dataChange`` file actions are.
 
     Consumer half: ``spark.readStream.format('ezmanifest')
     .option('changeFeed', 'true')`` tails the commit chain — offsets are
-    generation numbers, each trigger plans the interval's change files
-    (plus appends as constant 'insert' splits) and reads them fully
-    distributed, with zero cross-file work at read time
+    generation numbers, and each trigger plans one split per merge
+    commit that reads its removed files against its added files, cancels
+    the rows the rewrite carried unchanged and labels the rest by the
+    merge key (plus appends as constant 'insert' splits)
     (sources/pyds.py:ManifestChangeFeedStreamReader). Returns the full
     _change_type row stream the consumer drained (through a parquet sink,
     so the result is itself a committed artifact).
 
     At 100 TB: per trigger, O(chain manifests) driver JSON reads plan the
-    batch and executors scan exactly the interval's churn — the untouched
-    table is never opened; feed retention is gc retention (consume before
-    reclaiming, the Delta CDF contract)."""
+    batch and executors scan exactly the interval's touched files — the
+    untouched table is never opened; feed retention is gc retention
+    (consume before reclaiming, the Delta CDF contract)."""
     table_dir = _genesis(spark, rig_dir(sf_dir, f"lakehouse-cdf-{tag}"))
     out_dir = _fresh(rig_dir(sf_dir, f"cdf-out-{tag}"))
     env = stream_envelopes(
         spark, path=envelopes_jsonl_lsn_split(spark, sf_dir), max_files_per_trigger=1
     )
-    _replay(env, lakehouse_merge_batch(table_dir, tag=tag, record_change_feed=True))
+    _replay(env, lakehouse_merge_batch(table_dir, tag=tag))
     return _change_feed_to_parquet(spark, table_dir, out_dir)
 
 
@@ -2783,7 +2780,7 @@ def materialize_mor_change_feed_stream(
     Consumer half: the SAME ``readStream.format('ezmanifest')
     .option('changeFeed','true')`` stream as t46 — merge_mor commits now
     plan as key-hash-bucket splits that derive the churn feed ON READ
-    (sources/pyds.py:_read_mor_feed_split): pre-images via the
+    (sources/pyds.py:_read_commit_feed_split): pre-images via the
     sequence-number kill rule over stats-pruned parent files, post-images
     from the commit's own upsert files, fold commits contributing nothing
     (maintenance invisibility). Returns the drained _change_type row

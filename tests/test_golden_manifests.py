@@ -8,8 +8,8 @@ copy-on-write merge, partial compaction, additive evolution, rename,
 two merge-on-read commits, the fold, restore and ALTER CONSTRAINT. It
 runs on a flat table, and on a partitioned table with a branch commit
 and a column drop; a hidden-partitioned run adds the full compaction,
-a merge that records its change feed and nested evolution, and a last
-run writes through the ``ezmanifest`` data source.
+a merge across hidden partitions and nested evolution, and a last run
+writes through the ``ezmanifest`` data source.
 
 Staged part files (engine and data source) and bloom sidecars embed a
 random uuid, so each uuid is replaced by the ordinal at which it first
@@ -202,7 +202,7 @@ def _hidden(spark, td):
     ).withColumn("_p_truncate_id", (F.col("id") - F.col("id") % 5).cast("string"))
     rec("merge_cow_change_feed", merge_cow(
         spark, td, changes.select("id", "s", "_p_truncate_id", "op", "seq"),
-        "id", 3, record_change_feed=True,
+        "id", 3,
     ))
     rec("compact", compact(spark, td, 4))
     rec("evolve_schema_nested", evolve_schema_nested(

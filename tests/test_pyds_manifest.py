@@ -1013,7 +1013,7 @@ def test_change_feed_stream_restart_continues_and_maintenance_invisible(
     merge_cow(
         spark, d,
         _feed_batch(spark, [(1, 10, "a@x", "c", 10), (2, 11, "b@x", "c", 11)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     got1 = _drain_feed(spark, d, ck, out)
     assert got1 == [
@@ -1024,13 +1024,13 @@ def test_change_feed_stream_restart_continues_and_maintenance_invisible(
     merge_cow(
         spark, d,
         _feed_batch(spark, [(1, 20, "a2@x", "u", 20), (3, 21, "c@x", "c", 21)]),
-        "id", 3, record_change_feed=True,
+        "id", 3,
     )
     compact_partial(spark, d, 4, max_file_bytes=10**9, target_files=1)
     merge_cow(
         spark, d,
         _feed_batch(spark, [(2, 30, None, "d", 30)]),
-        "id", 5, record_change_feed=True,
+        "id", 5,
     )
     got2 = _drain_feed(spark, d, ck, out)
     new = sorted(set(got2) - set(got1))
@@ -1044,11 +1044,11 @@ def test_change_feed_stream_restart_continues_and_maintenance_invisible(
 
 
 def test_change_feed_stream_refusals(spark, tmp_path):
-    """T46 honest-refusal classes: a merge WITHOUT a recorded feed names
-    the fix; a restore-crossing interval refuses. All raise through the
-    stream, never a silent wrong feed. (MOR commits were the third
-    refusal class through r17; as of r18 the stream SERVES them — t47 —
-    so case (3) now asserts the feed instead.)"""
+    """T46 honest-refusal classes: a restore-crossing interval refuses
+    through the stream, never a silent wrong feed. Cases (1) and (3) were
+    refusals once and are served now: a copy-on-write merge's feed is
+    derived from its file delta (it used to need a merge-time recorded
+    feed), and a MOR commit's since r18 (t47)."""
     import pytest as _pytest
 
     from ez_cdc_spark.sources.manifest import merge_cow, restore
@@ -1069,23 +1069,29 @@ def test_change_feed_stream_refusals(spark, tmp_path):
         )
         q.awaitTermination()
 
-    # (1) merge without record_change_feed
+    # (1) a plain copy-on-write merge: served from its file delta
     d, _ = _feed_table(spark, "cdf_refuse_plain")
     merge_cow(
         spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]), "id", 2
     )
-    with _pytest.raises(Exception, match="without a recorded change feed"):
-        drain(d, str(tmp_path / "ck1"), str(tmp_path / "o1"))
+    drain(d, str(tmp_path / "ck1"), str(tmp_path / "o1"))
+    got = sorted(
+        tuple(r)
+        for r in spark.read.parquet(str(tmp_path / "o1"))
+        .select("_change_type", "id", "lsn", "email", "_commit_generation")
+        .collect()
+    )
+    assert got == [("insert", 1, 10, "a@x", 2)]
 
     # (2) restore-crossing interval
     d2, _ = _feed_table(spark, "cdf_refuse_restore")
     merge_cow(
         spark, d2, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     merge_cow(
         spark, d2, _feed_batch(spark, [(1, 20, "a2@x", "u", 20)]),
-        "id", 3, record_change_feed=True,
+        "id", 3,
     )
     restore(d2, 4, as_of_generation=2)
     with _pytest.raises(Exception, match="restore"):
@@ -1099,7 +1105,7 @@ def test_change_feed_stream_refusals(spark, tmp_path):
     d3, _ = _feed_table(spark, "cdf_refuse_mor")
     merge_cow(
         spark, d3, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     merge_mor(
         spark, d3, _feed_batch(spark, [(1, 20, "a2@x", "u", 20)]), "id", 3
@@ -1118,44 +1124,6 @@ def test_change_feed_stream_refusals(spark, tmp_path):
     ]
 
 
-def test_change_files_gc_vacuum_lifecycle(spark):
-    """T46 retention: committed change files are protected like data files
-    (committed_files lists them; vacuum's reference set includes them)
-    while their manifest lives, and become reclaimable debris once gc
-    retires the generation — feed retention IS gc retention, the Delta
-    CDF contract."""
-    import glob
-
-    from ez_cdc_spark.sources.manifest import (
-        compact,
-        gc,
-        merge_cow,
-        read_manifest,
-        vacuum,
-    )
-
-    d, _ = _feed_table(spark, "cdf_lifecycle")
-    merge_cow(
-        spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
-    )
-    cf = read_manifest(d)["change_files"]
-    assert cf
-    # live manifest references them: aggressive maintenance keeps them
-    gc(d, older_than_s=None)
-    vacuum(d, older_than_s=0.0)
-    for rel in cf:
-        assert os.path.exists(os.path.join(d, rel)), rel
-    # supersede the generation (full compact) and retire history
-    compact(spark, d, 3, target_files=1)
-    gc(d, older_than_s=None)
-    vacuum(d, older_than_s=0.0)
-    assert not any(
-        os.path.exists(os.path.join(d, rel)) for rel in cf
-    ), "retired history's change files must be reclaimable"
-    assert glob.glob(os.path.join(d, "data", "*", "_changefeed", "*.parquet")) == []
-
-
 def test_change_feed_stream_starting_generation_and_batch_refusal(
     spark, tmp_path
 ):
@@ -1170,11 +1138,11 @@ def test_change_feed_stream_starting_generation_and_batch_refusal(
     d, _ = _feed_table(spark, "cdf_startgen")
     merge_cow(
         spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     merge_cow(
         spark, d, _feed_batch(spark, [(2, 20, "b@x", "c", 20)]),
-        "id", 3, record_change_feed=True,
+        "id", 3,
     )
     register_ezmanifest(spark)
     q = (
@@ -1236,7 +1204,7 @@ def test_change_feed_stream_partitioned_merges(spark, tmp_path):
             [(1, "a", 20, "u", 20), (3, "b", 21, "c", 21)],
             "id long, p string, lsn long, op string, seq long",
         ),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     publish_append(
         spark.createDataFrame([(4, "c", 30)], schema), d, 3
@@ -1269,6 +1237,229 @@ def test_change_feed_stream_partitioned_merges(spark, tmp_path):
     ]
 
 
+def _split_rows(reader, start, end):
+    """Plan the interval ``start``..``end`` on a change-feed stream reader
+    and read every split driver-side: row tuples, sorted by ``repr`` (a
+    NULL key does not compare with an int)."""
+    rows = []
+    for sp in reader.partitions({"gen": start}, {"gen": end}):
+        for batch in reader.read(sp) or []:
+            cols = batch.to_pydict()
+            rows.extend(zip(*cols.values()))
+    return sorted(rows, key=repr)
+
+
+def test_change_feed_stream_equals_batch_feed_commit_by_commit(
+    spark, tmp_path
+):
+    """The stream derives every commit's feed from its file delta, so
+    commit by commit it equals the batch feed: change_feed(g-1, g, key)
+    for copy-on-write commits, change_feed_mor(g-1, g) for merge-on-read
+    ones. The chain holds a COW merge, a merge that moves a key to
+    another partition, a redelivered upsert that changes nothing (emits
+    nothing), a NULL key, a partial compaction, an append, a merge_mor
+    and a compact_mor fold. One stream drained over the whole chain
+    emits the concatenation."""
+    from ez_cdc_spark.sources.manifest import (
+        change_feed,
+        change_feed_mor,
+        compact_mor,
+        compact_partial,
+        merge_cow,
+        merge_mor,
+        publish_append,
+        publish_partitioned,
+        read_manifest,
+    )
+
+    d = os.path.join(SCRATCH, "cdf_equals_batch")
+    shutil.rmtree(d, ignore_errors=True)
+    ddl = "id long, p string, lsn long"
+
+    def batch(rows):
+        return spark.createDataFrame(rows, ddl + ", op string, seq long")
+
+    publish_partitioned(
+        spark.createDataFrame(
+            [(1, "a", 10), (2, "b", 11), (3, "a", 12), (5, "b", 13)], ddl
+        ),
+        d, 1, partition_col="p", stats_columns=["id"],
+    )
+    merge_cow(spark, d, batch(
+        [(1, "a", 20, "u", 20), (4, "b", 21, "c", 21), (5, None, None, "d", 22)]
+    ), "id", 2)
+    merge_cow(spark, d, batch([(2, "a", 30, "u", 30)]), "id", 3)  # b -> a
+    merge_cow(spark, d, batch([(4, "b", 21, "c", 21)]), "id", 4)  # no-op
+    merge_cow(spark, d, batch([(None, "a", 50, "c", 50)]), "id", 5)
+    compact_partial(spark, d, 6, max_file_bytes=10**9, target_files=1)
+    publish_append(spark.createDataFrame([(6, "c", 60)], ddl), d, 7)
+    merge_mor(
+        spark, d, batch([(3, "a", 80, "u", 80), (1, None, None, "d", 81)]),
+        "id", 8,
+    )
+    compact_mor(spark, d, 9, target_files=1)
+
+    reader = _feed_reader(d)
+    want_all = []
+    for g in range(2, 10):
+        man = read_manifest(d, g)
+        if "mor" in man or "fold" in man:
+            feed = change_feed_mor(spark, d, g - 1, g)
+        else:
+            feed = change_feed(spark, d, g - 1, g, key_col="id")
+        want = sorted(
+            ((*tuple(r), g) for r in feed.select(
+                "_change_type", "id", "p", "lsn").collect()),
+            key=repr,
+        )
+        got = _split_rows(reader, g - 1, g)
+        assert got == want, (g, got, want)
+        want_all.extend(want)
+    # the no-op redelivery and both maintenance commits feed nothing
+    assert not [r for r in want_all if r[-1] in (4, 6, 9)]
+    assert ("update_preimage", 2, "b", 11, 3) in want_all
+    assert ("insert", None, "a", 50, 5) in want_all
+
+    register_ezmanifest(spark)
+    q = (
+        spark.readStream.format("ezmanifest")
+        .option("path", d)
+        .option("changeFeed", "true")
+        .option("startingGeneration", 1)
+        .load()
+        .writeStream.format("parquet")
+        .option("path", str(tmp_path / "out"))
+        .option("checkpointLocation", str(tmp_path / "ck"))
+        .trigger(availableNow=True)
+        .start()
+    )
+    q.awaitTermination()
+    drained = sorted(
+        (
+            tuple(r)
+            for r in spark.read.parquet(str(tmp_path / "out"))
+            .select("_change_type", "id", "p", "lsn", "_commit_generation")
+            .collect()
+        ),
+        key=repr,
+    )
+    assert drained == sorted(want_all, key=repr)
+
+
+def test_change_feed_stream_never_pairs_a_null_key(spark):
+    """A commit that rewrites a NULL-key row labels it delete + insert in
+    the stream, as the batch feed does: NULL never equals NULL as a key,
+    so only non-NULL keys pair into update_preimage/update_postimage.
+    The commit is built from the commit protocol directly — a merge
+    lineage over a rewritten file — because merge_cow never removes a
+    NULL-key row."""
+    from ez_cdc_spark.sources.manifest import (
+        _commit_manifest,
+        change_feed,
+        derive_manifest,
+        publish,
+        read_manifest,
+        stage_only,
+        take_generation,
+    )
+
+    d = os.path.join(SCRATCH, "cdf_null_key")
+    shutil.rmtree(d, ignore_errors=True)
+    ddl = "id long, lsn long, email string"
+    publish(
+        spark.createDataFrame([(None, 1, "n@x"), (5, 1, "a@x")], ddl),
+        d, 1, stats_columns=["id"],
+    )
+    parent = read_manifest(d)
+    g = take_generation(d, None)
+    staged = stage_only(
+        spark.createDataFrame([(None, 2, "n2@x"), (5, 2, "a2@x")], ddl), d, g
+    )
+    _commit_manifest(
+        d, g,
+        derive_manifest(
+            parent, g,
+            added=[os.path.relpath(f, d) for f in staged],
+            removed=parent["files"],
+            merge={"parent": parent["generation"], "key": "id"},
+        ),
+        expected_parent=parent["generation"],
+    )
+    want = sorted(
+        (
+            (*tuple(r), g)
+            for r in change_feed(spark, d, 1, g, key_col="id")
+            .select("_change_type", "id", "lsn", "email")
+            .collect()
+        ),
+        key=repr,
+    )
+    assert want == [
+        ("delete", None, 1, "n@x", g),
+        ("insert", None, 2, "n2@x", g),
+        ("update_postimage", 5, 2, "a2@x", g),
+        ("update_preimage", 5, 1, "a@x", g),
+    ]
+    assert _split_rows(_feed_reader(d), 1, g) == want
+
+
+def test_change_feed_stream_ignores_planted_change_files(spark, tmp_path):
+    """Manifests once listed merge-time ``change_files`` under
+    ``data/gen-N/_changefeed/``. The stream derives every merge's feed
+    from its file delta, so a planted ``change_files`` entry changes
+    nothing it emits, and vacuum reclaims the files: no manifest key
+    protects them any more."""
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from ez_cdc_spark.sources.manifest import merge_cow, vacuum
+
+    d, _ = _feed_table(spark, "cdf_planted")
+    merge_cow(
+        spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]), "id", 2
+    )
+    merge_cow(
+        spark, d, _feed_batch(spark, [(1, 20, "a2@x", "u", 20)]), "id", 3
+    )
+    planted = os.path.join(d, "data", "gen-3", "_changefeed", "part-0.parquet")
+    os.makedirs(os.path.dirname(planted))
+    pq.write_table(
+        pa.table({
+            "_change_type": ["delete"], "id": [99], "lsn": [0], "email": ["z"],
+        }),
+        planted,
+    )
+    mpath = os.path.join(d, "_manifests", "gen-3.json")
+    with open(mpath) as fh:
+        man = json.load(fh)
+    man["change_files"] = [os.path.relpath(planted, d)]
+    man["change_feed_key"] = "id"
+    with open(mpath, "w") as fh:
+        json.dump(man, fh)
+
+    got = _drain_feed(spark, d, str(tmp_path / "ck"), str(tmp_path / "out"))
+    assert got == [
+        ("insert", 1, 10, "a@x", 2),
+        ("update_postimage", 1, 20, "a2@x", 3),
+        ("update_preimage", 1, 10, "a@x", 3),
+    ]
+    assert planted in vacuum(d, older_than_s=0.0)
+    assert not os.path.exists(planted)
+    assert all(os.path.exists(os.path.join(d, r)) for r in man["files"])
+
+    # a merge recorded before merge records named their key: the same
+    # rows, labelled without update pairs (the batch feed without key_col)
+    del man["merge"]["key"]
+    with open(mpath, "w") as fh:
+        json.dump(man, fh)
+    assert _split_rows(_feed_reader(d), 2, 3) == [
+        ("delete", 1, 10, "a@x", 3),
+        ("insert", 1, 20, "a2@x", 3),
+    ]
+
+
 def test_stream_readers_tail_branch_heads(spark, tmp_path):
     """r17 (round-18 candidate landed early): both stream readers honor
     option('ref', name) — S38 refs share the generation space, so only
@@ -1280,7 +1471,7 @@ def test_stream_readers_tail_branch_heads(spark, tmp_path):
     create_branch(d, "stage")
     merge_cow(
         spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True, ref="stage",
+        "id", 2, ref="stage",
     )
     publish_append(
         spark.createDataFrame([(2, 20, "b@x")], schema), d, 3, ref="stage"
@@ -1402,18 +1593,18 @@ def test_change_feed_stream_live_tail_races_producer(spark, tmp_path):
     try:
         merge_cow(
             spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-            "id", 2, record_change_feed=True,
+            "id", 2,
         )
         wait_drained(q, "gen", 2, timeout=120)
         merge_cow(
             spark, d,
             _feed_batch(spark, [(1, 20, "a2@x", "u", 20), (2, 21, "b@x", "c", 21)]),
-            "id", 3, record_change_feed=True,
+            "id", 3,
         )
         wait_drained(q, "gen", 3, timeout=120)
         merge_cow(
             spark, d, _feed_batch(spark, [(2, 30, None, "d", 30)]),
-            "id", 4, record_change_feed=True,
+            "id", 4,
         )
         wait_drained(q, "gen", 4, timeout=120)
         # drain: wait until the sink has flushed the last batch
@@ -1511,7 +1702,7 @@ def test_change_feed_stream_mixed_cow_and_mor_commits(spark, tmp_path):
     ck, out = str(tmp_path / "ck"), str(tmp_path / "out")
     merge_cow(
         spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     merge_mor(
         spark, d,
@@ -1521,7 +1712,7 @@ def test_change_feed_stream_mixed_cow_and_mor_commits(spark, tmp_path):
     compact_mor(spark, d, 4, target_files=1)
     merge_cow(
         spark, d, _feed_batch(spark, [(2, 30, None, "d", 30)]),
-        "id", 5, record_change_feed=True,
+        "id", 5,
     )
     got = _drain_feed(spark, d, ck, out)
     assert got == sorted(
@@ -2124,7 +2315,7 @@ def test_change_feed_stream_epoch_refusal_names_batch_owner(spark, tmp_path):
     d, _ = _feed_table(spark, "cdf_refuse_epoch")
     merge_cow(
         spark, d, _feed_batch(spark, [(1, 10, "a@x", "c", 10)]),
-        "id", 2, record_change_feed=True,
+        "id", 2,
     )
     rename_column(d, 3, "email", "mail")
     merge_cow(
@@ -2133,7 +2324,7 @@ def test_change_feed_stream_epoch_refusal_names_batch_owner(spark, tmp_path):
             [(1, 20, "a2@x", "u", 20)],
             "id long, lsn long, mail string, op string, seq long",
         ),
-        "id", 4, record_change_feed=True,
+        "id", 4,
     )
     register_ezmanifest(spark)
     q = (
