@@ -1555,7 +1555,11 @@ def lakehouse_wap_batch(
     it to main, and a replayed batch at or below the committed watermark
     skips before any branch is cut. A crash between branch merge and
     fast-forward re-processes the batch from a fresh branch (the
-    watermark only advances at publication)."""
+    watermark only advances at publication). A batch whose rows all go
+    to quarantine publishes no generation: the clean remainder is empty,
+    merge_cow commits nothing and the watermark stays, so a replay
+    re-runs the batch, and the per-batch DLQ overwrite keeps that replay
+    idempotent."""
 
     def apply(batch: DataFrame, batch_id: int) -> None:
         from ez_cdc_spark.sources.manifest import (
@@ -2091,32 +2095,41 @@ def _signed_fold_changes(
 ) -> DataFrame:
     """The signed-fold tail shared by the feed consumers (consume_feed_step,
     stream_feed_agg_batch): fold ``signed`` rows (``first_name``,
-    ``lsn``; ``sign`` is the ±1 Column each row counts with) into the
-    per-first_name delta ``(_dn, _dsum)``, join it onto the committed
-    aggregate in ``agg_dir``, and emit merge_cow change rows (``n``,
-    ``sum_lsn``, ``op``, ``seq``). A group whose net delta is (0, 0)
+    ``lsn``; ``sign`` is the ±1 Column each row counts with) together
+    with the committed aggregate in ``agg_dir`` into merge_cow change rows
+    (``n``, ``sum_lsn``, ``op``, ``seq``). The aggregate's rows ride in
+    the same groupBy as the signed rows — one shuffle, no join build:
+    per first_name, ``_dn``/``_dsum`` sum the signed rows and ``_n0``/
+    ``_s0`` the committed values. A group whose net delta is (0, 0)
     changes nothing and is dropped, so an interval whose changes all
     cancel yields no rows; a group whose count returns to zero leaves
     the aggregate — the tombstone the feed's deletes imply."""
     from ez_cdc_spark.sources.manifest import read_committed
 
-    delta = (
-        signed.groupBy("first_name")
-        .agg(
-            F.sum(sign).cast("long").alias("_dn"),
-            F.sum(sign * F.col("lsn")).cast("long").alias("_dsum"),
-        )
-        .filter((F.col("_dn") != 0) | (F.col("_dsum") != 0))
+    zero = F.lit(0).cast("long")
+    delta = signed.select(
+        "first_name",
+        sign.cast("long").alias("_dn"),
+        (sign * F.col("lsn")).cast("long").alias("_dsum"),
+        zero.alias("_n0"),
+        zero.alias("_s0"),
     )
-    old = read_committed(spark, agg_dir)
+    old = read_committed(spark, agg_dir).select(
+        "first_name",
+        zero.alias("_dn"),
+        zero.alias("_dsum"),
+        F.col("n").cast("long").alias("_n0"),
+        F.col("sum_lsn").cast("long").alias("_s0"),
+    )
     return (
-        delta.join(old, on="first_name", how="left")
+        delta.unionByName(old)
+        .groupBy("first_name")
+        .agg(*[F.sum(c).alias(c) for c in ("_dn", "_dsum", "_n0", "_s0")])
+        .filter((F.col("_dn") != 0) | (F.col("_dsum") != 0))
         .select(
             "first_name",
-            (F.coalesce(F.col("n"), F.lit(0)) + F.col("_dn")).alias("n"),
-            (F.coalesce(F.col("sum_lsn"), F.lit(0)) + F.col("_dsum")).alias(
-                "sum_lsn"
-            ),
+            (F.col("_n0") + F.col("_dn")).alias("n"),
+            (F.col("_s0") + F.col("_dsum")).alias("sum_lsn"),
         )
         .select(
             "first_name",
@@ -2159,20 +2172,29 @@ def consume_feed_step(
     This is exactly the signed sum over change_feed(_mor)'s rows, minus
     the labelled feed's eager count-table pin and classification joins.
     Groups whose net delta is (0, 0) drop, so an interval with zero net
-    change (a pure compaction or fold, or churn that cancels) commits
-    nothing and leaves the cursor where it is — ANY downstream job can
-    maintain state from the feed without re-reading the table or seeing
-    the envelope stream at all.
+    change (a pure compaction or fold, or churn that cancels) resolves to
+    no change rows: merge_cow commits nothing, the step returns None and
+    the cursor stays where it is — ANY downstream job can maintain state
+    from the feed without re-reading the table or seeing the envelope
+    stream at all.
+
+    A COW step with a nonzero delta runs four Spark jobs: the fold's
+    shuffle map stage (the sides and the committed aggregate go through
+    one groupBy, no join), merge_cow's resolve shuffle map stage, its key
+    collect (which builds its cached resolved batch) and the staging
+    write from that cache. The changed keys are at most one per
+    first_name, so the rewrite drops them from the touched aggregate
+    files as literals, with no broadcast build.
 
     At 100 TB: the fold's I/O is the interval's churn (rewritten/added
     files, or the stats-pruned MOR resolves for the changed keys —
     manifest metadata excludes the untouched table before Spark sees a
-    path); the delta aggregate is one churn-sized groupBy; the
-    read-modify-write touches only the group keys the interval changed
-    (dimension-sized); the commit is merge_cow's stats-pruned rewrite of
-    the downstream table. Retention contract (the Delta CDF one): the
-    upstream cursor generation must not be gc'd before it is consumed —
-    the producer loop defers gc while a consumer lags."""
+    path) plus the dimension-sized aggregate, in one groupBy; the commit
+    is merge_cow's stats-pruned rewrite of the downstream table, touching
+    only the files holding group keys the interval changed. Retention
+    contract (the Delta CDF one): the upstream cursor generation must not
+    be gc'd before it is consumed — the producer loop defers gc while a
+    consumer lags."""
     from ez_cdc_spark.sources.manifest import (
         change_feed_mor_sides,
         change_feed_sides,
@@ -2208,26 +2230,17 @@ def consume_feed_step(
             part = side.select("first_name", "lsn", F.lit(s).alias("_s"))
             signed = part if signed is None else signed.unionByName(part)
     changes = _signed_fold_changes(spark, agg_dir, signed, F.col("_s"), cur)
-    # Optimization r19 (guide §5 caching): the fold above — the sides'
-    # scans, the delta groupBy and the read-modify-write join — is the
-    # expensive side of this step, and it feeds BOTH the emptiness check
-    # and the merge below (whose own actions re-derive from it). The
-    # delta is churn-sized; persist it for the step's lifetime so the
-    # fold executes once.
-    changes = changes.persist()
-    try:
-        if changes.isEmpty():
-            return None  # zero net change: keep cursor, nothing to commit
-        return merge_cow(
-            spark,
-            agg_dir,
-            changes,
-            key_col="first_name",
-            generation=None,
-            txn={"tag": consumer_tag, "consumed_gen": cur},
-        )
-    finally:
-        changes.unpersist()
+    merged = merge_cow(
+        spark,
+        agg_dir,
+        changes,
+        key_col="first_name",
+        generation=None,
+        txn={"tag": consumer_tag, "consumed_gen": cur},
+    )
+    if merged["generation"] == b_man["generation"]:
+        return None  # zero net change: merge_cow committed nothing, cursor stays
+    return merged
 
 
 def lakehouse_feed_fanout_batch(
@@ -2694,13 +2707,13 @@ def stream_feed_agg_batch(agg_dir: str, consumer_tag: str = "t48c"):
             return
         if batch.isEmpty():
             # churn-free micro-batch: nothing to commit. Checked on the
-            # BATCH, not downstream of the delta/join pipeline — an
-            # isEmpty() on the built `changes` executed the whole
-            # delta/groupBy/join once just to test emptiness before
-            # merge_cow recomputed it — two full jobs per micro-batch on
-            # the consumer hot path (ADVICE r18). A nonempty batch whose
-            # rows all cancel commits a carry-only generation that
-            # advances the watermark.
+            # BATCH, not downstream of the fold — an isEmpty() on the
+            # built `changes` executed the whole fold once just to test
+            # emptiness before merge_cow recomputed it — two full jobs
+            # per micro-batch on the consumer hot path (ADVICE r18). A
+            # nonempty batch whose rows all cancel folds to no change
+            # rows, so merge_cow commits nothing and the watermark stays;
+            # a replay folds to the same nothing.
             return
         sign = F.when(
             F.col("_change_type").isin("insert", "update_postimage"), F.lit(1)

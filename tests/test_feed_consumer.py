@@ -201,13 +201,16 @@ def test_mor_changed_keys_switch_to_executor_path_above_row_bound(
     assert len(below) == 6  # three update pre/post pairs
 
 
-# Spark jobs one consume_feed_step call may run on these fixtures, as
-# measured when the consumer began folding the feed sides (local[4]).
-# Folding the labelled change_feed(_mor) instead cost 12 (COW) and 21
-# (fold-crossing MOR): its eager count-table pins and classification
-# joins fail these bounds loudly.
-COW_STEP_JOBS = 8
-MOR_STEP_JOBS = 13
+# Spark jobs one consume_feed_step call may run on these fixtures
+# (local[4]). COW: the fold's shuffle map stage, merge_cow's resolve
+# shuffle map stage, its key collect and the staging write. A broadcast
+# of the old aggregate for a fold join, a persist + isEmpty emptiness
+# check on the fold, and a broadcast anti-join build of the changed keys
+# cost 8 (COW) and 11 (fold-crossing MOR); folding the labelled
+# change_feed(_mor) instead cost 12 and 21: its eager count-table pins
+# and classification joins fail these bounds loudly.
+COW_STEP_JOBS = 4
+MOR_STEP_JOBS = 7
 
 
 def test_consume_feed_step_job_budget_cow(spark, tmp_path):

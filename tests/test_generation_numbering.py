@@ -3,7 +3,8 @@
 ``commit_core.take_generation`` reserves the next free number above the
 committed head: a number held by an orphan manifest of a crashed attempt,
 or by another writer's reservation, is skipped. Explicit numbers keep
-their checks (pinned by the conflict tests in test_scale_ops.py).
+their checks (pinned by the conflict tests in test_scale_ops.py). A
+merge_cow batch that resolves to no rows takes no number at all.
 """
 
 import json
@@ -11,6 +12,8 @@ import os
 import shutil
 import tempfile
 import threading
+
+import pytest
 
 from ez_cdc_spark.sources.manifest import (
     _manifest_path,
@@ -115,5 +118,53 @@ def test_concurrent_appends_land_on_distinct_numbers(spark):
         ]
         ids = sorted(r["id"] for r in read_committed(spark, td).collect())
         assert ids == [0, 1, 2]
+    finally:
+        shutil.rmtree(td, ignore_errors=True)
+
+
+def _reservations(td: str) -> list[str]:
+    return [
+        f for f in os.listdir(os.path.join(td, "_manifests"))
+        if f.startswith(".reserve-gen-")
+    ]
+
+
+def test_empty_merge_cow_commits_nothing(spark):
+    """An empty batch, with ``generation=None`` and with an explicit free
+    number, commits nothing, reserves nothing and returns the head
+    manifest. An explicit number that is used or below the head is still
+    refused with the message a nonempty batch gets."""
+    td = tempfile.mkdtemp(prefix="ez_gen_empty_")
+    try:
+        publish(
+            spark.createDataFrame([(i, f"v{i}") for i in range(4)], DDL),
+            td, 1, stats_columns=["id"],
+        )
+        merge_cow(
+            spark, td, spark.createDataFrame([(1, "u1", "u", 1)], CHANGES_DDL),
+            "id", None,
+        )
+        head = read_manifest(td)
+        g = head["generation"]
+        empty = spark.createDataFrame([], CHANGES_DDL)
+        for gen in (None, g + 5):
+            assert merge_cow(spark, td, empty, "id", gen) == head
+            assert current_generation(td) == g
+            assert not _reservations(td)
+            assert not os.path.exists(_manifest_path(td, g + 1))
+            assert not os.path.exists(_manifest_path(td, g + 5))
+            assert not os.path.exists(os.path.join(td, "data", f"gen-{g + 1}"))
+
+        # an orphan manifest above the head holds the next number
+        with open(_manifest_path(td, g + 1), "w") as fh:
+            json.dump({**head, "generation": g + 1}, fh)
+        one = spark.createDataFrame([(2, "u2", "u", 2)], CHANGES_DDL)
+        for gen, err in ((g, ValueError), (1, ValueError), (g + 1, FileExistsError)):
+            with pytest.raises(err) as nonempty:
+                merge_cow(spark, td, one, "id", gen)
+            with pytest.raises(err) as got:
+                merge_cow(spark, td, empty, "id", gen)
+            assert str(got.value) == str(nonempty.value)
+        assert current_generation(td) == g and not _reservations(td)
     finally:
         shutil.rmtree(td, ignore_errors=True)

@@ -1163,6 +1163,41 @@ def test_s30_plan_broadcast_anti_join_and_pruned_rewrite(spark, sf_smoke):
     assert "CartesianProduct" not in rp
 
 
+def test_merge_rewrite_small_key_set_filters_by_literal(spark, tmp_path):
+    """Below the literal bound, merge_cow's rewrite drops the driver-held
+    changed keys with a literal predicate: no broadcast build and no anti
+    join in the plan (the broadcast form is pinned above)."""
+    from ez_cdc_spark.sources.manifest import (
+        _merge_rewrite,
+        committed_files,
+        publish,
+        read_manifest,
+    )
+
+    td = str(tmp_path / "t")
+    publish(
+        spark.range(50).select("id", F.col("id").cast("string").alias("v")),
+        td, 1, stats_columns=["id"],
+    )
+    batch = spark.createDataFrame(
+        [(3, "x", "u"), (7, None, "d"), (None, "n", "u")],
+        "id bigint, v string, _op string",
+    )
+    rw = _merge_rewrite(
+        spark,
+        read_manifest(td),
+        td,
+        committed_files(td),
+        batch.select("id", "_op"),
+        batch.filter("_op <> 'd'").drop("_op"),
+        "id",
+        [3, 7, None],
+    )
+    rp = plan_str(rw)
+    assert "BroadcastExchange" not in rp and "LeftAnti" not in rp, rp[:800]
+    assert "CartesianProduct" not in rp
+
+
 def test_merge_resolve_partial_aggregate_holds_one_struct(spark):
     """The last-event-wins resolve both merge writers share aggregates one
     ``struct(seq, op, *payload)`` buffer with ``max``: the partial

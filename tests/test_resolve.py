@@ -7,8 +7,12 @@ Both merge writers resolve a change batch to one row per key with one
 batches where the order matters: exact (key, seq, op) duplicates with
 different payloads, a delete and an upsert at one sequence, NULL payload
 fields, a NULL op, string keys and a NULL key. They also pin that table
-columns named like the resolve's own fields merge through both writers.
+columns named like the resolve's own fields merge through both writers,
+and that merge_cow's rewrite gives the same rows whether it drops the
+changed keys as literals or through the broadcast anti-join.
 """
+
+import os
 
 import pytest
 from pyspark.sql import functions as F  # noqa: N812
@@ -146,3 +150,67 @@ def test_columns_named_like_the_resolve_fields(spark, tmp_path, writer):
         5: ("d", 105, "l5"),
         9: ("d", 7, "n"),
     }
+
+
+def _rewrite_both_ways(spark, td, batch, key, cols):
+    """merge_cow's rewrite of every committed file, built with the
+    driver-held keys (literal path up to the bound) and without them
+    (broadcast anti-join): (literal rows, broadcast rows, literal plan)."""
+    from ez_cdc_spark.plans.assertions import plan_str
+
+    man = m.read_manifest(td)
+    files = [os.path.join(td, r) for r in man["files"]]
+    final, op = m._resolve_last_event(batch, key, cols, "op", "seq")
+    upserts = final.filter(F.col(op) != "d").select(*cols)
+    keys = [r[0] for r in final.select(key).collect()]
+    lit = m._merge_rewrite(spark, man, td, files, final, upserts, key, keys)
+    bc = m._merge_rewrite(spark, man, td, files, final, upserts, key)
+    return _rows(lit), _rows(bc), plan_str(lit)
+
+
+def test_rewrite_literal_keys_equal_broadcast_string_and_null_keys(spark, tmp_path):
+    """String keys, a NULL-keyed table row and a NULL batch key: a NULL
+    table key survives both forms, a NULL batch key removes nothing and
+    its upsert is staged."""
+    td = str(tmp_path / "t")
+    m.publish(
+        spark.createDataFrame(
+            [(None, 0, "tn")] + [(f"k{i}", i, f"t{i}") for i in range(20)], SCHEMA
+        ).coalesce(2),
+        td, 1, stats_columns=["k"],
+    )
+    batch = spark.createDataFrame(
+        [("k1", 1, "u1", "u", 1), ("k2", None, None, "d", 1), ("new", 5, "n", "c", 1),
+         (None, 9, "un", "u", 1), ("k3", 3, "x", "u", 1), ("k3", None, None, "d", 2)],
+        SCHEMA + CH,
+    )
+    lit, bc, plan = _rewrite_both_ways(spark, td, batch, "k", ["k", "v", "s"])
+    assert lit == bc
+    assert "BroadcastExchange" not in plan and "LeftAnti" not in plan, plan
+    assert (None, 0, "tn") in lit and (None, 9, "un") in lit
+    assert not any(r[0] in ("k2", "k3") for r in lit)
+
+
+@pytest.mark.parametrize("extra", [0, 1])
+def test_rewrite_literal_keys_equal_broadcast_at_the_bound(spark, tmp_path, extra):
+    """Exactly the bound of non-NULL int keys (plus a NULL batch key,
+    which does not count) takes the literal path; one more key takes the
+    broadcast path. Both give the broadcast rows."""
+    bound = m._REWRITE_LITERAL_MAX_KEYS
+    td = str(tmp_path / "t")
+    m.publish(
+        spark.createDataFrame(
+            [(None, -1, "tn")] + [(i, i, f"t{i}") for i in range(2 * bound)],
+            "k bigint, v bigint, s string",
+        ).coalesce(3),
+        td, 1, stats_columns=["k"],
+    )
+    rows = [(i * 2, i, f"u{i}", "d" if i % 3 == 0 else "u", 1)
+            for i in range(bound + extra)] + [(None, 7, "un", "u", 1)]
+    batch = spark.createDataFrame(rows, "k bigint, v bigint, s string" + CH)
+    lit, bc, plan = _rewrite_both_ways(spark, td, batch, "k", ["k", "v", "s"])
+    assert lit == bc
+    assert ("BroadcastExchange" in plan) == bool(extra), plan[:800]
+    deleted = {r[0] for r in rows if r[3] == "d"}
+    assert deleted and not any(r[0] in deleted for r in lit)
+    assert (None, -1, "tn") in lit and (None, 7, "un") in lit
