@@ -12,7 +12,8 @@
 
 The engine (``manifest.py``), the catalog (``catalog.py``, whose versions
 use the same link-once + pointer swap) and the ``ezmanifest`` data source
-(``pyds.py``) all commit through these functions.
+(``pyds.py``) all commit through these functions, and the engine's
+``gc`` and ``vacuum`` delete through :func:`reachable` and :func:`reclaim`.
 
 The data source's ``write()`` and ``commit()`` run in Python worker
 processes, and an external driver that put this repo on its own
@@ -29,15 +30,18 @@ one it is given.
 from __future__ import annotations
 
 import base64
+import contextlib
 import hashlib
 import json
 import os
 import re
+import shutil
 import struct
 import sys
 import time
 import uuid
 import zlib
+from typing import NamedTuple
 
 from pyspark import cloudpickle
 
@@ -200,6 +204,12 @@ def _reserve(table_dir: str, generation: int) -> None:
             os.O_CREAT | os.O_EXCL | os.O_WRONLY,
         )
     )
+
+
+def _release(table_dir: str, generation: int) -> None:
+    """Drop generation ``generation``'s reservation, if it is held."""
+    with contextlib.suppress(FileNotFoundError):
+        os.unlink(_reserve_path(table_dir, generation))
 
 
 def _reserve_next(table_dir: str, generation: int) -> int:
@@ -424,10 +434,7 @@ def _commit_manifest(
             f"pick a fresh generation (a torn commit's manifest is abandoned, "
             f"never rewritten)"
         ) from None
-    try:
-        os.unlink(_reserve_path(table_dir, generation))
-    except FileNotFoundError:
-        pass  # direct _commit_manifest callers (tests) never reserved
+    _release(table_dir, generation)  # direct callers (tests) never reserved
     _swap_pointer(
         table_dir,
         _ref_pointer_path(table_dir, ref),
@@ -628,6 +635,168 @@ def commit_chain(read, from_generation: int, to_generation: int):
             )
         cur = read(par)
     return cur, commits[::-1]
+
+
+# ----- reclaim: what maintenance keeps, and the one deletion loop -----
+
+
+def _listdir(path: str) -> list[str]:
+    return sorted(os.listdir(path)) if os.path.isdir(path) else []
+
+
+def list_branches(table_dir: str) -> dict[str, dict]:
+    """Every live branch's ref content, by name."""
+    rdir = os.path.join(table_dir, _REF_DIR)
+    out: dict[str, dict] = {}
+    for name in _listdir(rdir):
+        if name.startswith("."):
+            continue  # a committing writer's pointer tmp
+        try:
+            with open(os.path.join(rdir, name)) as fh:
+                out[name] = json.load(fh)
+        except (OSError, ValueError):
+            continue  # dropped mid-listing
+    return out
+
+
+class Reachable(NamedTuple):
+    """What :func:`reachable` found; paths are joined onto the table dir."""
+
+    head: int | None  # the main pointer's generation
+    roots: frozenset  # head, every branch head and the kept generations
+    reserved: frozenset  # reserved generation dirs and leased stream dirs
+    named: frozenset  # every file a manifest names, and each dir holding one
+
+    def keeps(self, path: str) -> bool:
+        """The one survival rule: ``path`` is named by a manifest or holds
+        a file that is, or lies in a reserved or leased staging dir."""
+        return path in self.named or any(
+            path == d or path.startswith(d + os.sep) for d in self.reserved
+        )
+
+
+def reachable(table_dir: str, keep_generations=()) -> Reachable:
+    """What ``gc`` and ``vacuum`` must not delete, read in the one safe
+    order. The caller lists its candidates BEFORE calling this.
+
+    1. Reservations and leases first: a ``.reserve-gen-N`` protects
+       ``data/gen-N`` for a writer's whole staging phase (S33), and a
+       streaming sink's ``.reserve-stream-<tag>`` lease its
+       ``data/stream-<tag>`` (T44).
+    2. Then the pointer and the branch refs: the roots.
+    3. Manifests last, listed again: every data file, delete file and
+       ``_blooms/`` sidecar that a manifest on disk names.
+
+    The order is load-bearing. A committing writer links ``gen-N.json``
+    and only then releases its reservation, and writes its sidecar before
+    the link. So if step 1 misses the reservation, the manifest was
+    already linked and step 3 sees it, or the writer had not staged yet
+    and none of its files was a candidate. Reading manifests first
+    re-opened a window that a full-suite stress hit (r15): the manifest
+    was not yet linked at the manifest read and the reservation was
+    already released at the reservation read, so a committed file was
+    vacuumed at ``older_than_s=0``. Re-reading after the caller's walk
+    also protects both the old and the new files of a commit that lands
+    mid-walk, and a branch cut mid-walk."""
+    mdir = os.path.join(table_dir, "_manifests")
+    reserved = {
+        os.path.join(table_dir, "data", m[len(".reserve-"):])
+        for m in _listdir(mdir)
+        if m.startswith(".reserve-")
+    }
+    head = current_generation(table_dir)
+    roots = {head, *keep_generations}
+    roots.update(
+        _gen_of(b.get("current", "")) for b in list_branches(table_dir).values()
+    )
+    named: set[str] = set()
+    for m in _listdir(mdir):
+        if m.startswith(".") or _gen_of(m) is None:
+            continue  # reservations and mid-commit tmps are not manifests
+        try:
+            with open(os.path.join(mdir, m)) as fh:
+                man = json.load(fh)
+        except (OSError, ValueError):
+            continue  # removed by a concurrent gc: protects nothing
+        sidecars = (man.get("bloom_meta") or {}).get("sidecars", [])
+        for rel in [
+            *man["files"],
+            *(man.get("delete_files") or []),
+            *(os.path.join(_BLOOMS_DIR, s) for s in sidecars),
+        ]:
+            p = os.path.join(table_dir, rel)
+            while p not in named and len(p) > len(table_dir):
+                named.add(p)
+                p = os.path.dirname(p)
+    return Reachable(
+        head, frozenset(roots - {None}), frozenset(reserved), frozenset(named)
+    )
+
+
+def _newest_mtime(path: str) -> float:
+    """Newest mtime under ``path`` recursively: the path itself, every
+    subdirectory, every file. A writer staging a partitioned layout
+    touches only leaf files inside ``pcol=value`` subdirs, so the
+    generation dir's own mtime goes stale long before the write ends
+    (ADVICE r14). Raises OSError only if ``path`` itself cannot be dated."""
+    newest = os.path.getmtime(path)
+    for root, dirs, files in os.walk(path):
+        for name in dirs + files:
+            try:
+                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
+            except OSError:
+                continue  # vanished mid-walk
+    return newest
+
+
+def _aged(path: str, older_than_s: float | None) -> bool:
+    """The one age rule: ``path``'s newest recursive mtime is at least
+    ``older_than_s`` old. None is age-blind. A missing path holds nothing
+    young; one that cannot be dated otherwise counts as young."""
+    if older_than_s is None:
+        return True
+    try:
+        return time.time() - _newest_mtime(path) >= older_than_s
+    except FileNotFoundError:
+        return True
+    except OSError:
+        return False
+
+
+def reclaim(table_dir: str, units, older_than_s: float | None) -> list[str]:
+    """The one deletion loop: delete each unit (a file, or a dir with
+    everything in it) that is :func:`_aged`. A file takes the
+    ``.<name>.crc`` checksum sibling Spark writes beside it. Then prune
+    the dirs under ``data/`` the deletions emptied, deepest first, and
+    only those: Spark's committer creates a staging dir an instant before
+    writing into it, and a sweep of every empty dir once deleted one under
+    a running job (r15). Returns the deleted units."""
+    data_root = os.path.join(table_dir, "data")
+    deleted: list[str] = []
+    for path in units:
+        if not _aged(path, older_than_s):
+            continue
+        try:
+            if os.path.isdir(path):
+                shutil.rmtree(path)
+            else:
+                os.unlink(path)
+                d, name = os.path.split(path)
+                with contextlib.suppress(FileNotFoundError):
+                    os.unlink(os.path.join(d, f".{name}.crc"))
+        except FileNotFoundError:
+            continue  # a concurrent gc or vacuum got it first
+        deleted.append(path)
+    prune = set()
+    for p in deleted:
+        d = os.path.dirname(p)
+        while d.startswith(data_root + os.sep):
+            prune.add(d)
+            d = os.path.dirname(d)
+    for d in sorted(prune, key=len, reverse=True):
+        with contextlib.suppress(OSError):
+            os.rmdir(d)  # still holds carried files
+    return deleted
 
 
 # ----- per-file kernels: footer stats and blooms -----

@@ -60,10 +60,14 @@ microseconds-held lock that the committed generation is still the
 commit in between raises :class:`CommitConflictError` (no lost updates;
 the loser's staged output remains gc-reclaimable debris) and the caller
 re-derives from the new state, the standard optimistic conflict-retry
-loop. ``gc`` additionally re-resolves the pointer after listing and skips
-any generation NEWER than the one it resolved, so even a publish racing a
-GC cannot have its fresh commit collected; an ``older_than_s`` retention
-threshold protects long-lived readers of superseded generations.
+loop. Maintenance shares one reachability walk,
+``commit_core.reachable``: ``gc`` expires manifests and ``vacuum`` data
+files, and a file survives while a manifest on disk names it or its
+staging dir is reserved. ``gc`` re-resolves the pointer after listing and
+an age-blind ``gc`` never collects a generation above it, so a publish
+racing a GC keeps its fresh commit; an ``older_than_s`` retention
+threshold keeps superseded generations, and every file they carry,
+readable for long-lived readers.
 
 Durability: manifest and pointer contents are fsynced, and the containing
 directories are fsynced after each ``os.replace`` so the rename itself is
@@ -107,6 +111,7 @@ from ez_cdc_spark.sources.commit_core import (  # noqa: F401
     _REF_DIR,
     CommitConflictError,
     _acquire_pointer_lock,
+    _aged,
     _bloom_might_contain,
     _carry_blooms,
     _commit_manifest,
@@ -117,6 +122,7 @@ from ez_cdc_spark.sources.commit_core import (  # noqa: F401
     _fsync_dir,
     _gen_of,
     _link_json,
+    _listdir,
     _manifest_path,
     _parent_gen_of,
     _ref_pointer_path,
@@ -129,8 +135,11 @@ from ez_cdc_spark.sources.commit_core import (  # noqa: F401
     commit_chain,
     current_generation,
     derive_manifest,
+    list_branches,
     map_files,
+    reachable,
     read_manifest,
+    reclaim,
     table_blooms,
     take_generation,
     txn_watermark,
@@ -3391,21 +3400,6 @@ def branch_head(table_dir: str, name: str) -> dict:
         return json.load(fh)
 
 
-def list_branches(table_dir: str) -> dict[str, dict]:
-    """Every live branch's ref content, by name."""
-    rdir = os.path.join(table_dir, _REF_DIR)
-    out: dict[str, dict] = {}
-    for name in sorted(os.listdir(rdir)) if os.path.isdir(rdir) else []:
-        if name.startswith("."):
-            continue  # a committing writer's pointer tmp
-        try:
-            with open(os.path.join(rdir, name)) as fh:
-                out[name] = json.load(fh)
-        except (OSError, ValueError):
-            continue  # dropped mid-listing
-    return out
-
-
 def drop_branch(table_dir: str, name: str) -> None:
     """Delete a branch ref. The branch's un-published generations become
     ordinary unreferenced debris — an aged ``gc`` + ``vacuum`` reclaims
@@ -3464,143 +3458,31 @@ def fast_forward(table_dir: str, name: str, drop: bool = True) -> dict:
     return read_manifest(table_dir, as_of_generation=g)
 
 
-def vacuum(table_dir: str, older_than_s: float) -> list[str]:
-    """File-level data reclaim — Delta VACUUM's analog, and the completion
-    partial compaction (S34) and copy-on-write merges (S30) make
-    necessary: both leave SUPERSEDED files inside generation dirs that
-    still hold carried (referenced) files, and :func:`gc`'s dir-granular
-    reclaim can never touch such a dir — without this op a long-running
-    merge stream leaks every rewritten file's old bytes forever.
+def vacuum(table_dir: str, older_than_s: float | None) -> list[str]:
+    """File-level data reclaim, Delta VACUUM's analog: delete every
+    ``*.parquet`` under ``data/`` that no manifest on disk names, with its
+    checksum sibling. Partial compaction (S34) and copy-on-write merges
+    (S30) leave superseded files inside generation dirs that still hold
+    carried files, so :func:`gc` must keep those dirs whole.
 
-    Deletes every ``*.parquet`` under ``data/`` that (a) is referenced by
-    NO manifest still on disk — manifest LIFECYCLE is ``gc``'s job, so
-    time-travel retention is whatever generation manifests gc has kept
-    (run ``gc(older_than_s)`` first, as the sinks' maintenance step does;
-    a file named by any existing manifest, committed, superseded, or
-    in-flight, is never touched) — (b) is itself older than
-    ``older_than_s``, and (c) — r15, the racing-writer guarantee made
-    structural — does not live under a generation dir whose
-    ``.reserve-gen-N`` staging reservation is still present: a live
-    writer holds the reservation for the WHOLE staging phase (S33) and
-    releases it only after its manifest exists, so every instant of a
-    concurrent writer's staging→link→commit is covered by reservation or
-    manifest reference, with no window even at ``older_than_s=0.0``
-    (candidates are listed BEFORE the protection sets are resolved, so a
-    protection appearing during the walk is always seen; a crashed
-    writer's stale reservation is first reclaimed by an aged ``gc``,
-    which re-opens those files to vacuum). The manifest set is re-read
-    after the walk so a commit landing mid-scan protects both its old
-    and new file sets. ``older_than_s`` is REQUIRED (0.0 means "reclaim
-    everything unreferenced now" — safe for snapshot READERS only in a
-    window where none holds a superseded generation; racing WRITERS are
-    structurally protected). Returns deleted paths; prunes directories
-    the deletions emptied."""
-    import time
-
-    mdir = os.path.join(table_dir, "_manifests")
+    Retention for readers is the manifests :func:`gc` kept: run it first,
+    as the sinks' maintenance step does. A file any manifest on disk names
+    (committed, superseded or in flight) is never touched, nor is one in a
+    reserved or leased staging dir, so racing writers are protected at
+    any threshold. ``older_than_s`` keeps files younger than that;
+    ``None`` (like 0.0) reclaims every unnamed file now, which is safe for
+    snapshot readers only while none holds a superseded generation.
+    Returns the deleted paths; prunes the dirs the deletions emptied. The
+    walk and its order: :func:`commit_core.reachable`."""
     data_root = os.path.join(table_dir, "data")
-    now = time.time()
-
-    def _reserved_dirs() -> set[str]:
-        out = set()
-        for m in sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []:
-            if m.startswith(".reserve-gen-"):
-                g = _gen_of(m)
-                if g is not None:
-                    out.add(_stage_dir(table_dir, g))
-            elif m.startswith(".reserve-stream-"):
-                # T44: a native streaming sink's staging LEASE protects
-                # its stable data/stream-<tag> dir exactly like an S33
-                # generation reservation — vacuum(0.0) mid-epoch is safe;
-                # gc ages dead leases out with the same liveness probe
-                out.add(os.path.join(table_dir, "data", m[len(".reserve-"):]))
-        return out
-
-    def _retained_files() -> set[str]:
-        refs: set[str] = set()
-        for m in sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []:
-            if m.startswith(".") or _gen_of(m) is None:
-                continue  # reservations / mid-commit tmps are not manifests
-            try:
-                with open(os.path.join(mdir, m)) as fh:
-                    man = json.load(fh)
-                    refs.update(man["files"])
-                    refs.update(man.get("delete_files") or [])
-            except (OSError, ValueError):
-                continue  # unreadable/vanishing manifest protects nothing
-        return refs
-
-    referenced = _retained_files()
-    deleted: list[str] = []
-    if not os.path.isdir(data_root):
-        return deleted
-    candidates: list[tuple[str, str]] = []  # (rel, abs)
-    for root, _dirs, files in os.walk(data_root):
-        for f in files:
-            if not f.endswith(".parquet") or f.startswith((".", "_")):
-                continue
-            full = os.path.join(root, f)
-            candidates.append((os.path.relpath(full, table_dir), full))
-    # re-resolve: a commit that landed during the walk protects BOTH sides,
-    # and a reservation taken during the walk protects its staging dir.
-    # ORDER IS LOAD-BEARING: reservations FIRST, manifests SECOND. A
-    # committing writer links gen-N.json and only THEN releases its
-    # reservation, so if the reservation read finds nothing, the link has
-    # either already happened (the later manifest read sees it) or the
-    # writer hasn't staged yet (its files were not walk candidates).
-    # Reading manifests first re-opened the window the r15 full-suite
-    # stress actually hit: manifest not yet linked at the manifest read,
-    # reservation already released at the reservation read — a committed
-    # file vacuumed at older_than_s=0.
-    reserved = _reserved_dirs()
-    referenced |= _retained_files()
-    for rel, full in candidates:
-        if rel in referenced:
-            continue
-        if any(full.startswith(d + os.sep) for d in reserved):
-            continue  # live writer mid-staging (S33 reservation held)
-        try:
-            if (now - os.path.getmtime(full)) < older_than_s:
-                continue  # young: racing writer's staging / recent rewrite
-            os.unlink(full)
-            deleted.append(full)
-        except OSError:
-            continue  # vanished mid-scan (gc/another vacuum) — fine
-    # prune ONLY the dirs this vacuum's own deletions may have emptied
-    # (deepest first; rmdir refuses non-empty dirs). A blanket sweep of
-    # every empty dir raced in-flight writers: Spark's committer mkdirs
-    # the staging dir an instant before writing into it, and the sweep
-    # deleted that empty dir out from under the job (witnessed by the
-    # r15 racing-writer test). Never data/ itself.
-    prune: set[str] = set()
-    for full in deleted:
-        d = os.path.dirname(full)
-        while d != data_root and d.startswith(data_root + os.sep):
-            prune.add(d)
-            d = os.path.dirname(d)
-    for d in sorted(prune, key=len, reverse=True):
-        try:
-            os.rmdir(d)
-        except OSError:
-            pass  # still holds carried files — fine
-    return deleted
-
-
-def _newest_mtime(path: str) -> float:
-    """Newest mtime under ``path`` recursively — the path itself, every
-    subdirectory, every file. A writer actively staging a PARTITIONED
-    layout touches only leaf files inside ``pcol=value`` subdirs, so the
-    generation dir's own mtime goes stale minutes before the write
-    finishes (ADVICE r14): liveness checks must see the deepest write.
-    Raises OSError only if the top path itself cannot be dated."""
-    newest = os.path.getmtime(path)
-    for root, dirs, files in os.walk(path):
-        for name in dirs + files:
-            try:
-                newest = max(newest, os.path.getmtime(os.path.join(root, name)))
-            except OSError:
-                continue  # vanished mid-walk
-    return newest
+    files = [
+        os.path.join(root, f)
+        for root, _dirs, fs in os.walk(data_root)
+        for f in fs
+        if f.endswith(".parquet") and not f.startswith((".", "_"))
+    ]
+    live = reachable(table_dir)
+    return reclaim(table_dir, [f for f in files if not live.keeps(f)], older_than_s)
 
 
 def gc(
@@ -3608,279 +3490,76 @@ def gc(
     older_than_s: float | None = None,
     keep_generations=None,
 ) -> list[str]:
-    """Garbage-collect unreferenced generations: delete every data/gen-*
-    directory and _manifests/gen-*.json NOT named by the current pointer.
+    """Expire history: delete every generation manifest outside the roots,
+    then every generation dir, stream dir and bloom sidecar that no
+    remaining manifest names a file in, then stale reservations. Returns
+    the deleted paths.
 
-    Safety, in order of defense:
-    1. the committed generation is resolved FIRST and exempted, as is
-       every data directory holding files the committed manifest names
-       (a copy-on-write MERGE generation references files in OLDER
-       generation directories — those stay protected by reference);
-    2. after listing candidates the pointer is RE-resolved, and any
-       generation numbered at or above the newer resolved generation is
-       skipped — so a publish racing this GC (violating the documented
-       single-writer assumption) cannot have its fresh commit collected;
-    3. ``older_than_s`` (seconds, by manifest/data mtime — directories by
-       their newest RECURSIVE mtime, so an in-flight staging stays young
-       while leaf files are still landing) retains young superseded
-       generations for long-lived readers — the standard table-format
-       retention threshold. ``None`` collects regardless of age (the
-       sandbox's synchronous tests). When writers run CONCURRENTLY with
-       gc, ``older_than_s`` must exceed the longest pause between two of
-       one writer's filesystem writes (ADVICE r14; the recursive-mtime
-       probe keeps an actively-writing staging young across the whole
-       staging duration).
+    * **Roots:** the pointer, resolved both before and after listing (a
+      commit racing gc survives), every live branch head (S38), and
+      ``keep_generations`` (S41: a catalog version pins an old generation
+      through ``catalog.protected_generations``).
+    * **Floor and torn commits:** the lower of the two resolved pointer
+      generations is never collected. A generation numbered above it may
+      be a commit whose pointer swap is imminent, so an age-blind gc keeps
+      it; an explicit ``older_than_s`` asserts that no swap is coming and
+      reclaims aged torn debris above the head (ADVICE r12), which frees
+      its number for reuse.
+    * **Reservations:** a dir whose ``.reserve-gen-N`` or
+      ``.reserve-stream-<tag>`` is held is never collected (S33, T44). A
+      reservation or lease itself goes only under an explicit
+      ``older_than_s``, once neither it nor anything in its staging dir
+      was written for that long (ADVICE r14); its dir goes in the next gc.
+    * **Retention for readers:** ``older_than_s`` keeps every unit whose
+      newest recursive mtime is younger, so a retained generation reads
+      back whole; ``None`` collects at any age. With writers concurrent
+      to gc it must exceed the link-to-swap window (micro- to
+      milliseconds); 0.0 asserts a single-writer window, which is how the
+      sinks use it, between their own commits.
 
-    Torn-commit reclaim (ADVICE r12): a crashed publish leaves a staged
-    data dir — and possibly an orphan manifest — numbered ABOVE the
-    committed generation, which layer 2's floor would otherwise protect
-    forever (and the orphan manifest would permanently block reuse of
-    that generation number by a writer that names it explicitly). An explicit
-    ``older_than_s`` overrides the floor for above-committed debris: age
-    past the threshold is the caller's assertion that no swap is still
-    imminent, so provably-stale torn commits are reclaimed. With
-    ``older_than_s=None`` the floor stays absolute (a racing publish is
-    never collected by an age-blind GC).
-
-    Racing writers (r15): a generation whose ``.reserve-gen-N`` staging
-    reservation is still held is NEVER collected, whatever the threshold
-    — the whole staging phase is structurally protected. The residual
-    exposure of an aggressive threshold is the commit window itself
-    (manifest linked, pointer not yet swapped, reservation released): a
-    concurrent gc whose threshold is smaller than that window could
-    reclaim the in-flight manifest as torn debris. So with writers
-    CONCURRENT to gc, ``older_than_s`` must exceed the link→swap window
-    (microseconds-to-milliseconds; any real retention dwarfs it);
-    ``older_than_s=0.0`` remains a single-writer-window assertion, which
-    is how the streaming sinks use it (gc runs between their own
-    commits, never beside them).
-
-    A reader that resolved the pointer before the GC ran is only at risk
-    if it raced the PREVIOUS commit and holds a superseded generation
-    older than the threshold. Returns the deleted paths."""
-    import shutil
-    import time
-
-    data_root_for_keys = os.path.join(table_dir, "data")
-
-    def _gen_dirs(files: list[str]) -> set[str]:
-        # map each committed file to its TOP-LEVEL generation dir under
-        # data/ — a partitioned generation's files live in pcol=value
-        # subdirectories, and plain dirname would leave data/gen-g itself
-        # unprotected by this layer (the floor would be the only defense)
-        out = set()
-        for f in files:
-            rel = os.path.relpath(f, data_root_for_keys)
-            if not rel.startswith(".."):
-                out.add(os.path.join(data_root_for_keys, rel.split(os.sep)[0]))
-        return out
-
-    keep_dirs = _gen_dirs(committed_files(table_dir))
+    The walk and its order: :func:`commit_core.reachable`."""
     committed = current_generation(table_dir)
-    keep_manifests = {f"gen-{committed}.json"}
-
-    data_root = os.path.join(table_dir, "data")
-    mdir = os.path.join(table_dir, "_manifests")
-    candidates = sorted(os.listdir(data_root)) if os.path.isdir(data_root) else []
-    mcandidates = sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []
-
-    # Re-resolve: a commit that landed between the first resolution and now
-    # must survive, as must everything at/above it (its own generation).
-    recheck = current_generation(table_dir)
-    if recheck is not None and committed is not None and recheck != committed:
-        floor = min(committed, recheck)
-    else:
-        floor = committed
-    keep_dirs |= _gen_dirs(committed_files(table_dir))
-    keep_manifests.add(f"gen-{recheck}.json")
-
-    now = time.time()
-
-    def _young(path: str) -> bool:
-        # directories date by their newest RECURSIVE mtime (ADVICE r14): an
-        # in-flight partitioned staging writes into pcol=value subdirs, so
-        # the top dir's own mtime can be stale while files are still landing
-        if older_than_s is None:
-            return False
-        try:
-            mt = _newest_mtime(path) if os.path.isdir(path) else os.path.getmtime(path)
-            return (now - mt) < older_than_s
-        except OSError:
-            return True  # can't date it -> keep it
-
-    def _floor_protected(g: int | None, path: str) -> bool:
-        """Layer-2 floor, with the torn-commit override: generations at or
-        above the floor survive unless an explicit age threshold proves the
-        above-floor debris abandoned (the floor generation itself — the
-        committed one — is never reclaimed)."""
-        if g is None or floor is None or g < floor:
-            return False
-        if g == floor:
-            return True
-        return older_than_s is None or _young(path)
-
-    # generations whose staging reservation is still held belong to a LIVE
-    # writer: never collect their data dirs, whatever the age threshold
-    # (r15 — the cross-process witness caught gc(0.0) rmtree-ing a
-    # reserved dir between the writer's mkdir and its first file write;
-    # the aggressive threshold may reclaim TORN debris, not live staging).
-    reserved_gens = {
-        _gen_of(m)
-        for m in mcandidates
-        if m.startswith(".reserve-gen-")
+    mdir, data_root, bdir = (
+        os.path.join(table_dir, d) for d in ("_manifests", "data", _BLOOMS_DIR)
+    )
+    names, dirs, sidecars = _listdir(mdir), _listdir(data_root), _listdir(bdir)
+    live = reachable(table_dir, keep_generations or ())
+    floor = committed if None in (committed, live.head) else min(committed, live.head)
+    kept = live.roots | {
+        g
+        for g in map(_gen_of, names + dirs)
+        if g is not None
+        and floor is not None
+        and (g in (floor, committed) or (g > floor and older_than_s is None))
     }
-    # T44 streaming-sink leases protect their stable staging dirs the
-    # same way (stale leases are reclaimed by age below; the NEXT gc can
-    # then collect what the manifests do not reference)
-    reserved_stream_dirs = {
-        m[len(".reserve-"):]
-        for m in mcandidates
-        if m.startswith(".reserve-stream-")
-    }
-
-    # live branch refs are gc ROOTS (S38), resolved AFTER candidate listing
-    # like the reservations so a ref cut during the walk is seen: protect
-    # each head manifest and every data dir its file list references — a
-    # branch head numbered above main's floor would otherwise be
-    # reclaimable as "torn debris" under an aged gc, and one below the
-    # floor as superseded history. Intermediate branch generations get the
-    # same retention as main's (age-protected only): branch TIME TRAVEL
-    # retention is whatever gc keeps, exactly the main-pointer contract.
-    for _bref in list_branches(table_dir).values():
-        bgen = _gen_of(_bref.get("current", ""))
-        if bgen is None:
-            continue
-        keep_manifests.add(f"gen-{bgen}.json")
-        try:
-            keep_dirs |= _gen_dirs(
-                committed_files(table_dir, as_of_generation=bgen)
-            )
-        except (OSError, ValueError):
-            continue  # head manifest vanished mid-gc — nothing to protect
-
-    # caller-pinned generations (S41: a catalog version naming an OLD
-    # generation of this table must keep resolving until the catalog
-    # itself expires that version — catalog.protected_generations feeds
-    # this): protected exactly like branch heads
-    for g in keep_generations or ():
-        keep_manifests.add(f"gen-{g}.json")
-        try:
-            keep_dirs |= _gen_dirs(committed_files(table_dir, as_of_generation=g))
-        except (OSError, ValueError):
-            continue  # already gone — nothing to protect
-
-    deleted: list[str] = []
-    for d in candidates:
-        if d.startswith("."):
-            continue  # a racing writer's in-flight temp — never collect
-        full = os.path.join(data_root, d)
-        g = _gen_of(d)
-        if g is not None and g in reserved_gens:
-            continue  # live writer mid-staging (S33 reservation held)
-        if d in reserved_stream_dirs:
-            continue  # leased streaming-sink staging dir (T44)
-        if full in keep_dirs or _floor_protected(g, full):
-            continue
-        if _young(full):
-            continue
-        try:
-            shutil.rmtree(full)
-        except FileNotFoundError:
-            continue  # a concurrent gc is removing the same dir
-        deleted.append(full)
-    for m in mcandidates:
-        if m.startswith(".reserve-gen-"):
-            # a crashed writer's staging-phase reservation permanently
-            # blocks its generation number; an explicit age threshold is
-            # the caller's assertion the writer is gone (S33). A LIVE
-            # writer's staging can outlast a small threshold (ADVICE r14),
-            # so the reservation also counts as young while anything under
-            # its data/gen-N is still being written — the recursive-mtime
-            # liveness probe; with that, older_than_s need only exceed the
-            # longest WRITE PAUSE (one file flush to the next), not the
-            # whole staging duration, for concurrent gc to be safe.
-            full = os.path.join(mdir, m)
-            g = _gen_of(m)
-            stage = _stage_dir(table_dir, g) if g is not None else None
-            staging_live = (
-                stage is not None and os.path.isdir(stage) and _young(stage)
-            )
-            if older_than_s is not None and not _young(full) and not staging_live:
-                try:
-                    os.unlink(full)
-                    deleted.append(full)
-                except FileNotFoundError:
-                    pass  # the writer finished its commit mid-gc
-            continue
-        if m.startswith(".reserve-stream-"):
-            # T44 lease: mtime refreshes at every epoch commit, and the
-            # staging dir's recursive mtime covers a sink paused between
-            # commits mid-write — the same liveness shape as above
-            full = os.path.join(mdir, m)
-            stage = os.path.join(table_dir, "data", m[len(".reserve-"):])
-            staging_live = os.path.isdir(stage) and _young(stage)
-            if older_than_s is not None and not _young(full) and not staging_live:
-                try:
-                    os.unlink(full)
-                    deleted.append(full)
-                except FileNotFoundError:
-                    pass
-            continue
-        if m.startswith("."):
-            continue  # .gen-N.json.<uuid>.tmp mid-commit — deleting it
-            # would make the racing publish's os.replace fail (the
-            # docstring's layer-2 guarantee covers the tmp too)
-        g = _gen_of(m)
-        full = os.path.join(mdir, m)
-        if m in keep_manifests or _floor_protected(g, full):
-            continue
-        if _young(full):
-            continue
-        os.remove(full)
-        deleted.append(full)
-
-    # S47 sidecar lifecycle (r17): a bloom sidecar lives exactly as long
-    # as some still-on-disk manifest references it (re-listed AFTER the
-    # manifest deletions above, so history that just aged out releases its
-    # sidecars), or its generation's staging reservation is still held (a
-    # committing writer writes the sidecar BEFORE linking its manifest).
-    # Everything else is the unreferenced-debris class, age-gated like
-    # manifests.
-    bdir = os.path.join(table_dir, _BLOOMS_DIR)
-    if os.path.isdir(bdir):
-        keep_sidecars: set[str] = set()
-        live_reserved: set[int] = set()
-        for m in sorted(os.listdir(mdir)) if os.path.isdir(mdir) else []:
-            if m.startswith(".reserve-gen-"):
-                # re-listed HERE (not the stale pre-deletion snapshot): a
-                # writer that reserved mid-gc writes its sidecar before
-                # its manifest links, and must keep it
-                g2 = _gen_of(m)
-                if g2 is not None:
-                    live_reserved.add(g2)
-                continue
-            if m.startswith(".") or _gen_of(m) is None:
-                continue
-            try:
-                with open(os.path.join(mdir, m)) as fh:
-                    meta = json.load(fh).get("bloom_meta") or {}
-            except (OSError, ValueError):
-                continue
-            keep_sidecars.update(meta.get("sidecars", []))
-        for s in sorted(os.listdir(bdir)):
-            if s.startswith("."):
-                continue  # a racing writer's mid-write tmp
-            sg = re.match(r"gen-(\d+)-", s)
-            if sg is not None and int(sg.group(1)) in (
-                reserved_gens | live_reserved
-            ):
-                continue  # live writer between sidecar write and commit
-            full = os.path.join(bdir, s)
-            if s in keep_sidecars or _young(full):
-                continue
-            try:
-                os.unlink(full)
-                deleted.append(full)
-            except FileNotFoundError:
-                pass  # another gc got it
+    deleted = reclaim(
+        table_dir,
+        [
+            os.path.join(mdir, m)
+            for m in names
+            if not m.startswith(".") and _gen_of(m) not in kept
+        ],
+        older_than_s,
+    )
+    live = reachable(table_dir)  # the manifests kept above name the survivors
+    units = [
+        os.path.join(data_root, d)
+        for d in dirs
+        if not d.startswith(".") and _gen_of(d) not in kept
+    ] + [
+        os.path.join(bdir, s)
+        for s in sidecars
+        if not s.startswith(".")
+        # a writer writes its sidecar before linking its manifest
+        and os.path.join(data_root, s.rsplit("-", 1)[0]) not in live.reserved
+    ]
+    deleted += reclaim(table_dir, [u for u in units if not live.keeps(u)], older_than_s)
+    if older_than_s is not None:
+        stale = [
+            os.path.join(mdir, m)
+            for m in names
+            if m.startswith(".reserve-")
+            and _aged(os.path.join(data_root, m[len(".reserve-"):]), older_than_s)
+        ]
+        deleted += reclaim(table_dir, stale, older_than_s)
     return deleted

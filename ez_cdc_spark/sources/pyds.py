@@ -267,7 +267,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         _commit_manifest,
         _file_blooms,
         _file_stats,
-        _reserve_path,
+        _release,
         _stable_bucket,
         commit_chain,
         current_generation,
@@ -834,10 +834,7 @@ def make_ezmanifest_source(with_pushdown: bool = True):
             # gc/vacuum (the engine's torn-commit class); release the
             # number reservation so maintenance can reclaim them
             if self.gen is not None:
-                try:
-                    _os.unlink(_reserve_path(self.table_dir, self.gen))
-                except FileNotFoundError:
-                    pass
+                _release(self.table_dir, self.gen)
 
     class ManifestStreamWriter(ManifestWriter, DataSourceStreamArrowWriter):
         """T44: the NATIVE streaming sink — ``df.writeStream.format(

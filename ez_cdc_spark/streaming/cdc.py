@@ -1279,12 +1279,7 @@ def _merge_and_maintain(
             # merge stream supersedes files INSIDE dirs that still
             # hold carried ones — vacuum is what keeps disk usage
             # bounded in the steady state
-            vacuum(
-                table_dir,
-                older_than_s=(
-                    0.0 if gc_older_than_s is None else gc_older_than_s
-                ),
-            )
+            vacuum(table_dir, older_than_s=gc_older_than_s)
     return merged
 
 
@@ -1663,12 +1658,7 @@ def lakehouse_wap_batch(
             )
             if after["generation"] != merged["generation"]:
                 gc(table_dir, older_than_s=gc_older_than_s)
-                vacuum(
-                    table_dir,
-                    older_than_s=(
-                        0.0 if gc_older_than_s is None else gc_older_than_s
-                    ),
-                )
+                vacuum(table_dir, older_than_s=gc_older_than_s)
 
     return apply
 
@@ -1924,12 +1914,7 @@ def event_lake_append_batch(
             )
             if after["generation"] != committed["generation"]:
                 gc(table_dir, older_than_s=gc_older_than_s)
-                vacuum(
-                    table_dir,
-                    older_than_s=(
-                        0.0 if gc_older_than_s is None else gc_older_than_s
-                    ),
-                )
+                vacuum(table_dir, older_than_s=gc_older_than_s)
 
     return apply
 
@@ -2481,12 +2466,7 @@ def lakehouse_mor_batch(
             spark, table_dir, merged, max_delete_files, compact_target_files
         ):
             gc(table_dir, older_than_s=gc_older_than_s)
-            vacuum(
-                table_dir,
-                older_than_s=(
-                    0.0 if gc_older_than_s is None else gc_older_than_s
-                ),
-            )
+            vacuum(table_dir, older_than_s=gc_older_than_s)
 
     return apply
 

@@ -25,23 +25,14 @@ ROOT = pathlib.Path(__file__).resolve().parents[1] / "ez_cdc_spark"
 #   _touched / _overlaps — merge_cow's metadata pruning helpers: pure
 #               driver-side binary search over manifest stats, never
 #               handed to a Spark worker API
-#   _retained_files — vacuum's manifest-reference scan: pure driver-side
-#               filesystem/JSON walking, no Spark at all
-#   _reserved_dirs — vacuum's staging-reservation scan (r15 racing-writer
-#               guard): same pure driver-side filesystem class
 #   _detect_evolve_merge — the t31 drift sink's per-batch body, called
 #               only from its foreachBatch apply (driver-side); split out
 #               so the batch persist/unpersist wraps it in try/finally
-#   _young    — gc's retention-age probe (calls _newest_mtime): pure
-#               driver-side os.walk mtime dating, no Spark at all
 DRIVER_SIDE_CALLBACKS = {
     "apply",
     "appender",
     "_touched",
     "_overlaps",
-    "_retained_files",
-    "_reserved_dirs",
-    "_young",
     "_detect_evolve_merge",
 }
 
@@ -195,6 +186,47 @@ def test_commit_protocol_primitives_live_only_in_commit_core():
                     if a.name in ("link", "O_EXCL", "fsync")
                 ]
     assert not sites, f"commit-protocol primitives outside commit_core: {sites}"
+
+
+# (module, top-level function) pairs under sources/ that may delete files
+# outside commit_core, each for a reason that is not table reclaim
+DELETE_ALLOWED = {
+    # mode("overwrite") semantics: the writer clears its own stage dir
+    ("manifest.py", "stage_only"): "overwrites its own stage dir",
+    ("manifest.py", "_stage_partitioned"): "overwrites its own stage dir",
+    ("manifest.py", "drop_branch"): "unlinks the branch's ref pointer",
+    # a version-file lifecycle under the catalog lock, not a table walk
+    ("catalog.py", "expire_versions"): "deletes expired catalog versions",
+    ("bucketing.py", "write_bucketed"): "clears a dropped Spark table's location",
+}
+
+
+def test_table_files_are_deleted_only_in_commit_core():
+    """Deleting table files is the reclaim walk's job, and
+    ``sources/commit_core.py`` owns it (``reachable`` and ``reclaim``):
+    an ``os.remove``/``os.unlink``/``os.rmdir``/``shutil.rmtree`` call
+    anywhere else under ``sources/`` is a second copy of it, unless
+    ``DELETE_ALLOWED`` names its function with a reason."""
+    deleters = {"remove", "unlink", "rmdir", "rmtree"}
+    sites = []
+    for path in sorted((ROOT / "sources").glob("*.py")):
+        if path.name == "commit_core.py":
+            continue
+        for fn in ast.parse(path.read_text()).body:
+            for n in ast.walk(fn):
+                if (
+                    isinstance(n, ast.Attribute)
+                    and n.attr in deleters
+                    and isinstance(n.value, ast.Name)
+                    and n.value.id.lstrip("_") in ("os", "shutil")
+                ) or (
+                    isinstance(n, ast.ImportFrom)
+                    and n.module in ("os", "shutil")
+                    and any(a.name in deleters for a in n.names)
+                ):
+                    if (path.name, getattr(fn, "name", None)) not in DELETE_ALLOWED:
+                        sites.append(f"{path.name}:{n.lineno}")
+    assert not sites, f"file deletion outside commit_core: {sites}"
 
 
 def _catches_file_exists(handler: ast.ExceptHandler) -> bool:

@@ -1136,6 +1136,89 @@ def test_s27_time_travel_gc_honesty_and_retention(spark, sf_dir):
     assert not any("gen-9" in p for p in deleted)
 
 
+def test_gc_retention_keeps_files_carried_by_retained_generations(spark, sf_dir):
+    """Retention is by reachability: a generation gc keeps must read back
+    whole, also when it carries files that live in an older, aged
+    generation dir. gen-1 publishes, gen-2 merges a few keys (carrying
+    most gen-1 files), gen-3 compacts everything. With gen-1's manifest
+    and dir aged past the threshold, gc(3600) drops gen-1's manifest but
+    keeps data/gen-1, which the young gen-2 still names. A kept
+    generation (``keep_generations``) holds its carried files the same
+    way; once nothing names them, an aged gc reclaims them all."""
+    import os
+    import shutil
+    import time
+
+    import pytest
+
+    from ez_cdc_spark.sources.manifest import (
+        compact_partial,
+        gc,
+        merge_cow,
+        publish,
+        read_committed,
+    )
+    from ez_cdc_spark.streaming.replay import rig_dir
+
+    td = rig_dir(sf_dir, "gcretention")
+    shutil.rmtree(td, ignore_errors=True)
+    df = spark.createDataFrame(
+        [(k, f"n{k}") for k in range(1, 201)], "k bigint, v string"
+    )
+    publish(df.repartitionByRange(4, "k"), td, generation=1, stats_columns=["k"])
+    changes = spark.createDataFrame(
+        [(k, f"u{k}", "u", 1) for k in range(1, 6)],
+        "k bigint, v string, op string, seq int",
+    )
+    merge_cow(spark, td, changes, key_col="k", generation=2)
+    compact_partial(spark, td, 3, max_file_bytes=10**12, target_files=1)
+
+    def rows(g=None):
+        return sorted(
+            tuple(r) for r in read_committed(spark, td, as_of_generation=g).collect()
+        )
+
+    want = {g: rows(g) for g in (1, 2, 3)}
+    mdir = os.path.join(td, "_manifests")
+
+    def age(*paths):
+        old = time.time() - 7200
+        for top in paths:
+            for root, _dirs, fs in os.walk(top):
+                for p in [root, *(os.path.join(root, f) for f in fs)]:
+                    os.utime(p, (old, old))
+            os.utime(top, (old, old))
+
+    age(os.path.join(mdir, "gen-1.json"), os.path.join(td, "data", "gen-1"))
+    deleted = gc(td, older_than_s=3600.0)
+    assert [os.path.relpath(p, td) for p in deleted] == [
+        os.path.join("_manifests", "gen-1.json")
+    ]
+    retained = sorted(
+        int(m[4:-5]) for m in os.listdir(mdir) if m.startswith("gen-")
+    )
+    assert retained == [2, 3]
+    for g in retained:
+        assert rows(g) == want[g], g
+
+    # keep_generations: an aged, superseded gen-2 survives as a root and
+    # keeps the aged gen-1 dir its carried files live in
+    age(os.path.join(mdir, "gen-2.json"), os.path.join(td, "data", "gen-2"))
+    assert gc(td, older_than_s=3600.0, keep_generations=[2]) == []
+    assert rows(2) == want[2]
+
+    # unpinned, everything gen-3 does not name goes at once
+    deleted = gc(td, older_than_s=3600.0)
+    assert sorted(os.path.relpath(p, td) for p in deleted) == [
+        os.path.join("_manifests", "gen-2.json"),
+        os.path.join("data", "gen-1"),
+        os.path.join("data", "gen-2"),
+    ]
+    with pytest.raises(FileNotFoundError):
+        read_committed(spark, td, as_of_generation=2)
+    assert rows() == want[3]
+
+
 def test_s28_pruned_read_never_opens_skipped_files(spark, sf_dir):
     """s28 path-level contract: the manifest's footer stats prune files
     BEFORE Spark sees the list — skipped is nonempty on the range-clustered
@@ -2902,6 +2985,11 @@ def test_vacuum_reclaims_superseded_files_inside_shared_dirs(spark, sf_dir):
         assert os.path.exists(os.path.join(td, rel)), rel
     after = {r["k"]: r["name"] for r in read_committed(spark, td).collect()}
     assert after == before and after[10] == "u10" and len(after) == 400
+    # checksum siblings go with their files: no orphan .<name>.parquet.crc
+    for root, _dirs, fs in os.walk(os.path.join(td, "data")):
+        for f in fs:
+            if f.startswith(".") and f.endswith(".parquet.crc"):
+                assert f[1:-4] in fs, os.path.join(root, f)
 
 
 def test_encode_stat_timestamp_is_integer_exact(spark):
