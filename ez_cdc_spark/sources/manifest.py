@@ -86,10 +86,19 @@ verdict #4): the publish-time footer pass distributes as one
 metadata-only job, so no O(files) file-opening loop remains on the
 driver — at a million files the driver handles only the stats map it
 must embed in the manifest anyway.
+
+The NULL-key rule: a NULL key never matches. A NULL-key upsert is an
+insert, a NULL-key delete deletes nothing, a NULL entry in a delete log
+kills nothing, and a NULL key never pairs into an update. The merges
+(``merge_cow``, ``merge_mor``), the merge-on-read resolve (``read_mor``)
+and both change feeds (``change_feed``/``change_feed_mor`` and the
+``ezmanifest`` change-feed stream) follow it, so a feed over an interval
+equals the labelled diff of the table read at its two ends.
 """
 
 from __future__ import annotations
 
+import functools
 import json
 import os
 import re
@@ -332,9 +341,9 @@ def _read_key_column_driver(paths: list[str], col: str) -> list | None:
     ``_FEED_KEYS_DRIVER_MAX_ROWS`` footer rows), the column is missing,
     a value's type would not round-trip exactly through a Spark literal
     (only non-bool int / str / None qualify), or any read fails — callers
-    then fall back to the executor scan. NULL stays in the list (both the
-    literal-In and the semi-join forms drop NULL-keyed rows, so the two
-    paths agree)."""
+    then fall back to the executor scan. NULL stays in the list: both
+    paths restrict to a NULL churn key the same way (the NULL-key rule,
+    see the module docstring, and :func:`_feed_segment`)."""
     try:
         total = sum(os.path.getsize(p) for p in paths)
     except OSError:
@@ -2180,7 +2189,9 @@ def merge_cow(
     contract), surviving upserts appended, and the result staged as the
     new generation's files with fresh footer stats. Commit is the same one
     atomic pointer swap: a racing reader sees the complete old table or the
-    complete new one, never a mix.
+    complete new one, never a mix. NULL keys follow the NULL-key rule (see
+    the module docstring): a NULL-key upsert inserts and a NULL-key delete
+    deletes nothing.
 
     Driver-side state is bounded metadata, not data: the distinct changed
     keys (batch-sized, the same class as t9's touched-bucket IDs) are
@@ -2417,18 +2428,17 @@ def change_feed(
     touched (removed = in FROM but not TO; added = in TO but not FROM —
     carried-by-reference files are byte-identical and contribute nothing),
     and the row-level delta is the symmetric difference of just those two
-    file sets. Rows a rewrite carried unchanged cancel in the exceptAll,
-    so a pure compaction's change feed is EMPTY by construction — layout
-    maintenance is invisible to downstream consumers, exactly the CDF
-    contract.
+    file sets. Rows a rewrite carried unchanged cancel in the multiset
+    difference, so a pure compaction's change feed is EMPTY by
+    construction — layout maintenance is invisible to downstream
+    consumers, exactly the CDF contract.
 
     Without ``key_col``: rows only in FROM emit as ``delete``, rows only
     in TO as ``insert``. With ``key_col`` (a last-write-wins keyed table,
     the merge_cow invariant): a key present on both delta sides emits the
-    Delta CDF pair ``update_preimage``/``update_postimage`` instead —
-    classified against the intersected key set via keyed semi/anti joins
-    over the two (already churn-sized) delta sides. Output: the table's
-    columns plus ``_change_type``.
+    Delta CDF pair ``update_preimage``/``update_postimage`` instead; a
+    NULL key never pairs (the NULL-key rule, see the module docstring).
+    Output: ``_change_type`` plus the table's columns.
 
     ``partitions`` (r16, S29's read-side payoff on the feed): on
     partitioned generations, restrict the feed to the named partition
@@ -2457,16 +2467,13 @@ def change_feed(
     (un-gc'd); reading a collected generation raises FileNotFoundError
     loudly.
 
-    Building the labelled feed runs Spark jobs EAGERLY: the churn-sized
-    count table is pinned with an eager ``localCheckpoint`` (see
-    :func:`_classify_delta`), so the call itself scans both sides. A
+    Building the labelled feed runs no Spark job: it is one lazy plan
+    (:func:`_classify_delta`), and whoever reads it pays the scans. A
     consumer that needs only signed sums should fold
-    :func:`change_feed_sides` instead."""
+    :func:`change_feed_sides` instead, which skips the labelling."""
     old, new = change_feed_sides(
         spark, table_dir, from_generation, to_generation, partitions
     )
-    # pre-images of updates + deleted rows / post-images + inserts, both
-    # sides in one pass (r20: _classify_delta replaces the exceptAll pair)
     return _classify_delta(old, new, key_col, list(new.columns))
 
 
@@ -2573,108 +2580,53 @@ def _flag_col(base: str, cols) -> str:
 
 
 def _classify_delta(old, new, key_col: str | None, cols: list) -> DataFrame:
-    """Shared CDF delta + classification tail (change_feed /
-    change_feed_mor): the multiset difference of the two resolved sides
-    (``gone`` = old ∖ new, ``came`` = new ∖ old) classified into the four
-    Delta change types.
+    """The labelled change feed of two resolved sides (change_feed /
+    change_feed_mor): the multiset difference old ∖ new as pre-images and
+    new ∖ old as post-images, labelled with the four Delta change types.
+    One lazy plan; nothing runs until it is read:
 
-    Optimization r20 (guide §2.3/§2.4/§8.4 — replacing the r19 shape):
-    the two ``exceptAll`` calls plus the classification's intersect/joins
-    consumed the OLD and NEW resolved-state subtrees up to four times
-    each, and exchange reuse never fired across them (r19 s35 plan: 26
-    Exchanges, 0 reused). One union with a side tag + one groupBy over
-    all columns computes both sides' multiplicities in a SINGLE pass over
-    each resolved state; rows whose counts cancel (the carried-unchanged
-    rows — the bulk) are dropped before the churn-sized count table pins
-    (eager per-invocation localCheckpoint, the repo's pin idiom — nothing
-    survives the call), and gone/came/update-key classification all
-    derive from the pinned rows with zero further passes over the
-    resolved states.
+    1. union the sides, tagging each row −1 (old) or +1 (new);
+    2. one ``groupBy(*cols)`` sums the tags into d = n_new − n_old and
+       keeps d ≠ 0, so rows a rewrite carried unchanged cancel here;
+    3. with ``key_col``, a key is an update iff it is not NULL and its
+       rows hold both a negative and a positive d (``min``/``max`` over a
+       window on the key) — the NULL-key rule, see the module docstring;
+    4. one ``explode(sequence(1, |d|))`` emits |d| copies of each row,
+       labelled from the sign of d and the update flag.
 
-    Multiset semantics are exceptAll's exactly: a distinct row emits
+    The multiset semantics are exceptAll's exactly: a distinct row emits
     max(0, n_old − n_new) pre-image copies and max(0, n_new − n_old)
-    post-image copies; grouping's NULL/NaN equality matches the set-op
-    rules. A key classifies as update iff it has both a gone row and a
-    came row (the old intersected-key contract; NULL keys never match an
-    equi-join and stay delete/insert, as before)."""
+    post-image copies, and grouping's NULL/NaN equality matches the
+    set-op rules."""
+    from pyspark.sql import Window
     from pyspark.sql import functions as F  # noqa: N812
 
-    side = _flag_col("__side", cols)
-    n_old = _flag_col("__n_old", cols)
-    n_new = _flag_col("__n_new", cols)
-    rep = _flag_col("__rep", cols)
-    tagged = (
-        old.select(*cols)
-        .withColumn(side, F.lit(0))
-        .unionByName(new.select(*cols).withColumn(side, F.lit(1)))
-    )
-    counts = (
-        tagged.groupBy(*cols)
-        .agg(
-            F.count(F.when(F.col(side) == 0, F.lit(1))).alias(n_old),
-            F.count(F.when(F.col(side) == 1, F.lit(1))).alias(n_new),
-        )
-        .filter(F.col(n_old) != F.col(n_new))
-        .localCheckpoint(eager=True)
-    )
-
-    def _with_scan_hook(out):
-        # diagnostic/test hook: the pinned result's plan is a checkpoint
-        # scan, so the churn-proportional I/O contract (feed reads ONLY
-        # the interval's touched files) is attested through the PRE-pin
-        # plan that actually performed the reads
-        out._ez_feed_scans = [tagged]
-        return out
-
-    def _replicate(df, excess):
-        # exceptAll's bag semantics: one copy per unit of excess count
-        return df.withColumn(rep, F.explode(F.sequence(F.lit(1), excess))).drop(
-            rep, n_old, n_new
-        )
-
-    gone = _replicate(
-        counts.filter(F.col(n_old) > F.col(n_new)),
-        F.col(n_old) - F.col(n_new),
-    )
-    came = _replicate(
-        counts.filter(F.col(n_new) > F.col(n_old)),
-        F.col(n_new) - F.col(n_old),
-    )
-    if key_col is None:
-        return _with_scan_hook(
-            gone.select(F.lit("delete").alias("_change_type"), *cols).unionByName(
-                came.select(F.lit("insert").alias("_change_type"), *cols)
-            )
-        )
-    if key_col not in cols:
+    if key_col is not None and key_col not in cols:
         raise ValueError(f"key column {key_col!r} is not a table column")
-    # update keys = keys with a row on BOTH delta sides, derived from the
-    # pinned counts (the r19 intersect re-read both exceptAll pipelines);
-    # distinct by construction, so the left joins never multiply rows
-    upd = _flag_col("__upd", cols)
-    upd_keys = (
-        counts.groupBy(key_col)
-        .agg(
-            F.max(F.col(n_old) > F.col(n_new)).alias(n_old),
-            F.max(F.col(n_new) > F.col(n_old)).alias(n_new),
-        )
-        .filter(F.col(n_old) & F.col(n_new))
-        .select(key_col)
-        .withColumn(upd, F.lit(True))
+    side = _flag_col("__side", cols)
+    rep = _flag_col("__rep", cols)
+    d = F.col(side)
+    counts = (
+        old.select(*cols, F.lit(-1).alias(side))
+        .unionByName(new.select(*cols, F.lit(1).alias(side)))
+        .groupBy(*cols)
+        .agg(F.sum(side).alias(side))
+        .filter(d != 0)
     )
-    typed_gone = gone.join(F.broadcast(upd_keys), on=key_col, how="left").select(
-        F.when(F.col(upd).isNotNull(), F.lit("update_preimage"))
-        .otherwise(F.lit("delete"))
-        .alias("_change_type"),
-        *cols,
+    label = F.when(d < 0, "delete").otherwise("insert")
+    if key_col is not None:
+        by_key = Window.partitionBy(key_col)
+        label = F.when(
+            F.col(key_col).isNotNull()
+            & (F.min(d).over(by_key) < 0)
+            & (F.max(d).over(by_key) > 0),
+            F.when(d < 0, "update_preimage").otherwise("update_postimage"),
+        ).otherwise(label)
+    return (
+        counts.select(label.alias("_change_type"), *cols, d)
+        .withColumn(rep, F.explode(F.sequence(F.lit(1), F.abs(d))))
+        .drop(rep, side)
     )
-    typed_came = came.join(F.broadcast(upd_keys), on=key_col, how="left").select(
-        F.when(F.col(upd).isNotNull(), F.lit("update_postimage"))
-        .otherwise(F.lit("insert"))
-        .alias("_change_type"),
-        *cols,
-    )
-    return _with_scan_hook(typed_gone.unionByName(typed_came))
 
 
 def change_feed_mor(
@@ -2698,9 +2650,9 @@ def change_feed_mor(
        scale, a broadcast semi-join above it), data-file groups
        stats-pruned to the changed keys' ranges before Spark sees a path
        (:func:`change_feed_mor_sides`);
-    3. rows identical on both sides cancel (exceptAll), and the shared
-       classification emits the four Delta change types keyed by the
-       table's mor_key.
+    3. rows identical on both sides cancel (the multiset difference), and
+       :func:`_classify_delta` emits the four Delta change types keyed by
+       the table's mor_key.
 
     Intervals CROSSING compact_mor folds compose (r16): the commit chain
     is traced backward through each manifest's lineage parent, split at
@@ -2718,9 +2670,9 @@ def change_feed_mor(
 
     At 100 TB: I/O is the interval's churn (delete files are batch-sized;
     the pre/post resolves open only stats-overlapping files), never the
-    table. Like :func:`change_feed`, building the labelled feed runs
-    Spark jobs eagerly (one pinned count table per epoch segment); a
-    consumer that needs only signed sums folds
+    table. Like :func:`change_feed`, building the labelled feed runs no
+    Spark job beyond the changed-key read above the driver bound (see
+    :func:`_feed_segment`); a consumer that needs only signed sums folds
     :func:`change_feed_mor_sides` instead."""
     sides = change_feed_mor_sides(spark, table_dir, from_generation, to_generation)
     if not sides:  # pure-fold interval: layout only, no content change
@@ -2735,16 +2687,10 @@ def change_feed_mor(
                 )
             ),
         )
-    out = None
-    scans: list = []
-    for key_col, pre, post in sides:
-        # both delta sides in one pass over pre/post (r20: _classify_delta
-        # replaces the exceptAll pair — see change_feed)
-        part = _classify_delta(pre, post, key_col, list(post.columns))
-        scans.extend(part._ez_feed_scans)
-        out = part if out is None else out.unionByName(part)
-    out._ez_feed_scans = scans  # see _classify_delta's scan hook
-    return out
+    return functools.reduce(
+        DataFrame.unionByName,
+        (_classify_delta(pre, post, k, list(post.columns)) for k, pre, post in sides),
+    )
 
 
 def change_feed_mor_sides(
@@ -2885,13 +2831,22 @@ def _feed_segment(
     # a worker closure — binding locally satisfies it and costs nothing
     read_mor_manifest = _read_mor_manifest
     read_files = _read_files
+    flag_col = _flag_col
 
-    # driver-read keys are few (row-capped) and literal-safe: a literal In
-    # pushes to the parquet scan and skips the broadcast build; NULL state
-    # keys drop under both forms (neither In nor a semi-join matches
-    # NULL). Built once for both sides: PySpark makes one py4j call per
-    # literal, seconds at the row cap.
-    in_keys = F.col(key_col).isin(raw_keys) if keys_df is None else None
+    # Both states restrict to the churn keys NULL-safely: a NULL churn key
+    # keeps every NULL-key row on both sides, and as a NULL delete entry
+    # kills nothing they cancel, leaving the interval's own NULL-key
+    # upserts as inserts (the NULL-key rule, see the module docstring).
+    # Driver-read keys are few (row-capped) and literal-safe: a literal In
+    # pushes to the parquet scan and skips the broadcast build. Built once
+    # for both sides: PySpark makes one py4j call per literal, seconds at
+    # the row cap.
+    in_keys = None
+    if keys_df is None:
+        nonnull = [k for k in raw_keys if k is not None]
+        in_keys = F.col(key_col).isin(nonnull)
+        if len(nonnull) < len(raw_keys):
+            in_keys = in_keys | F.col(key_col).isNull()
 
     def _state_for_keys(man):
         stats = man.get("stats", {})
@@ -2910,7 +2865,12 @@ def _feed_segment(
             )
         if in_keys is not None:
             return state.filter(in_keys)
-        return state.join(F.broadcast(keys_df), on=key_col, how="left_semi")
+        dkey = flag_col("__dkey", state.columns)
+        return state.join(
+            F.broadcast(keys_df.select(F.col(key_col).alias(dkey))),
+            F.col(key_col).eqNullSafe(F.col(dkey)),
+            "left_semi",
+        )
 
     pre = _state_for_keys(m_from)
     post = _state_for_keys(m_to)
@@ -3041,7 +3001,9 @@ def merge_mor(
     sequence — so a commit's own upserts survive its own delete entries
     while every older version of the key dies. Per-batch cost is
     O(batch) — data staged once, keys staged once, O(files) manifest
-    metadata — regardless of how the keys spread.
+    metadata — regardless of how the keys spread. NULL keys follow the
+    NULL-key rule (see the module docstring): a NULL delete entry kills
+    nothing, so a NULL-key upsert is an insert.
 
     Both outputs come from ONE ``partitionBy(<kind>)`` write over the
     resolved batch, exploded so that every changed key yields a

@@ -1076,8 +1076,11 @@ def make_ezmanifest_source(with_pushdown: bool = True):
           admit THIS bucket; pre-images resolve through the kill rule
           over every parent file, restricted to the bucket's keys. The
           commit's delete entry carries its sequence and so kills every
-          OLDER version of a changed key: a changed key's live
-          post-image can only be one of the commit's own upserts.
+          OLDER version of a changed non-NULL key: that key's live
+          post-image can only be one of the commit's own upserts. A NULL
+          delete entry kills nothing (the NULL-key rule, see manifest.py's
+          module docstring), so a NULL key reads no pre-image: its parent
+          rows survive the commit and cancel.
         * merge_cow (T46): one split, no churn key files, no delete log.
           Pre-images are the parent files the commit removed, whole;
           the rows it rewrote unchanged cancel against its added
@@ -1236,9 +1239,12 @@ def make_ezmanifest_source(with_pushdown: bool = True):
         parent files whole. Post-images are the commit's own new files.
         Rows identical on both sides cancel (multiset, the batch feed's
         exceptAll), and the rest classify into the four Delta change
-        types; a NULL key never pairs into an update, as in the batch
-        feed. Per split the work is O(churn + overlapping parent files),
-        never the table."""
+        types. NULL keys follow the NULL-key rule (manifest.py's module
+        docstring): a NULL churn key reads no pre-image, so the parent's
+        delete log holds no NULL kill to apply and the commit's own
+        NULL-key upserts emit as inserts; a NULL key never pairs into an
+        update. Per split the work is O(churn + overlapping parent
+        files), never the table."""
         import bisect as _bisect
         from collections import Counter as _Counter
 
@@ -1397,13 +1403,15 @@ def make_ezmanifest_source(with_pushdown: bool = True):
                     if keys is None or frow[key_idx] in keys:
                         yield frow
 
-        # pre-image: the parent state's live rows for the bucket's keys
+        # pre-image: the parent state's live rows for the bucket's
+        # non-NULL keys (a NULL key's parent rows survive and cancel)
         pre_rows = []  # (frozen row, file sequence)
         for rel, seq, pval, rng in split.parent_spec["files"]:
             if not _may_contain(rng):
                 continue
             for row in _rows(rel, split.parent_spec["pcol"], pval):
-                pre_rows.append((row, seq))
+                if keys is None or row[key_idx] is not None:
+                    pre_rows.append((row, seq))
         dmax = {}
         if split.parent_spec["delete_files"] and pre_rows:
             for rel, dseq, rng in split.parent_spec["delete_files"]:

@@ -2155,7 +2155,8 @@ def consume_feed_step(
     built from — change_feed_sides for COW, change_feed_mor_sides per
     un-folded epoch segment for ``mor=True`` — grouped by first_name.
     This is exactly the signed sum over change_feed(_mor)'s rows, minus
-    the labelled feed's eager count-table pin and classification joins.
+    the labelling's shuffles (the multiset count and the update-key
+    window).
     Groups whose net delta is (0, 0) drop, so an interval with zero net
     change (a pure compaction or fold, or churn that cancels) resolves to
     no change rows: merge_cow commits nothing, the step returns None and

@@ -374,3 +374,38 @@ def test_cdc_rigs_share_one_replay_runner():
         if isinstance(n, ast.Attribute) and n.attr == "writeStream"
     ]
     assert len(sites) <= 2, f"writeStream sites in cdc.py at lines {sites}"
+
+
+# The forced broadcasts allowed on the CDC path, by function, each with
+# the bound that keeps its build side small.
+BROADCAST_ALLOWED = {
+    ("manifest.py", "_merge_rewrite"): "the changed-key anti-join, taken "
+    "only above _REWRITE_LITERAL_MAX_KEYS keys; the keys are one merge batch's",
+    ("manifest.py", "_feed_segment"): "the executor semi-join on a MOR "
+    "feed segment's changed keys, taken only above the driver read's bounds; "
+    "the keys are the segment's delete files, churn-sized",
+}
+
+
+def test_cdc_path_holds_no_pin_and_only_allowed_broadcasts():
+    """``sources/`` and ``streaming/`` pin nothing (no ``localCheckpoint``:
+    an eager pin runs Spark jobs when a plan is built, and holds its rows
+    for the session) and force a broadcast only where
+    ``BROADCAST_ALLOWED`` names the function with its reason."""
+    sites = []
+    for path in sorted((ROOT / "sources").glob("*.py")) + sorted(
+        (ROOT / "streaming").glob("*.py")
+    ):
+        for fn in ast.parse(path.read_text()).body:
+            name = getattr(fn, "name", None)
+            for n in ast.walk(fn):
+                if isinstance(n, ast.Attribute) and n.attr == "localCheckpoint":
+                    sites.append(f"{path.name}:{n.lineno} {name} localCheckpoint")
+                if (
+                    isinstance(n, ast.Call)
+                    and "broadcast"
+                    in (getattr(n.func, "attr", None), getattr(n.func, "id", None))
+                    and (path.name, name) not in BROADCAST_ALLOWED
+                ):
+                    sites.append(f"{path.name}:{n.lineno} {name} broadcast")
+    assert not sites, f"pins or unlisted broadcasts on the CDC path: {sites}"

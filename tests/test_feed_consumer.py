@@ -404,3 +404,51 @@ def test_signed_fold_equals_labelled_feed_sum(spark, tmp_path, mor):
     want = sorted(tuple(r) for r in labelled.collect())
     got = sorted(tuple(r) for r in net.collect() if (r["dn"], r["ds"]) != (0, 0))
     assert got == want
+
+
+
+# Spark jobs building and then collecting the labelled feed of
+# test_labelled_feed_builds_lazily's intervals cost when the labelling
+# pinned its count table eagerly and broadcast the update keys: COW 2 + 3,
+# MOR (two fold segments) 6 + 5. The lazy plan may not cost more in all.
+COW_FEED_JOBS = 5
+MOR_FEED_JOBS = 11
+
+
+@pytest.mark.parametrize("mor", [False, True])
+def test_labelled_feed_builds_lazily(spark, tmp_path, mor):
+    """Building change_feed(..., key_col) or change_feed_mor (changed
+    keys below _FEED_KEYS_DRIVER_MAX_ROWS) runs no Spark job, and reading
+    it runs no more jobs than the eager build and read did together."""
+    td, _ = _setup(spark, str(tmp_path))
+    merge = m.merge_mor if mor else m.merge_cow
+    merge(
+        spark, td,
+        _changes(spark, [(7, 1007, "f9", "u"), (300, 1300, "f0", "d"),
+                         (999, 1999, "f2", "c")]),
+        "id", 2,
+    )
+    if mor:
+        m.compact_mor(spark, td, 3, target_files=2)
+    merge(spark, td, _changes(spark, [(7, 2007, "f3", "u"), (20, 1020, "f0", "u")]),
+          "id", None)
+    last = m.read_manifest(td)["generation"]
+    j0 = _jobid(spark)
+    if mor:
+        feed = m.change_feed_mor(spark, td, 1, last)
+    else:
+        feed = m.change_feed(spark, td, 1, last, key_col="id")
+    j1 = _jobid(spark)
+    rows = feed.collect()
+    j2 = _jobid(spark)
+    assert j1 - j0 == 0
+    assert j2 - j1 <= (MOR_FEED_JOBS if mor else COW_FEED_JOBS), j2 - j1
+    # the MOR feed concatenates its two fold segments' net diffs
+    key7 = [("update_preimage", 7, 7), ("update_postimage", 7, 2007)]
+    if mor:
+        key7 = [("update_preimage", 7, 7), ("update_postimage", 7, 1007),
+                ("update_preimage", 7, 1007), ("update_postimage", 7, 2007)]
+    assert sorted((r["_change_type"], r["id"], r["lsn"]) for r in rows) == sorted(
+        key7 + [("delete", 300, 300), ("insert", 999, 1999),
+                ("update_preimage", 20, 20), ("update_postimage", 20, 1020)]
+    )

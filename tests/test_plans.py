@@ -1293,37 +1293,33 @@ def test_s36b_mor_feed_plan_broadcast_keys_and_no_cartesian(spark, sf_smoke):
     predicate that reaches the parquet scan (r20; the keys are read
     in-process from the churn-sized delete files), above the driver
     bounds an explicit BROADCAST left-semi join (the r19 shape) — and
-    nothing in the derivation introduces a cartesian. The resolves live
-    behind the per-invocation pin, so the restriction is asserted on the
-    _ez_feed_scans hook (the plan that performs the I/O); the returned
-    frame must stay cartesian-free too."""
+    nothing in the derivation introduces a cartesian. The labelled feed is
+    one lazy plan, so the restriction is asserted on the returned frame's
+    own plan, the one a consumer runs."""
     df = load_all()["s36b_mor_change_feed"].fn(spark, sf_smoke)
     assert_no_cartesian(df)
     # the registered fn wraps the feed (select/orderBy), so probe the raw
-    # feed over the rig's table for the scan-plan hook
+    # feed over the rig's table
     from ez_cdc_spark.sources.manifest import change_feed_mor
     from ez_cdc_spark.streaming.replay import rig_dir
 
     feed = change_feed_mor(spark, rig_dir(sf_smoke, "s36bfeed"), 1, 3)
-    scans = feed._ez_feed_scans
-    assert scans, "feed must expose its pre-pin scan plans"
-    for scan in scans:
-        assert_no_cartesian(scan)
-        p = plan_str(scan)
-        restricted = (
-            ("BroadcastHashJoin" in p and "LeftSemi" in p)  # executor path
-            or " IN (" in p
-            or "In(k" in p
-            or "isin" in p
-        )
-        assert restricted, f"no churn-key restriction in scan plan:\n{p}"
+    assert_no_cartesian(feed)
+    p = plan_str(feed)
+    restricted = (
+        ("BroadcastHashJoin" in p and "LeftSemi" in p)  # executor path
+        or " IN (" in p
+        or "In(k" in p
+        or "isin" in p
+    )
+    assert restricted, f"no churn-key restriction in feed plan:\n{p}"
 
 
 def test_s36b_mor_feed_sides_restrict_to_churn_keys(spark, sf_smoke):
     """The s36b pin above, on the unlabelled sides the feed consumer
     folds (change_feed_mor_sides): each pre/post resolve carries the
     churn-key restriction and no cartesian, and opens no more files than
-    the labelled feed's own scans."""
+    the labelled feed itself."""
     from ez_cdc_spark.sources.manifest import change_feed_mor, change_feed_mor_sides
     from ez_cdc_spark.streaming.replay import rig_dir
 
@@ -1331,10 +1327,7 @@ def test_s36b_mor_feed_sides_restrict_to_churn_keys(spark, sf_smoke):
     td = rig_dir(sf_smoke, "s36bfeed")
     sides = change_feed_mor_sides(spark, td, 1, 3)
     assert sides
-    feed_files = {
-        f for scan in change_feed_mor(spark, td, 1, 3)._ez_feed_scans
-        for f in scan.inputFiles()
-    }
+    feed_files = set(change_feed_mor(spark, td, 1, 3).inputFiles())
     for _key, pre, post in sides:
         for side in (pre, post):
             assert_no_cartesian(side)

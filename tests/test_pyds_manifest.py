@@ -1403,6 +1403,168 @@ def test_change_feed_stream_never_pairs_a_null_key(spark):
     assert _split_rows(_feed_reader(d), 1, g) == want
 
 
+def _labelled_diff(before, after):
+    """The labelled multiset diff of two reads of a table keyed on its
+    first column: rows only in ``before`` are pre-images, rows only in
+    ``after`` post-images, and a non-NULL key holding both pairs into an
+    update (the NULL-key rule in manifest.py's module docstring)."""
+    from collections import Counter
+
+    old, new = Counter(before), Counter(after)
+    gone, came = old - new, new - old
+    upd = ({r[0] for r in gone} & {r[0] for r in came}) - {None}
+    out = []
+    for rows, pair, plain in (
+        (gone, "update_preimage", "delete"),
+        (came, "update_postimage", "insert"),
+    ):
+        for r, n in rows.items():
+            out += [(pair if r[0] in upd else plain, *r)] * n
+    return out
+
+
+_DIFF_DDL = "id long, v long, s string"
+
+
+def _assert_feeds_equal_table_diff(spark, d, g):
+    """Commit ``g``'s feed three ways, one multiset: the stream's split
+    rows, the batch feed over (g-1, g) — change_feed_mor for merge-on-read
+    and fold commits, change_feed keyed on ``id`` otherwise — and the
+    labelled diff of the table read at g-1 and at g. Returns it."""
+    from ez_cdc_spark.sources.manifest import (
+        change_feed,
+        change_feed_mor,
+        read_manifest,
+        read_mor,
+    )
+
+    cols = ["id", "v", "s"]
+    man = read_manifest(d, g)
+    if "mor" in man or "fold" in man:
+        feed = change_feed_mor(spark, d, g - 1, g)
+    else:
+        feed = change_feed(spark, d, g - 1, g, key_col="id")
+    batch = sorted(
+        ((*r, g) for r in feed.select("_change_type", *cols).collect()), key=repr
+    )
+
+    def table(gen):
+        return [tuple(r) for r in read_mor(spark, d, gen).select(*cols).collect()]
+
+    truth = sorted(
+        ((*r, g) for r in _labelled_diff(table(g - 1), table(g))), key=repr
+    )
+    stream = _split_rows(_feed_reader(d), g - 1, g)
+    assert stream == batch == truth, (g, stream, batch, truth)
+    return truth
+
+
+@pytest.mark.parametrize("merge", ["merge_mor", "merge_mor_executor_keys", "merge_cow"])
+def test_change_feeds_follow_the_null_key_rule(spark, tmp_path, monkeypatch, merge):
+    """Upserting a NULL key inserts: the parent's NULL-key rows stay live
+    (a NULL key never matches), so the stream, the batch feed and the
+    table diff all emit one insert, and a later commit's NULL upsert
+    beside a key update emits its insert next to the update pair. Under
+    merge_mor the NULL delete entry of the first commit must not kill a
+    NULL row in the second commit's pre-image; ``merge_mor_executor_keys``
+    has change_feed_mor read its changed keys on the executor path."""
+    import ez_cdc_spark.sources.manifest as m
+
+    if merge == "merge_mor_executor_keys":
+        monkeypatch.setattr(m, "_FEED_KEYS_DRIVER_MAX_ROWS", 0)
+        merge = "merge_mor"
+    d = str(tmp_path / "t")
+    m.publish(
+        spark.createDataFrame([(None, 1, "n"), (5, 1, "a")], _DIFF_DDL),
+        d, 1, stats_columns=["id"],
+    )
+
+    def batch(rows):
+        return spark.createDataFrame(rows, _DIFF_DDL + ", op string, seq long")
+
+    getattr(m, merge)(spark, d, batch([(None, 2, "n", "u", 2)]), "id", 2)
+    assert _assert_feeds_equal_table_diff(spark, d, 2) == [
+        ("insert", None, 2, "n", 2)
+    ]
+    getattr(m, merge)(
+        spark, d, batch([(None, 3, "n", "u", 3), (5, 9, "a", "u", 3)]), "id", 3
+    )
+    assert _assert_feeds_equal_table_diff(spark, d, 3) == [
+        ("insert", None, 3, "n", 3),
+        ("update_postimage", 5, 9, "a", 3),
+        ("update_preimage", 5, 1, "a", 3),
+    ]
+
+
+def _random_chain(spark, d, family, seed):
+    """A seeded random commit chain over ``_DIFF_DDL`` keyed on ``id``:
+    merges of 3-5 events over a small key domain with NULL keys, deletes,
+    re-inserts and redeliveries (an event repeated in its batch, or the
+    previous batch's last event sent again), mixed with appends and
+    partial compactions (``cow``) or merge-on-read folds (``mor``).
+    Returns the last generation."""
+    import random
+
+    import ez_cdc_spark.sources.manifest as m
+
+    rng = random.Random(seed)
+    m.publish(
+        spark.createDataFrame(
+            [(None, 0, "n"), (None, 0, None), (1, 0, "a"), (2, 0, "b"), (3, 0, None)],
+            _DIFF_DDL,
+        ).repartition(2),
+        d, 1, stats_columns=["id"],
+    )
+    domain, fresh = [None, 1, 2, 3, 4, 5], iter(range(100, 200))
+    seq, last = 0, None
+    steps = ["merge"] * 3 + (["append", "compact"] if family == "cow" else ["fold"])
+    step = None
+    for _ in range(7):
+        # a fold needs merge-on-read churn since the last one
+        step = "merge" if step in (None, "fold") else rng.choice(steps)
+        if step == "append":
+            rows = [(rng.choice([None, next(fresh)]), rng.randrange(9), "x")]
+            domain += [k for k, *_ in rows if k is not None]
+            m.publish_append(spark.createDataFrame(rows, _DIFF_DDL), d, None)
+        elif step == "compact":
+            m.compact_partial(spark, d, None, max_file_bytes=10**9, target_files=1)
+        elif step == "fold":
+            m.compact_mor(spark, d, None, target_files=1)
+        else:
+            events = []
+            for _ in range(rng.randint(3, 5)):
+                seq += 1
+                op = rng.choice("ccuud")
+                val = rng.randrange(9) if op != "d" else None
+                s = rng.choice(["p", None])
+                events.append((rng.choice(domain), val, s, op, seq))
+            if rng.random() < 0.5:
+                events.append(rng.choice(events))
+            if last is not None and rng.random() < 0.5:
+                events.append(last)
+            last = events[-1]
+            merge = m.merge_mor if family == "mor" else m.merge_cow
+            merge(
+                spark, d,
+                spark.createDataFrame(events, _DIFF_DDL + ", op string, seq long"),
+                "id", None,
+            )
+    return m.read_manifest(d)["generation"]
+
+
+@pytest.mark.parametrize("family", ["cow", "mor"])
+def test_change_feeds_equal_table_diff_on_random_chains(spark, tmp_path, family):
+    """Differential check of both labelled-feed kernels against the
+    definition: on a seeded random chain (``_random_chain``), for every
+    commit g the stream's rows, the batch feed over (g-1, g) and the
+    labelled diff of the table read at g-1 and at g are one multiset."""
+    d = str(tmp_path / "t")
+    last = _random_chain(spark, d, family, seed=20261020)
+    assert last >= 4
+    for g in range(2, last + 1):
+        _assert_feeds_equal_table_diff(spark, d, g)
+
+
 def test_change_feed_stream_ignores_planted_change_files(spark, tmp_path):
     """Manifests once listed merge-time ``change_files`` under
     ``data/gen-N/_changefeed/``. The stream derives every merge's feed

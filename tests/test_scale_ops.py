@@ -3309,8 +3309,8 @@ def test_collect_blooms_driver_fast_path_matches_executor_path(spark, sf_dir):
 
 
 def test_feed_flags_tolerate_colliding_table_columns(spark, sf_dir):
-    """ADVICE r19: the left-join classification adds a flag column
-    (``__upd`` in _classify_delta). A table that legitimately declares
+    """ADVICE r19: the merge and the feed labelling add flag columns
+    (``__side`` in _classify_delta). A table that legitimately declares
     columns with flag-like names must still merge and serve its change
     feed — the flag names derive through _flag_col, guaranteed absent
     from the schema."""
@@ -3322,14 +3322,14 @@ def test_feed_flags_tolerate_colliding_table_columns(spark, sf_dir):
     td = rig_dir(sf_dir, "flagcollide")
     shutil.rmtree(td, ignore_errors=True)
     base = spark.createDataFrame(
-        [(k, f"d{k}", f"m{k}", f"u{k}") for k in range(1, 21)],
-        "k bigint, __del string, __match string, __upd string",
+        [(k, f"d{k}", f"m{k}", f"u{k}", f"s{k}") for k in range(1, 21)],
+        "k bigint, __del string, __match string, __upd string, __side string",
     )
     m.publish(base, td, generation=1, stats_columns=["k"])
     changes = spark.createDataFrame(
-        [(5, "D", "M", "U", "u", 1), (6, None, None, None, "d", 2),
-         (99, "D9", "M9", "U9", "u", 3)],
-        "k bigint, __del string, __match string, __upd string, "
+        [(5, "D", "M", "U", "S", "u", 1), (6, None, None, None, None, "d", 2),
+         (99, "D9", "M9", "U9", "S9", "u", 3)],
+        "k bigint, __del string, __match string, __upd string, __side string, "
         "op string, seq int",
     )
     m.merge_cow(spark, td, changes, key_col="k", generation=2)
@@ -3583,19 +3583,13 @@ def test_s35_change_feed_reads_only_touched_files_and_skips_maintenance(
     man2 = read_manifest(td)
 
     feed = change_feed(spark, td, 1, 2, key_col="k")
-    # (1) the feed's I/O touches only the symmetric difference. r20: the
-    # delta pins per invocation (its own plan is a checkpoint scan), so
-    # the churn-proportional-read contract is attested through the
-    # _ez_feed_scans hook — the pre-pin plan that performed the reads.
+    # (1) the feed's I/O touches only the symmetric difference, read off
+    # the returned frame's own (lazy) plan
     sym = {
         os.path.join(td, r)
         for r in set(man1["files"]).symmetric_difference(man2["files"])
     }
-    opened = {
-        f.replace("file://", "")
-        for scan in feed._ez_feed_scans
-        for f in scan.inputFiles()
-    }
+    opened = {f.replace("file://", "") for f in feed.inputFiles()}
     assert opened and opened <= sym, (opened - sym, sym)
     carried = {
         os.path.join(td, r) for r in set(man1["files"]) & set(man2["files"])
