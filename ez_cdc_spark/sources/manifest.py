@@ -328,8 +328,9 @@ def _collect_blooms(
 # The MOR feed reads its changed keys in-process only while the delete
 # files hold at most this many rows (footer counts, checked before any
 # data page is read). A larger key set takes the executor path, whose
-# broadcast semi-join restricts the resolves: a literal In list that
-# long would bloat the plan.
+# broadcast semi-join restricts the resolves; so does a driver-read set
+# of more than _REWRITE_LITERAL_MAX_KEYS keys, whose literal In list
+# would cost more driver time than the broadcast build.
 _FEED_KEYS_DRIVER_MAX_ROWS = 10_000
 
 
@@ -2072,7 +2073,9 @@ def _resolve_last_event(
     (seq, op, payload) and equal (seq, op) pairs tie-break on the payload
     itself — the winner never depends on partition layout. The payload
     rides in the ordering struct once, so the partial aggregate shuffles
-    each payload once. NULL keys group together like any other key.
+    each payload once; a batch under ``_ONE_TASK_MAX_BYTES`` resolves in
+    one task with no shuffle (:func:`_one_task_if_small`). NULL keys
+    group together like any other key.
 
     Returns the resolved batch (the key, the op flag column, the payload
     columns) and the op flag's name. The struct's field names derive
@@ -2082,7 +2085,7 @@ def _resolve_last_event(
 
     op, seq, last = (_flag_col(c, table_cols) for c in ("_op", "_seq", "_last"))
     payload = [c for c in table_cols if c != key_col]
-    resolved = changes.groupBy(key_col).agg(
+    resolved = _one_task_if_small(changes).groupBy(key_col).agg(
         F.max(
             F.struct(
                 F.col(seq_col).alias(seq),
@@ -2091,13 +2094,34 @@ def _resolve_last_event(
             )
         ).alias(last)
     )
-    return (
-        resolved.select(
-            key_col,
-            *[F.col(last).getField(c).alias(c) for c in (op, *payload)],
-        ),
-        op,
-    )
+    return resolved.select(key_col, f"{last}.*").drop(seq), op
+
+
+# A batch-sized aggregation runs in one task, with no shuffle, while the
+# optimizer's size estimate of its input is at most this many bytes
+# (Spark's default openCostInBytes). The shuffle's map stage is a Spark
+# job of its own and its bypass-merge writer writes every shuffled byte
+# twice; one task gives up the scan's parallelism. Measured on a 4-core
+# host (resolve a parquet-read batch with _resolve_last_event, persist,
+# count and write; medians of 8, one task against the 32-way shuffle):
+# from one file, 0.43 s against 0.50 s at 1 MB, 0.43 against 0.44 at
+# 2 MB, 0.56 against 0.60 at 4 MB and 1.11 against 0.97 at 8 MB; from
+# four files, 0.51 against 0.55 at 1 MB, even near 2 MB and 0.84 against
+# 0.61 at 4 MB. cdcbench's micro-batches are one or two scan splits of
+# 0.6-2.4 MB.
+_ONE_TASK_MAX_BYTES = 4 << 20
+
+
+def _one_task_if_small(df: DataFrame) -> DataFrame:
+    """``df.coalesce(1)`` when the optimizer's size estimate of ``df`` is
+    at most ``_ONE_TASK_MAX_BYTES``, else ``df`` unchanged. A
+    single-partition child satisfies an aggregate's clustering, so the
+    ``groupBy`` above it plans no Exchange. The estimate is plan
+    metadata (file sizes scaled by the projection) and runs no job; an
+    input of unknown size (an RDD, a Kafka batch) reports Spark's huge
+    default and keeps the shuffle."""
+    size = df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes()
+    return df.coalesce(1) if int(str(size)) <= _ONE_TASK_MAX_BYTES else df
 
 
 # The rewrite drops the batch's changed keys from the touched rows with a
@@ -2107,7 +2131,9 @@ def _resolve_last_event(
 # keys, 3.5 s at 10k). Measured there on a 200k-row, 8-file rewrite, the
 # literal plan ran 0.55 s against 0.69 s for the broadcast at 256 keys
 # and broke even near 1k keys (0.71 s each), so the bound sits at a
-# quarter of break-even, far below _FEED_KEYS_DRIVER_MAX_ROWS.
+# quarter of break-even, far below _FEED_KEYS_DRIVER_MAX_ROWS. The MOR
+# feed's segment restriction (_feed_segment) takes its literal path under
+# the same bound.
 _REWRITE_LITERAL_MAX_KEYS = 256
 
 
@@ -2266,7 +2292,11 @@ def merge_cow(
     # pipeline (for the feed consumers that pipeline is the feed sides'
     # scans and the signed fold). The resolved batch is micro-batch-sized
     # by the CDC contract, so persist it once and let every downstream
-    # action read the cache; unpersisted on every exit path.
+    # action read the cache; unpersisted on every exit path. The first
+    # action fills the cache: a batch under _ONE_TASK_MAX_BYTES resolves
+    # there in one task, so an unconstrained merge runs the keys collect
+    # (two jobs: AQE fills the cache as a query stage of its own) and the
+    # staging write; a larger batch adds the resolve's shuffle map stage.
     final = final.persist()
     try:
         # constraint gate (S39) on the POST-IMAGE rows this merge would
@@ -2791,15 +2821,19 @@ def _feed_segment(
     # semi-join builds. Above the bounds (files, bytes, or
     # _FEED_KEYS_DRIVER_MAX_ROWS delete-file rows), or for key types a
     # literal cannot round-trip faithfully, the r19 executor read +
-    # broadcast semi-join path runs unchanged.
+    # broadcast semi-join path runs unchanged. Driver-read keys above
+    # _REWRITE_LITERAL_MAX_KEYS still prune on the driver but restrict
+    # through the semi-join: the literal list's py4j cost (0.35 ms a key)
+    # passes the broadcast build's one job near 1k keys.
     raw_keys = _read_key_column_driver(new_dfiles, key_col)
     keys_df = None
-    if raw_keys is None:
+    if raw_keys is None or len(raw_keys) > _REWRITE_LITERAL_MAX_KEYS:
         keys_df = (
             spark.read.schema(StructType([key_field]))
             .parquet(*new_dfiles)
             .distinct()
         )
+    if raw_keys is None:
         raw_keys = [r[0] for r in keys_df.collect()]
     if not raw_keys:  # delete files held no rows: churn-free segment
         return None
@@ -2837,10 +2871,9 @@ def _feed_segment(
     # keeps every NULL-key row on both sides, and as a NULL delete entry
     # kills nothing they cancel, leaving the interval's own NULL-key
     # upserts as inserts (the NULL-key rule, see the module docstring).
-    # Driver-read keys are few (row-capped) and literal-safe: a literal In
-    # pushes to the parquet scan and skips the broadcast build. Built once
-    # for both sides: PySpark makes one py4j call per literal, seconds at
-    # the row cap.
+    # Driver-read keys up to the literal cap are literal-safe: a literal
+    # In pushes to the parquet scan and skips the broadcast build. Built
+    # once for both sides: PySpark makes one py4j call per literal.
     in_keys = None
     if keys_df is None:
         nonnull = [k for k in raw_keys if k is not None]
@@ -3012,12 +3045,15 @@ def merge_mor(
     under ``data/gen-N/<kind>=deletes/``, where ``<kind>`` is ``_kind``
     unless a table column already has that name. Delete rows carry the
     key plus typed NULL payload columns (one write has one schema); every
-    delete-file reader reads the key column only. Nothing is cached: an
-    unconstrained commit runs the resolve's shuffle and the write (two
-    jobs), and a constrained table's gate re-reads the batch (two more).
-    Each write task that sees keys stages its own delete file, and each
-    delete file records its key range and base-bucket key counts
-    (``delete_meta``) from its own keys; an empty batch stages no file.
+    delete-file reader reads the key column only. Nothing is cached: a
+    batch under ``_ONE_TASK_MAX_BYTES`` resolves inside the write's own
+    task, so an unconstrained commit runs one job and a constrained
+    table's gate re-reads the batch (one more); a larger batch, or one of
+    unknown size, adds the resolve's shuffle map stage to each (two, and
+    two more). Each write task that sees keys stages its own delete
+    file, and each delete file records its key range and base-bucket key
+    counts (``delete_meta``) from its own keys; an empty batch stages no
+    file.
 
     The trade is read-side work (:func:`read_mor` anti-resolves the
     accumulated delete entries) growing with churn-since-compaction, and

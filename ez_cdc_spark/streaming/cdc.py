@@ -2088,8 +2088,10 @@ def _signed_fold_changes(
     ``_s0`` the committed values. A group whose net delta is (0, 0)
     changes nothing and is dropped, so an interval whose changes all
     cancel yields no rows; a group whose count returns to zero leaves
-    the aggregate — the tombstone the feed's deletes imply."""
-    from ez_cdc_spark.sources.manifest import read_committed
+    the aggregate — the tombstone the feed's deletes imply. A union under
+    the one-task bound folds in one task, with no shuffle
+    (_one_task_if_small)."""
+    from ez_cdc_spark.sources.manifest import _one_task_if_small, read_committed
 
     zero = F.lit(0).cast("long")
     delta = signed.select(
@@ -2107,7 +2109,7 @@ def _signed_fold_changes(
         F.col("sum_lsn").cast("long").alias("_s0"),
     )
     return (
-        delta.unionByName(old)
+        _one_task_if_small(delta.unionByName(old))
         .groupBy("first_name")
         .agg(*[F.sum(c).alias(c) for c in ("_dn", "_dsum", "_n0", "_s0")])
         .filter((F.col("_dn") != 0) | (F.col("_dsum") != 0))
@@ -2164,13 +2166,15 @@ def consume_feed_step(
     from the feed without re-reading the table or seeing the envelope
     stream at all.
 
-    A COW step with a nonzero delta runs four Spark jobs: the fold's
-    shuffle map stage (the sides and the committed aggregate go through
-    one groupBy, no join), merge_cow's resolve shuffle map stage, its key
-    collect (which builds its cached resolved batch) and the staging
-    write from that cache. The changed keys are at most one per
-    first_name, so the rewrite drops them from the touched aggregate
-    files as literals, with no broadcast build.
+    A COW step with a nonzero delta runs three Spark jobs: merge_cow's
+    key collect (two jobs: AQE fills its cached resolved batch as a query
+    stage of its own) and the staging write from that cache. The fold
+    (the sides and the committed aggregate go through one groupBy, no
+    join) and merge_cow's resolve run in one task each inside the
+    collect while their inputs are under ``_ONE_TASK_MAX_BYTES``; a
+    larger interval adds each one's shuffle map stage. The changed keys
+    are at most one per first_name, so the rewrite drops them from the
+    touched aggregate files as literals, with no broadcast build.
 
     At 100 TB: the fold's I/O is the interval's churn (rewritten/added
     files, or the stats-pruned MOR resolves for the changed keys —
@@ -2416,8 +2420,9 @@ def lakehouse_mor_batch(
     watermark idempotence, per-key order across batches) with the commit
     shape that survives UNIFORM-key churn: merge_mor stages the batch's
     upserts as new data files and its changed keys as equality-delete
-    files in ONE write job (no cached batch: the resolve's shuffle and
-    the write are the commit's two Spark jobs) and rewrites NOTHING, so
+    files in ONE write job (no cached batch; a batch over
+    ``_ONE_TASK_MAX_BYTES`` or of unknown size adds the resolve's
+    shuffle map stage) and rewrites NOTHING, so
     per-batch cost is O(batch) however the keys spread — where
     merge_cow's touched-file split measurably saturates at
     rewrite-the-whole-table (bench_scaling.py:t30_churn_spread_probe:

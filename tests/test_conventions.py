@@ -381,10 +381,30 @@ def test_cdc_rigs_share_one_replay_runner():
 BROADCAST_ALLOWED = {
     ("manifest.py", "_merge_rewrite"): "the changed-key anti-join, taken "
     "only above _REWRITE_LITERAL_MAX_KEYS keys; the keys are one merge batch's",
-    ("manifest.py", "_feed_segment"): "the executor semi-join on a MOR "
-    "feed segment's changed keys, taken only above the driver read's bounds; "
-    "the keys are the segment's delete files, churn-sized",
+    ("manifest.py", "_feed_segment"): "the semi-join on a MOR feed "
+    "segment's changed keys, taken only above the driver read's bounds or "
+    "_REWRITE_LITERAL_MAX_KEYS keys; the keys are the segment's delete "
+    "files, churn-sized",
 }
+
+
+def _cdc_path_nodes():
+    """(module, top-level function, node) for every AST node under
+    ``sources/`` and ``streaming/``."""
+    for path in sorted((ROOT / "sources").glob("*.py")) + sorted(
+        (ROOT / "streaming").glob("*.py")
+    ):
+        for fn in ast.parse(path.read_text()).body:
+            for n in ast.walk(fn):
+                yield path.name, getattr(fn, "name", None), n
+
+
+def _cdc_path_calls(attr: str):
+    """(module, top-level function, call) for every ``.<attr>(...)`` call
+    under ``sources/`` and ``streaming/``."""
+    for mod, fn, n in _cdc_path_nodes():
+        if isinstance(n, ast.Call) and getattr(n.func, "attr", None) == attr:
+            yield mod, fn, n
 
 
 def test_cdc_path_holds_no_pin_and_only_allowed_broadcasts():
@@ -393,19 +413,88 @@ def test_cdc_path_holds_no_pin_and_only_allowed_broadcasts():
     for the session) and force a broadcast only where
     ``BROADCAST_ALLOWED`` names the function with its reason."""
     sites = []
-    for path in sorted((ROOT / "sources").glob("*.py")) + sorted(
-        (ROOT / "streaming").glob("*.py")
-    ):
-        for fn in ast.parse(path.read_text()).body:
-            name = getattr(fn, "name", None)
-            for n in ast.walk(fn):
-                if isinstance(n, ast.Attribute) and n.attr == "localCheckpoint":
-                    sites.append(f"{path.name}:{n.lineno} {name} localCheckpoint")
-                if (
-                    isinstance(n, ast.Call)
-                    and "broadcast"
-                    in (getattr(n.func, "attr", None), getattr(n.func, "id", None))
-                    and (path.name, name) not in BROADCAST_ALLOWED
-                ):
-                    sites.append(f"{path.name}:{n.lineno} {name} broadcast")
+    for mod, name, n in _cdc_path_nodes():
+        if isinstance(n, ast.Attribute) and n.attr == "localCheckpoint":
+            sites.append(f"{mod}:{n.lineno} {name} localCheckpoint")
+        if (
+            isinstance(n, ast.Call)
+            and "broadcast"
+            in (getattr(n.func, "attr", None), getattr(n.func, "id", None))
+            and (mod, name) not in BROADCAST_ALLOWED
+        ):
+            sites.append(f"{mod}:{n.lineno} {name} broadcast")
     assert not sites, f"pins or unlisted broadcasts on the CDC path: {sites}"
+
+
+# The one-partition coalesces allowed outside manifest._one_task_if_small,
+# by function, each with why its output must be one file whatever its size.
+COALESCE_ONE_ALLOWED = {
+    ("cdc.py", "_write_lsn_staged"): "stages each replay stage of a stream "
+    "fixture as one JSON file",
+    ("replay.py", "events_parquet_staged"): "stages each replay stage of a "
+    "stream fixture as one parquet file",
+    ("replay.py", "events_parquet_split"): "stages each replay stage of a "
+    "stream fixture as one parquet file",
+    ("replay.py", "events_parquet_time_split"): "stages each replay stage "
+    "of a stream fixture as one parquet file",
+}
+
+
+def test_one_task_aggregations_go_through_the_size_bound():
+    """A batch runs in one task (``coalesce(1)``) on the CDC path only
+    through ``manifest._one_task_if_small``, which takes it only under
+    ``_ONE_TASK_MAX_BYTES``: a bare ``coalesce(1)`` would squeeze a
+    backfill of any size through one task. ``COALESCE_ONE_ALLOWED`` names
+    the fixture writers that need one file, with their reasons."""
+    sites = [
+        f"{mod}:{call.lineno} {fn}"
+        for mod, fn, call in _cdc_path_calls("coalesce")
+        if [ast.unparse(a) for a in call.args] == ["1"]
+        and (mod, fn) != ("manifest.py", "_one_task_if_small")
+        and (mod, fn) not in COALESCE_ONE_ALLOWED
+    ]
+    assert not sites, f"coalesce(1) outside _one_task_if_small: {sites}"
+    used = {
+        fn
+        for _, fn, n in _cdc_path_nodes()
+        if isinstance(n, ast.Name) and n.id == "_one_task_if_small"
+    }
+    assert {"_resolve_last_event", "_signed_fold_changes"} <= used, used
+
+
+# The driver collects allowed on the CDC path, by function, each with the
+# bound on what it brings to the driver.
+COLLECT_ALLOWED = {
+    ("bucketing.py", "_catalog_location"): "DESCRIBE TABLE EXTENDED rows, "
+    "catalog metadata",
+    ("stats.py", "table_row_count_stat"): "DESCRIBE TABLE EXTENDED rows, "
+    "catalog metadata",
+    ("commit_core.py", "map_files"): "one kernel result per file, taken only "
+    "above the driver path's file and byte bounds",
+    ("manifest.py", "_bucket64_counts"): "one row per base hash bucket, at "
+    "most 64",
+    ("manifest.py", "merge_cow"): "the batch's distinct keys for the "
+    "touched-file bisect: batch-sized, with no bound of its own yet",
+    ("manifest.py", "_feed_segment"): "a MOR feed segment's changed keys, "
+    "taken only above the driver read's bounds; churn-sized",
+    ("cdc.py", "upsert_batch"): "the batch's touched bucket ids, at most "
+    "n_buckets",
+    ("cdc.py", "upsert_with_agg_batch"): "the batch's touched bucket ids, at "
+    "most n_buckets",
+    ("cdc.py", "scd2_batch"): "the batch's touched bucket ids, at most "
+    "n_buckets",
+    ("cdc.py", "lakehouse_drift_merge_batch"): "the distinct JSON field "
+    "names the batch's payloads carry, schema-sized",
+}
+
+
+def test_cdc_path_collects_only_where_allowed():
+    """A ``.collect()`` under ``sources/`` or ``streaming/`` brings rows to
+    the driver, so it sits only where ``COLLECT_ALLOWED`` names its
+    function with the bound on its rows; an entry with no collect left is
+    stale and fails too."""
+    seen = {(mod, fn) for mod, fn, _ in _cdc_path_calls("collect")}
+    unlisted = sorted(seen - COLLECT_ALLOWED.keys())
+    assert not unlisted, f"unlisted collects on the CDC path: {unlisted}"
+    stale = sorted(COLLECT_ALLOWED.keys() - seen)
+    assert not stale, f"COLLECT_ALLOWED entries without a collect: {stale}"

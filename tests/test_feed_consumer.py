@@ -169,8 +169,8 @@ def test_mor_changed_keys_switch_to_executor_path_above_row_bound(
 ):
     """Above _FEED_KEYS_DRIVER_MAX_ROWS delete-file rows the changed keys
     are read by an executor job and restrict the resolves through a
-    broadcast semi-join, not a literal In list; the feed is the same
-    either way."""
+    broadcast semi-join, not a literal In list; so do driver-read keys
+    above _REWRITE_LITERAL_MAX_KEYS. The feed is the same either way."""
     from ez_cdc_spark.plans.assertions import plan_str
 
     td, _ = _setup(spark, str(tmp_path))
@@ -191,26 +191,37 @@ def test_mor_changed_keys_switch_to_executor_path_above_row_bound(
     assert "LeftSemi" not in plan_str(pre)
     below = feed()
 
+    def semi_joined():
+        [(_, pre, post)] = m.change_feed_mor_sides(spark, td, 1, 2)
+        for side in (pre, post):
+            p = plan_str(side)
+            assert "BroadcastHashJoin" in p and "LeftSemi" in p, p
+
+    with monkeypatch.context() as mp:
+        mp.setattr(m, "_REWRITE_LITERAL_MAX_KEYS", 2)
+        assert sorted(m._read_key_column_driver(dfiles, "id")) == [3, 5, 8]
+        semi_joined()
+        assert feed() == below
+
     monkeypatch.setattr(m, "_FEED_KEYS_DRIVER_MAX_ROWS", 2)
     assert m._read_key_column_driver(dfiles, "id") is None
-    [(_, pre, post)] = m.change_feed_mor_sides(spark, td, 1, 2)
-    for side in (pre, post):
-        p = plan_str(side)
-        assert "BroadcastHashJoin" in p and "LeftSemi" in p, p
+    semi_joined()
     assert feed() == below
     assert len(below) == 6  # three update pre/post pairs
 
 
 # Spark jobs one consume_feed_step call may run on these fixtures
-# (local[4]). COW: the fold's shuffle map stage, merge_cow's resolve
-# shuffle map stage, its key collect and the staging write. A broadcast
-# of the old aggregate for a fold join, a persist + isEmpty emptiness
-# check on the fold, and a broadcast anti-join build of the changed keys
-# cost 8 (COW) and 11 (fold-crossing MOR); folding the labelled
+# (local[4]). The fold and merge_cow's resolve run in one task each, under
+# _ONE_TASK_MAX_BYTES, so COW runs merge_cow's key collect (two jobs:
+# AQE fills the persisted resolved batch as a query stage of its own)
+# and the staging write. Their two shuffle map stages cost 4 (COW) and
+# 7 (fold-crossing MOR); a broadcast of the old aggregate for a fold
+# join, a persist + isEmpty emptiness check on the fold, and a broadcast
+# anti-join build of the changed keys cost 8 and 11; folding the labelled
 # change_feed(_mor) instead cost 12 and 21: its eager count-table pins
 # and classification joins fail these bounds loudly.
-COW_STEP_JOBS = 4
-MOR_STEP_JOBS = 7
+COW_STEP_JOBS = 3
+MOR_STEP_JOBS = 6
 
 
 def test_consume_feed_step_job_budget_cow(spark, tmp_path):
@@ -241,24 +252,27 @@ def test_consume_feed_step_job_budget_mor_fold_crossing(spark, tmp_path):
     assert _agg(spark, ad) == _recompute(m.read_mor(spark, td))
 
 
-# Spark jobs one merge_mor call may run: the resolve's shuffle map stage
-# and the single staging write; a constrained table's gate re-reads the
-# batch for its aggregate (two more). Staging upserts and delete keys
-# separately over a persisted batch cost 4 unconstrained.
-MOR_MERGE_JOBS = 2
-MOR_MERGE_JOBS_CONSTRAINED = 4
+# Spark jobs one merge_mor call may run, by batch source. A parquet batch
+# has a size estimate under _ONE_TASK_MAX_BYTES, so it resolves inside the
+# single staging write's own task: one job, and a constrained table's
+# gate re-reads the batch (one more). A batch of unknown size (an RDD)
+# adds the resolve's shuffle map stage to each: 2 and 4. Staging upserts
+# and delete keys separately over a persisted batch cost 4 unconstrained.
+MOR_MERGE_JOBS = {"parquet": 1, "rdd": 2}
+MOR_MERGE_JOBS_CONSTRAINED = {"parquet": 2, "rdd": 4}
 
 
 _MOR_BATCH = [(7, 1007, "f9", "u"), (300, 1300, "f0", "d"),
               (999, 1999, "f2", "c"), (20, 1020, "f0", "u")]
 
 
+@pytest.mark.parametrize("source", ["parquet", "rdd"])
 @pytest.mark.parametrize(
-    "layout, budget",
+    "layout, budgets",
     [("plain", MOR_MERGE_JOBS), ("partitioned", MOR_MERGE_JOBS),
      ("constrained", MOR_MERGE_JOBS_CONSTRAINED)],
 )
-def test_merge_mor_job_budget(spark, tmp_path, layout, budget):
+def test_merge_mor_job_budget(spark, tmp_path, layout, budgets, source):
     td = str(tmp_path / "up")
     rows = [(k, k, f"f{k % 5}", f"l{k}", f"e{k}") for k in range(1, 401)]
     df = spark.createDataFrame(rows, UPSTREAM)
@@ -270,10 +284,13 @@ def test_merge_mor_job_budget(spark, tmp_path, layout, budget):
             constraints={"lsn_pos": "lsn > 0"} if layout == "constrained" else None,
         )
     batch = _changes(spark, _MOR_BATCH)
+    if source == "parquet":
+        batch.write.parquet(str(tmp_path / "batch"))
+        batch = spark.read.parquet(str(tmp_path / "batch"))
     j0 = _jobid(spark)
     m.merge_mor(spark, td, batch, "id", 2)
     jobs = _jobid(spark) - j0
-    assert jobs <= budget, jobs
+    assert jobs <= budgets[source], jobs
     want = {k: tuple(r) for k, *r in rows}
     del want[300]
     for k, lsn, fn, _ in _MOR_BATCH:

@@ -305,7 +305,7 @@ def _envelopes(spark, n, lsn):
     )
 
 
-def test_mor_sink_fold_counts_commits_not_delete_files(spark, tmp_path):
+def test_mor_sink_fold_counts_commits_not_delete_files(spark, tmp_path, monkeypatch):
     """A batch whose merge stages 4 delete files (4 write tasks) is one
     commit: under ``max_delete_files=1`` the sink folds only when a
     second commit lands."""
@@ -313,6 +313,9 @@ def test_mor_sink_fold_counts_commits_not_delete_files(spark, tmp_path):
 
     td = _genesis(spark, str(tmp_path / "t"))
     sink = lakehouse_mor_batch(td, tag="foldpin", max_delete_files=1)
+    # a batch this small would resolve and write in one task
+    # (_one_task_if_small); the 4 write tasks need the shuffle
+    monkeypatch.setattr(m, "_ONE_TASK_MAX_BYTES", 0)
     confs = {"spark.sql.shuffle.partitions": "4",
              "spark.sql.adaptive.coalescePartitions.enabled": "false"}
     prev = {k: spark.conf.get(k) for k in confs}

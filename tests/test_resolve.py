@@ -8,8 +8,10 @@ batches where the order matters: exact (key, seq, op) duplicates with
 different payloads, a delete and an upsert at one sequence, NULL payload
 fields, a NULL op, string keys and a NULL key. They also pin that table
 columns named like the resolve's own fields merge through both writers,
-and that merge_cow's rewrite gives the same rows whether it drops the
-changed keys as literals or through the broadcast anti-join.
+that merge_cow's rewrite gives the same rows whether it drops the
+changed keys as literals or through the broadcast anti-join, and that a
+batch under the one-task bound (_one_task_if_small) resolves without a
+shuffle to the same tables.
 """
 
 import os
@@ -91,6 +93,31 @@ def test_helper_equals_max_by_reference(spark):
     assert winners[None] == ("u", 2, "nk2")
 
 
+def _parquet_changes(spark, tmp_path):
+    """BATCH read back from three parquet files: a known size estimate,
+    so the resolve runs in one task under the default bound."""
+    path = str(tmp_path / "batch")
+    _changes(spark).write.parquet(path)
+    return spark.read.parquet(path)
+
+
+def _resolve_shuffles(batch):
+    from ez_cdc_spark.plans.assertions import plan_str
+
+    final, _ = m._resolve_last_event(batch, "k", ["k", "v", "s"], "op", "seq")
+    return "hashpartitioning" in plan_str(final)
+
+
+def test_small_batch_resolves_without_a_shuffle(spark, tmp_path, monkeypatch):
+    """Under _ONE_TASK_MAX_BYTES the resolve plans no Exchange; a batch
+    above the bound, or of unknown size (an RDD), keeps the shuffle."""
+    batch = _parquet_changes(spark, tmp_path)
+    assert not _resolve_shuffles(batch)
+    assert _resolve_shuffles(_changes(spark))
+    monkeypatch.setattr(m, "_ONE_TASK_MAX_BYTES", 0)
+    assert _resolve_shuffles(batch)
+
+
 def _base(spark):
     return spark.createDataFrame(
         [(k, i, f"b{k}") for i, k in enumerate("abcdefgh")], SCHEMA
@@ -116,6 +143,22 @@ def test_merge_writers_equal_max_by_reference(spark, tmp_path, writer):
     got = _rows(m.read_mor(spark, td))
     assert got == _expected_after_merge(spark)
     assert ("a", 2, "y") in got and not any(r[0] in ("c", "g") for r in got)
+
+
+@pytest.mark.parametrize("writer", ["merge_cow", "merge_mor"])
+def test_one_task_resolve_equals_the_shuffled_one(spark, tmp_path, monkeypatch, writer):
+    """BATCH (ties, NULL op, NULL key, string keys) merges to the same
+    table with the one-task bound at its default and at 0 (always
+    shuffle)."""
+    batch = _parquet_changes(spark, tmp_path)
+    tables = []
+    for bound in (m._ONE_TASK_MAX_BYTES, 0):
+        monkeypatch.setattr(m, "_ONE_TASK_MAX_BYTES", bound)
+        td = str(tmp_path / f"t{bound}")
+        m.publish(_base(spark).coalesce(2), td, 1, stats_columns=["k"])
+        getattr(m, writer)(spark, td, batch, "k", None)
+        tables.append(_rows(m.read_mor(spark, td)))
+    assert tables[0] == tables[1] == _expected_after_merge(spark)
 
 
 @pytest.mark.parametrize("writer", ["merge_cow", "merge_mor"])
